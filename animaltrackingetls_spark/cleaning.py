@@ -34,7 +34,7 @@ REASON_BAD_COORDS = "invalid_coordinates"       # cleaning.py:213
 class CleanResult:
     good: DataFrame       # canonical 35-column frame
     rejected: DataFrame   # original columns + _failure_reason/_failure_detail
-    tagged: DataFrame     # the shared upstream frame (for caching/reuse)
+    tagged: DataFrame     # every row with its failure tag, before the split
 
 
 def tag_failures(raw: DataFrame) -> DataFrame:
@@ -84,18 +84,15 @@ def tag_failures(raw: DataFrame) -> DataFrame:
     return df.withColumn(FAILURE_REASON, reason).withColumn(FAILURE_DETAIL, detail)
 
 
-def clean_occurrences(raw: DataFrame, cache: bool = False) -> CleanResult:
+def clean_occurrences(raw: DataFrame) -> CleanResult:
     """Full cleaning kernel: returns (good, rejected) branches.
 
-    ``cache=True`` persists the tagged frame when both branches will be
-    consumed by separate actions (avoids re-reading the source); leave
-    False when the plan is consumed once — at 100 TB you usually want the
-    single-pass shared scan, not a cache of the whole input.
+    Both branches are lazy over ``raw``; a caller that consumes them in
+    separate actions should hand in a materialized input (the pipeline
+    passes its one snapshot of the source) so each action does not read
+    the source again.
     """
     tagged = tag_failures(raw)
-    if cache:
-        tagged = tagged.cache()
-
     rejected = tagged.filter(F.col(FAILURE_REASON).isNotNull()).drop(
         "eventDateParsed", "decimalLatitude_c", "decimalLongitude_c", "individualCount_c"
     )

@@ -166,6 +166,48 @@ def merge_upsert(
     return out.filter(F.col("_rn") == 1).drop("_prio", "_rn")
 
 
+def _recover_swap(path: str) -> None:
+    """Repair what a crash inside ``upsert_parquet``'s swap left behind,
+    so that the read which follows sees the catalog and not a gap.
+
+    The swap is two renames: the live table aside to ``.old-<token>``,
+    then ``.tmp-<token>`` into place. A crash between them leaves no
+    ``path``, and a read would take the first-write branch and publish a
+    catalog holding only the new rows. With ``path`` missing, the swap
+    is rolled forward when its tmp finished writing (Spark's
+    ``_SUCCESS`` marker) and back to the aside copy otherwise; with no
+    aside copy, a finished tmp is a first write that crashed before its
+    one rename. An aside copy next to a live ``path`` is what a crash
+    after the second rename leaves, and is dropped.
+    """
+    import glob
+    import os
+    import shutil
+
+    base = path.rstrip("/")
+    olds = sorted(glob.glob(glob.escape(base) + ".old-*"), key=os.path.getmtime)
+
+    def finished(tmp: str) -> bool:
+        return os.path.exists(os.path.join(tmp, "_SUCCESS"))
+
+    if not os.path.exists(base):
+        if olds:
+            old = olds[-1]
+            tmp = base + ".tmp-" + old[len(base) + len(".old-"):]
+            if finished(tmp):
+                os.replace(tmp, base)
+            else:
+                os.replace(old, base)
+                shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            tmps = [t for t in glob.glob(glob.escape(base) + ".tmp-*") if finished(t)]
+            if tmps:
+                os.replace(max(tmps, key=os.path.getmtime), base)
+    for old in olds:
+        if os.path.exists(old):
+            shutil.rmtree(old, ignore_errors=True)
+
+
 def upsert_parquet(
     spark: SparkSession,
     path: str,
@@ -194,9 +236,12 @@ def upsert_parquet(
     ``shutil.rmtree`` of the only copy): a crash between them leaves
     both the old table (under the ``.old-*`` name) and the fully
     written tmp on disk — nothing is ever the sole casualty of a
-    mid-swap crash (round-11 ADVICE #1). The versioned writer remains
-    the right tool when pointer-level atomicity matters.
+    mid-swap crash (round-11 ADVICE #1), and the next call finishes
+    or rolls back that swap before it reads (``_recover_swap``). The
+    versioned writer remains the right tool when pointer-level
+    atomicity matters.
     """
+    _recover_swap(path)
     try:
         existing = spark.read.parquet(path)
     except AnalysisException as err:
@@ -389,7 +434,7 @@ _DV_INLINE_MAX = 16384
 # of files, e.g. a predicate delete at sub-purge density — stays under
 # the 16k ROW cap but would build a thousands-branch union whose
 # driver plan-build time and codegen size, not data, become the cost
-# (measured, r15_experiments.py dvplan: 1k affected files = 70.5 s
+# (measured, SCALING.md "DV inline path capped": 1k affected files = 70.5 s
 # plan build + 49.6 s count inline vs 3.6 s + 2.2 s via the
 # single-scan broadcast anti-join fallback). Past this many affected
 # files the fallback wins regardless of DV row count.
@@ -2999,8 +3044,9 @@ def _snapshot_df_build(
     # The schema is inferred ONCE and pinned on every branch — each
     # bare spark.read.parquet() runs an eager footer-inference job, and
     # 64 of them made the first cut of this read 13x the partitioned
-    # scan (r11_experiments.py vreads). Uniform schema across buckets
-    # holds by construction — evolution rewrites every bucket.
+    # scan (SCALING.md, "Versioned read path at deep history"). Uniform
+    # schema across buckets holds by construction — evolution rewrites
+    # every bucket.
     first_path = os.path.join(table_dir, entries[0][1], entries[0][0])
     data_schema = spark.read.parquet(first_path).schema
     full_schema = data_schema.add(_BUCKET_COL, "integer")
@@ -4170,6 +4216,22 @@ def upsert_dbapi(
     df.foreachPartition(write_partition)
 
 
+def catalog_rows(counts: DataFrame, processed_at: str | None = None) -> DataFrame:
+    """Inventory rows from per-day ``(available_date, record_count)``
+    counts: adds each day's table name and the load stamp
+    (``processed_at``, or the current time when None)."""
+    return (
+        counts.withColumn("table_name", table_name_for_day(F.col("available_date")))
+        .withColumn(
+            "processed_at",
+            F.lit(processed_at).cast("string")
+            if processed_at is not None
+            else F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
+        )
+        .select(*INVENTORY_COLUMNS)
+    )
+
+
 def register_load(
     inventory: DataFrame,
     loaded: DataFrame,
@@ -4183,19 +4245,10 @@ def register_load(
     one day per run, etl.py:129-130; doing it group-wise is the
     distributed generalization).
     """
-    updates = (
-        loaded.groupBy(F.col(date_col).alias("available_date"))
-        .agg(F.count(F.lit(1)).alias("record_count"))
-        .withColumn("table_name", table_name_for_day(F.col("available_date")))
-        .withColumn(
-            "processed_at",
-            F.lit(processed_at).cast("string")
-            if processed_at is not None
-            else F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
-        )
-        .select(*INVENTORY_COLUMNS)
+    counts = loaded.groupBy(F.col(date_col).alias("available_date")).agg(
+        F.count(F.lit(1)).alias("record_count")
     )
-    return merge_upsert(inventory, updates, ["available_date"])
+    return merge_upsert(inventory, catalog_rows(counts, processed_at), ["available_date"])
 
 
 def reconcile_inventory(
@@ -4219,19 +4272,12 @@ def reconcile_inventory(
     (upsert semantics — the reference's backfill also never deletes).
     """
     data = spark.read.parquet(data_dir).select(date_col)
-    counts = (
-        data.groupBy(F.col(date_col).alias("available_date"))
-        .agg(F.count(F.lit(1)).alias("record_count"))
-        .withColumn("table_name", table_name_for_day(F.col("available_date")))
-        .withColumn(
-            "processed_at",
-            F.lit(processed_at).cast("string")
-            if processed_at is not None
-            else F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
-        )
-        .select(*INVENTORY_COLUMNS)
+    counts = data.groupBy(F.col(date_col).alias("available_date")).agg(
+        F.count(F.lit(1)).alias("record_count")
     )
-    return upsert_parquet(spark, inventory_path, counts, ["available_date"])
+    return upsert_parquet(
+        spark, inventory_path, catalog_rows(counts, processed_at), ["available_date"]
+    )
 
 
 # ---------------------------------------------------------------------------

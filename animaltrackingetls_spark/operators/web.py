@@ -87,7 +87,7 @@ def registered_domain(
     # substring_index, not split+element_at: Catalyst has no
     # let-binding, so the split array would be re-inlined (and the
     # regex re-run) at every element_at reference — measured 10.6 s vs
-    # 3.0 s on 10M hosts (r8_experiments.py pslscale, SCALING.md).
+    # 3.0 s on 10M hosts (SCALING.md, "PSL derivation cost anatomy").
     # substring_index walks the string once per reference with no
     # regex and no array. A host with ≤ 2 labels is its own last-2
     # (substring_index returns the whole string when there are fewer

@@ -1,5 +1,6 @@
 """End-to-end occurrence pipeline — the reference's flagship lifecycle
-(SURVEY.md §3.1, ``monarch_etl_day_scan``) as one lazy Spark DAG.
+(SURVEY.md §3.1, ``monarch_etl_day_scan``) as one run over one snapshot
+of its source.
 
 Reference stages → Spark form:
 1.  extract   paginated REST scan → any occurrence-shaped DataFrame
@@ -15,10 +16,33 @@ Reference stages → Spark form:
               the scalable replacement for table-per-day
 8.  register  inventory upsert keyed on available_date
 
-Stages 2-5 are narrow transformations — Catalyst plans the whole thing
-as a single scan with two output branches; the only shuffles are the
-inventory count and the (tiny) broadcast build. The reference's
-empty-input short-circuits (F7, etl.py:56-58) are preserved.
+A run reads its source exactly once. Its Spark actions, in order:
+
+a.  snapshot  ``localCheckpoint(eager=True)`` of the input: one pass over
+              the source (for ``paged_rest``, one request per planned
+              page). Every later frame — good, rejected, enriched, the
+              sinks' inputs and the frames returned in
+              ``PipelineResult`` — is planned over this snapshot, so all
+              of them see the same records even when the upstream API
+              answers differently from one call to the next.
+b.  counts    one small aggregate over the frame that is written (after
+              the geocode join, since a dim with repeated cells changes
+              row counts) and the rejects, collected to the driver: the
+              per-day good counts and the reject count. They give the
+              empty-input short-circuit (F7, etl.py:56-58), whether a
+              rejects file is written, ``loaded_rows``, and the
+              inventory updates — no separate ``isEmpty`` probe or
+              ``count()``.
+c.  rejects   CSV write, only when the snapshot holds rejects.
+d.  load      the partitioned parquet write.
+e.  register  ``upsert_parquet`` merges the per-day counts (a driver-built
+              frame of one row per day) into the catalog.
+
+Cost of the snapshot: one copy of the input rows, held as Spark blocks
+at MEMORY_AND_DISK (spilled to executor-local disk under memory
+pressure) while the returned frames are reachable, and freed by Spark's
+context cleaner once they are dropped. For a daily scan that is about
+one day's records — the price of every output coming from one read.
 """
 
 from __future__ import annotations
@@ -26,12 +50,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from .cleaning import CleanResult, clean_occurrences, rejection_histogram
+from .cleaning import clean_occurrences, rejection_histogram
 from .enrichment import geocode_broadcast_join
-from .inventory import INVENTORY_COLUMNS, register_load, upsert_parquet
+from .inventory import catalog_rows, upsert_parquet
 from .io import write_partitioned, write_rejects_csv
-from .serving import is_empty
 
 
 @dataclass
@@ -59,44 +83,10 @@ def occurrence_scan(
     multi-day input needs no loop — the partitioned write and the
     group-wise inventory registration handle any number of days in one
     pass (the reference's ``monarch_etl_multi_day_scan`` sequential loop
-    collapses into this).
+    collapses into this). ``raw`` is read once, into a snapshot that
+    every sink, count and returned frame reads (module docstring).
     """
-    if is_empty(raw):  # F7: abort before planning any downstream work
-        # Preserve the normal-path schema contract even for empty input:
-        # good is canonical 35-column, rejected is raw+failure columns,
-        # histogram is (reason, n) — so unionByName across days and
-        # downstream selects never break on an empty day.
-        from pyspark.sql import types as T
-
-        from .schema import FAILURE_DETAIL, FAILURE_REASON, OCCURRENCE_SCHEMA
-
-        empty_good = spark.createDataFrame([], OCCURRENCE_SCHEMA)
-        rej_schema = T.StructType(
-            list(raw.schema.fields)
-            + [
-                T.StructField(FAILURE_REASON, T.StringType()),
-                T.StructField(FAILURE_DETAIL, T.StringType()),
-            ]
-        )
-        empty_rej = spark.createDataFrame([], rej_schema)
-        empty_hist = spark.createDataFrame(
-            [], T.StructType([
-                T.StructField(FAILURE_REASON, T.StringType()),
-                T.StructField("n", T.LongType(), False),
-            ])
-        )
-        return PipelineResult(empty_good, empty_rej, empty_hist, None, 0)
-
-    # cache only when two or more sinks will each trigger an action over
-    # the tagged frame; a single consumer (or the no-sink test path)
-    # should keep the one-pass shared scan — and the cache is RELEASED
-    # before returning, so looped day runs don't accrete a copy of the
-    # whole input per invocation
-    n_consumers = sum(
-        x is not None for x in (output_dir, rejects_dir, inventory_path)
-    )
-    use_cache = n_consumers >= 2
-    result: CleanResult = clean_occurrences(raw, cache=use_cache)
+    result = clean_occurrences(raw.localCheckpoint(eager=True))
     good = result.good
     if geocode_dim is not None:
         enriched = geocode_broadcast_join(
@@ -104,35 +94,45 @@ def occurrence_scan(
         )
         good = enriched.select(*good.columns)
 
-    if rejects_dir is not None and not is_empty(result.rejected):
+    # good rows always have a date_only (an unparseable date is a
+    # reject), so the null group is the reject count. A day's rows fit
+    # one task: coalesce(1) makes the aggregate a single stage, no
+    # shuffle.
+    per_day = {
+        r["date_only"]: r["n"]
+        for r in good.select("date_only")
+        .unionByName(result.rejected.select(F.lit(None).cast("date").alias("date_only")))
+        .coalesce(1)
+        .groupBy("date_only")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    n_rejected = per_day.pop(None, 0)
+    histogram = rejection_histogram(result.rejected)
+    if not per_day and not n_rejected:  # F7: nothing to load or register
+        return PipelineResult(good, result.rejected, histogram, None, 0)
+
+    if rejects_dir is not None and n_rejected:
         write_rejects_csv(result.rejected, rejects_dir)
 
     loaded_rows = 0
     if output_dir is not None:
         write_partitioned(good, output_dir, ["date_only"])
-        # count THIS run's rows (cached tagged frame) — counting the
-        # output dir would include surviving partitions from prior days
-        loaded_rows = good.count()
+        loaded_rows = sum(per_day.values())
 
     inventory = None
     if inventory_path is not None:
-        # register_load against an empty inventory yields just this run's
-        # update rows; upsert_parquet does the (single) merge with disk
-        from .inventory import empty_inventory as _empty_inventory
-
-        empty_inventory = _empty_inventory(spark)
-        updates = register_load(empty_inventory, good, processed_at=processed_at)
-        inventory = upsert_parquet(
-            spark, inventory_path, updates.select(*INVENTORY_COLUMNS), ["available_date"]
+        counts = spark.createDataFrame(
+            sorted(per_day.items()), "available_date date, record_count bigint"
         )
-
-    if use_cache:
-        result.tagged.unpersist()
+        inventory = upsert_parquet(
+            spark, inventory_path, catalog_rows(counts, processed_at), ["available_date"]
+        )
 
     return PipelineResult(
         good=good,
         rejected=result.rejected,
-        reject_histogram=rejection_histogram(result.rejected),
+        reject_histogram=histogram,
         inventory=inventory,
         loaded_rows=loaded_rows,
     )

@@ -71,6 +71,28 @@ def test_upsert_parquet_durable(spark, tmp_path):
     assert [(r.record_count, r.processed_at) for r in final.collect()] == [(99, "b")]
 
 
+@pytest.mark.parametrize("leftover", ["aside_copy", "finished_tmp"])
+def test_upsert_parquet_recovers_interrupted_swap(spark, tmp_path, leftover):
+    """What a crash inside the swap leaves instead of the live table —
+    the table renamed aside next to a tmp that never committed, or a
+    finished tmp never renamed into place — is restored by the next
+    upsert, which merges into it instead of publishing only its rows."""
+    path = os.path.join(str(tmp_path), "inv")
+    b1 = spark.createDataFrame([("2024-01-01", "t1", 10, "a")], _B_SCHEMA)
+    b2 = spark.createDataFrame([("2024-01-02", "t2", 5, "b")], _B_SCHEMA)
+    upsert_parquet(spark, path, b1, ["available_date"])
+    if leftover == "aside_copy":
+        os.replace(path, path + ".old-deadbeef")
+        os.makedirs(path + ".tmp-deadbeef")  # a write cut off before commit
+    else:
+        os.replace(path, path + ".tmp-deadbeef")  # committed, has _SUCCESS
+    final = upsert_parquet(spark, path, b2, ["available_date"])
+    assert {r.available_date: r.record_count for r in final.collect()} == {
+        "2024-01-01": 10, "2024-01-02": 5,
+    }
+    assert [d for d in os.listdir(tmp_path) if d != "inv"] == []
+
+
 def test_upsert_dbapi_on_conflict(spark, tmp_path):
     import sqlite3
 
@@ -277,8 +299,8 @@ def test_versioned_time_travel_reads_retained_snapshot(spark, tmp_path):
 def test_versioned_upsert_target_files_pins_layout(spark, tmp_path):
     """target_files=1 publishes a single-part snapshot (catalog layout
     contract); the default writes the merge plan distributed — no
-    driver-side collect of the table (the 92 s/10M-row ceiling
-    r9_experiments.py upsertscale caught; SCALING.md round 9) — and
+    driver-side collect of the table (the 92 s/10M-row ceiling in
+    SCALING.md, "Versioned upsert: the driver materialization") — and
     both layouts read back identically."""
     import glob
     import os

@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from collections import Counter
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import parse_qs, urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -121,3 +125,183 @@ def test_loaded_rows_counts_this_run_only(spark, raw_from_rest, tmp_path):
     assert second.loaded_rows == 1
     # and the physical dataset now holds both days' partitions
     assert spark.read.parquet(out_dir).count() == 3
+
+
+# ---------------------------------------------------------------------------
+# one snapshot per run, against a source that changes between reads
+# ---------------------------------------------------------------------------
+
+PAGE_DDL = (
+    "gbifID string, eventDate string, decimalLatitude double, "
+    "decimalLongitude double, individualCount bigint, basisOfRecord string"
+)
+
+
+def _pass_records(k: int) -> list[dict]:
+    """Record set of the k-th pass: sizes, days and rejects all differ
+    from one pass to the next."""
+    recs = []
+    for i in range(7 + 2 * k):
+        recs.append({
+            "gbifID": f"{k}-{i}",
+            "eventDate": "garbage" if i % 4 == 3 else f"2024-0{6 + k}-0{1 + (i + k) % 3}",
+            "decimalLatitude": None if (i + k) % 5 == 4 else 40.0 + i / 10,
+            "decimalLongitude": -74.0,
+            "individualCount": 1,
+            "basisOfRecord": "OBS",
+        })
+    return recs
+
+
+class ShiftingPageServer:
+    """Stdlib HTTP page server (GBIF ``limit``/``offset`` paging) whose
+    answer moves on every pass over the pages, like a live API between
+    two scans: the n-th request for an offset is served from
+    ``_pass_records(n)``. ``hits`` counts requests per offset."""
+
+    def __init__(self):
+        self.hits: Counter = Counter()
+        lock = threading.Lock()
+        hits = self.hits
+
+        class Handler(BaseHTTPRequestHandler):
+            def do_GET(self) -> None:  # noqa: N802 (stdlib API name)
+                q = parse_qs(urlparse(self.path).query)
+                limit, offset = int(q["limit"][0]), int(q["offset"][0])
+                with lock:
+                    n = hits[offset]
+                    hits[offset] += 1
+                recs = _pass_records(n)
+                body = json.dumps({
+                    "results": recs[offset:offset + limit],
+                    "endOfRecords": offset + limit >= len(recs),
+                }).encode()
+                self.send_response(200)
+                self.send_header("Content-Type", "application/json")
+                self.send_header("Content-Length", str(len(body)))
+                self.end_headers()
+                self.wfile.write(body)
+
+            def log_message(self, fmt: str, *args) -> None:
+                pass
+
+        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self._thread = threading.Thread(target=self.httpd.serve_forever, daemon=True)
+        self._thread.start()
+
+    @property
+    def url(self) -> str:
+        host, port = self.httpd.server_address[:2]
+        return f"http://{host}:{port}/occurrence/search"
+
+    def close(self) -> None:
+        self.httpd.shutdown()
+        self.httpd.server_close()
+        self._thread.join(timeout=10)
+        assert not self._thread.is_alive()
+
+
+@pytest.fixture
+def shifting_pages():
+    server = ShiftingPageServer()
+    yield server
+    server.close()
+
+
+def _csv_rows(path: str) -> int:
+    n = 0
+    for name in os.listdir(path):
+        if name.endswith(".csv"):
+            with open(os.path.join(path, name)) as fh:
+                n += sum(1 for _ in fh) - 1  # minus the header
+    return n
+
+
+@pytest.mark.parametrize("sinks", ["output_only", "all_sinks"])
+def test_one_snapshot_per_run(spark, tmp_path, shifting_pages, sinks):
+    """Every output of one run comes from one read of the source: the
+    server sees one request per planned page, and loaded, rejected, the
+    histogram and the inventory all describe that one answer."""
+    spark.dataSource.register(PagedRestDataSource)
+    limit, max_pages = 3, 4
+    raw = (
+        spark.read.format("paged_rest")
+        .option("base_url", shifting_pages.url)
+        .option("schema_ddl", PAGE_DDL)
+        .option("limit_per_request", str(limit))
+        .option("max_pages", str(max_pages))
+        .load()
+    )
+    out_dir = str(tmp_path / "occ")
+    rej_dir = str(tmp_path / "rejects") if sinks == "all_sinks" else None
+    inv_path = str(tmp_path / "inventory") if sinks == "all_sinks" else None
+    res = occurrence_scan(
+        spark, raw, output_dir=out_dir, rejects_dir=rej_dir,
+        inventory_path=inv_path, processed_at="run1",
+    )
+
+    served = _pass_records(0)
+    on_disk = spark.read.parquet(out_dir)
+    assert res.loaded_rows == on_disk.count()
+    per_day = {r.date_only: r["count"] for r in on_disk.groupBy("date_only").count().collect()}
+    if sinks == "all_sinks":
+        inv = {r.available_date: r.record_count for r in res.inventory.collect()}
+        assert inv == per_day
+        rejected = _csv_rows(rej_dir)
+    else:
+        assert res.inventory is None
+        rejected = res.rejected.count()
+    assert res.loaded_rows + rejected == len(served)
+    assert sum(r.n for r in res.reject_histogram.collect()) == rejected
+    assert {r.gbifID for r in res.good.collect()} == {r.gbifID for r in on_disk.collect()}
+    # one pass: every planned page requested exactly once, even after
+    # the returned frames were read again above
+    assert dict(shifting_pages.hits) == {p * limit: 1 for p in range(max_pages)}
+
+
+# ---------------------------------------------------------------------------
+# a crash inside the catalog swap, then a rerun
+# ---------------------------------------------------------------------------
+
+
+def _day(spark, day: int, n: int):
+    return spark.createDataFrame(
+        [(f"{day}-{i}", f"2024-06-{day:02d}", 40.0, -74.0, 1) for i in range(n)],
+        "gbifID string, eventDate string, decimalLatitude double, "
+        "decimalLongitude double, individualCount bigint",
+    )
+
+
+@pytest.mark.parametrize("crash_at", [1, 2])
+def test_catalog_swap_crash_then_rerun(spark, tmp_path, monkeypatch, crash_at):
+    """A crash at either rename of ``upsert_parquet``'s swap, then a
+    rerun of the same day, leaves the catalog equal to what
+    ``reconcile_inventory`` derives from the data."""
+    from animaltrackingetls_spark.inventory import reconcile_inventory
+
+    out_dir, inv_path = str(tmp_path / "occ"), str(tmp_path / "inventory")
+    occurrence_scan(spark, _day(spark, 1, 2), output_dir=out_dir,
+                    inventory_path=inv_path, processed_at="run1")
+
+    real_replace = os.replace
+    calls = []
+
+    def crashing_replace(src, dst):
+        calls.append(src)
+        if len(calls) == crash_at:
+            raise OSError("injected crash")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crashing_replace)
+    with pytest.raises(OSError, match="injected crash"):
+        occurrence_scan(spark, _day(spark, 2, 3), output_dir=out_dir,
+                        inventory_path=inv_path, processed_at="run2")
+    monkeypatch.setattr(os, "replace", real_replace)
+
+    res = occurrence_scan(spark, _day(spark, 2, 3), output_dir=out_dir,
+                          inventory_path=inv_path, processed_at="run2")
+    inv = {r.available_date: (r.table_name, r.record_count) for r in res.inventory.collect()}
+    truth = reconcile_inventory(spark, out_dir, str(tmp_path / "reconciled"))
+    assert inv == {r.available_date: (r.table_name, r.record_count) for r in truth.collect()}
+    assert len(inv) == 2
+    assert not [d for d in os.listdir(tmp_path) if ".old-" in d]
