@@ -1096,21 +1096,9 @@ def upsert_parquet_versioned(
     dv: bool = False,
     delete_keys: DataFrame | None = None,
     on_violation: str = "fail",
-    _classified_base: str | None | object = _UNCHECKED,
 ) -> DataFrame:
     """Keyed upsert with SNAPSHOT-ATOMIC publish — closes the
     `upsert_parquet` transactionality gap without a lake format.
-
-    ``_classified_base`` (internal — :func:`merge_into`): the snapshot
-    version the caller's matched/unmatched classification was computed
-    against (``None`` = classified against an unpublished table; the
-    default ``_UNCHECKED`` disables the check). When enabled, any
-    attempt that observes a DIFFERENT current version raises
-    :class:`ConcurrentWriteError` immediately instead of re-merging:
-    re-merging the same pre-classified frames against a newer base
-    would act on a STALE matched/unmatched split (round-14 verdict #4
-    — Delta's MERGE re-validates on conflict). The caller re-runs the
-    classification and retries.
 
     The reference gets per-row atomicity from Postgres ``ON CONFLICT``
     (monarch_etl/inventory.py:52-59); Delta/Iceberg would give MERGE
@@ -1297,16 +1285,6 @@ def upsert_parquet_versioned(
         except ConcurrentWriteError as err:
             last_err = err
             continue
-        if _classified_base is not _UNCHECKED and current != _classified_base:
-            # the caller classified against a base another writer has
-            # since replaced — re-merging the pre-classified frames
-            # here would act on a STALE matched/unmatched split, so
-            # surface the conflict for the caller to RE-CLASSIFY
-            # (merge_into's retry loop does; round-14 verdict #4)
-            raise ConcurrentWriteError(
-                f"{table_dir}: classification base {_classified_base} "
-                f"superseded by {current}; re-classify and retry"
-            )
         if (
             txn_app_id is not None
             and txn_app_id in marks
@@ -3994,162 +3972,6 @@ def reorg_purge_versioned(
         return report
     report.update(purged=True, version=version)
     return report
-
-
-def merge_into(
-    spark: SparkSession,
-    table_dir: str,
-    source: DataFrame,
-    key_cols: list[str],
-    when_matched: str | None = "update",
-    when_not_matched: str | None = "insert",
-    matched_condition: str | None = None,
-    keep_versions: int = 2,
-    txn_app_id: str | None = None,
-    txn_version: int | None = None,
-    cow: bool = False,
-    dv: bool = False,
-    write_change_data: bool | None = None,
-    retries: int = 2,
-) -> DataFrame:
-    """Delta's ``MERGE INTO`` surface over the versioned primitives
-    (round 14): classify every source row as MATCHED (its key exists
-    in the current snapshot) or NOT MATCHED, then apply
-
-    * ``when_matched="update"`` — matched rows replace their target
-      row; ``"delete"`` — matched rows REMOVE their target row (via
-      the single-commit ``delete_keys`` path); ``None`` — matched
-      rows are ignored;
-    * ``matched_condition`` — SQL predicate over the SOURCE row
-      restricting the matched action (``WHEN MATCHED AND <cond>``);
-      matched rows failing it take no action;
-    * ``when_not_matched="insert"`` — unmatched rows insert; ``None``
-      — they are ignored.
-
-    Everything lands in ONE snapshot commit (one CAS publish, one
-    watermark, one CDC log) through :func:`upsert_parquet_versioned`,
-    so the merge strategies compose: ``cow=True`` rewrites only the
-    files holding affected keys, ``dv=True`` marks matched preimages
-    in the deletion vector and appends the rest. The unconditional
-    update+insert form needs NO classification probe (it is exactly
-    the keyed upsert); every other form pays one column-pruned
-    key-column scan of the current snapshot to split matched from
-    unmatched — bounded by the key columns' bytes, never the row
-    payload. First write: everything is NOT MATCHED.
-
-    Concurrency note (round 15 — r14 verdict #4): classification is
-    computed against the snapshot CURRENT at call time, materialized
-    (localCheckpoint), and PINNED to that base through the commit —
-    the inner upsert raises :class:`ConcurrentWriteError` instead of
-    re-merging when any attempt observes a different current version
-    (``_classified_base``), and this function then RE-RUNS the
-    classification against the new base and retries (up to ``retries``
-    times), so the conditional/delete forms serialize like Delta's
-    MERGE, which re-validates on conflict. A key whose matched status
-    flips mid-merge is acted on under its NEW status. The plain
-    update+insert form needs no classification and keeps the inner
-    upsert's own retry loop.
-    """
-    if when_matched not in ("update", "delete", None):
-        raise ValueError(f"when_matched must be update|delete|None, "
-                         f"got {when_matched!r}")
-    if when_not_matched not in ("insert", None):
-        raise ValueError(f"when_not_matched must be insert|None, "
-                         f"got {when_not_matched!r}")
-    if when_matched is None and when_not_matched is None:
-        raise ValueError("merge with no clauses is a no-op by "
-                         "construction — refuse loudly")
-    if matched_condition is not None and when_matched is None:
-        raise ValueError("matched_condition without a when_matched "
-                         "clause has no effect")
-
-    kw = dict(keep_versions=keep_versions, txn_app_id=txn_app_id,
-              txn_version=txn_version, cow=cow, dv=dv,
-              write_change_data=write_change_data)
-    plain_upsert = (
-        when_matched == "update" and matched_condition is None
-        and when_not_matched == "insert"
-    )
-    if plain_upsert:
-        return upsert_parquet_versioned(
-            spark, table_dir, source, key_cols, **kw)
-
-    last_err: ConcurrentWriteError | None = None
-    for _attempt in range(max(0, retries) + 1):
-        current = _current_version(table_dir)
-        if current is None:
-            # first write: every source row is NOT MATCHED
-            if when_not_matched is None:
-                raise FileNotFoundError(
-                    f"no published snapshot under {table_dir} and the "
-                    "merge has no NOT MATCHED clause"
-                )
-            try:
-                return upsert_parquet_versioned(
-                    spark, table_dir, source, key_cols, retries=0,
-                    _classified_base=None, **kw)
-            except ConcurrentWriteError as err:
-                last_err = err
-                continue
-
-        tgt_keys = _snapshot_df(spark, table_dir, current).select(
-            *key_cols).dropDuplicates(key_cols)
-        matched = source.join(
-            tgt_keys, on=_null_safe_cond(source, tgt_keys, key_cols),
-            how="left_semi",
-        )
-        unmatched = source.join(
-            tgt_keys, on=_null_safe_cond(source, tgt_keys, key_cols),
-            how="left_anti",
-        )
-        acting = (
-            matched.filter(matched_condition)
-            if matched_condition is not None else matched
-        )
-        parts = []
-        delete_keys = None
-        if when_matched == "update":
-            parts.append(acting)
-        elif when_matched == "delete":
-            delete_keys = acting.select(*key_cols)
-        if when_not_matched == "insert":
-            parts.append(unmatched)
-        if parts:
-            updates = parts[0]
-            for p in parts[1:]:
-                updates = updates.unionByName(p)
-        else:
-            updates = source.limit(0)
-        # materialize the classified frames once per attempt: they
-        # feed the planner's probe, the merge, and the CDC
-        # classification, and must not silently re-plan against a
-        # snapshot a concurrent writer replaced — the pin below makes
-        # that case an explicit re-classify instead
-        updates = updates.localCheckpoint()
-        if delete_keys is not None:
-            delete_keys = delete_keys.localCheckpoint()
-            if delete_keys.isEmpty():
-                delete_keys.unpersist()
-                delete_keys = None
-        if delete_keys is None and updates.isEmpty():
-            updates.unpersist()
-            return read_versioned(spark, table_dir)  # provable no-op
-        try:
-            return upsert_parquet_versioned(
-                spark, table_dir, updates, key_cols,
-                delete_keys=delete_keys, retries=0,
-                _classified_base=current, **kw)
-        except ConcurrentWriteError as err:
-            last_err = err  # re-classify against the new base
-            # release the superseded classification's checkpointed
-            # blocks before re-classifying — each retry materializes a
-            # fresh copy and a contended merge would otherwise pin one
-            # full classified frame per conflict until session end
-            # (round-15 review finding)
-            updates.unpersist()
-            if delete_keys is not None:
-                delete_keys.unpersist()
-    raise last_err
 
 
 def upsert_dbapi(

@@ -2001,388 +2001,3 @@ def pair_metrics(
         [(tp, fp, fn, round(precision, 6), round(recall, 6), round(f1, 6))],
         "tp long, fp long, fn long, precision double, recall double, f1 double",
     )
-
-
-def _adopt_legacy_index(index_dir: str) -> None:
-    """One-time migration of a pre-round-11 dedup index (independent
-    per-table versioned tables, each with its own ``_CURRENT``) into
-    the group-commit layout (ONE ``_CURRENT_GROUP`` JSON naming every
-    member's version).
-
-    Watermark adoption must keep a legacy half-applied batch
-    REPLAYABLE: an app's mark carries over only when BOTH core tables
-    (docs AND bands) exist and carry it, and then as their MINIMUM — a
-    member that lacks the mark (or is missing entirely, e.g. a crash
-    before bands' first-ever commit) means the batch never fully
-    landed, so the app adopts NO mark and the replay applies
-    everywhere (keyed last-wins merges make re-applying to the ahead
-    table idempotent). Adopting the ahead table's mark instead would
-    watermark-no-op the replay and freeze the under-detection forever
-    (round-11 self-review finding #1; the bloom is excluded from the
-    requirement — its OR-merge is idempotent without a watermark).
-
-    The whole adoption commits in ONE ``_publish_group`` swap (legacy
-    ledgers seeded via ``seed_history``) under the group lock, so a
-    concurrent first toucher either wins wholesale or loses the CAS —
-    there is no post-publish fix-up that could clobber a commit that
-    landed in between (round-11 self-review finding #2). The legacy
-    per-table pointers are left in place as frozen relics; the group
-    pointer is the only authority afterwards. No-op when the group
-    pointer already exists or no legacy layout is present."""
-    import os
-
-    from ..inventory import (
-        ConcurrentWriteError,
-        _current_version,
-        _publish_group,
-        _read_history,
-        group_state,
-        txn_watermarks,
-    )
-
-    if group_state(index_dir) is not None:
-        return
-    members = [
-        t for t in ("docs", "bands", "bloom")
-        if _current_version(os.path.join(index_dir, t)) is not None
-    ]
-    if not members:
-        return
-    versions = {
-        t: _current_version(os.path.join(index_dir, t)) for t in members
-    }
-    history = {
-        t: (_read_history(os.path.join(index_dir, t)) or [versions[t]])
-        for t in members
-    }
-    marks: dict[str, int] = {}
-    if "docs" in members and "bands" in members:
-        per_table = [
-            txn_watermarks(os.path.join(index_dir, t))
-            for t in ("docs", "bands")
-        ]
-        for app in set(per_table[0]) & set(per_table[1]):
-            marks[app] = min(m[app] for m in per_table)
-    # keep_versions high enough to not prune anything during adoption
-    keep = max(len(h) for h in history.values())
-    try:
-        _publish_group(index_dir, versions, marks, keep,
-                       expected_versions=None, seed_history=history)
-    except ConcurrentWriteError:
-        return  # a concurrent toucher adopted first — already done
-
-
-_BLOOM_SIDECAR = "_bloom_meta.json"
-
-
-def _bloom_meta(bloom_tbl: str) -> int | None:
-    """Stored ``m_bits`` for a persisted bloom table, None if unset."""
-    import json
-    import os
-
-    try:
-        with open(os.path.join(bloom_tbl, _BLOOM_SIDECAR)) as f:
-            return int(json.load(f)["m_bits"])
-    except FileNotFoundError:
-        return None
-
-
-def _write_bloom_meta(bloom_tbl: str, m_bits: int) -> None:
-    """Atomically pin ``m_bits`` next to the bloom table (tmp+rename,
-    same posture as the versioned layer's pointer writes)."""
-    import json
-    import os
-
-    os.makedirs(bloom_tbl, exist_ok=True)
-    path = os.path.join(bloom_tbl, _BLOOM_SIDECAR)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"m_bits": m_bits}, f)
-    os.replace(tmp, path)
-
-
-def dedup_index_ingest(
-    spark,
-    new_docs: DataFrame,
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 2,
-    bands: int = 2,
-    rows_per_band: int = 3,
-    num_sig_hashes: int = 24,
-    sig_agree: float = 0.5,
-    txn_app_id: str | None = None,
-    txn_version: int | None = None,
-    use_bloom: bool = False,
-    m_bits: int = 1 << 26,
-) -> DataFrame:
-    """Classify a batch against a PERSISTED dedup index and append its
-    novel documents — the production form of :func:`incremental_dedup`,
-    whose docstring promises "in production: the persisted digest/bands
-    table" and which until round 10 recomputed the corpus side on every
-    call. Here the corpus side IS two versioned tables under
-    ``index_dir`` (created on first ingest):
-
-    * ``docs``  — ``(id, digest, hs)``: md5 content digest + the
-      portable-MinHash signature (``max(num_sig_hashes, bands·rows)``
-      md5-minhash strings; at 100 TB store 8-byte xxhash64 minhashes —
-      same plan, 4× narrower rows);
-    * ``bands`` — ``(id, bk)``: the SAME band-key family as
-      ``minhash_candidate_pairs_portable`` (shared definition,
-      ``_portable_band_keys``' contract), so either pipeline's bands
-      table is joinable by the other.
-
-    Per batch: O(batch) hashing + two index equi-joins (digest; band
-    key) + a signature-agreement verify on the banded candidates ONLY —
-    ``agree = |{i: hs_a[i]=hs_b[i]}| / k`` is the unbiased MinHash
-    estimate of Jaccard, so ``sig_agree`` plays the threshold role
-    WITHOUT the index storing any text (the precision/recall knob is
-    ``num_sig_hashes``; the exact-Jaccard verify stays available in
-    :func:`incremental_dedup` where text is at hand). Novel documents'
-    rows append to both tables through the versioned writers.
-
-    **Exactly-once, atomically across tables** (round 11; the tables
-    live under ONE :func:`~animaltrackingetls_spark.inventory.
-    upsert_group_versioned` group commit): docs, bands and the
-    optional bloom advance together in a single pointer swap, so a
-    crash can never leave signatures without band keys — the batch
-    either landed whole or not at all, and one group watermark makes
-    the replay a no-op for the whole batch. Pass ``txn_app_id``/
-    ``txn_version`` (e.g. a foreachBatch id) for that replay
-    protection. Both index joins still EXCLUDE self-matches
-    (``cid != id``): a replay AFTER a successful commit (at-least-once
-    caller whose checkpoint lagged the sink) finds its own digests in
-    the index, and without the exclusion would classify every
-    previously-kept row as exact_dup of itself — the statuses it
-    returns must match the original run's. Pre-round-11 per-table
-    indexes are adopted into the group layout on first touch
-    (:func:`_adopt_legacy_index`; watermarks take the per-app MIN so a
-    legacy half-applied batch stays replayable and heals). Batch ids
-    must be globally unique and batch-internal exact dups should be
-    dropped upstream (:func:`drop_exact_duplicates`), same contract as
-    the transient form. Returns ``(id, status in {exact_dup, near_dup,
-    kept}, matched_id)``.
-
-    ``use_bloom`` maintains a THIRD versioned table,
-    ``bloom`` — the :func:`digest_bitmap` (≤ ``m_bits/64`` rows, ≤8 MiB
-    broadcast at 2^26 bits) of every indexed digest, OR-merged per
-    ingest — and probes it before the exact join: clear-bit batch rows
-    are PROVABLY absent from the index (bloom has no false negatives)
-    and never reach the docs table; only set-bit rows (dups + ~n/m
-    false positives) enter the confirm join, so the classification
-    stays EXACT while a mostly-novel batch's confirm input collapses
-    toward empty (AQE's empty-relation propagation then elides the
-    index scan). The bloom commits in the SAME group swap as docs and
-    bands, so bits-set-without-docs (or the dangerous inverse, a clear
-    bit over an indexed digest, which would mint a false 'kept') cannot
-    arise from a crash at all; OR-merge additionally makes a replayed
-    commit idempotent even without its watermark.
-
-    MEASURED DEFAULT-OFF (r10 sweep, 100k/300k/1M-doc indexes, 10k
-    batches): per-ingest cost is dominated by the batch's own hashing,
-    the digest scan the bloom avoids is ~40 MB even at 1M docs, and the
-    bloom's three extra table operations cost a constant ~2-6 s — so
-    locally the bloom LOSES at every measured size (classifications
-    identical, exactness pinned). Its regime is the one it was designed
-    for: 100M+ document indexes and object-store scans where the digest
-    table is GBs behind GET latency; turn it on there.
-    """
-    import os
-
-    from ..inventory import read_versioned_group, upsert_group_versioned
-
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be given together")
-    num_hashes = max(num_sig_hashes, bands * rows_per_band)
-    docs_tbl = os.path.join(index_dir, "docs")
-    bands_tbl = os.path.join(index_dir, "bands")
-    bloom_tbl = os.path.join(index_dir, "bloom")
-
-    bound = shingle_frame(new_docs, id_col, text_col, n)
-    hashes = [
-        F.array_min(F.transform(F.col("sh"), _portable_seeded_md5(i)))
-        for i in range(num_hashes)
-    ]
-    band_keys = [
-        F.concat(
-            F.lit(str(b)),
-            *[hashes[b * rows_per_band + r] for r in range(rows_per_band)],
-        )
-        for b in range(bands)
-    ]
-    prep = (
-        new_docs.select(
-            F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("digest")
-        )
-        .join(
-            bound.select(
-                "id",
-                F.array(*hashes).alias("hs"),
-                F.array(*band_keys).alias("bks"),
-            ),
-            "id",
-        )
-        .localCheckpoint()  # hashing runs ONCE; 4 plan branches read it
-    )
-
-    _adopt_legacy_index(index_dir)
-    try:
-        idx_docs = read_versioned_group(spark, index_dir, "docs")
-        idx_bands = read_versioned_group(spark, index_dir, "bands")
-    except FileNotFoundError:
-        idx_docs = None
-        idx_bands = None
-    bitmap = None
-    if use_bloom and idx_docs is not None:
-        try:
-            bitmap = read_versioned_group(spark, index_dir, "bloom")
-        except FileNotFoundError:
-            bitmap = None  # pre-bloom index: fall back to the full join
-        if bitmap is not None:
-            # m_bits is part of the bitmap's geometry: probing a stored
-            # bitmap with a different m_bits reads wrong positions, and
-            # a false CLEAR bit skips the confirm join — minting false
-            # 'kept' rows. The value is pinned in a sidecar at commit
-            # (like the bucketed writer's _layout.json) and validated
-            # here; a bloom without a sidecar predates the pin and must
-            # be rebuilt (drop the bloom table; next ingest bootstraps
-            # it from the full docs table).
-            stored = _bloom_meta(bloom_tbl)
-            if stored is None:
-                raise ValueError(
-                    f"bloom table {bloom_tbl} has no {_BLOOM_SIDECAR} "
-                    "sidecar; cannot validate m_bits — delete the bloom "
-                    "table and re-ingest to rebuild it"
-                )
-            if stored != m_bits:
-                raise ValueError(
-                    f"m_bits mismatch for {bloom_tbl}: stored {stored}, "
-                    f"called with {m_bits}"
-                )
-
-    if idx_docs is None:
-        statuses = prep.select(
-            "id",
-            F.lit("kept").alias("status"),
-            F.lit(None).cast(prep.schema["id"].dataType).alias("matched_id"),
-        )
-    else:
-        exact_input = prep
-        if bitmap is not None:
-            probe = (
-                prep.withColumn(
-                    "b", F.pmod(F.xxhash64("digest"), F.lit(m_bits))
-                )
-                .withColumn("w_idx", F.floor(F.col("b") / 64).cast("long"))
-                .withColumn(
-                    "bit", F.expr("shiftleft(1L, cast(b % 64 AS int))")
-                )
-                .join(F.broadcast(bitmap), "w_idx", "left")
-            )
-            maybe = F.col("word").isNotNull() & (
-                F.col("word").bitwiseAND(F.col("bit")) != 0
-            )
-            # clear bit => PROVABLY not in the index: skip the docs join
-            exact_input = probe.filter(maybe).select(*prep.columns)
-        exact = (
-            exact_input.join(
-                idx_docs.select("digest", F.col("id").alias("cid")), "digest"
-            )
-            # cid != id: ids are globally unique, so a self-match can
-            # only be this batch's own rows already indexed by a prior
-            # (possibly partial) run of the SAME batch — a replay.
-            # Without the exclusion a replay classifies every
-            # previously-kept row as exact_dup of itself, kept_rows is
-            # empty, and the bands commit the crash window owes never
-            # heals (the round-10 advisory's finding).
-            .filter(F.col("cid") != F.col("id"))
-            .groupBy("id")
-            .agg(F.min("cid").alias("matched_id"))
-            .select("id", F.lit("exact_dup").alias("status"), "matched_id")
-        )
-        novel = prep.join(exact.select("id"), "id", "left_anti")
-        cand = (
-            novel.select("id", F.explode("bks").alias("bk"))
-            .join(idx_bands.select(F.col("id").alias("cid"), "bk"), "bk")
-            .filter(F.col("cid") != F.col("id"))  # replay self-match
-            .select("id", "cid")
-            .dropDuplicates(["id", "cid"])
-        )
-        agree = (
-            F.size(
-                F.filter(
-                    F.zip_with("hs", "chs", lambda a, b: a == b),
-                    lambda x: x,
-                )
-            ).cast("double")
-            / F.lit(float(num_hashes))
-        )
-        near = (
-            cand.join(novel.select("id", "hs"), "id")
-            .join(
-                idx_docs.select(F.col("id").alias("cid"),
-                                F.col("hs").alias("chs")),
-                "cid",
-            )
-            .filter(agree >= sig_agree)
-            .groupBy("id")
-            .agg(F.min("cid").alias("matched_id"))
-            .select("id", F.lit("near_dup").alias("status"), "matched_id")
-        )
-        kept = (
-            novel.join(near.select("id"), "id", "left_anti")
-            .select(
-                "id",
-                F.lit("kept").alias("status"),
-                F.lit(None).cast(prep.schema["id"].dataType)
-                .alias("matched_id"),
-            )
-        )
-        statuses = exact.unionByName(near).unionByName(kept)
-
-    statuses = statuses.localCheckpoint()  # stable across the appends
-    kept_rows = prep.join(
-        statuses.filter(F.col("status") == "kept").select("id"), "id"
-    )
-    txn = (
-        {"txn_app_id": txn_app_id, "txn_version": txn_version}
-        if txn_app_id is not None
-        else {}
-    )
-    batches = {
-        "docs": (kept_rows.select("id", "digest", "hs"), ["id"]),
-        "bands": (
-            kept_rows.select("id", F.explode("bks").alias("bk")),
-            ["id", "bk"],
-        ),
-    }
-    if use_bloom:
-        # OR-merge the kept digests' bitmap into the persisted bloom;
-        # the update frame carries the FULL merged bitmap, so the
-        # last-wins keyed upsert publishes exactly the OR.
-        new_fps = kept_rows.select(F.col("digest").alias("fp"))
-        if bitmap is None and idx_docs is not None:
-            # pre-bloom index (or lost bloom): bootstrap from the FULL
-            # docs table — seeding from this batch alone would leave
-            # earlier digests clear-bit and mint FALSE 'kept' later
-            new_fps = new_fps.unionByName(
-                idx_docs.select(F.col("digest").alias("fp"))
-            )
-        batch_bits = digest_bitmap(new_fps, "fp", m_bits)
-        merged_bits = (
-            bitmap.unionByName(batch_bits) if bitmap is not None
-            else batch_bits
-        ).groupBy("w_idx").agg(F.expr("bit_or(word)").alias("word"))
-        # Sidecar BEFORE the group commit: a crash between them leaves
-        # a sidecar without a bloom (harmless — next ingest bootstraps
-        # and overwrites it), never a bloom without its m_bits pin.
-        _write_bloom_meta(bloom_tbl, m_bits)
-        batches["bloom"] = (merged_bits, ["w_idx"])
-    # ONE atomic commit across docs/bands(/bloom): all member tables
-    # advance together or not at all (round-11 verdict task #4), so
-    # the old docs-first/bloom-first commit-ordering algebra and its
-    # one-batch under-detection crash window are gone. The group
-    # watermark also makes replay exactly-once for the WHOLE batch.
-    upsert_group_versioned(spark, index_dir, batches, **txn)
-    return statuses.withColumnRenamed("id", id_col)

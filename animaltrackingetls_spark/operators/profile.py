@@ -246,10 +246,14 @@ def _exact_quantiles_arrow(df: DataFrame, columns: list[str],
                     qs.append(lval)
                     continue
                 hi_ix = int(np.searchsorted(acc, hi + 1, side="left"))
-                if hi_ix == li:
+                hval = float(dv[hi_ix])
+                # Spark's Percentile skips interpolation when the two
+                # keys are EQUAL as values, not only when they are the
+                # same key: -0.0 and 0.0 are distinct keys but equal,
+                # and a position between them returns the lower, -0.0
+                if hi_ix == li or lval == hval:
                     qs.append(lval)
                     continue
-                hval = float(dv[hi_ix])
                 qs.append((float(hi) - pos) * lval + (pos - float(lo)) * hval)
             row.append(qs)
         yield pa.record_batch(
@@ -286,23 +290,18 @@ def profile_quantiles(
     unpivot to rows is driver-trivial. Two modes with an honest scale
     split:
 
-    * ``exact=True``: Spark's ``percentile`` — buffers a value→count
-      map per partition, so memory is bounded by the column's DISTINCT
-      cardinality, not row count. Right for bounded-cardinality
-      metrics (prices, scores, sizes) at any row scale; wrong for
-      ~unique doubles at 100 TB (use ``exact=False`` there). A
-      distributed value-histogram rewrite (unpivot + groupBy counts +
-      per-column cumulative window + the same R-7 interpolation
-      expression) was tried in r15 and REVERTED: it reproduced the
-      hash bit-for-bit but measured ~3.2-3.9 s vs ~2.6 s for this form
-      at sf0.1 (noop sink, 5 runs) — four extra exchanges and a
-      single-task per-column window sort cost more than the single
-      final-agg map merge they removed, and the window form keeps the
-      same O(distinct)-in-one-task bound, so it was not a scale win
-      either (see OPTIMIZATION_r15.md). Bit-for-bit DuckDB-replayable
-      (``quantile_cont``; parity measured at 0 mismatches over 30
-      column×prob points before rounding — the ``round_digits``
-      rounding is insurance, not a fudge).
+    * ``exact=True``: the Arrow twin of Spark's ``percentile``
+      aggregate (``_exact_quantiles_arrow``). A partial pass builds a
+      value→count table per partition (``np.unique`` over each
+      column's doubles), a narrow ``(col_id, key, count)`` exchange
+      sends them to ONE final task, and that task merges the counts
+      and interpolates. Memory is bounded by the column's DISTINCT
+      cardinality at both levels, not by row count: right for
+      bounded-cardinality metrics (prices, scores, sizes) at any row
+      scale; wrong for ~unique doubles at 100 TB (use ``exact=False``
+      there). The output is bit-identical to the JVM aggregate (pinned
+      in tests) and DuckDB-replayable (``quantile_cont``); the
+      ``round_digits`` rounding is insurance, not a fudge.
     * ``exact=False``: ``approx_percentile`` — Greenwald-Khanna
       sketch, O(accuracy) memory regardless of cardinality, mergeable
       map-side. The 100 TB default; rank error ≤ 1/accuracy (pinned in

@@ -176,208 +176,3 @@ def split_expectations(df: DataFrame, rules: list[Rule]) -> ExpectationSplit:
         failed=tagged.filter(F.col(FAILED_RULE).isNotNull()),
         tagged=tagged,
     )
-
-
-def upsert_versioned_with_expectations(
-    spark,
-    table_dir: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    rules: list[Rule],
-    on_violation: str = "fail",
-    quarantine_dir: str | None = None,
-    txn_app_id: str | None = None,
-    txn_version: int | None = None,
-    **upsert_kwargs,
-):
-    """Expectation-gated exactly-once upsert — Delta Live Tables'
-    three expectation modes composed onto the versioned writers (and
-    the reference's reject-sink pattern, cleaning.py's split, made a
-    WRITE GATE). Layout-aware like the CDC pump (via the same
-    ``_dest_upsert`` routing): a bucket-partitioned destination keeps
-    its pruned merge; extra ``upsert_kwargs`` must match the
-    destination's writer (e.g. ``target_files`` is plain-only).
-
-    * ``on_violation="fail"`` (expect_or_fail): ONE validation
-      aggregate over the batch; any violation raises with per-rule
-      counts and NOTHING publishes (the snapshot commit is atomic, so
-      there is no partial state to clean).
-    * ``"drop"`` (expect_or_drop): violating rows are dropped, passing
-      rows upsert; the report carries per-rule drop counts.
-    * ``"quarantine"``: passing rows upsert to the table, violating
-      rows (tagged with the first violated rule) upsert KEYED into
-      ``quarantine_dir`` — one diagnostic row per key, latest failure
-      wins, exactly-once under ``txn_app_id + "#q"``. Quarantine
-      commits FIRST: a crash between the two commits can only leave
-      diagnostic rows whose main-table write never landed — benign
-      over-capture a replay converges (the main table's watermark
-      still no-ops duplicates).
-
-    Returns ``(result_df, report)`` where report =
-    ``{"n_input", "n_passed", "n_failed", "by_rule": {...},
-    "action": ...}``.
-    """
-    from ..inventory import read_versioned
-    from .versioning import _dest_upsert
-
-    if on_violation not in ("fail", "drop", "quarantine"):
-        raise ValueError(
-            f"on_violation must be fail|drop|quarantine, got {on_violation!r}"
-        )
-    if on_violation == "quarantine" and not quarantine_dir:
-        raise ValueError("on_violation='quarantine' needs quarantine_dir")
-    txn = (
-        {"txn_app_id": txn_app_id, "txn_version": txn_version}
-        if txn_app_id is not None
-        else {}
-    )
-
-    # ONE aggregation pass per mode (round-11 self-review finding #6):
-    # fail uses validate()'s single conditional-sum scan (n_rows rides
-    # every output row, so no separate count); drop/quarantine use one
-    # groupBy(first-violated tag) over the tagged plan — by_rule there
-    # is FIRST-VIOLATED attribution (a row violating two rules counts
-    # once, under the higher-priority rule), matching what quarantine
-    # actually records.
-    if on_violation == "fail":
-        # Pin the batch before gating (round-11 ADVICE #3): the gate
-        # aggregate and the publish are separate actions over the same
-        # plan, so a NON-DETERMINISTIC updates plan (rand(), unstable
-        # sampling, a re-read mutable source) could pass the gate yet
-        # write rows that violate the rules. localCheckpoint
-        # materializes the batch once (lineage truncated — a lost block
-        # fails rather than silently recomputing different rows); both
-        # actions then read the same physical rows. Drop/quarantine
-        # don't need this: their writes re-apply the violation filter,
-        # so a violating row can never reach the main table.
-        updates = updates.localCheckpoint(eager=True)
-        rows = validate(updates, rules).collect()
-        counts = {r["rule"]: r["n_violations"] for r in rows}
-        n_input = rows[0]["n_rows"] if rows else 0
-        bad = {k: v for k, v in counts.items() if v}
-        if bad:
-            raise ValueError(
-                f"expectations failed for {table_dir}: {bad} "
-                f"(of {n_input} rows); nothing was written"
-            )
-        _dest_upsert(spark, table_dir, updates, key_cols,
-                     **txn, **upsert_kwargs)
-        out = read_versioned(spark, table_dir)
-        return out, {"n_input": n_input, "by_rule": counts,
-                     "action": on_violation, "n_passed": n_input,
-                     "n_failed": 0}
-
-    split = split_expectations(updates, rules)
-    tag_counts = {
-        r[FAILED_RULE]: r["count"]
-        for r in split.tagged.groupBy(FAILED_RULE).count().collect()
-    }
-    n_passed = tag_counts.pop(None, 0)
-    n_failed_rows = sum(tag_counts.values())
-    report = {"n_input": n_passed + n_failed_rows, "by_rule": tag_counts,
-              "action": on_violation, "n_passed": n_passed,
-              "n_failed": n_failed_rows}
-    if on_violation == "quarantine" and n_failed_rows:
-        qtxn = (
-            {"txn_app_id": f"{txn_app_id}#q", "txn_version": txn_version}
-            if txn_app_id is not None
-            else {}
-        )
-        _dest_upsert(spark, quarantine_dir, split.failed, key_cols,
-                     **qtxn)
-    _dest_upsert(spark, table_dir, split.passed, key_cols,
-                 **txn, **upsert_kwargs)
-    out = read_versioned(spark, table_dir)
-    return out, report
-
-
-def quarantine_summary(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str | None = None,
-    max_sample_keys: int = 3,
-) -> DataFrame:
-    """Compact inspection of a quarantine table (round 12, r11 verdict
-    task #7): ``(rule[, day], n, sample_keys)`` — violation counts by
-    first-violated rule (× calendar day when ``ts_col`` is given) plus
-    up to ``max_sample_keys`` example keys per group, enough to open an
-    incident without scanning the table by hand.
-
-    One shuffle: a per-group ``row_number`` window ranks the rendered
-    keys first, so the aggregation's ``collect_list`` only ever sees
-    the first ``max_sample_keys`` keys of each group — the sample
-    buffer is bounded at k entries per group regardless of group size
-    (a plain sliced collect_list would materialize EVERY key of a
-    million-row incident group before slicing; round-12 self-review
-    finding #6). The window's partitioning is the groupBy's, so
-    Catalyst plans one exchange for both. Keys render NULL-safely so a
-    NULL-keyed quarantined row is visible, not blank.
-
-    Retention guidance (the quarantine is a versioned table like any
-    other, so it grows one version per gated batch AND one row per
-    distinct failing key): run
-    ``delete_versioned_where(spark, quarantine_dir,
-    f"{ts_col} < '<cutoff>'", keep_versions=1)`` on the same schedule as
-    the main table's compaction — or :func:`prune_quarantine`, which is
-    exactly that call — and keep ``keep_versions`` low; the diagnostic
-    value of a quarantined row decays with age, and every key that
-    matters re-enters on its next failing batch."""
-    if FAILED_RULE not in df.columns:
-        raise ValueError(
-            f"not a quarantine table: no {FAILED_RULE!r} column"
-        )
-    from pyspark.sql import Window
-
-    key_render = F.concat_ws(
-        ",",
-        *[F.coalesce(F.col(c).cast("string"), F.lit("NULL"))
-          for c in key_cols],
-    )
-    group_cols = ["rule"] + (["day"] if ts_col is not None else [])
-    tagged = df.withColumn("_key", key_render).withColumn(
-        "rule", F.col(FAILED_RULE)
-    )
-    if ts_col is not None:
-        tagged = tagged.withColumn("day", F.to_date(F.col(ts_col)))
-    w = Window.partitionBy(*group_cols).orderBy("_key")
-    out = (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(F.col("_rn") <= max_sample_keys,
-                           F.col("_key"))
-                )
-            ).alias("sample_keys"),
-        )
-    )
-    order = ["rule"] + (["day"] if ts_col is not None else [])
-    return out.orderBy(*order)
-
-
-def prune_quarantine(
-    spark,
-    quarantine_dir: str,
-    ts_col: str,
-    older_than_days: int = 30,
-    keep_versions: int = 1,
-):
-    """Retention for the quarantine table: drop rows whose ``ts_col`` is
-    older than ``older_than_days`` (driver-clock cutoff) and prune the
-    version history down to ``keep_versions`` in the same commit —
-    :func:`~..inventory.delete_versioned_where` with the arithmetic done
-    for you. Returns the surviving DataFrame."""
-    import datetime as _dt
-
-    from ..inventory import delete_versioned_where
-
-    cutoff = (
-        _dt.datetime.now(_dt.timezone.utc) - _dt.timedelta(days=older_than_days)
-    ).strftime("%Y-%m-%d %H:%M:%S")
-    return delete_versioned_where(
-        spark, quarantine_dir,
-        F.col(ts_col) < F.lit(cutoff).cast("timestamp"),
-        keep_versions=keep_versions,
-    )

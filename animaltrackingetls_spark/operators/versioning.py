@@ -30,8 +30,6 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -172,7 +170,7 @@ def corpus_diff(
     # NULL-SAFE key matching (round-10 review finding): a plain equi
     # join never matches NULL keys, so an identical NULL-keyed row in
     # both snapshots misreported as added+removed (and churned on every
-    # CDC poll). Joining on the RENDERED key string — the same
+    # diff). Joining on the RENDERED key string — the same
     # length-prefixed NULL-sentinel form the digest uses, injective and
     # never NULL — gives exact null-safe semantics while staying a
     # plain equi-join, so the uniqueness guard's window (partitioned by
@@ -406,1463 +404,3 @@ def table_changes(
         if col not in new.columns:
             new = new.withColumn(col, F.lit(None).cast(typ))
     return corpus_diff(old, new, key_cols, compare_cols)
-
-
-class ChangesSince(NamedTuple):
-    """:func:`table_changes_since`'s result. Iterates as the historical
-    3-tuple ``(changes, to_version, advance)`` plus ``from_version`` —
-    the EXACT version the diff ran from (None = bootstrap-from-oldest),
-    threaded so consumers never re-derive the window's start by
-    re-reading the cursor file (round-11 ADVICE #4: duplicated state
-    that can silently drift)."""
-
-    changes: DataFrame | None
-    to_version: str
-    advance: object
-    from_version: str | None
-
-
-def table_changes_since(
-    spark,
-    table_dir: str,
-    cursor_file: str,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-) -> "ChangesSince":
-    """Incremental change-data-feed read — the polling half of a CDC
-    pump over a versioned table: returns :class:`ChangesSince`
-    ``(changes_df | None, to_version, advance, from_version)`` where
-    ``changes_df`` is :func:`table_changes` from the cursor's last-seen
-    version to CURRENT (None when nothing new), and ``advance()``
-    durably commits the cursor (atomic tempfile + rename) AFTER the
-    caller has sunk the changes.
-
-    Exactly-once composition: crash BEFORE ``advance()`` replays the
-    same (from, to) window next poll — so sink the changes with the
-    versioned writers' ``txn_app_id``/``txn_version`` keyed on the
-    monotonically increasing ``to_version`` sequence number and the
-    replay becomes a watermark no-op; crash AFTER ``advance()`` skips
-    nothing because the data was already committed. The same pairing
-    the streaming upsert sink uses for foreachBatch.
-
-    First poll (no cursor yet) diffs from the OLDEST retained snapshot.
-    Retention bounds resumability: a cursor older than retention raises
-    FileNotFoundError (re-bootstrap from a full snapshot read), the
-    VACUUM'd-CDF contract stated on :func:`table_changes`.
-    """
-    seen, current, advance = _cursor_state(table_dir, cursor_file)
-    if seen == current:
-        return ChangesSince(None, current, lambda: None, seen)
-    changes = table_changes(
-        spark, table_dir, key_cols,
-        from_version=seen, to_version=current,
-        compare_cols=compare_cols,
-    )
-    return ChangesSince(changes, current, advance, seen)
-
-
-def _cursor_state(table_dir: str, cursor_file: str):
-    """The polling handshake shared by the derived and logged pump
-    paths — ONE place reads the cursor, validates retention, and builds
-    the durable ``advance`` (atomic tempfile + rename), so the two
-    paths cannot drift on window arithmetic (the round-11 ADVICE #4
-    class of bug). Returns ``(seen | None, current, advance)``."""
-    import os
-
-    from ..inventory import _current_version, list_versions
-
-    current = _current_version(table_dir)
-    if current is None:
-        raise FileNotFoundError(f"no published snapshot under {table_dir}")
-    try:
-        with open(cursor_file) as f:
-            seen = f.read().strip() or None
-    except FileNotFoundError:
-        seen = None
-    if seen is not None and seen != current and (
-        seen not in list_versions(table_dir)
-    ):
-        raise FileNotFoundError(
-            f"cursor version {seen!r} is no longer retained under "
-            f"{table_dir} — retention outran the consumer; re-bootstrap "
-            "from a full snapshot read"
-        )
-
-    def advance() -> None:
-        import uuid
-
-        # uuid-suffixed like every atomic write in this repo: a fixed
-        # tmp name lets two pollers clobber each other's staged cursor
-        tmp = f"{cursor_file}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            f.write(current)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, cursor_file)
-
-    return seen, current, advance
-
-
-def _changed_bucket_read(spark, table_dir, from_version, to_version):
-    """The new-side snapshot restricted to buckets whose physical
-    identity changed across the window — exact for key-complete reads
-    of added/changed rows because bucket assignment is key-determined
-    (same argument as :func:`table_changes`' pruning). Plain layouts
-    restrict to the new side's non-shared FILES instead (round-12): an
-    added/changed key cannot live in a file shared with the old
-    snapshot (shared files are byte-identical and key-complete), so
-    the non-shared files hold every payload row the pump fetches.
-    Falls back to the full snapshot when no identity is recorded."""
-    from ..inventory import (
-        _BUCKET_COL,
-        _snapshot_df,
-        _snapshot_df_files,
-        identity_changed_buckets,
-        identity_changed_files,
-        read_versioned,
-    )
-
-    if from_version is None:
-        return read_versioned(spark, table_dir, to_version)
-    changed = identity_changed_buckets(table_dir, from_version, to_version)
-    if changed is not None:
-        return _snapshot_df(
-            spark, table_dir, to_version, buckets=changed
-        ).drop(_BUCKET_COL)
-    cf = identity_changed_files(table_dir, from_version, to_version)
-    if cf is not None:
-        df = _snapshot_df_files(spark, table_dir, to_version, cf[1])
-        return df.drop(_BUCKET_COL) if _BUCKET_COL in df.columns else df
-    return read_versioned(spark, table_dir, to_version)
-
-
-def _dest_upsert(spark, dest_dir, payload, key_cols, keep_versions=2,
-                 **txn) -> None:
-    """Route a pump write through the destination's own layout: a
-    bucket-partitioned destination (created beforehand with
-    upsert_parquet_versioned_partitioned) keeps its pruned merge —
-    per-poll cost proportional to the churn's buckets — while a plain
-    destination merges COPY-ON-WRITE (round 12): only the files holding
-    updated keys rewrite, untouched files hardlink forward, so a plain
-    pump destination's per-poll cost also tracks the churn (and its
-    versions share files, keeping ITS downstream CDF churn-pruned).
-    CoW falls back to the full merge when no stats sidecar exists.
-    delete_versioned is layout-aware on its own.
-
-    ``merge_schema=True`` always (round 13): the payload carries the
-    SOURCE's schema, and a replication/pump destination follows source
-    evolution — a column added upstream NULL-pads the dest's old rows
-    on its first replicated appearance (Delta's mergeSchema-on-apply
-    posture) instead of failing the poll."""
-    from ..inventory import (
-        _table_layout,
-        upsert_parquet_versioned,
-        upsert_parquet_versioned_partitioned,
-    )
-
-    layout = _table_layout(dest_dir)
-    if layout is None:
-        upsert_parquet_versioned(spark, dest_dir, payload, key_cols,
-                                 keep_versions=keep_versions, cow=True,
-                                 merge_schema=True, **txn)
-    else:
-        upsert_parquet_versioned_partitioned(
-            spark, dest_dir, payload, key_cols,
-            n_buckets=layout["n_buckets"],
-            scheme=layout.get("scheme", "hash"),
-            keep_versions=keep_versions,
-            merge_schema=True,
-            **txn,
-        )
-
-
-def _window_fully_logged(
-    table_dir: str, from_version: str, to_version: str,
-    versions: list[str] | None = None,
-) -> bool:
-    """True when every commit in ``(from, to]`` is retained AND carries
-    a write-time change log (:mod:`..cdc` marker) — the precondition
-    for the pump's logged fast path. Marker/ledger reads only, no
-    Spark. The derived diff needs only the ENDPOINTS retained, so a
-    pruned intermediate falls back to deriving rather than failing.
-    ``versions`` overrides the ledger (group members: pass the group
-    state's member history — they have no per-table ledger and the raw
-    directory fallback could offer crash debris)."""
-    from ..cdc import change_log
-    from ..inventory import list_versions
-
-    if versions is None:
-        versions = list_versions(table_dir)
-    by_seq = {int(v.split("-")[1]): v for v in versions}
-    lo = int(from_version.split("-")[1])
-    hi = int(to_version.split("-")[1])
-    for seq in range(lo + 1, hi + 1):
-        v = by_seq.get(seq)
-        if v is None or change_log(table_dir, v) is None:
-            return False
-    return True
-
-
-def _netted_logged_changes(spark, source_dir, from_version, to_version,
-                           key_cols, versions=None):
-    """The logged feed over ``(from, to]`` NETTED to one row per key —
-    each key's LATEST post-state (insert / update_postimage / delete)
-    wins by commit sequence. Applying the netted set converges the
-    destination to the source's ``to`` snapshot exactly like the
-    derived endpoint diff does: a key updated and later reverted nets
-    to an upsert of its original value (no-op at the destination), an
-    insert-then-delete nets to a delete of an absent key (no-op).
-    One churn-sized window shuffle over CHANGE ROWS ONLY — no snapshot
-    scan, no diff join, no digest computation; payloads ride in the
-    change files so there is no fetch step either.
-
-    Within ONE commit, a deleted-and-reinserted key logs BOTH a delete
-    and an insert at the same ``_commit_seq`` (group commits classify
-    upserts against the post-delete base — ``inventory.py``'s GROUP
-    MERGE + DELETE path documents exactly this); the insert is the
-    key's final state, so the netting tie-break orders delete rows
-    LAST within a commit — commit sequence alone would break the tie
-    nondeterministically and could drop a live key (round-12 ADVICE
-    #1)."""
-    from ..cdc import CHANGE_TYPE_COL, COMMIT_SEQ_COL, read_change_data
-
-    feed = read_change_data(spark, source_dir, from_version, to_version,
-                            versions=versions)
-    post = feed.filter(F.col(CHANGE_TYPE_COL) != "update_preimage")
-    jk = F.concat_ws(_SEP, *[_rendered(k) for k in key_cols])
-    w = Window.partitionBy(jk).orderBy(
-        F.desc(COMMIT_SEQ_COL),
-        (F.col(CHANGE_TYPE_COL) == "delete").asc(),
-    )
-    return (
-        post.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def pump_changes_once(
-    spark,
-    source_dir: str,
-    dest_dir: str,
-    cursor_file: str,
-    key_cols: list[str],
-    app_id: str = "cdc",
-    dest_keep_versions: int = 2,
-    prefer_logged: bool = True,
-) -> dict:
-    """One poll of the CDC pump: read the source's changes since the
-    cursor (:func:`table_changes_since`), apply them to a DOWNSTREAM
-    versioned table exactly-once, then durably advance the cursor —
-    the consumer half the round-10 pump documented but never drove.
-
-    Apply protocol (the foreachBatch recipe, batch id = the source's
-    to-version sequence number): added/changed keys fetch their
-    payloads from the source snapshot the diff ran against (left-semi
-    join, NULL-safe keys like the diff itself), upserted with
-    ``txn_app_id=f"{app_id}#up"``; removed keys delete with
-    ``txn_app_id=f"{app_id}#del"``. Two app ids because one watermark
-    can't cover two writer calls at the same version; both are keyed on
-    the SAME monotonically increasing sequence, so a crash anywhere
-    before ``advance()`` replays the window and each half no-ops or
-    applies as needed — the destination converges, never double-applies
-    (added/changed and removed key sets are disjoint, so apply order
-    is irrelevant).
-
-    A consumer with NO CURSOR yet bootstraps (full snapshot copy via
-    :func:`bootstrap_cdc_dest`) instead of diffing: the oldest retained
-    version's own content predates any diff window, so "initial
-    snapshot + incremental tail" — the standard CDC shape — is the only
-    protocol that converges from scratch.
-
-    Retention contract: a cursor older than the source's retention
-    raises FileNotFoundError (:func:`table_changes_since`'s
-    re-bootstrap error) — recover with :func:`bootstrap_cdc_dest`.
-    Single-consumer per cursor file by design (the cursor write is
-    atomic but last-writer-wins). ``dest_keep_versions`` forwards to
-    every destination write — the destination's retention is the
-    PUMP's setting, stated here because the writers' per-call default
-    (2) would otherwise silently trim a deeper ledger on the first
-    poll (round-11 self-review finding #4).
-
-    **Logged fast path** (``prefer_logged=True``, round 12): when the
-    source is CDC-pinned (:mod:`..cdc`) and every commit in the window
-    carries a change log, the poll skips the derived diff ENTIRELY —
-    no snapshot read, no identity pruning, no diff join, no payload
-    fetch: the change files already hold the full rows, so the poll is
-    one churn-sized scan + a per-key netting window
-    (:func:`_netted_logged_changes`), applied through the same
-    two-app-id exactly-once protocol. Windows with an unlogged commit
-    (pre-pin, RESTORE) or a pruned intermediate version fall back to
-    deriving automatically — the logged path needs every intermediate
-    retained, the derived path only the endpoints.
-
-    Returns ``{"applied": bool, "to_version": str, "added": n,
-    "changed": n, "removed": n, "source": "logged"|"derived"}``
-    (a bootstrap reports every copied row as "added"; the logged
-    path's counts are NETTED per key — e.g. an insert-then-delete
-    within one window reports under "removed" and no-ops at the
-    destination).
-    """
-    import os
-
-    from ..inventory import (
-        _null_safe_cond,
-        delete_versioned,
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-
-    if not os.path.exists(cursor_file):
-        boot = bootstrap_cdc_dest(
-            spark, source_dir, dest_dir, cursor_file, key_cols,
-            app_id=app_id, dest_keep_versions=dest_keep_versions,
-        )
-        n = read_versioned(spark, dest_dir).count()
-        return {"applied": True, "to_version": boot["to_version"],
-                "added": n, "changed": 0, "removed": 0,
-                "source": "bootstrap"}
-
-    if prefer_logged:
-        seen, current, advance = _cursor_state(source_dir, cursor_file)
-        if seen == current:
-            return {"applied": False, "to_version": current,
-                    "added": 0, "changed": 0, "removed": 0,
-                    "source": "logged"}
-        if seen is not None and _window_fully_logged(
-            source_dir, seen, current
-        ):
-            from ..cdc import CHANGE_TYPE_COL, COMMIT_SEQ_COL, \
-                COMMIT_VERSION_COL
-
-            seq = int(current.split("-")[1])
-            netted = _netted_logged_changes(
-                spark, source_dir, seen, current, key_cols
-            ).localCheckpoint()  # churn-sized; read by counts + writers
-            counts = {
-                r[0]: r[1]
-                for r in netted.groupBy(CHANGE_TYPE_COL).count().collect()
-            }
-            if counts.get("insert", 0) or counts.get("update_postimage", 0):
-                ups = netted.filter(
-                    F.col(CHANGE_TYPE_COL) != "delete"
-                ).drop(CHANGE_TYPE_COL, COMMIT_SEQ_COL, COMMIT_VERSION_COL)
-                _dest_upsert(
-                    spark, dest_dir, ups, key_cols,
-                    keep_versions=dest_keep_versions,
-                    txn_app_id=f"{app_id}#up", txn_version=seq,
-                )
-            if counts.get("delete", 0):
-                dels = netted.filter(
-                    F.col(CHANGE_TYPE_COL) == "delete"
-                ).select(*key_cols)
-                delete_versioned(
-                    spark, dest_dir, dels, key_cols,
-                    keep_versions=dest_keep_versions, cow=True,
-                    txn_app_id=f"{app_id}#del", txn_version=seq,
-                )
-            advance()
-            return {"applied": True, "to_version": current,
-                    "added": counts.get("insert", 0),
-                    "changed": counts.get("update_postimage", 0),
-                    "removed": counts.get("delete", 0),
-                    "source": "logged"}
-
-    changes, to_version, advance, from_version = table_changes_since(
-        spark, source_dir, cursor_file, key_cols
-    )
-    if changes is None:
-        return {"applied": False, "to_version": to_version,
-                "added": 0, "changed": 0, "removed": 0,
-                "source": "derived"}
-    seq = int(to_version.split("-")[1])
-    changes = changes.localCheckpoint()  # one diff, three consumers
-    counts = {r["change"]: r["count"] for r in
-              changes.groupBy("change").count().collect()}
-    n_up = counts.get("added", 0) + counts.get("changed", 0)
-    n_del = counts.get("removed", 0)
-    if n_up:
-        # payload fetch rides the SAME churn pruning as the diff: every
-        # added/changed key lives in a bucket whose physical identity
-        # differs between the window's endpoints, so on a bucketed
-        # source only those buckets are scanned (first cut read the
-        # full 10M-row snapshot here and the 1k-churn poll cost 23 s;
-        # pruned + a layout-routed dest write it is 4.5 s - SCALING.md
-        # round 11). from_version is the EXACT window start the diff
-        # used, threaded from table_changes_since rather than re-read
-        # from the cursor file (round-11 ADVICE #4 — one source of
-        # truth). The key list is localCheckpoint-backed, so AQE sees
-        # its true byte size and broadcasts exactly when it fits —
-        # no row-count heuristic forcing a broadcast of 500k wide
-        # string keys past the size threshold.
-        src_now = _changed_bucket_read(
-            spark, source_dir, from_version, to_version
-        )
-        ups_keys = changes.filter(
-            F.col("change").isin("added", "changed")
-        ).select(*key_cols)
-        payload = src_now.join(
-            ups_keys, on=_null_safe_cond(src_now, ups_keys, key_cols),
-            how="left_semi",
-        ).localCheckpoint()  # churn-sized; the dest's CoW writer reads
-        # it three times (planning agg, key probe, merge) — pin the
-        # join once instead of re-scanning the changed source files
-        _dest_upsert(
-            spark, dest_dir, payload, key_cols,
-            keep_versions=dest_keep_versions,
-            txn_app_id=f"{app_id}#up", txn_version=seq,
-        )
-    if n_del:
-        removed = changes.filter(F.col("change") == "removed").select(
-            *key_cols
-        )
-        delete_versioned(
-            spark, dest_dir, removed, key_cols,
-            keep_versions=dest_keep_versions, cow=True,
-            txn_app_id=f"{app_id}#del", txn_version=seq,
-        )
-    advance()
-    return {"applied": True, "to_version": to_version,
-            "added": counts.get("added", 0),
-            "changed": counts.get("changed", 0), "removed": n_del,
-            "source": "derived"}
-
-
-def bootstrap_cdc_dest(
-    spark,
-    source_dir: str,
-    dest_dir: str,
-    cursor_file: str,
-    key_cols: list[str],
-    app_id: str = "cdc",
-    dest_keep_versions: int = 2,
-) -> dict:
-    """(Re-)bootstrap the CDC destination from a FULL source snapshot —
-    the documented recovery when retention outran the consumer (the
-    cursor's version is pruned, incremental diffing impossible). Brings
-    the destination to exact equality with the source's CURRENT
-    snapshot: every source row upserts, and destination keys the source
-    no longer has are deleted (they were removed while the consumer was
-    down). Both writes carry the current version's sequence watermark,
-    so a crashed bootstrap replays exactly-once; the cursor commits
-    LAST, after the data."""
-    import os
-
-    from ..inventory import (
-        _current_version,
-        _null_safe_cond,
-        delete_versioned,
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-
-    current = _current_version(source_dir)
-    if current is None:
-        raise FileNotFoundError(f"no published snapshot under {source_dir}")
-    seq = int(current.split("-")[1])
-    src = read_versioned(spark, source_dir, current)
-    _dest_upsert(
-        spark, dest_dir, src, key_cols,
-        keep_versions=dest_keep_versions,
-        txn_app_id=f"{app_id}#up", txn_version=seq,
-    )
-    dst_keys = read_versioned(spark, dest_dir).select(*key_cols)
-    src_keys = src.select(*key_cols)
-    stale = dst_keys.join(
-        src_keys,
-        on=_null_safe_cond(dst_keys, src_keys, key_cols),
-        how="left_anti",
-    )
-    if not stale.isEmpty():
-        delete_versioned(
-            spark, dest_dir, stale, key_cols,
-            keep_versions=dest_keep_versions, cow=True,
-            txn_app_id=f"{app_id}#del", txn_version=seq,
-        )
-    import uuid
-
-    tmp = f"{cursor_file}.{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as f:
-        f.write(current)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, cursor_file)
-    return {"bootstrapped": True, "to_version": current}
-
-
-def _group_seq(state: dict) -> int:
-    """The group commit's monotonically increasing sequence for the
-    pump's replay watermark. Prefers the commit counter
-    ``_publish_group`` stamps into the state (round-12 self-review
-    finding #3: the old sum-of-member-sequences heuristic was NOT
-    monotonic — a dangling member rebuilt out-of-band restarts its
-    version numbering at 1, the sum drops below the dest's stored
-    watermark, and every later window is silently swallowed while the
-    cursor advances). Pre-counter states fall back to the sum, which
-    the counter is seeded above at adoption."""
-    if "seq" in state:
-        return int(state["seq"])
-    return sum(
-        int(v.split("-")[1]) for v in state.get("versions", {}).values()
-    )
-
-
-def _member_changes(spark, group_dir, table, key_cols, v_old, v_new):
-    """One member table's diff between two group-committed versions —
-    file-identity-pruned like the single-table CDF (group member
-    versions carry stats sidecars since round 12), with the same
-    schema-evolution column union as table_changes."""
-    import os
-
-    from ..inventory import _snapshot_df_files, identity_changed_files
-
-    tdir = os.path.join(group_dir, table)
-    cf = identity_changed_files(tdir, v_old, v_new)
-    if cf is not None:
-        old = _snapshot_df_files(spark, tdir, v_old, cf[0])
-        new = _snapshot_df_files(spark, tdir, v_new, cf[1])
-    else:
-        old = spark.read.parquet(os.path.join(tdir, v_old))
-        new = spark.read.parquet(os.path.join(tdir, v_new))
-    for col, typ in new.dtypes:
-        if col not in old.columns:
-            old = old.withColumn(col, F.lit(None).cast(typ))
-    for col, typ in old.dtypes:
-        if col not in new.columns:
-            new = new.withColumn(col, F.lit(None).cast(typ))
-    return corpus_diff(old, new, key_cols)
-
-
-def pump_group_changes_once(
-    spark,
-    source_group: str,
-    dest_group: str,
-    cursor_file: str,
-    keys: dict[str, list[str]],
-    app_id: str = "gcdc",
-    dest_keep_versions: int = 2,
-    prefer_logged: bool = True,
-) -> dict:
-    """One poll of the GROUP-consistent CDC pump (round-11 verdict task
-    #4): read every member table's changes since the cursor's last-seen
-    GROUP commit, apply them to a downstream group in ONE atomic group
-    commit, then durably advance the cursor. The single-table pump run
-    per member would tear group invariants between polls (docs advanced,
-    bands not — exactly the crash algebra group commits exist to kill);
-    here the downstream group only ever exposes states the source group
-    actually committed.
-
-    Protocol per poll:
-
-    * the cursor stores the full ``{table: version}`` map of the last
-      APPLIED source commit (not a scalar — the map IS the snapshot
-      identity);
-    * members whose version is unchanged are skipped without reading a
-      byte (the group-level analog of bucket pruning — a commit that
-      touched only ``docs`` never re-diffs ``bands``/``bloom``);
-    * changed members diff file-pruned (:func:`_member_changes`);
-      added/changed keys fetch payloads from the member's NEW snapshot,
-      removed keys go to the group writer's atomic ``deletes``;
-    * ALL member writes land in one ``upsert_group_versioned`` call
-      under one group watermark keyed on the source commit's derived
-      sequence (:func:`_group_seq`) — a crash before ``advance()``
-      replays the window and the whole group no-ops; there is no state
-      in which some members applied and others did not;
-    * a member present in the source but never pumped (added to the
-      group after bootstrap) full-copies as all-added.
-
-    First poll (no cursor) bootstraps every member from the source's
-    CURRENT group state. Retention bounds resumability: a cursor
-    naming a version a member's group history no longer retains raises
-    FileNotFoundError — delete the cursor to re-bootstrap (the dest
-    group's watermark makes the re-copy converge, not duplicate).
-
-    ``keys`` maps every member table to its key columns; a member in
-    the source state but absent from ``keys`` raises (a silently
-    unpumped member would tear the group downstream).
-
-    **Logged fast path** (``prefer_logged=True``): a CDC-pinned member
-    whose window is fully logged (group commits log pinned members
-    since round 12) skips the diff AND the payload fetch — its
-    upserts/deletes come from the netted change files, exactly like the
-    single-table pump; version validity comes from the GROUP state's
-    member history (members have no per-table ledger). Per-member
-    decision: logged and derived members mix freely in one poll, all
-    still landing in the single atomic group commit.
-    """
-    import json
-    import os
-    import uuid
-
-    from ..inventory import (
-        _null_safe_cond,
-        group_state,
-        read_versioned_group,
-        upsert_group_versioned,
-    )
-
-    state = group_state(source_group)
-    if state is None:
-        raise FileNotFoundError(f"no published group under {source_group}")
-    now: dict[str, str] = dict(state["versions"])
-    unkeyed = sorted(set(now) - set(keys))
-    if unkeyed:
-        raise ValueError(
-            f"group pump has no key columns for member table(s) "
-            f"{unkeyed}; pass them in `keys` — pumping a subset would "
-            "tear the group downstream"
-        )
-    seq = _group_seq(state)
-
-    try:
-        with open(cursor_file) as f:
-            seen: dict[str, str] | None = json.load(f)
-    except FileNotFoundError:
-        seen = None
-
-    def advance() -> None:
-        tmp = f"{cursor_file}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(now, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, cursor_file)
-
-    if seen == now:
-        return {"applied": False, "tables": {}, "seq": seq}
-
-    history = state.get("history", {})
-    batches: dict[str, tuple] = {}
-    deletes: dict[str, object] = {}
-    report: dict[str, dict] = {}
-    for t, v_new in sorted(now.items()):
-        v_old = (seen or {}).get(t)
-        if v_old == v_new:
-            continue  # untouched member: zero reads
-        if v_old is not None:
-            if v_old not in history.get(t, []):
-                # retention outran the consumer: an EXPLICIT error (the
-                # recovery is a full member copy — that cost should be
-                # an operator's decision, not a silent per-poll surprise)
-                raise FileNotFoundError(
-                    f"cursor version {v_old!r} of member {t!r} is no "
-                    f"longer retained under {source_group} — retention "
-                    "outran the consumer; delete the cursor to "
-                    "re-bootstrap"
-                )
-            if not os.path.isdir(os.path.join(source_group, t, v_old)):
-                # the ledger still lists the version but its directory
-                # is GONE: the member was dropped and rebuilt
-                # out-of-band (upsert_group_versioned's dangling-member
-                # posture). Incremental diffing is impossible;
-                # re-bootstrap just this member — the bootstrap branch
-                # also removes stale dest keys, so it converges exactly.
-                v_old = None
-        if v_old is None:
-            # bootstrap this member: full snapshot copy — PLUS removal
-            # of any dest keys the source no longer has (re-bootstrap
-            # after a prune: rows deleted while the consumer was down
-            # must leave, or the dest would expose a member state the
-            # source never committed), all in the same group commit.
-            # Version PINNED to the state this poll read (round-12
-            # self-review finding #1: reading CURRENT instead would let
-            # a concurrent source commit tear the poll across members).
-            payload = read_versioned_group(
-                spark, source_group, t, version=v_new
-            )
-            batches[t] = (payload, keys[t])
-            try:
-                dst_keys = read_versioned_group(
-                    spark, dest_group, t
-                ).select(*keys[t])
-            except FileNotFoundError:
-                dst_keys = None
-            n_stale = 0
-            if dst_keys is not None:
-                src_keys = payload.select(*keys[t])
-                stale = dst_keys.join(
-                    src_keys,
-                    on=_null_safe_cond(dst_keys, src_keys, keys[t]),
-                    how="left_anti",
-                )
-                if not stale.isEmpty():
-                    deletes[t] = stale
-                    n_stale = stale.count()
-            report[t] = {"added": payload.count(), "changed": 0,
-                         "removed": n_stale, "bootstrapped": True}
-            continue
-        tdir = os.path.join(source_group, t)
-        hist_t = history.get(t, [])
-        if prefer_logged and v_new in hist_t and _window_fully_logged(
-            tdir, v_old, v_new, versions=hist_t
-        ):
-            from ..cdc import CHANGE_TYPE_COL, COMMIT_SEQ_COL, \
-                COMMIT_VERSION_COL
-
-            netted = _netted_logged_changes(
-                spark, tdir, v_old, v_new, keys[t], versions=hist_t
-            ).localCheckpoint()
-            lcounts = {
-                r[0]: r[1]
-                for r in netted.groupBy(CHANGE_TYPE_COL).count().collect()
-            }
-            report[t] = {"added": lcounts.get("insert", 0),
-                         "changed": lcounts.get("update_postimage", 0),
-                         "removed": lcounts.get("delete", 0),
-                         "bootstrapped": False, "source": "logged"}
-            if lcounts.get("insert", 0) or lcounts.get(
-                "update_postimage", 0
-            ):
-                batches[t] = (
-                    netted.filter(
-                        F.col(CHANGE_TYPE_COL) != "delete"
-                    ).drop(CHANGE_TYPE_COL, COMMIT_SEQ_COL,
-                           COMMIT_VERSION_COL),
-                    keys[t],
-                )
-            if lcounts.get("delete", 0):
-                deletes[t] = netted.filter(
-                    F.col(CHANGE_TYPE_COL) == "delete"
-                ).select(*keys[t])
-            continue
-        changes = _member_changes(
-            spark, source_group, t, keys[t], v_old, v_new
-        ).localCheckpoint()
-        counts = {r["change"]: r["count"] for r in
-                  changes.groupBy("change").count().collect()}
-        n_up = counts.get("added", 0) + counts.get("changed", 0)
-        n_del = counts.get("removed", 0)
-        report[t] = {"added": counts.get("added", 0),
-                     "changed": counts.get("changed", 0),
-                     "removed": n_del, "bootstrapped": False,
-                     "source": "derived"}
-        if n_up:
-            # pinned to v_new, not CURRENT — same tear argument as the
-            # bootstrap branch (self-review finding #1)
-            src_now = read_versioned_group(
-                spark, source_group, t, version=v_new
-            )
-            ups_keys = changes.filter(
-                F.col("change").isin("added", "changed")
-            ).select(*keys[t])
-            batches[t] = (
-                src_now.join(
-                    ups_keys,
-                    on=_null_safe_cond(src_now, ups_keys, keys[t]),
-                    how="left_semi",
-                ).localCheckpoint(),
-                keys[t],
-            )
-        if n_del:
-            deletes[t] = changes.filter(
-                F.col("change") == "removed"
-            ).select(*keys[t])
-
-    if batches or deletes:
-        upsert_group_versioned(
-            spark, dest_group, batches,
-            keep_versions=dest_keep_versions,
-            txn_app_id=app_id, txn_version=seq,
-            deletes=deletes or None,
-        )
-    advance()
-    return {"applied": True, "tables": report, "seq": seq}
-
-
-def maintain_aggregate_once(
-    spark,
-    source_dir: str,
-    dest_dir: str,
-    cursor_file: str,
-    group_cols: list[str],
-    sum_cols: list[str] | None = None,
-    app_id: str = "ivm",
-    dest_keep_versions: int = 2,
-    minmax_cols: list[str] | None = None,
-    var_cols: list[str] | None = None,
-    sketch_cols: list[str] | None = None,
-) -> dict:
-    """Incremental MATERIALIZED-VIEW maintenance over the logged change
-    feed (round 12): keep ``dest_dir`` equal to
-    ``source.groupBy(group_cols).agg(count(*), sum(c)...)`` by applying
-    SIGNED DELTAS from the CDC log instead of recomputing the
-    aggregate — the classic IVM identity for self-inverting aggregates
-    (count/sum, and avg = sum/count downstream):
-
-        insert / update_postimage rows contribute +1 (+value),
-        delete / update_preimage rows contribute −1 (−value),
-
-    so one churn-sized pass — change files → per-group delta agg →
-    merge with the affected groups' current values — converges the view
-    exactly, and a group whose count reaches zero is DELETED (it no
-    longer exists in the full aggregate). Per poll the cost is
-    O(changes + affected groups), never O(source): this is what makes a
-    100 TB fact table's rollup maintainable per-commit.
-
-    Exactly-once with the same machinery as the pump: the upsert and
-    the zero-group delete carry ``{app_id}#up`` / ``{app_id}#del``
-    watermarks keyed on the source commit sequence; the cursor advances
-    last, so a crash anywhere replays the window into watermark no-ops.
-    Unlike the pump's value-idempotent upserts, signed deltas are NOT
-    idempotent across DIFFERENT windows, so the poll persists its
-    planned ``to_version`` (``<cursor>.pending``, fsync'd) BEFORE
-    applying and a crashed poll's retry CLAMPS to that plan — without
-    the clamp, a source commit landing between crash and retry would
-    widen the window under a NEW (higher) txn_version, sail past the
-    watermark, and double-count the already-applied deltas (round-12
-    ADVICE #2). A plan whose endpoint was pruned before the retry
-    falls back to the full recompute (absolute values — correct no
-    matter what the crashed attempt applied).
-    First poll (no cursor) BOOTSTRAPS with one full aggregate of the
-    current snapshot. A window that is not fully logged (pre-pin hole,
-    RESTORE, pruned intermediate) falls back to a full recompute of the
-    view — correct at recompute cost, reported as ``source:
-    "recomputed"``.
-
-    Output schema: ``group_cols..., n_rows (count(*)), n_<c>
-    (count(c)), sum_<c>`` per sum_col. The non-null counter is not
-    decoration — it is what makes incremental ``sum`` NULL-exact: a
-    group whose values are all NULL sums to NULL in the full
-    aggregate, which pure delta arithmetic cannot distinguish from
-    zero; ``sum_<c>`` is NULLed exactly when ``n_<c>`` hits 0. NULL
-    group keys form their own group, exactly like groupBy.
-
-    **min/max maintenance** (``minmax_cols``, round 13): min/max are
-    NOT delta-maintainable under deletes — removing the extremum
-    cannot be undone arithmetically (multiplicity is unknown). The
-    standard compromise: inserts tighten monotonically
-    (``least(old_min, batch_min)`` / ``greatest``), and a
-    delete/update_preimage that TOUCHES a group's current extremum
-    (or lands in a group the view doesn't hold yet) marks the group
-    for an AFFECTED-GROUP RESCAN — the source snapshot at the window's
-    end version, semi-joined to the rescan keys, re-aggregated.
-    Aggregation cost is O(affected groups' rows), never O(source);
-    with a single group column and a small rescan set, the read itself
-    is stats-pruned (``in``-predicate whole-file skipping), so the
-    scan cost drops with clustering too. Rescan rows are ABSOLUTE
-    (replay-safe by construction); delta rows stay behind the
-    watermark. Adds ``min_<c>, max_<c>`` per col to the view schema;
-    a view whose schema predates a newly requested aggregate column
-    falls back to one full recompute (``merge_schema``) and is
-    incremental again from the next poll.
-
-    **Variance columns** (``var_cols``, round 13): maintain
-    ``n_<c>, sum_<c>, sumsq_<c>`` — sum of squares is as
-    delta-maintainable as sum (+v² on insert, −v² on delete), so
-    variance/stddev derive downstream as
-    ``(sumsq − sum²/n) / (n−1)`` with zero rescan cost. The classic
-    sum-of-squares numerical caveat applies (catastrophic cancellation
-    when the mean dwarfs the spread); for ill-conditioned data
-    recompute variance from a snapshot scan instead.
-
-    **Sketch columns** (``sketch_cols``, round 14): maintain an
-    ``hll_<c>`` Apache DataSketches HLL sketch per group (estimate
-    with ``F.hll_sketch_estimate``) — the approx-distinct the
-    reference's COUNT(DISTINCT)-style audits want at 100 TB. HLL
-    registers are max-merge state, so INSERTS tighten exactly like
-    min/max (``hll_union`` of the group's sketch with the window's
-    insert sketch — order-insensitive: same value set, same
-    registers); a DELETE of a non-NULL value is not invertible
-    (distinct may or may not shrink), so any group with an in-window
-    removal takes the same affected-group rescan as min/max —
-    distinct-count maintenance is O(insert-only groups' churn +
-    delete-touched groups' rows). No DuckDB oracle (engine sketch
-    impls differ); view == full Spark recompute is pinned in tests.
-
-    Returns ``{"applied": bool, "to_version": str, "groups_touched":
-    n, "groups_deleted": n, "source": "bootstrap"|"logged"|
-    "recomputed"}``.
-    """
-    import os
-
-    from ..cdc import CHANGE_TYPE_COL, read_change_data
-    from ..inventory import (
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-
-    sum_cols = list(sum_cols or [])
-    minmax_cols = list(minmax_cols or [])
-    var_cols = list(var_cols or [])
-    sketch_cols = list(sketch_cols or [])
-    # a variance column needs the sum machinery too: fold var_cols
-    # into the summed set (deduped, order preserved)
-    sum_cols = list(dict.fromkeys([*sum_cols, *var_cols]))
-    agg_exprs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in sum_cols:
-        agg_exprs += [F.count(c).alias(f"n_{c}"),
-                      F.sum(c).alias(f"sum_{c}")]
-    for c in var_cols:
-        agg_exprs.append(
-            F.sum(F.col(c) * F.col(c)).alias(f"sumsq_{c}")
-        )
-    for c in minmax_cols:
-        agg_exprs += [F.min(c).alias(f"min_{c}"),
-                      F.max(c).alias(f"max_{c}")]
-    for c in sketch_cols:
-        # hll_sketch_agg accepts int/bigint/string/binary only: encode
-        # every sketch input as its string form — type-agnostic and
-        # deterministic per value, so distinct counts are unchanged
-        agg_exprs.append(
-            F.hll_sketch_agg(F.col(c).cast("string")).alias(f"hll_{c}")
-        )
-
-    def _full_view(version=None):
-        return (
-            read_versioned(spark, source_dir, version)
-            .groupBy(*group_cols).agg(*agg_exprs)
-        )
-
-    seen, current, _ = _cursor_state(source_dir, cursor_file)
-
-    # replay alignment (see docstring): a pending plan from a crashed
-    # poll pins THIS poll's window to what that poll already applied
-    import json
-    import uuid
-
-    from ..inventory import list_versions
-
-    pending_file = cursor_file + ".pending"
-    target = current
-    force_recompute = False
-    try:
-        with open(pending_file) as f:
-            pend = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        pend = None
-    if pend is not None and pend.get("seen") != seen:
-        # stale plan: some prior poll completed and advanced past it
-        try:
-            os.remove(pending_file)
-        except FileNotFoundError:
-            pass
-        pend = None
-    if pend is not None:
-        planned = pend.get("to")
-        if planned != current:
-            if planned in list_versions(source_dir):
-                target = planned
-            else:
-                # the planned endpoint was pruned between crash and
-                # retry: that exact window is unreplayable — recompute
-                force_recompute = True
-    seq = int(target.split("-")[1])
-
-    def plan() -> None:
-        tmp = f"{pending_file}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"seen": seen, "to": target}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, pending_file)
-
-    def advance() -> None:
-        tmp = f"{cursor_file}.{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            f.write(target)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, cursor_file)
-        try:
-            os.remove(pending_file)
-        except FileNotFoundError:
-            pass
-
-    if seen == target:
-        return {"applied": False, "to_version": target,
-                "groups_touched": 0, "groups_deleted": 0,
-                "source": "logged"}
-
-    if not force_recompute and seen is not None:
-        # view-schema evolution: a newly requested aggregate column
-        # has no maintained state — one recompute re-bases the view
-        expected = {"n_rows"}
-        expected |= {f"n_{c}" for c in sum_cols}
-        expected |= {f"sum_{c}" for c in sum_cols}
-        expected |= {f"sumsq_{c}" for c in var_cols}
-        expected |= {f"min_{c}" for c in minmax_cols}
-        expected |= {f"max_{c}" for c in minmax_cols}
-        expected |= {f"hll_{c}" for c in sketch_cols}
-        try:
-            vcols = set(read_versioned(spark, dest_dir).columns)
-            if not expected <= vcols:
-                force_recompute = True
-        except FileNotFoundError:
-            pass
-
-    if seen is None or force_recompute or not _window_fully_logged(
-        source_dir, seen, target
-    ):
-        # bootstrap / hole fallback: one full aggregate of the TARGET
-        # snapshot replaces the view (stale groups must leave too — an
-        # anti-join delete of dest keys absent from the recompute, in
-        # the same exactly-once pair). Planned first so a crashed
-        # bootstrap's retry recomputes the SAME pinned snapshot.
-        plan()
-        view = _full_view(target).localCheckpoint()
-        # stale groups (in the view, absent from the recompute) leave
-        # in the SAME commit (round 14, r13 verdict #8): one CAS
-        # publish + one watermark instead of an upsert-then-delete
-        # pair. The stale set is computed against the PRE-upsert view —
-        # identical to the old post-upsert form, since the upsert only
-        # adds/updates recomputed keys.
-        stale = None
-        n_deleted = 0
-        try:
-            dst_keys = read_versioned(spark, dest_dir).select(*group_cols)
-        except FileNotFoundError:
-            dst_keys = None
-        if dst_keys is not None and seen is not None:
-            from ..inventory import _null_safe_cond
-
-            stale = dst_keys.join(
-                view.select(*group_cols),
-                on=_null_safe_cond(dst_keys, view, group_cols),
-                how="left_anti",
-            ).localCheckpoint()
-            n_deleted = stale.count()
-        upsert_parquet_versioned(
-            spark, dest_dir, view, group_cols,
-            keep_versions=dest_keep_versions,
-            txn_app_id=f"{app_id}#up", txn_version=seq,
-            merge_schema=True,
-            delete_keys=stale if n_deleted else None,
-        )
-        advance()
-        return {"applied": True, "to_version": target,
-                "groups_touched": view.count(),
-                "groups_deleted": n_deleted,
-                "source": "bootstrap" if seen is None else "recomputed"}
-
-    plan()  # pin the window BEFORE the non-idempotent delta apply
-    feed = read_change_data(spark, source_dir, seen, target)
-    touched, n_del = _apply_aggregate_delta(
-        spark, dest_dir, feed, group_cols, sum_cols,
-        app_id=app_id, seq=seq, keep_versions=dest_keep_versions,
-        minmax_cols=minmax_cols, source_dir=source_dir,
-        source_version=target, var_cols=var_cols,
-        sketch_cols=sketch_cols,
-    )
-    advance()
-    return {"applied": True, "to_version": target,
-            "groups_touched": touched, "groups_deleted": n_del,
-            "source": "logged"}
-
-
-def _apply_aggregate_delta(
-    spark,
-    dest_dir: str,
-    feed,
-    group_cols: list[str],
-    sum_cols: list[str],
-    app_id: str,
-    seq: int,
-    keep_versions: int,
-    minmax_cols: list[str] | None = None,
-    source_dir: str | None = None,
-    source_version: str | None = None,
-    var_cols: list[str] | None = None,
-    sketch_cols: list[str] | None = None,
-) -> tuple[int, int]:
-    """Apply one window of change rows to the materialized aggregate
-    as SIGNED DELTAS (see :func:`maintain_aggregate_once` for the
-    algebra and NULL contract) — exactly-once under
-    ``{app_id}#up/#del`` at ``seq``. Shared by the polling form and
-    the streaming runner (foreachBatch, seq = batch id). A missing
-    view table means "build from the deltas alone": a stream from
-    ``earliest`` constructs the view out of nothing but the creation
-    commit's logged inserts.
-
-    ``minmax_cols`` (round 13): inserts tighten ``min_<c>/max_<c>``
-    monotonically; a delete whose value touches the group's current
-    extremum (or hits a group with no maintained state) flags the
-    group for an affected-group rescan against
-    ``read_versioned(source_dir, source_version)`` — the window-end
-    snapshot, so rescanned rows are absolute and replay-safe. With one
-    group column and ≤``_RESCAN_IN_MAX`` flagged groups the rescan
-    read pushes an ``in`` predicate for stats-based whole-file
-    skipping. Returns ``(groups_touched, groups_deleted)``."""
-    from ..cdc import CHANGE_TYPE_COL
-    from ..inventory import (
-        _null_safe_cond,
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-
-    minmax_cols = list(minmax_cols or [])
-    var_cols = list(var_cols or [])
-    sketch_cols = list(sketch_cols or [])
-    sum_cols = list(dict.fromkeys([*sum_cols, *var_cols]))
-    sign = F.when(
-        F.col(CHANGE_TYPE_COL).isin("insert", "update_postimage"),
-        F.lit(1),
-    ).otherwise(F.lit(-1))
-    val_cols = list(dict.fromkeys(
-        [*sum_cols, *minmax_cols, *var_cols, *sketch_cols]
-    ))
-    signed = feed.select(
-        *group_cols, sign.alias("_sign"),
-        *[F.col(c).alias(f"_v_{c}") for c in val_cols],
-    )
-    delta_aggs = [F.sum("_sign").alias("_d_n")]
-    for c in sum_cols:
-        delta_aggs += [
-            F.sum(
-                F.when(F.col(f"_v_{c}").isNotNull(), F.col("_sign"))
-                .otherwise(F.lit(0))
-            ).alias(f"_d_n_{c}"),
-            F.sum(F.col("_sign") * F.col(f"_v_{c}")).alias(f"_d_{c}"),
-        ]
-    for c in var_cols:
-        delta_aggs.append(
-            F.sum(
-                F.col("_sign") * F.col(f"_v_{c}") * F.col(f"_v_{c}")
-            ).alias(f"_d_sq_{c}")
-        )
-    ins_v = lambda c: F.when(F.col("_sign") == 1, F.col(f"_v_{c}"))  # noqa: E731
-    del_v = lambda c: F.when(F.col("_sign") == -1, F.col(f"_v_{c}"))  # noqa: E731
-    for c in minmax_cols:
-        delta_aggs += [
-            F.min(ins_v(c)).alias(f"_i_min_{c}"),
-            F.max(ins_v(c)).alias(f"_i_max_{c}"),
-            F.min(del_v(c)).alias(f"_x_min_{c}"),
-            F.max(del_v(c)).alias(f"_x_max_{c}"),
-        ]
-    for c in sketch_cols:
-        delta_aggs += [
-            # insert-side HLL (hll_sketch_agg skips the NULLs ins_v
-            # leaves on non-insert rows) — max-merge state, tightened
-            # into the view exactly like min/max
-            F.hll_sketch_agg(ins_v(c).cast("string"))
-            .alias(f"_i_hll_{c}"),
-            # removal of a non-NULL value is not invertible for
-            # distinct counts: flag the group for the rescan
-            F.max(
-                F.when(
-                    (F.col("_sign") == -1)
-                    & F.col(f"_v_{c}").isNotNull(),
-                    1,
-                ).otherwise(0)
-            ).alias(f"_x_any_{c}"),
-        ]
-    if minmax_cols:
-        delta_aggs.append(
-            F.sum(F.when(F.col("_sign") == -1, 1).otherwise(0))
-            .alias("_n_del")
-        )
-    delta = signed.groupBy(*group_cols).agg(
-        *delta_aggs
-    ).localCheckpoint()  # churn-sized; read by the merge + counts
-    if delta.isEmpty():
-        return 0, 0
-
-    try:
-        cur_view = read_versioned(spark, dest_dir)
-    except FileNotFoundError:
-        # no view yet: an empty frame with the EXACT aggregate schema
-        # (a zero-row groupBy gives the true count/sum result types)
-        agg_exprs = [F.count(F.lit(1)).alias("n_rows")]
-        for c in sum_cols:
-            agg_exprs += [F.count(f"_v_{c}").alias(f"n_{c}"),
-                          F.sum(f"_v_{c}").alias(f"sum_{c}")]
-        for c in var_cols:
-            agg_exprs.append(
-                F.sum(F.col(f"_v_{c}") * F.col(f"_v_{c}"))
-                .alias(f"sumsq_{c}")
-            )
-        for c in minmax_cols:
-            agg_exprs += [F.min(f"_v_{c}").alias(f"min_{c}"),
-                          F.max(f"_v_{c}").alias(f"max_{c}")]
-        for c in sketch_cols:
-            agg_exprs.append(
-                F.hll_sketch_agg(F.col(f"_v_{c}").cast("string"))
-                .alias(f"hll_{c}")
-            )
-        renamed = signed.select(
-            *group_cols, *[F.col(f"_v_{c}") for c in val_cols]
-        )
-        cur_view = spark.createDataFrame(
-            [], renamed.limit(0).groupBy(*group_cols).agg(*agg_exprs)
-            .schema,
-        )
-    affected = cur_view.join(
-        delta.select(*group_cols),
-        on=_null_safe_cond(cur_view, delta, group_cols),
-        how="left_semi",
-    )
-    # merge old values with deltas: full outer over the affected slice
-    # (a delta group absent from the view is brand-new)
-    jd = delta.alias("d")
-    ja = affected.alias("a")
-    merged = ja.join(jd, on=_null_safe_cond(ja, jd, group_cols),
-                     how="full_outer")
-    key_out = [
-        F.coalesce(F.col(f"a.{k}"), F.col(f"d.{k}")).alias(k)
-        for k in group_cols
-    ]
-    new_n = (
-        F.coalesce(F.col("a.n_rows"), F.lit(0))
-        + F.coalesce(F.col("d._d_n"), F.lit(0))
-    ).alias("n_rows")
-    new_sums = []
-    for c in sum_cols:
-        nn = (
-            F.coalesce(F.col(f"a.n_{c}"), F.lit(0))
-            + F.coalesce(F.col(f"d._d_n_{c}"), F.lit(0))
-        )
-        total = (
-            F.coalesce(F.col(f"a.sum_{c}"), F.lit(0))
-            + F.coalesce(F.col(f"d._d_{c}"), F.lit(0))
-        )
-        new_sums += [
-            nn.alias(f"n_{c}"),
-            # sum over zero non-null values is NULL, as in the full agg
-            F.when(nn > 0, total).otherwise(F.lit(None)).alias(f"sum_{c}"),
-        ]
-    for c in var_cols:
-        nn = (
-            F.coalesce(F.col(f"a.n_{c}"), F.lit(0))
-            + F.coalesce(F.col(f"d._d_n_{c}"), F.lit(0))
-        )
-        sq = (
-            F.coalesce(F.col(f"a.sumsq_{c}"), F.lit(0))
-            + F.coalesce(F.col(f"d._d_sq_{c}"), F.lit(0))
-        )
-        new_sums.append(
-            F.when(nn > 0, sq).otherwise(F.lit(None)).alias(f"sumsq_{c}")
-        )
-    new_mm = []
-    rescan_cond = F.lit(False)
-    for c in minmax_cols:
-        # inserts only tighten (least/greatest skip NULLs in Spark)
-        new_mm += [
-            F.least(F.col(f"a.min_{c}"), F.col(f"d._i_min_{c}"))
-            .alias(f"min_{c}"),
-            F.greatest(F.col(f"a.max_{c}"), F.col(f"d._i_max_{c}"))
-            .alias(f"max_{c}"),
-        ]
-        xmin, xmax = F.col(f"d._x_min_{c}"), F.col(f"d._x_max_{c}")
-        # a delete of a non-NULL value forces a rescan when it may
-        # carry the extremum: at/below min, at/above max, or the view
-        # holds no bound for the column (prior all-NULL group, or an
-        # in-window insert-then-delete the tighten path can't undo)
-        rescan_cond = rescan_cond | (
-            xmin.isNotNull() & (
-                F.col(f"a.min_{c}").isNull()
-                | (xmin <= F.col(f"a.min_{c}"))
-                | (xmax >= F.col(f"a.max_{c}"))
-            )
-        )
-    if minmax_cols:
-        # brand-new group (no view row) whose window already contains
-        # deletes: the tighten path can't tell which inserts survived
-        rescan_cond = rescan_cond | (
-            F.col("a.n_rows").isNull() & (F.col("d._n_del") > 0)
-        )
-    for c in sketch_cols:
-        a_s, d_s = F.col(f"a.hll_{c}"), F.col(f"d._i_hll_{c}")
-        new_mm.append(
-            F.when(a_s.isNull(), d_s).when(d_s.isNull(), a_s)
-            .otherwise(F.hll_union(a_s, d_s)).alias(f"hll_{c}")
-        )
-        # any in-window removal of a non-NULL value (including a
-        # brand-new group's insert-then-delete) is not invertible for
-        # distinct counts — rescan the group absolutely
-        rescan_cond = rescan_cond | (F.col(f"d._x_any_{c}") == 1)
-    out = merged.select(
-        *key_out, new_n, *new_sums, *new_mm,
-        rescan_cond.alias("_rescan"),
-    ).localCheckpoint()
-
-    # ONE counting job for the whole delta side: touched + doomed +
-    # rescan-flagged together (round 14 fold — the poll's local wall
-    # is fixed-cost/job-count-bound, SCALING.md; its scaling value is
-    # bytes read per poll)
-    stats = out.agg(
-        F.count(F.lit(1)).alias("t"),
-        F.sum(
-            ((F.col("n_rows") <= 0) & ~F.col("_rescan")).cast("int")
-        ).alias("d"),
-        F.sum(F.col("_rescan").cast("int")).alias("r"),
-    ).first()
-    n_rescan = int(stats["r"] or 0)
-    rescan_keys = None
-    rescanned = None
-    if (minmax_cols or sketch_cols) and n_rescan:
-        rescan_keys = out.filter(F.col("_rescan")).select(*group_cols)
-        rescanned = _rescan_groups(
-            spark, source_dir, source_version, rescan_keys,
-            group_cols, sum_cols, minmax_cols, var_cols, sketch_cols,
-        ).localCheckpoint()
-    if rescan_keys is None:
-        out = out.drop("_rescan")
-    else:
-        out = out.filter(~F.col("_rescan")).drop("_rescan")
-
-    touched = int(stats["t"]) - n_rescan
-    n_del = int(stats["d"] or 0)
-    survivors = out.filter(F.col("n_rows") > 0)
-    doomed = out.filter(F.col("n_rows") <= 0).select(*group_cols)
-    # cast back to the view's types (coalesce(…, lit(0)) can widen);
-    # the bootstrap aggregate defines the contract
-    tgt = {f.name: f.dataType.simpleString()
-           for f in cur_view.schema.fields}
-    wanted = [f"min_{c}" for c in minmax_cols] + \
-        [f"max_{c}" for c in minmax_cols] + \
-        [f"sumsq_{c}" for c in var_cols] + \
-        [f"hll_{c}" for c in sketch_cols]
-    if any(w not in tgt for w in wanted):
-        raise ValueError(
-            f"view {dest_dir!r} predates one of minmax_cols="
-            f"{minmax_cols} / var_cols={var_cols} / sketch_cols="
-            f"{sketch_cols} — rebuild it (the polling "
-            "maintain_aggregate_once recomputes automatically; a "
-            "stream needs a fresh view + checkpoint)"
-        )
-    casts = [F.col("n_rows").cast(tgt["n_rows"]).alias("n_rows")]
-    for c in sum_cols:
-        casts += [
-            F.col(f"n_{c}").cast(tgt[f"n_{c}"]).alias(f"n_{c}"),
-            F.col(f"sum_{c}").cast(tgt[f"sum_{c}"]).alias(f"sum_{c}"),
-        ]
-    for c in var_cols:
-        casts.append(
-            F.col(f"sumsq_{c}").cast(tgt[f"sumsq_{c}"])
-            .alias(f"sumsq_{c}")
-        )
-    for c in minmax_cols:
-        casts += [
-            F.col(f"min_{c}").cast(tgt[f"min_{c}"]).alias(f"min_{c}"),
-            F.col(f"max_{c}").cast(tgt[f"max_{c}"]).alias(f"max_{c}"),
-        ]
-    for c in sketch_cols:
-        casts.append(
-            F.col(f"hll_{c}").cast(tgt[f"hll_{c}"]).alias(f"hll_{c}")
-        )
-    survivors = survivors.select(*group_cols, *casts)
-    if rescanned is not None:
-        # rescan rows are absolute truth at the window end; a flagged
-        # group with zero surviving rows is simply absent — delete it
-        survivors = survivors.unionByName(
-            rescanned.select(*group_cols, *casts)
-        )
-        gone = rescan_keys.join(
-            rescanned.select(*group_cols),
-            on=_null_safe_cond(rescan_keys, rescanned, group_cols),
-            how="left_anti",
-        )
-        doomed = doomed.unionByName(gone)
-        r_stats = rescanned.count(), gone.count()
-        touched += int(r_stats[0]) + int(r_stats[1])
-        n_del += int(r_stats[1])
-    if touched > 0:
-        # survivors upsert + zero-group delete as ONE commit (round
-        # 14, r13 verdict #8): one merge, one CAS publish, one
-        # watermark — half the per-poll commit overhead of the r13
-        # upsert-then-delete pair, same exactly-once contract (a
-        # replayed window no-ops on the single {app_id}#up mark).
-        # CoW only pays on a multi-file view: on a 1-2 file dest the
-        # planner's probe scan is pure overhead (profiled 1.44 s CoW
-        # vs 0.67 s plain for a 9973-group single-file view) and the
-        # rewrite touches every file anyway.
-        from ..inventory import _current_version, _snapshot_files
-
-        use_cow = True
-        cur_dest = _current_version(dest_dir)
-        if cur_dest is not None and len(
-            _snapshot_files(dest_dir, cur_dest)
-        ) <= 2:
-            use_cow = False
-        upsert_parquet_versioned(
-            spark, dest_dir, survivors, group_cols,
-            keep_versions=keep_versions, cow=use_cow,
-            txn_app_id=f"{app_id}#up", txn_version=seq,
-            delete_keys=doomed if n_del else None,
-        )
-    return touched, n_del
-
-
-#: rescan sets at or under this size push an ``in`` predicate into the
-#: snapshot read (whole-file stats skipping); larger sets semi-join.
-_RESCAN_IN_MAX = 256
-
-
-def _rescan_groups(spark, source_dir, source_version, rescan_keys,
-                   group_cols, sum_cols, minmax_cols, var_cols=(),
-                   sketch_cols=()):
-    """Recompute the FULL aggregate row for the flagged groups from
-    the window-end snapshot: O(affected groups' rows) aggregation, a
-    stats-pruned read when the flagged set is small and single-column.
-    Requires ``source_dir``/``source_version`` (the polling form pins
-    the poll target; the streaming form pins the batch's last commit
-    version)."""
-    from ..inventory import _null_safe_cond, read_versioned
-
-    if source_dir is None or source_version is None:
-        raise ValueError(
-            "minmax_cols/sketch_cols maintenance needs "
-            "source_dir/source_version for the affected-group rescan"
-        )
-    preds = None
-    if len(group_cols) == 1:
-        vals = [r[0] for r in rescan_keys.limit(_RESCAN_IN_MAX + 1)
-                .collect()]
-        if len(vals) <= _RESCAN_IN_MAX and all(
-            v is not None for v in vals
-        ):
-            preds = [(group_cols[0], "in", vals)]
-    snap = read_versioned(spark, source_dir, source_version,
-                          predicates=preds)
-    rows = snap.join(
-        F.broadcast(rescan_keys),
-        on=_null_safe_cond(snap, rescan_keys, group_cols),
-        how="left_semi",
-    )
-    agg_exprs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in sum_cols:
-        agg_exprs += [F.count(c).alias(f"n_{c}"),
-                      F.sum(c).alias(f"sum_{c}")]
-    for c in var_cols:
-        agg_exprs.append(
-            F.sum(F.col(c) * F.col(c)).alias(f"sumsq_{c}")
-        )
-    for c in minmax_cols:
-        agg_exprs += [F.min(c).alias(f"min_{c}"),
-                      F.max(c).alias(f"max_{c}")]
-    for c in sketch_cols:
-        agg_exprs.append(
-            F.hll_sketch_agg(F.col(c).cast("string")).alias(f"hll_{c}")
-        )
-    return rows.groupBy(*group_cols).agg(*agg_exprs)
-
-
-def run_cdc_pump(
-    spark,
-    source_dir: str,
-    dest_dir: str,
-    cursor_file: str,
-    key_cols: list[str],
-    app_id: str = "cdc",
-    max_polls: int | None = None,
-    dest_keep_versions: int = 2,
-) -> dict:
-    """Drain the CDC pump until the destination has caught up (the
-    AvailableNow shape): repeated :func:`pump_changes_once` polls until
-    an idle poll (nothing new) or ``max_polls``. Each poll is its own
-    exactly-once window, so a crash anywhere resumes mid-drain.
-    Returns totals: ``{"polls": n, "added": n, "changed": n,
-    "removed": n, "to_version": last}``."""
-    totals = {"polls": 0, "added": 0, "changed": 0, "removed": 0,
-              "to_version": None}
-    while max_polls is None or totals["polls"] < max_polls:
-        r = pump_changes_once(
-            spark, source_dir, dest_dir, cursor_file, key_cols,
-            app_id=app_id, dest_keep_versions=dest_keep_versions,
-        )
-        totals["to_version"] = r["to_version"]
-        if not r["applied"]:
-            break
-        totals["polls"] += 1
-        for k in ("added", "changed", "removed"):
-            totals[k] += r[k]
-    return totals

@@ -24,11 +24,9 @@ from .jobs import (  # noqa: F401
     run_available_now_to_memory_many,
     run_available_now_index_vectors,
     run_available_now_ingest_dedup,
-    run_available_now_ingest_index,
     run_available_now_register_inventory,
     run_available_now_to_parquet,
     run_available_now_histogram_rollup,
-    run_available_now_upsert_versioned,
     running_user_totals,
     running_user_totals_tws,
     sessionized_user_activity,

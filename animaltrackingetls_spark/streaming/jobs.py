@@ -512,10 +512,9 @@ def run_available_now_register_inventory(
 
     Exactly-once accounting comes from the checkpoint: a replayed batch
     after crash-before-commit would double-count, which is the known
-    foreachBatch at-least-once edge — pair this with the batch-id
-    high-watermark sink :func:`run_available_now_upsert_versioned`
-    (transactional, replay is a no-op) or the reconcile_inventory
-    backfill (which recomputes truth from the data and repairs drift).
+    foreachBatch at-least-once edge — pair this with the
+    reconcile_inventory backfill (which recomputes truth from the data
+    and repairs drift).
     """
     from animaltrackingetls_spark.inventory import (
         INVENTORY_COLUMNS,
@@ -949,470 +948,3 @@ def run_available_now_index_vectors(
             f"{timeout_seconds}s"
         )
     return batch_stats
-
-
-def run_available_now_upsert_versioned(
-    stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    app_id: str,
-    transform=None,
-    keep_versions: int = 2,
-    timeout_seconds: int = 120,
-    n_buckets: int | None = None,
-    bucket_scheme: str = "range",
-) -> None:
-    """Exactly-once streaming upsert into a versioned parquet table —
-    the transactional sibling of the anti-join idempotence
-    ``run_available_now_ingest_dedup`` / ``_index_vectors`` use.
-
-    Each micro-batch (optionally reduced by ``transform``, e.g. a
-    per-key aggregate) is MERGE-upserted via
-    :func:`~..inventory.upsert_parquet_versioned` with
-    ``txn_app_id=app_id, txn_version=batch_id`` — the sidecar watermark
-    commits in the same atomic pointer swap as the data, so a replayed
-    batch (foreachBatch's at-least-once edge: crash AFTER the sink ran
-    but BEFORE the checkpoint committed) is detected by batch id and
-    becomes a no-op. This is the pattern that makes NON-idempotent
-    updates safe — additive counts, latest-wins merges — where value
-    anti-joins can't distinguish a replay from new data. Closes the
-    double-count edge ``run_available_now_register_inventory``
-    documents.
-
-    Scale: state per batch is one catalog-sized merge (the versioned
-    table is a dimension/rollup, not the corpus); the stream side can
-    be any watermarked aggregation. ``app_id`` must be unique per
-    logical stream: each app_id's replay watermark is tracked
-    independently in the snapshot sidecar. Two streams MAY share one
-    ``table_dir`` — since round 10 the versioned publish is
-    compare-and-swap (a concurrent commit makes the loser re-merge and
-    re-publish, see ``inventory.ConcurrentWriteError``), so interleaved
-    writers serialize instead of silently dropping each other's
-    snapshot; watermark maps are carried forward through every commit,
-    so neither stream can regress the other's replay protection.
-
-    ``n_buckets`` (r10) routes every batch through
-    :func:`~..inventory.upsert_parquet_versioned_partitioned` instead:
-    the table is laid out ``partitionBy(upsert_bucket)`` (``scheme``
-    per ``bucket_scheme``; range needs one numeric key) and each
-    micro-batch merges ONLY its touched buckets, hardlinking the rest —
-    the measured per-batch-flat-in-base-size sink (SCALING.md round
-    10), which is what a long-running stream maintaining a large keyed
-    table needs. Default (None) keeps the plain full-merge layout."""
-
-    from animaltrackingetls_spark.inventory import (
-        upsert_parquet_versioned,
-        upsert_parquet_versioned_partitioned,
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        updates = transform(batch_df) if transform is not None else batch_df
-        if n_buckets is None:
-            upsert_parquet_versioned(
-                batch_df.sparkSession,
-                table_dir,
-                updates,
-                key_cols,
-                keep_versions=keep_versions,
-                txn_app_id=app_id,
-                txn_version=batch_id,
-            )
-        else:
-            upsert_parquet_versioned_partitioned(
-                batch_df.sparkSession,
-                table_dir,
-                updates,
-                key_cols,
-                n_buckets=n_buckets,
-                keep_versions=keep_versions,
-                txn_app_id=app_id,
-                txn_version=batch_id,
-                scheme=bucket_scheme,
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"versioned upsert into {table_dir!r} did not drain within "
-            f"{timeout_seconds}s"
-        )
-
-
-def run_available_now_ingest_index(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    app_id: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    timeout_seconds: int = 300,
-    **ingest_kwargs,
-) -> None:
-    """Exactly-once streaming ingest through the PERSISTED dedup index
-    (operators/dedup.py:dedup_index_ingest): each micro-batch is
-    classified against the stored corpus state (digests + band keys)
-    and its novel documents append to the index tables with
-    ``txn_app_id=app_id, txn_version=batch_id`` — a replayed batch
-    (foreachBatch's at-least-once edge) is a watermark no-op on every
-    index table, the same pattern as run_available_now_upsert_versioned.
-    ``ingest_kwargs`` pass through (bands, sig_agree, use_bloom, ...).
-
-    The batch's (id, status, matched_id) classification is computed but
-    not sunk here — a caller needing it routes the KEPT ids onward by
-    composing its own foreachBatch around dedup_index_ingest; this
-    runner is the plain build-the-index shape."""
-    from animaltrackingetls_spark.operators.dedup import dedup_index_ingest
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dedup_index_ingest(
-            batch_df.sparkSession, batch_df, index_dir,
-            id_col=id_col, text_col=text_col,
-            txn_app_id=app_id, txn_version=batch_id,
-            **ingest_kwargs,
-        ).count()  # drive the classification + appends
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"index ingest into {index_dir!r} did not drain within "
-            f"{timeout_seconds}s"
-        )
-
-
-def run_available_now_upsert_with_expectations(
-    stream: DataFrame,
-    table_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    app_id: str,
-    rules,
-    on_violation: str = "quarantine",
-    quarantine_dir: str | None = None,
-    transform=None,
-    keep_versions: int = 2,
-    timeout_seconds: int = 120,
-) -> dict:
-    """Expectation-GATED exactly-once streaming upsert (round 12, r11
-    verdict task #5): Delta Live Tables' expectation modes applied per
-    micro-batch. Each batch routes through
-    :func:`~..operators.validate.upsert_versioned_with_expectations`
-    under ``txn_app_id=app_id, txn_version=batch_id`` — so a replayed
-    batch (foreachBatch's at-least-once edge) is a watermark no-op on
-    the MAIN table and, in quarantine mode, on the QUARANTINE table too
-    (its writes carry ``app_id + "#q"`` at the same batch id; quarantine
-    commits first, so a crash between the two commits only over-captures
-    diagnostics a replay converges).
-
-    ``on_violation``: ``"quarantine"`` (default here — a stream should
-    keep flowing while bad rows divert), ``"drop"``, or ``"fail"``
-    (stops the stream on the first violating batch; the batch publishes
-    nothing). Returns aggregated gate counts across the drained batches:
-    ``{"n_batches", "n_input", "n_passed", "n_failed", "by_rule"}``.
-    Counts are driver-side observability; the tables themselves are the
-    exactly-once record."""
-    from animaltrackingetls_spark.operators.validate import (
-        upsert_versioned_with_expectations,
-    )
-
-    totals = {"n_batches": 0, "n_input": 0, "n_passed": 0,
-              "n_failed": 0, "by_rule": {}}
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        updates = transform(batch_df) if transform is not None else batch_df
-        _out, rep = upsert_versioned_with_expectations(
-            batch_df.sparkSession, table_dir, updates, key_cols,
-            rules, on_violation=on_violation,
-            quarantine_dir=quarantine_dir,
-            txn_app_id=app_id, txn_version=batch_id,
-            keep_versions=keep_versions,
-        )
-        totals["n_batches"] += 1
-        totals["n_input"] += rep["n_input"]
-        totals["n_passed"] += rep["n_passed"]
-        totals["n_failed"] += rep["n_failed"]
-        for rule, n in rep["by_rule"].items():
-            if n:
-                totals["by_rule"][rule] = totals["by_rule"].get(rule, 0) + n
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"gated upsert into {table_dir!r} did not drain within "
-            f"{timeout_seconds}s"
-        )
-    return totals
-
-
-def run_changes_replication(
-    spark: SparkSession,
-    source_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    app_id: str = "cdcrepl",
-    starting: str | int = "earliest",
-    dest_keep_versions: int = 2,
-    timeout_seconds: int = 180,
-    transport: str = "paths",
-) -> None:
-    """Continuous table replication as ONE Structured Streaming query
-    (round 12): the CDC-pinned source's logged change feed streams in
-    through the native ``versioned_changes`` source (offsets = commit
-    sequence) and each micro-batch applies to a downstream versioned
-    table exactly-once — the streaming twin of the polling
-    :func:`~..operators.versioning.pump_changes_once`, with Spark's
-    offset log replacing the cursor file.
-
-    Per batch (which may span several source commits): the change rows
-    NET to each key's latest post-state (same convergence argument as
-    the pump's ``_netted_logged_changes`` — reverted updates no-op,
-    insert-then-delete nets to a no-op delete), then upserts land via
-    the destination's own layout (bucket-pruned or CoW) under
-    ``txn_app_id=f"{app_id}#up", txn_version=batch_id`` and deletes via
-    ``#del`` at the same id — a replayed batch is a watermark no-op on
-    both halves. Exactly-once end to end: source offsets in the stream
-    checkpoint, destination effects behind the snapshot watermarks.
-
-    ``starting="earliest"`` replays every retained logged commit — a
-    table CDC-pinned from creation therefore replicates FROM SCRATCH
-    through nothing but its own change log (the creation commit logs
-    all-inserts, which the derived feed can never reconstruct).
-    Retention bounds lag exactly like the pump cursor: a checkpoint
-    older than ``keep_versions`` commits fails the stream (re-bootstrap
-    with a fresh checkpoint + snapshot copy). Uses AvailableNow (drain
-    and stop); drive it on a schedule for continuous replication, or
-    swap the trigger for a long-lived stream.
-
-    ``transport="paths"`` (default, round 13): the stream carries FILE
-    PATHS and each batch expands them through native JVM parquet scans
-    (:func:`~..cdc.expand_change_paths`) — the Python source handles
-    only the offset protocol, retiring its 5-10× data-phase tax;
-    ``"rows"`` keeps the self-contained Python-Arrow feed."""
-    from pyspark.sql import Window
-
-    from animaltrackingetls_spark.cdc import (
-        CHANGE_TYPE_COL,
-        COMMIT_SEQ_COL,
-        COMMIT_VERSION_COL,
-        expand_change_paths,
-        read_changes_stream,
-    )
-    from animaltrackingetls_spark.inventory import delete_versioned
-    from animaltrackingetls_spark.operators.versioning import (
-        _SEP,
-        _dest_upsert,
-        _rendered,
-    )
-
-    stream = read_changes_stream(spark, source_dir, starting=starting,
-                                 transport=transport)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        if transport == "paths":
-            batch_df = expand_change_paths(s, batch_df, source_dir)
-        post = batch_df.filter(F.col(CHANGE_TYPE_COL) != "update_preimage")
-        jk = F.concat_ws(_SEP, *[_rendered(k) for k in key_cols])
-        # delete rows lose a same-commit tie: a deleted-and-reinserted
-        # key logs delete + insert at one _commit_seq and the insert is
-        # its final state (same tie-break as _netted_logged_changes;
-        # round-12 ADVICE #1)
-        w = Window.partitionBy(jk).orderBy(
-            F.desc(COMMIT_SEQ_COL),
-            (F.col(CHANGE_TYPE_COL) == "delete").asc(),
-        )
-        netted = (
-            post.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        ).localCheckpoint()
-        counts = {
-            r[0]: r[1]
-            for r in netted.groupBy(CHANGE_TYPE_COL).count().collect()
-        }
-        if counts.get("insert", 0) or counts.get("update_postimage", 0):
-            ups = netted.filter(
-                F.col(CHANGE_TYPE_COL) != "delete"
-            ).drop(CHANGE_TYPE_COL, COMMIT_SEQ_COL, COMMIT_VERSION_COL)
-            _dest_upsert(
-                s, dest_dir, ups, key_cols,
-                keep_versions=dest_keep_versions,
-                txn_app_id=f"{app_id}#up", txn_version=batch_id,
-            )
-        if counts.get("delete", 0):
-            dels = netted.filter(
-                F.col(CHANGE_TYPE_COL) == "delete"
-            ).select(*key_cols)
-            delete_versioned(
-                s, dest_dir, dels, key_cols,
-                keep_versions=dest_keep_versions, cow=True,
-                txn_app_id=f"{app_id}#del", txn_version=batch_id,
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"change replication into {dest_dir!r} did not drain within "
-            f"{timeout_seconds}s"
-        )
-
-
-def run_aggregate_maintenance(
-    spark: SparkSession,
-    source_dir: str,
-    view_dir: str,
-    checkpoint_dir: str,
-    group_cols: list[str],
-    sum_cols: list[str] | None = None,
-    app_id: str = "ivmstream",
-    starting: str | int = "earliest",
-    dest_keep_versions: int = 2,
-    timeout_seconds: int = 180,
-    minmax_cols: list[str] | None = None,
-    transport: str = "paths",
-    var_cols: list[str] | None = None,
-    sketch_cols: list[str] | None = None,
-) -> None:
-    """Materialized-view maintenance as ONE Structured Streaming query
-    (round 12): the CDC-pinned source's change feed streams in through
-    ``versioned_changes`` and every micro-batch applies SIGNED DELTAS
-    to the grouped count/sum view — the streaming twin of the polling
-    :func:`~..operators.versioning.maintain_aggregate_once`, sharing
-    its apply kernel (:func:`~..operators.versioning._apply_aggregate_delta`:
-    group moves from pre/post pairs, NULL-exact sums via non-null
-    counters, count-0 groups deleted) under ``txn_version=batch_id``.
-
-    With ``starting="earliest"`` on a table CDC-pinned from creation,
-    the view builds FROM NOTHING — the creation commit's logged inserts
-    are the first deltas — so there is no separate bootstrap step at
-    all; exactly-once end to end as in
-    :func:`run_changes_replication`. Holes (RESTORE, pre-pin commits)
-    fail the stream by default — views cannot skip deltas; fall back to
-    the polling form, whose hole path is a full recompute. AvailableNow
-    drain semantics as everywhere.
-
-    ``minmax_cols`` (round 13): same tighten-or-rescan protocol as the
-    polling form; the affected-group rescan pins the snapshot at the
-    BATCH'S LAST COMMIT VERSION (read off the batch's
-    ``_commit_version`` rows — rescanning CURRENT would leak future
-    commits into the view and double-count when their deltas arrive),
-    so source retention must cover the stream's lag.
-
-    ``transport="paths"`` (default, round 13): JVM data phase, Python
-    offsets only — see :func:`run_changes_replication`.
-
-    ``sketch_cols`` (round 14): per-group HLL distinct sketches — the
-    same tighten-or-rescan protocol as min/max (inserts hll_union
-    monotonically; any removal of a non-NULL value rescans the group
-    at the batch pin). See the polling form's docstring."""
-    from animaltrackingetls_spark.cdc import (
-        COMMIT_SEQ_COL,
-        COMMIT_VERSION_COL,
-        expand_change_paths,
-        read_changes_stream,
-    )
-    from animaltrackingetls_spark.operators.versioning import (
-        _apply_aggregate_delta,
-    )
-
-    scols = list(sum_cols or [])
-    mmcols = list(minmax_cols or [])
-    vcols = list(var_cols or [])
-    skcols = list(sketch_cols or [])
-    stream = read_changes_stream(spark, source_dir, starting=starting,
-                                 transport=transport)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        src_version = None
-        if mmcols or skcols:
-            # both transports carry the commit columns, so the pin
-            # reads the (tiny, pre-expansion) batch directly
-            src_version = batch_df.agg(
-                F.max_by(COMMIT_VERSION_COL, COMMIT_SEQ_COL)
-            ).first()[0]
-            # validate the pinned snapshot is still retained BEFORE
-            # applying any deltas (round-13 advisory): if retention
-            # pruned it while the stream lagged, the rescan path would
-            # otherwise surface an intermittent FileNotFoundError only
-            # when a rescan happens to fire — fail deterministically
-            # with the re-bootstrap guidance instead.
-            from animaltrackingetls_spark.inventory import list_versions
-
-            if src_version is not None and src_version not in (
-                list_versions(source_dir)
-            ):
-                raise RuntimeError(
-                    f"minmax rescan pin {src_version!r} is no longer "
-                    f"retained under {source_dir!r} — source retention "
-                    "pruned it while this stream lagged. Rebuild the "
-                    "view: drop the checkpoint and view table and "
-                    "re-run (or use the polling maintain_aggregate_once"
-                    ", whose hole path recomputes), and keep source "
-                    "keep_versions above the stream's worst-case lag."
-                )
-        rows_df = (
-            expand_change_paths(s, batch_df, source_dir)
-            if transport == "paths" else batch_df
-        )
-        _apply_aggregate_delta(
-            s, view_dir, rows_df, group_cols,
-            scols, app_id=app_id, seq=batch_id,
-            keep_versions=dest_keep_versions,
-            minmax_cols=mmcols, source_dir=source_dir,
-            source_version=src_version, var_cols=vcols,
-            sketch_cols=skcols,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_seconds)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"view maintenance into {view_dir!r} did not drain within "
-            f"{timeout_seconds}s"
-        )

@@ -435,349 +435,6 @@ def test_group_commit_logs_pinned_members(spark, tmp_path):
     assert change_log(bands, list_versions(bands)[-1]) is None
 
 
-# ------------------------------------------------- logged pump fast path
-
-
-def _dst_state(spark, dst):
-    return {r.k: r.v for r in read_versioned(spark, dst).collect()}
-
-
-def test_pump_logged_fast_path_converges(spark, tmp_path):
-    from animaltrackingetls_spark.operators.versioning import (
-        pump_changes_once,
-    )
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    cur = str(tmp_path / "cursor")
-
-    def up(rows, keep=10):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, "k long, v string"),
-            ["k"], keep_versions=keep, write_change_data=True, cow=True,
-        )
-
-    up([(1, "a"), (2, "b"), (3, "c")])
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["source"] == "bootstrap" and r["added"] == 3
-
-    # idle poll takes the logged path and applies nothing
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r == {"applied": False, "to_version": r["to_version"],
-                 "added": 0, "changed": 0, "removed": 0,
-                 "source": "logged"}
-
-    # a MULTI-COMMIT window with an insert-then-delete (nets to a
-    # no-op delete), an update chain (nets to the last value), and a
-    # fresh insert — the netting window's whole casuistry in one poll
-    up([(2, "b2"), (4, "d"), (9, "ghost")])
-    up([(2, "b3")])
-    delete_versioned(spark, src, spark.createDataFrame([(9,)], "k long"),
-                     ["k"], keep_versions=10)
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["source"] == "logged" and r["applied"]
-    assert _dst_state(spark, dst) == {1: "a", 2: "b3", 3: "c", 4: "d"}
-    assert r["removed"] == 1  # ghost nets to a (no-op) delete
-
-    # crash-before-advance replay: logged path is exactly-once via the
-    # same per-app-id watermarks
-    with open(cur) as f:
-        cursor_before = f.read()
-    up([(5, "e")])
-    pump_changes_once(spark, src, dst, cur, ["k"])
-    vers_after = list_versions(dst)
-    with open(cur, "w") as f:
-        f.write(cursor_before)
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["applied"] and r["source"] == "logged"
-    assert list_versions(dst) == vers_after  # pure watermark no-op
-    assert _dst_state(spark, dst) == {
-        1: "a", 2: "b3", 3: "c", 4: "d", 5: "e",
-    }
-
-    # a RESTORE punches a hole -> the poll FALLS BACK to deriving and
-    # still converges (endpoints retained)
-    v_now = list_versions(src)[-1]
-    up([(6, "f")])
-    restore_versioned(spark, src, v_now, keep_versions=10)
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["source"] == "derived"
-    assert _dst_state(spark, dst) == {
-        1: "a", 2: "b3", 3: "c", 4: "d", 5: "e",
-    }
-    # post-restore commits log again -> the fast path resumes
-    up([(7, "g")])
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["source"] == "logged"
-    assert _dst_state(spark, dst)[7] == "g"
-
-
-def test_group_pump_logged_members(spark, tmp_path):
-    """The group pump's per-member logged fast path: a pinned member's
-    window applies from its netted change files (no diff, no payload
-    fetch), an unpinned member derives — mixed in ONE atomic group
-    commit; the dest group converges and replays no-op."""
-    from animaltrackingetls_spark.inventory import (
-        read_versioned_group,
-        upsert_group_versioned,
-    )
-    from animaltrackingetls_spark.operators.versioning import (
-        pump_group_changes_once,
-    )
-
-    sg, dg = str(tmp_path / "sg"), str(tmp_path / "dg")
-    cur = str(tmp_path / "cur")
-    resolve_cdc(os.path.join(sg, "docs"), True)  # pin docs only
-    keys = {"docs": ["k"], "bands": ["band", "k"]}
-    upsert_group_versioned(spark, sg, {
-        "docs": (spark.createDataFrame(
-            [(1, "a"), (2, "b")], "k int, v string"), ["k"]),
-        "bands": (spark.createDataFrame(
-            [(10, 1), (11, 2)], "band int, k int"), ["band", "k"]),
-    }, keep_versions=10)
-    r = pump_group_changes_once(spark, sg, dg, cur, keys)
-    assert r["tables"]["docs"]["bootstrapped"]
-
-    upsert_group_versioned(spark, sg, {
-        "docs": (spark.createDataFrame(
-            [(2, "B"), (3, "c")], "k int, v string"), ["k"]),
-        "bands": (spark.createDataFrame(
-            [(12, 3)], "band int, k int"), ["band", "k"]),
-    }, keep_versions=10,
-        deletes={"docs": spark.createDataFrame([(1,)], "k int")})
-    r = pump_group_changes_once(spark, sg, dg, cur, keys)
-    assert r["tables"]["docs"]["source"] == "logged"
-    assert r["tables"]["bands"]["source"] == "derived"
-    assert (r["tables"]["docs"]["added"],
-            r["tables"]["docs"]["changed"],
-            r["tables"]["docs"]["removed"]) == (1, 1, 1)
-    got = {
-        (row.k, row.v)
-        for row in read_versioned_group(spark, dg, "docs").collect()
-    }
-    assert got == {(2, "B"), (3, "c")}
-    assert read_versioned_group(spark, dg, "bands").count() == 3
-
-    # crash-before-advance replay: the logged member's group window
-    # no-ops under the group watermark
-    import json as _json
-
-    with open(cur) as f:
-        cursor_before = f.read()
-    upsert_group_versioned(spark, sg, {
-        "docs": (spark.createDataFrame(
-            [(4, "d")], "k int, v string"), ["k"]),
-    }, keep_versions=10)
-    pump_group_changes_once(spark, sg, dg, cur, keys)
-    state_after = _json.dumps(
-        sorted((row.k, row.v) for row in
-               read_versioned_group(spark, dg, "docs").collect())
-    )
-    with open(cur, "w") as f:
-        f.write(cursor_before)
-    r = pump_group_changes_once(spark, sg, dg, cur, keys)
-    assert r["applied"] and r["tables"]["docs"]["source"] == "logged"
-    assert _json.dumps(
-        sorted((row.k, row.v) for row in
-               read_versioned_group(spark, dg, "docs").collect())
-    ) == state_after
-
-
-def test_maintain_aggregate_incremental_view(spark, tmp_path):
-    """Incremental materialized-view maintenance over the logged feed:
-    the view equals the full groupBy recompute after every poll —
-    through inserts, value updates, GROUP MOVES (a key changing its
-    group contributes -1 to the old and +1 to the new), NULL groups,
-    NULL sum values (all-NULL groups sum to NULL, not 0), group
-    deletion at count 0, crash replay, and a RESTORE-hole recompute."""
-    from animaltrackingetls_spark.operators.versioning import (
-        maintain_aggregate_once,
-    )
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    cur = str(tmp_path / "cursor")
-    schema = "k long, g string, x double"
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, schema), ["k"],
-            keep_versions=10, write_change_data=True, cow=True,
-        )
-
-    def full():
-        return _rows(
-            read_versioned(spark, src).groupBy("g").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("x").alias("n_x"),
-                F.sum("x").alias("sum_x"),
-            ), "g", "n_rows", "n_x", "sum_x",
-        )
-
-    def materialized():
-        return _rows(read_versioned(spark, view),
-                     "g", "n_rows", "n_x", "sum_x")
-
-    def poll():
-        return maintain_aggregate_once(
-            spark, src, view, cur, ["g"], sum_cols=["x"],
-        )
-
-    # bootstrap: NULL group key, an all-NULL-x group ('z'), plain groups
-    up([(1, "a", 1.0), (2, "a", 2.0), (3, "b", 4.0),
-        (4, None, 8.0), (5, "z", None), (6, "z", None)])
-    assert poll()["source"] == "bootstrap"
-    assert materialized() == full()
-
-    # one multi-commit window: insert, value update, a group MOVE
-    # (k=3 b->a), a NULL-x insert into a live group
-    up([(3, "a", 4.0), (7, "b", 16.0)])
-    up([(1, "a", 1.5), (8, "a", None)])
-    r = poll()
-    assert r["source"] == "logged" and r["applied"]
-    assert materialized() == full()
-
-    # deletes: empty group 'b' entirely (count 0 -> row leaves the
-    # view), and thin group 'a'
-    delete_versioned(spark, src, spark.createDataFrame(
-        [(7,), (2,)], "k long"), ["k"], keep_versions=10, cow=True)
-    r = poll()
-    assert r["source"] == "logged" and r["groups_deleted"] == 1
-    assert materialized() == full()
-    assert ("b",) not in {(row.g,) for row in
-                          read_versioned(spark, view).collect()}
-
-    # crash replay: roll the cursor back, re-poll -> watermark no-op
-    with open(cur) as f:
-        before = f.read()
-    up([(9, "a", 32.0)])
-    poll()
-    n_vers = len(list_versions(view))
-    with open(cur, "w") as f:
-        f.write(before)
-    r = poll()
-    assert r["applied"] and list_versions(view)[-1:] and \
-        len(list_versions(view)) == n_vers
-    assert materialized() == full()
-
-    # a RESTORE hole flips the poll to a full recompute, still exact
-    v_keep = list_versions(src)[-1]
-    up([(10, "c", 64.0)])
-    restore_versioned(spark, src, v_keep, keep_versions=10)
-    r = poll()
-    assert r["source"] == "recomputed"
-    assert materialized() == full()
-    # and the logged fast path resumes after the hole
-    up([(11, "d", 128.0)])
-    assert poll()["source"] == "logged"
-    assert materialized() == full()
-
-
-def test_streaming_view_maintenance(spark, tmp_path):
-    """run_aggregate_maintenance: the view builds FROM NOTHING out of
-    the creation commit's logged inserts, tracks later commits across
-    checkpoint restarts (group move + delete included), and equals the
-    full recompute after every drain."""
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_aggregate_maintenance,
-    )
-
-    src, vw = str(tmp_path / "src"), str(tmp_path / "vw")
-    ck = str(tmp_path / "ck")
-    schema = "k long, g string, x double"
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, schema), ["k"],
-            keep_versions=10, write_change_data=True, cow=True,
-        )
-
-    def full():
-        return _rows(
-            read_versioned(spark, src).groupBy("g").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("x").alias("n_x"),
-                F.sum("x").alias("sum_x"),
-            ), "g", "n_rows", "n_x", "sum_x",
-        )
-
-    def drain():
-        run_aggregate_maintenance(spark, src, vw, ck, ["g"],
-                                  sum_cols=["x"])
-        return _rows(read_versioned(spark, vw),
-                     "g", "n_rows", "n_x", "sum_x")
-
-    up([(1, "a", 1.0), (2, "a", 2.0), (3, "b", 4.0)])
-    assert drain() == full()  # built from deltas alone, no bootstrap
-    up([(3, "a", 4.0), (4, "c", None)])  # group move + NULL-sum group
-    delete_versioned(spark, src, spark.createDataFrame([(1,)], "k long"),
-                     ["k"], keep_versions=10, cow=True)
-    assert drain() == full()
-    assert ("b",) not in {(r.g,) for r in
-                          read_versioned(spark, vw).collect()}
-    # idle drain: no new commits, view gains no versions
-    n = len(list_versions(vw))
-    assert drain() == full()
-    assert len(list_versions(vw)) == n
-
-
-def test_pump_prefer_logged_off_derives(spark, tmp_path):
-    from animaltrackingetls_spark.operators.versioning import (
-        pump_changes_once,
-    )
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    cur = str(tmp_path / "cursor")
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    upsert_parquet_versioned(spark, src, df, ["k"], keep_versions=10,
-                             write_change_data=True)
-    pump_changes_once(spark, src, dst, cur, ["k"])
-    upsert_parquet_versioned(
-        spark, src, spark.createDataFrame([(2, "b")], "k long, v string"),
-        ["k"], keep_versions=10,
-    )
-    r = pump_changes_once(spark, src, dst, cur, ["k"],
-                          prefer_logged=False)
-    assert r["source"] == "derived" and r["added"] == 1
-    assert _dst_state(spark, dst) == {1: "a", 2: "b"}
-
-
-def test_streaming_replication_end_to_end(spark, tmp_path):
-    """run_changes_replication: a CDC-pinned table replicates from
-    scratch through nothing but its own change log, stays converged
-    across later commits (restarting from the stream checkpoint), and
-    handles deletes."""
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_changes_replication,
-    )
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    ck = str(tmp_path / "ck")
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, "k long, v string"),
-            ["k"], keep_versions=10, write_change_data=True, cow=True,
-        )
-
-    up([(1, "a"), (2, "b"), (3, "c")])
-    up([(2, "b2"), (4, "d")])
-    run_changes_replication(spark, src, dst, ck, ["k"])
-    assert {r.k: r.v for r in read_versioned(spark, dst).collect()} == {
-        1: "a", 2: "b2", 3: "c", 4: "d",
-    }
-    # later commits, incl. a delete: the restart drains only new offsets
-    up([(5, "e")])
-    delete_versioned(spark, src, spark.createDataFrame([(1,)], "k long"),
-                     ["k"], keep_versions=10)
-    run_changes_replication(spark, src, dst, ck, ["k"])
-    assert {r.k: r.v for r in read_versioned(spark, dst).collect()} == {
-        2: "b2", 3: "c", 4: "d", 5: "e",
-    }
-    # idle restart: nothing new, dest gains no versions
-    n = len(list_versions(dst))
-    run_changes_replication(spark, src, dst, ck, ["k"])
-    assert len(list_versions(dst)) == n
-
-
 # ----------------------------------------------------- streaming source
 
 
@@ -939,134 +596,6 @@ def test_stream_starting_explicit_seq(spark, tmp_path, base_batches):
     ) == [2]
 
 
-def test_netting_delete_reinsert_same_commit(spark, tmp_path):
-    """Round-12 ADVICE #1: a group commit logs BOTH a delete and an
-    insert for a deleted-and-reinserted key at ONE _commit_seq (upsert
-    classification runs against the post-delete base). The netting
-    tie-break must pick the INSERT as the key's final state — commit
-    sequence alone breaks the tie nondeterministically and can drop a
-    live key at the destination."""
-    from animaltrackingetls_spark.inventory import (
-        read_versioned_group,
-        upsert_group_versioned,
-    )
-    from animaltrackingetls_spark.operators.versioning import (
-        _netted_logged_changes,
-        pump_group_changes_once,
-    )
-
-    sg, dg = str(tmp_path / "sg"), str(tmp_path / "dg")
-    cur = str(tmp_path / "cur")
-    resolve_cdc(os.path.join(sg, "docs"), True)
-    keys = {"docs": ["k"]}
-    # many keys so a lucky nondeterministic tie can't mask the bug
-    ks = list(range(8))
-    upsert_group_versioned(spark, sg, {
-        "docs": (spark.createDataFrame(
-            [(k, "old") for k in ks], "k int, v string"), ["k"]),
-    }, keep_versions=10)
-    r = pump_group_changes_once(spark, sg, dg, cur, keys)
-    assert r["tables"]["docs"]["bootstrapped"]
-
-    # ONE group commit: delete every key AND reinsert it with a new
-    # value -> the change log holds delete + insert per key, same seq
-    upsert_group_versioned(spark, sg, {
-        "docs": (spark.createDataFrame(
-            [(k, "new") for k in ks], "k int, v string"), ["k"]),
-    }, keep_versions=10,
-        deletes={"docs": spark.createDataFrame(
-            [(k,) for k in ks], "k int")})
-
-    # the netted feed itself: every key's final state is the insert
-    import json as _json
-
-    with open(os.path.join(sg, "_CURRENT_GROUP")) as f:
-        hist = _json.load(f)["history"]["docs"]
-    netted = _netted_logged_changes(
-        spark, os.path.join(sg, "docs"), hist[-2], hist[-1], ["k"],
-        versions=hist,
-    )
-    got = {(r.k, r[CHANGE_TYPE_COL]) for r in netted.collect()}
-    assert got == {(k, "insert") for k in ks}
-
-    # and end to end through the group pump's logged fast path
-    r = pump_group_changes_once(spark, sg, dg, cur, keys)
-    assert r["tables"]["docs"]["source"] == "logged"
-    dest = {(row.k, row.v)
-            for row in read_versioned_group(spark, dg, "docs").collect()}
-    assert dest == {(k, "new") for k in ks}
-
-
-def test_ivm_replay_after_crash_with_new_commit(spark, tmp_path,
-                                                monkeypatch):
-    """Round-12 ADVICE #2: signed deltas are not idempotent across
-    DIFFERENT windows. A poll that crashes after applying but before
-    advancing, followed by a NEW source commit, must NOT widen the
-    retry window past what was applied (that would re-apply the old
-    deltas under a higher txn_version and double-count). The pending
-    plan clamps the retry to the crashed poll's exact window."""
-    from animaltrackingetls_spark.operators import versioning as V
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    cur = str(tmp_path / "cursor")
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, "k long, g string, x double"),
-            ["k"], keep_versions=10, write_change_data=True, cow=True,
-        )
-
-    def full():
-        return _rows(
-            read_versioned(spark, src).groupBy("g").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("x").alias("n_x"),
-                F.sum("x").alias("sum_x"),
-            ), "g", "n_rows", "n_x", "sum_x")
-
-    def materialized():
-        return _rows(read_versioned(spark, view),
-                     "g", "n_rows", "n_x", "sum_x")
-
-    up([(1, "a", 1.0), (2, "a", 2.0), (3, "b", 4.0)])
-    assert V.maintain_aggregate_once(
-        spark, src, view, cur, ["g"], sum_cols=["x"],
-    )["source"] == "bootstrap"
-
-    # a delta commit, then a poll that CRASHES after applying it
-    up([(4, "a", 8.0)])
-    real_apply = V._apply_aggregate_delta
-
-    def crash_after_apply(*a, **kw):
-        out = real_apply(*a, **kw)
-        raise RuntimeError("simulated crash before advance()")
-
-    monkeypatch.setattr(V, "_apply_aggregate_delta", crash_after_apply)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        V.maintain_aggregate_once(spark, src, view, cur, ["g"],
-                                  sum_cols=["x"])
-    monkeypatch.setattr(V, "_apply_aggregate_delta", real_apply)
-    assert os.path.exists(cur + ".pending")
-
-    # the source moves on BEFORE the retry
-    up([(5, "b", 16.0)])
-
-    # retry: clamped to the crashed poll's window (watermark no-op),
-    # then a second poll applies the genuinely-new commit
-    r1 = V.maintain_aggregate_once(spark, src, view, cur, ["g"],
-                                   sum_cols=["x"])
-    assert r1["applied"] and r1["source"] == "logged"
-    r2 = V.maintain_aggregate_once(spark, src, view, cur, ["g"],
-                                   sum_cols=["x"])
-    assert r2["applied"] and r2["source"] == "logged"
-    assert not os.path.exists(cur + ".pending")
-    assert materialized() == full()  # no double-counted sum_a
-
-    # idle poll stays idle
-    assert not V.maintain_aggregate_once(
-        spark, src, view, cur, ["g"], sum_cols=["x"])["applied"]
-
-
 def test_read_change_data_empty_window_without_current(spark, tmp_path):
     """Round-12 ADVICE #3: the empty-window typed fallback must not
     need a _CURRENT pointer — group-member dirs publish through the
@@ -1093,210 +622,6 @@ def test_read_change_data_empty_window_without_current(spark, tmp_path):
     cols = set(feed.columns)
     assert {"k", "v", "x", CHANGE_TYPE_COL, COMMIT_SEQ_COL,
             "_commit_version"} <= cols
-
-
-def test_ivm_minmax_maintenance(spark, tmp_path):
-    """Round-13: min/max in the maintained view. Inserts tighten
-    monotonically; a delete touching a group's extremum triggers the
-    affected-group rescan. The view is pinned EQUAL to the full
-    groupBy recompute through: extremum deletion, DUPLICATE extrema
-    (deleting one copy must keep the other), interior deletes (no
-    rescan needed), group moves, all-NULL columns, in-window
-    insert-then-delete on a brand-new group, crash replay, and
-    view-schema evolution (minmax added to an existing view)."""
-    from animaltrackingetls_spark.operators.versioning import (
-        maintain_aggregate_once,
-    )
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    cur = str(tmp_path / "cursor")
-    schema = "k long, g string, x double"
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, schema), ["k"],
-            keep_versions=20, write_change_data=True, cow=True,
-        )
-
-    def dele(ks):
-        delete_versioned(spark, src, spark.createDataFrame(
-            [(k,) for k in ks], "k long"), ["k"], keep_versions=20,
-            cow=True)
-
-    def full():
-        return _rows(
-            read_versioned(spark, src).groupBy("g").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("x").alias("n_x"),
-                F.sum("x").alias("sum_x"),
-                F.min("x").alias("min_x"),
-                F.max("x").alias("max_x"),
-            ), "g", "n_rows", "n_x", "sum_x", "min_x", "max_x")
-
-    def materialized():
-        return _rows(read_versioned(spark, view),
-                     "g", "n_rows", "n_x", "sum_x", "min_x", "max_x")
-
-    def poll():
-        return maintain_aggregate_once(
-            spark, src, view, cur, ["g"], sum_cols=["x"],
-            minmax_cols=["x"],
-        )
-
-    # bootstrap: duplicates at the extremum (k=1,2 both x=1.0),
-    # all-NULL group 'z', NULL group key
-    up([(1, "a", 1.0), (2, "a", 1.0), (3, "a", 5.0), (4, "b", 7.0),
-        (5, None, 3.0), (6, "z", None)])
-    assert poll()["source"] == "bootstrap"
-    assert materialized() == full()
-
-    # pure-insert tighten: new max for 'a', new min for 'b'
-    up([(7, "a", 9.0), (8, "b", 2.0)])
-    r = poll()
-    assert r["source"] == "logged" and r["applied"]
-    assert materialized() == full()
-
-    # delete ONE duplicate of the min (k=1): rescan keeps min=1.0
-    dele([1])
-    poll()
-    assert materialized() == full()
-    got = {row.g: (row.min_x, row.max_x)
-           for row in read_versioned(spark, view).collect()
-           if row.g == "a"}
-    assert got["a"] == (1.0, 9.0)
-
-    # delete the true max of 'a' (k=7, x=9.0): rescan finds 5.0
-    dele([7])
-    poll()
-    assert materialized() == full()
-
-    # interior delete (k=3, x=5.0 is now the max — so delete k=2
-    # first to get an interior value...): delete x=1.0 when min is
-    # also 1.0 -> extremum touch; then insert interior and delete it
-    up([(9, "a", 3.0)])
-    poll()
-    dele([9])  # 3.0 interior? min=1.0 max=5.0 -> interior, no rescan
-    poll()
-    assert materialized() == full()
-
-    # group move: k=4 moves b->a (delete pre, insert post)
-    up([(4, "a", 7.0)])
-    poll()
-    assert materialized() == full()
-    # 'b' now holds only k=8 (x=2.0)
-
-    # in-window insert-then-delete on a BRAND-NEW group: two commits
-    # in one poll window
-    up([(20, "q", 11.0), (21, "q", 13.0)])
-    dele([21])
-    poll()
-    assert materialized() == full()
-
-    # empty a group entirely -> its row leaves the view
-    dele([8])
-    r = poll()
-    assert materialized() == full()
-    assert "b" not in {row.g for row in
-                       read_versioned(spark, view).collect()}
-
-    # crash replay: cursor rolled back, re-poll converges identically
-    with open(cur) as f:
-        before = f.read()
-    up([(30, "a", 0.5)])  # new min via insert
-    poll()
-    with open(cur, "w") as f:
-        f.write(before)
-    poll()
-    assert materialized() == full()
-
-    # NULL-valued deletes never rescan or disturb min/max
-    up([(31, "z", None)])
-    poll()
-    dele([31])
-    poll()
-    assert materialized() == full()
-
-
-def test_ivm_minmax_view_schema_evolution(spark, tmp_path):
-    """A count/sum-only view later polled with minmax_cols: one
-    recompute re-bases the schema, then incremental again."""
-    from animaltrackingetls_spark.operators.versioning import (
-        maintain_aggregate_once,
-    )
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    cur = str(tmp_path / "cursor")
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, "k long, g string, x double"),
-            ["k"], keep_versions=10, write_change_data=True, cow=True,
-        )
-
-    up([(1, "a", 1.0), (2, "b", 2.0)])
-    maintain_aggregate_once(spark, src, view, cur, ["g"], sum_cols=["x"])
-    assert "min_x" not in read_versioned(spark, view).columns
-
-    up([(3, "a", 3.0)])
-    r = maintain_aggregate_once(spark, src, view, cur, ["g"],
-                                sum_cols=["x"], minmax_cols=["x"])
-    assert r["source"] == "recomputed"
-    got = _rows(read_versioned(spark, view),
-                "g", "n_rows", "n_x", "sum_x", "min_x", "max_x")
-    want = _rows(
-        read_versioned(spark, src).groupBy("g").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("x").alias("n_x"),
-            F.sum("x").alias("sum_x"),
-            F.min("x").alias("min_x"),
-            F.max("x").alias("max_x"),
-        ), "g", "n_rows", "n_x", "sum_x", "min_x", "max_x")
-    assert got == want
-
-    # and the NEXT poll is logged-incremental again
-    up([(4, "c", 4.0)])
-    r = maintain_aggregate_once(spark, src, view, cur, ["g"],
-                                sum_cols=["x"], minmax_cols=["x"])
-    assert r["source"] == "logged"
-
-
-def test_streaming_view_maintenance_minmax(spark, tmp_path):
-    """The streaming runner with minmax_cols: rescans pin at the
-    batch's last commit version; the drained view equals the full
-    recompute including an extremum deletion."""
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_aggregate_maintenance,
-    )
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    ck = str(tmp_path / "ck")
-    resolve_cdc(src, True)
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, "k long, g string, x double"),
-            ["k"], keep_versions=20, cow=True,
-        )
-
-    up([(1, "a", 1.0), (2, "a", 9.0), (3, "b", 4.0)])
-    up([(4, "a", 5.0)])
-    delete_versioned(spark, src, spark.createDataFrame(
-        [(2,)], "k long"), ["k"], keep_versions=20, cow=True)  # max gone
-    run_aggregate_maintenance(
-        spark, src, view, ck, ["g"], sum_cols=["x"],
-        minmax_cols=["x"],
-    )
-    got = _rows(read_versioned(spark, view),
-                "g", "n_rows", "n_x", "sum_x", "min_x", "max_x")
-    want = _rows(
-        read_versioned(spark, src).groupBy("g").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("x").alias("n_x"),
-            F.sum("x").alias("sum_x"),
-            F.min("x").alias("min_x"),
-            F.max("x").alias("max_x"),
-        ), "g", "n_rows", "n_x", "sum_x", "min_x", "max_x")
-    assert got == want
 
 
 def test_changes_stream_paths_transport(spark, tmp_path, base_batches):
@@ -1401,365 +726,4 @@ def test_expand_change_paths_type_widening(spark, tmp_path):
     got = _rows(got_df, "k", "x", CHANGE_TYPE_COL, COMMIT_SEQ_COL)
     want = _rows(read_change_data(spark, tdir),
                  "k", "x", CHANGE_TYPE_COL, COMMIT_SEQ_COL)
-    assert got == want
-
-
-def test_replication_rows_transport_still_converges(spark, tmp_path):
-    """The pre-round-13 rows transport stays a supported path."""
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_changes_replication,
-    )
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    ck = str(tmp_path / "ck")
-    resolve_cdc(src, True)
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-        ["k"], keep_versions=10, cow=True)
-    delete_versioned(spark, src, spark.createDataFrame(
-        [(1,)], "k int"), ["k"], keep_versions=10, cow=True)
-    run_changes_replication(spark, src, dst, ck, ["k"],
-                            transport="rows")
-    assert _rows(read_versioned(spark, dst), "k", "v") == [(2, "b")]
-
-
-def test_ivm_schema_evolution_through_logged_feed(spark, tmp_path):
-    """Round-13 (r12 verdict task #7a): a sum_col that APPEARS
-    mid-history. A view maintained without it recomputes once when the
-    caller starts requesting it (schema re-base), then the logged feed
-    maintains it incrementally — pre-evolution change rows NULL-pad
-    the column, so they contribute nothing to n_<c>/sum_<c>, exactly
-    the full-aggregate semantics."""
-    from animaltrackingetls_spark.operators.versioning import (
-        maintain_aggregate_once,
-    )
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    cur = str(tmp_path / "cursor")
-
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)],
-                              "k long, g string, x double"),
-        ["k"], keep_versions=10, write_change_data=True, cow=True,
-    )
-    maintain_aggregate_once(spark, src, view, cur, ["g"], sum_cols=["x"])
-
-    # evolution: x2 appears; old rows NULL-pad
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(3, "a", 3.0, 30.0)],
-                              "k long, g string, x double, x2 double"),
-        ["k"], keep_versions=10, cow=True, merge_schema=True,
-    )
-    r = maintain_aggregate_once(spark, src, view, cur, ["g"],
-                                sum_cols=["x", "x2"])
-    assert r["source"] == "recomputed"  # view schema re-base
-
-    # post-evolution commits maintain x2 incrementally: the update of
-    # pre-evolution key k=1 logs a preimage whose x2 is NULL (padded),
-    # so its -1 delta touches n_x2/sum_x2 not at all — NULL
-    # contributions fall out of the count-non-null algebra
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(1, "a", 1.5, None), (4, "b", 4.0, 40.0)],
-                              "k long, g string, x double, x2 double"),
-        ["k"], keep_versions=10, cow=True,
-    )
-    r = maintain_aggregate_once(spark, src, view, cur, ["g"],
-                                sum_cols=["x", "x2"])
-    assert r["source"] == "logged"
-    got = _rows(read_versioned(spark, view),
-                "g", "n_rows", "n_x", "sum_x", "n_x2", "sum_x2")
-    want = _rows(
-        read_versioned(spark, src).groupBy("g").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("x").alias("n_x"), F.sum("x").alias("sum_x"),
-            F.count("x2").alias("n_x2"), F.sum("x2").alias("sum_x2"),
-        ), "g", "n_rows", "n_x", "sum_x", "n_x2", "sum_x2")
-    assert got == want
-    # the all-NULL-x2 group ('a' has x2 NULL everywhere? no — k=3 has
-    # 30.0; assert the NULL-exact corner explicitly on group 'b')
-    b = {row.g: (row.n_x2, row.sum_x2)
-         for row in read_versioned(spark, view).collect()}
-    assert b["b"] == (1, 40.0)
-
-
-def test_replication_evolves_dest_schema(spark, tmp_path):
-    """Round-13 (r12 verdict task #7b): a replication destination that
-    PREDATES a source column gains it (NULL-padded old rows) on the
-    first drained post-evolution batch, instead of failing."""
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_changes_replication,
-    )
-
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    ck = str(tmp_path / "ck")
-    resolve_cdc(src, True)
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
-        ["k"], keep_versions=10, cow=True)
-    run_changes_replication(spark, src, dst, ck, ["k"])
-    assert "v2" not in read_versioned(spark, dst).columns
-
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(2, "B", 20.0), (3, "c", 30.0)],
-                              "k int, v string, v2 double"),
-        ["k"], keep_versions=10, cow=True, merge_schema=True)
-    run_changes_replication(spark, src, dst, ck, ["k"])
-    got = _rows(read_versioned(spark, dst), "k", "v", "v2")
-    want = _rows(read_versioned(spark, src), "k", "v", "v2")
-    assert got == want
-    assert got == [(1, "a", None), (2, "B", 20.0), (3, "c", 30.0)]
-
-
-def test_ivm_variance_maintenance(spark, tmp_path):
-    """Round-13 var_cols: sum of squares is delta-maintainable, so the
-    view carries n/sum/sumsq per variance column and stddev derives
-    downstream with no rescan. Pinned equal to the full recompute
-    through updates, deletes, NULL values, group emptying, and a
-    min/max-triggered rescan (which recomputes sumsq absolutely)."""
-    from animaltrackingetls_spark.operators.versioning import (
-        maintain_aggregate_once,
-    )
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    cur = str(tmp_path / "cursor")
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src, spark.createDataFrame(rows, "k long, g string, x double"),
-            ["k"], keep_versions=20, write_change_data=True, cow=True,
-        )
-
-    def dele(ks):
-        delete_versioned(spark, src, spark.createDataFrame(
-            [(k,) for k in ks], "k long"), ["k"], keep_versions=20,
-            cow=True)
-
-    def full():
-        return _rows(
-            read_versioned(spark, src).groupBy("g").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("x").alias("n_x"),
-                F.sum("x").alias("sum_x"),
-                F.sum(F.col("x") * F.col("x")).alias("sumsq_x"),
-                F.min("x").alias("min_x"),
-                F.max("x").alias("max_x"),
-            ), "g", "n_rows", "n_x", "sum_x", "sumsq_x",
-            "min_x", "max_x")
-
-    def materialized():
-        return _rows(read_versioned(spark, view),
-                     "g", "n_rows", "n_x", "sum_x", "sumsq_x",
-                     "min_x", "max_x")
-
-    def poll():
-        return maintain_aggregate_once(
-            spark, src, view, cur, ["g"], var_cols=["x"],
-            minmax_cols=["x"],
-        )
-
-    up([(1, "a", 1.0), (2, "a", 3.0), (3, "b", 2.0), (4, "z", None)])
-    assert poll()["source"] == "bootstrap"
-    assert materialized() == full()
-
-    up([(5, "a", 5.0), (1, "a", 2.0)])  # insert + interior update
-    r = poll()
-    assert r["source"] == "logged"
-    assert materialized() == full()
-
-    dele([2])  # interior delete: -v, -v^2, no rescan needed for sumsq
-    poll()
-    assert materialized() == full()
-
-    dele([5])  # extremum delete -> rescan; sumsq recomputed absolutely
-    poll()
-    assert materialized() == full()
-
-    dele([3])  # group 'b' empties
-    poll()
-    assert materialized() == full()
-    assert "b" not in {row.g for row in read_versioned(spark, view).collect()}
-
-    # variance derives: sample stddev of group 'a' matches Spark's
-    import math
-
-    up([(10, "a", 4.0), (11, "a", 7.0)])  # n back above 1
-    poll()
-    assert materialized() == full()
-    row = {r.g: r for r in read_versioned(spark, view).collect()}["a"]
-    var = (row.sumsq_x - row.sum_x ** 2 / row.n_x) / (row.n_x - 1)
-    want = read_versioned(spark, src).filter("g = 'a'").agg(
-        F.stddev("x")).first()[0]
-    assert abs(math.sqrt(var) - want) < 1e-9
-
-
-def test_stream_maintenance_fails_closed_on_pruned_rescan_pin(
-    spark, tmp_path, monkeypatch
-):
-    """Round 14 (r13 advisory #3): a min/max-maintaining stream whose
-    rescan pin (the batch's last commit version) is no longer retained
-    must fail DETERMINISTICALLY at batch start with re-bootstrap
-    guidance — not intermittently, only when a rescan happens to fire.
-    The pruned state is simulated by patching the driver-side
-    list_versions the guard consults (the reader runs in its own
-    worker process and is unaffected)."""
-    import os as _os
-
-    import animaltrackingetls_spark.inventory as inv_mod
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_aggregate_maintenance,
-    )
-
-    src, vw = str(tmp_path / "src"), str(tmp_path / "vw")
-    ck = str(tmp_path / "ck")
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)],
-                              "k long, g string, x double"),
-        ["k"], keep_versions=10, write_change_data=True, cow=True,
-    )
-    real = inv_mod.list_versions
-    target = _os.path.abspath(src)
-    monkeypatch.setattr(
-        inv_mod, "list_versions",
-        lambda d: [] if _os.path.abspath(d) == target else real(d),
-    )
-    with pytest.raises(Exception, match="no longer retained"):
-        run_aggregate_maintenance(
-            spark, src, vw, ck, ["g"], sum_cols=["x"],
-            minmax_cols=["x"], timeout_seconds=120,
-        )
-
-
-def test_ivm_sketch_maintenance(spark, tmp_path):
-    """Round-14 sketch_cols: per-group HLL distinct sketches maintained
-    like min/max — inserts hll_union monotonically (order-insensitive:
-    same value set => same registers), any removal of a non-NULL value
-    rescans the group absolutely. Pinned equal (on the ESTIMATE) to the
-    full recompute through duplicate inserts, updates, deletes, NULL
-    values, group emptying, and a brand-new-group insert-then-delete
-    window."""
-    from animaltrackingetls_spark.operators.versioning import (
-        maintain_aggregate_once,
-    )
-
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    cur = str(tmp_path / "cursor")
-
-    def up(rows):
-        upsert_parquet_versioned(
-            spark, src,
-            spark.createDataFrame(rows, "k long, g string, x double"),
-            ["k"], keep_versions=20, write_change_data=True, cow=True,
-        )
-
-    def dele(ks):
-        delete_versioned(spark, src, spark.createDataFrame(
-            [(k,) for k in ks], "k long"), ["k"], keep_versions=20,
-            cow=True)
-
-    def full():
-        return _rows(
-            read_versioned(spark, src).groupBy("g").agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.hll_sketch_estimate(
-                    F.hll_sketch_agg(F.col("x").cast("string"))).alias("nd_x"),
-            ), "g", "n_rows", "nd_x")
-
-    def materialized():
-        return _rows(
-            read_versioned(spark, view).select(
-                "g", "n_rows",
-                F.hll_sketch_estimate("hll_x").alias("nd_x"),
-            ), "g", "n_rows", "nd_x")
-
-    def poll():
-        return maintain_aggregate_once(
-            spark, src, view, cur, ["g"], sketch_cols=["x"],
-        )
-
-    # duplicates within a group (distinct 2 of 3 rows) + NULL value
-    up([(1, "a", 1.0), (2, "a", 1.0), (3, "a", 2.0), (4, "z", None)])
-    assert poll()["source"] == "bootstrap"
-    assert materialized() == full()
-
-    # insert-only window: pure hll_union tighten, no rescan
-    up([(5, "a", 9.0), (6, "b", 4.0)])
-    assert poll()["source"] == "logged"
-    assert materialized() == full()
-
-    # duplicate-value delete: distinct must NOT shrink (k=1 leaves,
-    # k=2 still holds x=1.0) — only the rescan can know that
-    dele([1])
-    poll()
-    assert materialized() == full()
-
-    # last-copy delete: distinct shrinks
-    dele([3])
-    poll()
-    assert materialized() == full()
-
-    # update changes a value: old value removal + new value insert
-    up([(5, "a", 10.0)])
-    poll()
-    assert materialized() == full()
-
-    # group empties entirely
-    dele([6])
-    poll()
-    assert materialized() == full()
-    assert "b" not in {r.g for r in read_versioned(spark, view).collect()}
-
-    # brand-new group whose FIRST window already contains a delete
-    up([(20, "c", 1.0), (21, "c", 2.0)])
-    dele([21])
-    poll()
-    assert materialized() == full()
-
-    # schema evolution: a view predating sketch_cols re-bases once
-    cur2, view2 = str(tmp_path / "cur2"), str(tmp_path / "view2")
-    maintain_aggregate_once(spark, src, view2, cur2, ["g"])
-    up([(30, "d", 3.0)])
-    r = maintain_aggregate_once(spark, src, view2, cur2, ["g"],
-                                sketch_cols=["x"])
-    assert r["source"] == "recomputed"
-    assert "hll_x" in read_versioned(spark, view2).columns
-
-
-def test_streaming_sketch_maintenance(spark, tmp_path):
-    """The streaming twin maintains sketch columns through the same
-    apply kernel; the delete-bearing batch takes the rescan at the
-    batch pin."""
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_aggregate_maintenance,
-    )
-
-    src, vw = str(tmp_path / "src"), str(tmp_path / "vw")
-    ck = str(tmp_path / "ck")
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame(
-            [(1, "a", 1.0), (2, "a", 1.0), (3, "b", 2.0)],
-            "k long, g string, x double"),
-        ["k"], keep_versions=10, write_change_data=True, cow=True)
-    delete_versioned(spark, src, spark.createDataFrame(
-        [(1,)], "k long"), ["k"], keep_versions=10, cow=True)
-
-    run_aggregate_maintenance(spark, src, vw, ck, ["g"],
-                              sketch_cols=["x"])
-    got = _rows(
-        read_versioned(spark, vw).select(
-            "g", "n_rows",
-            F.hll_sketch_estimate("hll_x").alias("nd_x")),
-        "g", "n_rows", "nd_x")
-    want = _rows(
-        read_versioned(spark, src).groupBy("g").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.hll_sketch_estimate(F.hll_sketch_agg(F.col("x").cast("string"))).alias("nd_x")),
-        "g", "n_rows", "nd_x")
     assert got == want

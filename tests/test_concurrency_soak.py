@@ -165,97 +165,17 @@ def test_multiprocess_group_soak(spark, tmp_path):
         assert a[9000 + j][1] == iters
 
 
-_CONSUMER = r'''
-import json, os, sys, time
-sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
-from animaltrackingetls_spark.session import get_spark
-from animaltrackingetls_spark.inventory import read_versioned
-from animaltrackingetls_spark.operators.versioning import (
-    maintain_aggregate_once, pump_changes_once,
-)
-
-mode, src, dest, cursor, stop = sys.argv[1:6]
-spark = get_spark(app_name=f"soak-{{mode}}", master="local[2]",
-                  shuffle_partitions=2,
-                  extra_conf={{"spark.ui.showConsoleProgress": "false"}})
-polls = conflicts = checks = 0
-while True:
-    try:
-        if mode == "pump":
-            r = pump_changes_once(spark, src, dest, cursor, ["k"],
-                                  dest_keep_versions=4)
-        else:
-            r = maintain_aggregate_once(
-                spark, src, dest, cursor, ["writer"], sum_cols=["iter"],
-                minmax_cols=["iter"], dest_keep_versions=4)
-    except FileNotFoundError:
-        # a writer is mid-commit or retention raced the poll: retry
-        conflicts += 1
-        time.sleep(0.2)
-        continue
-    if not r["applied"]:
-        if os.path.exists(stop):
-            break
-        time.sleep(0.3)
-        continue
-    polls += 1
-    # torn-read check: the consumer state must equal the SOURCE
-    # SNAPSHOT AT THE POLL'S to_version (skip if pruned meanwhile)
-    v = r["to_version"]
-    try:
-        snap = read_versioned(spark, src, v)
-    except FileNotFoundError:
-        continue
-    if mode == "pump":
-        got = sorted((row.k, row.writer, row.iter)
-                     for row in read_versioned(spark, dest).collect())
-        want = sorted((row.k, row.writer, row.iter)
-                      for row in snap.collect())
-    else:
-        got = sorted(map(tuple, read_versioned(spark, dest)
-                         .select("writer", "n_rows", "n_iter",
-                                 "sum_iter", "min_iter", "max_iter")
-                         .collect()))
-        want = sorted(map(tuple, snap.groupBy("writer").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("iter").alias("n_iter"),
-            F.sum("iter").alias("sum_iter"),
-            F.min("iter").alias("min_iter"),
-            F.max("iter").alias("max_iter"),
-        ).collect()))
-    if got != want:
-        print("TORN", mode, "at", v, got, want)
-        sys.exit(3)
-    checks += 1
-print(f"CONSUMER_OK {{mode}} polls={{polls}} conflicts={{conflicts}} "
-      f"checks={{checks}}")
-'''
-
-
 def test_multiprocess_dv_layer_soak(spark, tmp_path):
     """Round 15 (r14 verdict #6): the DV layer's CAS surface under
     REAL processes — two writers issue merge-on-read upserts + DV
     deletes (concurrent ``_carry_dv`` sidecar carries) while the
-    density-triggered AND an explicit REORG purge race them, with the
-    CDC pump and the IVM maintainer running the same per-poll
-    torn-read self-checks as the plain soak. Invariants: every
-    watermark (upsert AND delete app ids) reached its final version,
-    each writer's key 0 is deleted and keys 1-4 hold its last value,
-    shared keys are serialized, and both consumers converge on the
-    final source state."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from animaltrackingetls_spark.cdc import resolve_cdc
+    density-triggered AND an explicit REORG purge race them.
+    Invariants: every watermark (upsert AND delete app ids) reached its
+    final version, each writer's key 0 is deleted and keys 1-4 hold its
+    last value, and shared keys are serialized."""
     from animaltrackingetls_spark.inventory import read_versioned
 
     src = str(tmp_path / "soak_dv")
-    dest, view = str(tmp_path / "dv_dest"), str(tmp_path / "dv_view")
-    cur_p, cur_v = str(tmp_path / "dv_cp"), str(tmp_path / "dv_cv")
-    stop = str(tmp_path / "dv_stop")
-    resolve_cdc(src, True)
 
     n, iters = 2, 4
     writers = []
@@ -265,27 +185,9 @@ def test_multiprocess_dv_layer_soak(spark, tmp_path):
              "dv", src, str(wid), str(iters)],
             stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
         ))
-    deadline = time.monotonic() + 120
-    while not os.path.exists(os.path.join(src, "_CURRENT")):
-        assert time.monotonic() < deadline, "no writer committed"
-        time.sleep(0.2)
-    consumers = [
-        subprocess.Popen(
-            [sys.executable, "-c", _CONSUMER.format(repo="/root/repo"),
-             mode, src, d, c, stop],
-            stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
-        )
-        for mode, d, c in (("pump", dest, cur_p), ("ivm", view, cur_v))
-    ]
     for p in writers:
         out, _ = p.communicate(timeout=420)
         assert p.returncode == 0 and "WORKER_OK" in out, out[-3000:]
-    with open(stop, "w") as f:
-        f.write("done")
-    for p in consumers:
-        out, _ = p.communicate(timeout=420)
-        assert p.returncode == 0, f"consumer died:\n{out[-3000:]}"
-        assert "CONSUMER_OK" in out, out[-2000:]
 
     # zero lost updates across BOTH app-id families
     marks = txn_watermarks(src)
@@ -300,99 +202,3 @@ def test_multiprocess_dv_layer_soak(spark, tmp_path):
     for j in range(3):
         w, it = rows[9000 + j]
         assert 0 <= w < n and it == iters, rows[9000 + j]
-
-    # consumers converged on the final source state
-    src_rows = sorted((r.k, r.writer, r.iter)
-                      for r in read_versioned(spark, src).collect())
-    dest_rows = sorted((r.k, r.writer, r.iter)
-                       for r in read_versioned(spark, dest).collect())
-    assert dest_rows == src_rows
-    view_rows = sorted(map(tuple, read_versioned(spark, view)
-                           .select("writer", "n_rows", "n_iter",
-                                   "sum_iter", "min_iter", "max_iter")
-                           .collect()))
-    want = sorted(map(tuple, read_versioned(spark, src)
-                      .groupBy("writer").agg(
-                          F.count(F.lit(1)).alias("n_rows"),
-                          F.count("iter").alias("n_iter"),
-                          F.sum("iter").alias("sum_iter"),
-                          F.min("iter").alias("min_iter"),
-                          F.max("iter").alias("max_iter"),
-                      ).collect()))
-    assert view_rows == want
-
-
-def test_multiprocess_pump_and_ivm_soak(spark, tmp_path):
-    """Round-13 (r12 verdict task #6): writers + the CDC pump + the
-    min/max IVM maintainer racing on ONE table in separate processes.
-    Every applied poll self-checks against the source snapshot at its
-    own to_version (torn state exits non-zero); at the end the dest
-    table equals the final source and the view equals the full
-    recompute."""
-    import time
-
-    from animaltrackingetls_spark.cdc import resolve_cdc
-    from animaltrackingetls_spark.inventory import read_versioned
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "soak_src")
-    dest, view = str(tmp_path / "dest"), str(tmp_path / "view")
-    cur_p, cur_v = str(tmp_path / "cp"), str(tmp_path / "cv")
-    stop = str(tmp_path / "stop")
-    resolve_cdc(src, True)  # CDC-pin before any writer creates it
-
-    writers = []
-    for wid in range(2):
-        writers.append(subprocess.Popen(
-            [sys.executable, "-c",
-             _WORKER.format(repo="/root/repo").replace(
-                 "keep_versions=2", "keep_versions=12"),
-             "plain", src, str(wid), "3"],
-            stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
-        ))
-    # let the first commit land so the consumers can bootstrap
-    deadline = time.monotonic() + 120
-    while not os.path.exists(os.path.join(src, "_CURRENT")):
-        assert time.monotonic() < deadline, "no writer committed"
-        time.sleep(0.2)
-    consumers = [
-        subprocess.Popen(
-            [sys.executable, "-c", _CONSUMER.format(repo="/root/repo"),
-             mode, src, d, c, stop],
-            stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
-        )
-        for mode, d, c in (("pump", dest, cur_p), ("ivm", view, cur_v))
-    ]
-    for p in writers:
-        out, _ = p.communicate(timeout=420)
-        assert p.returncode == 0 and "WORKER_OK" in out, out[-3000:]
-    with open(stop, "w") as f:
-        f.write("done")
-    stats = {}
-    for p in consumers:
-        out, _ = p.communicate(timeout=420)
-        assert p.returncode == 0, f"consumer died:\n{out[-3000:]}"
-        line = [l for l in out.splitlines() if l.startswith("CONSUMER_OK")]
-        assert line, out[-2000:]
-        stats[line[0].split()[1]] = line[0]
-
-    # final convergence: dest == source, view == full recompute
-    src_rows = sorted((r.k, r.writer, r.iter)
-                      for r in read_versioned(spark, src).collect())
-    dest_rows = sorted((r.k, r.writer, r.iter)
-                       for r in read_versioned(spark, dest).collect())
-    assert dest_rows == src_rows
-    view_rows = sorted(map(tuple, read_versioned(spark, view)
-                           .select("writer", "n_rows", "n_iter",
-                                   "sum_iter", "min_iter", "max_iter")
-                           .collect()))
-    want = sorted(map(tuple, read_versioned(spark, src)
-                      .groupBy("writer").agg(
-                          F.count(F.lit(1)).alias("n_rows"),
-                          F.count("iter").alias("n_iter"),
-                          F.sum("iter").alias("sum_iter"),
-                          F.min("iter").alias("min_iter"),
-                          F.max("iter").alias("max_iter"),
-                      ).collect()))
-    assert view_rows == want
-    print("soak stats:", stats)

@@ -248,17 +248,6 @@ def test_cdc_pinned_alter_logs_empty_commit(spark, tmp_path):
     assert kinds == [(1, "insert"), (2, "insert")]
 
 
-def test_merge_into_respects_constraints(spark, tmp_path):
-    from animaltrackingetls_spark.inventory import merge_into
-
-    path = _seed(spark, _tbl(tmp_path, "m"))
-    add_check_constraint(spark, path, "qty_pos", "qty > 0")
-    src = spark.createDataFrame([Row(id=1, qty=-4, tag="u")])
-    with pytest.raises(ConstraintViolationError):
-        merge_into(spark, path, src, ["id"])
-    assert read_versioned(spark, path).where("id = 1").first().qty == 5
-
-
 def test_enforcement_rereads_per_attempt_base(spark, tmp_path):
     """A constraint added AFTER a writer read its base must bind the
     retried merge: simulate by adding the constraint between two

@@ -1128,377 +1128,6 @@ def test_ngram_jaccard_degenerate_block_bounded(spark):
     assert abs(out[(7, n)] - 5 / 6) < 1e-9
 
 
-def test_dedup_index_ingest_persisted(spark, tmp_path):
-    """The persisted dedup index: bootstrap, exact + near classification
-    against the STORE (no corpus recompute), O(novel) growth,
-    exactly-once replayed batch, and the docs-first crash ordering."""
-    from animaltrackingetls_spark.inventory import read_versioned_group
-    from animaltrackingetls_spark.operators.dedup import dedup_index_ingest
-
-    idx = str(tmp_path / "idx")
-
-    def docs(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    long1 = ("the quick brown fox jumps over the lazy dog and runs far "
-             "away into the quiet green forest near the old stone bridge")
-    base = docs([
-        (1, long1),
-        (2, "pack my box with five dozen liquor jugs"),
-        (3, "sphinx of black quartz judge my vow"),
-    ])
-    s0 = {r.doc_id: r.status for r in
-          dedup_index_ingest(spark, base, idx,
-                             txn_app_id="t", txn_version=0).collect()}
-    assert s0 == {1: "kept", 2: "kept", 3: "kept"}  # bootstrap keeps all
-    assert read_versioned_group(spark, idx, "docs").count() == 3
-    import os
-
-    assert not os.path.exists(idx + "/bloom")  # default-off (measured)
-
-    batch = docs([
-        (10, "pack my box with five dozen liquor jugs"),  # exact of 2
-        # near of 1: one appended word, bigram J=0.957 — verified
-        # DETERMINISTICALLY band-colliding under the portable md5
-        # family at (r=3, b=2)
-        (11, long1 + " today"),
-        (12, "completely different text about spark engines"),
-    ])
-    out = {r.doc_id: (r.status, r.matched_id) for r in
-           dedup_index_ingest(spark, batch, idx, sig_agree=0.4,
-                              txn_app_id="t", txn_version=1).collect()}
-    assert out[10] == ("exact_dup", 2)
-    assert out[11][0] == "near_dup" and out[11][1] == 1
-    assert out[12] == ("kept", None)
-    # only the novel doc was appended
-    assert read_versioned_group(spark, idx, "docs").count() == 4
-    assert read_versioned_group(spark, idx, "bands").filter("id = 10").count() == 0
-
-    # replayed batch (same txn id): classification recomputes but the
-    # index tables must NOT grow (watermark no-op on both)
-    dedup_index_ingest(spark, batch, idx, sig_agree=0.4,
-                       txn_app_id="t", txn_version=1)
-    assert read_versioned_group(spark, idx, "docs").count() == 4
-    assert read_versioned_group(spark, idx, "bands").count() == \
-        4 * 2  # 4 docs x 2 bands
-
-    # the new doc is now corpus: an exact copy in the NEXT batch is
-    # caught by the store alone
-    nxt = docs([(20, "completely different text about spark engines")])
-    out = {r.doc_id: (r.status, r.matched_id) for r in
-           dedup_index_ingest(spark, nxt, idx,
-                              txn_app_id="t", txn_version=2).collect()}
-    assert out[20] == ("exact_dup", 12)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="together"):
-        dedup_index_ingest(spark, nxt, idx, txn_app_id="t")
-
-
-def test_dedup_index_bloom_sidecar(spark, tmp_path):
-    """The persisted bloom: exactness preserved (same statuses with and
-    without it), the bloom table exists and is OR-maintained, a
-    pre-bloom index bootstraps its bloom from the FULL docs table, and
-    clear-bit skipping can never mint a false 'kept'."""
-    from animaltrackingetls_spark.inventory import read_versioned_group
-    from animaltrackingetls_spark.operators.dedup import dedup_index_ingest
-
-    def docs(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    long1 = ("the quick brown fox jumps over the lazy dog and runs far "
-             "away into the quiet green forest near the old stone bridge")
-    base = docs([(1, long1), (2, "pack my box with five dozen liquor jugs")])
-    batch = docs([
-        (10, "pack my box with five dozen liquor jugs"),  # exact of 2
-        (11, long1 + " today"),                            # near of 1
-        (12, "completely different text about spark engines"),
-    ])
-
-    # two parallel indexes, bloom on/off: classifications must be equal
-    results = {}
-    for flag in (True, False):
-        idx = str(tmp_path / f"idx_{flag}")
-        dedup_index_ingest(spark, base, idx, use_bloom=flag)
-        out = dedup_index_ingest(spark, batch, idx, sig_agree=0.4,
-                                 use_bloom=flag)
-        results[flag] = {
-            r.doc_id: (r.status, r.matched_id) for r in out.collect()
-        }
-    assert results[True] == results[False]
-    assert results[True][10] == ("exact_dup", 2)
-    assert results[True][12] == ("kept", None)
-    assert read_versioned_group(
-        spark, str(tmp_path / "idx_True"), "bloom"
-    ).count() > 0
-
-    # pre-bloom index (built with use_bloom=False) gains a bloom on the
-    # next bloom-enabled ingest, BOOTSTRAPPED from the whole docs table:
-    # an exact dup of a FIRST-batch doc must still be caught afterwards
-    idx = str(tmp_path / "idx_False")
-    dedup_index_ingest(
-        spark, docs([(20, "some new unrelated content here")]), idx,
-        use_bloom=True,
-    )
-    out = {
-        r.doc_id: r.status
-        for r in dedup_index_ingest(
-            spark, docs([(30, long1)]), idx, use_bloom=True
-        ).collect()
-    }
-    assert out == {30: "exact_dup"}, (
-        "bloom bootstrap missed a pre-bloom digest - false kept"
-    )
-
-
-def test_dedup_index_group_commit_all_or_nothing(spark, tmp_path,
-                                                 monkeypatch):
-    """Round-11 verdict task #4: the index's tables commit ATOMICALLY.
-    Kill the publish between the version-dir writes and the group
-    pointer swap: NEITHER docs nor bands may advance. Replay with the
-    same txn id lands the whole batch, and a replay AFTER a successful
-    commit (self-digests in the index) returns the ORIGINAL statuses —
-    the self-match exclusion's job."""
-    from animaltrackingetls_spark import inventory
-    from animaltrackingetls_spark.inventory import (
-        group_state,
-        read_versioned_group,
-    )
-    from animaltrackingetls_spark.operators.dedup import dedup_index_ingest
-
-    idx = str(tmp_path / "idx")
-
-    def docs(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    base = docs([
-        (1, "pack my box with five dozen liquor jugs"),
-        (2, "sphinx of black quartz judge my vow"),
-    ])
-    dedup_index_ingest(spark, base, idx, txn_app_id="t", txn_version=0)
-    state0 = group_state(idx)
-
-    long1 = ("the quick brown fox jumps over the lazy dog and runs far "
-             "away into the quiet green forest near the old stone bridge")
-    batch = docs([
-        (10, "pack my box with five dozen liquor jugs"),  # exact of 1
-        (11, long1),                                      # kept (novel)
-    ])
-
-    real_publish = inventory._publish_group
-
-    def dying_publish(*a, **kw):
-        raise RuntimeError("injected crash before the group pointer swap")
-
-    monkeypatch.setattr(inventory, "_publish_group", dying_publish)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        dedup_index_ingest(spark, batch, idx, sig_agree=0.4,
-                           txn_app_id="t", txn_version=1)
-    monkeypatch.setattr(inventory, "_publish_group", real_publish)
-
-    # all-or-nothing: NOTHING advanced — the group pointer is
-    # byte-identical, so docs and bands both still show only the base
-    assert group_state(idx) == state0
-    assert read_versioned_group(spark, idx, "docs").count() == 2
-    assert read_versioned_group(spark, idx, "bands").filter(
-        "id in (10, 11)").count() == 0
-
-    # replay with the SAME txn: the whole batch lands in one commit
-    out = {r.doc_id: (r.status, r.matched_id) for r in
-           dedup_index_ingest(spark, batch, idx, sig_agree=0.4,
-                              txn_app_id="t", txn_version=1).collect()}
-    assert out[10] == ("exact_dup", 1)
-    assert out[11] == ("kept", None)
-    assert read_versioned_group(spark, idx, "docs").count() == 3
-    assert read_versioned_group(spark, idx, "bands").filter(
-        "id = 11").count() == 2
-
-    # replay AFTER the successful commit (at-least-once caller whose
-    # checkpoint lagged): statuses must equal the original run's — the
-    # self-match exclusion prevents kept->exact_dup-of-self — and the
-    # group watermark makes the writes a no-op
-    state1 = group_state(idx)
-    out2 = {r.doc_id: (r.status, r.matched_id) for r in
-            dedup_index_ingest(spark, batch, idx, sig_agree=0.4,
-                               txn_app_id="t", txn_version=1).collect()}
-    assert out2 == out, (
-        "post-commit replay changed statuses (self-match leak?)"
-    )
-    assert group_state(idx) == state1  # watermark no-op
-
-    # and a LATER near-dup of doc 11 is detectable — long1 vs
-    # long1+" today" is the deterministically band-colliding pair
-    nxt = docs([(20, long1 + " today")])
-    out = {r.doc_id: (r.status, r.matched_id) for r in
-           dedup_index_ingest(spark, nxt, idx, sig_agree=0.4,
-                              txn_app_id="t", txn_version=2).collect()}
-    assert out[20] == ("near_dup", 11)
-
-
-def test_dedup_index_legacy_layout_adopted(spark, tmp_path):
-    """A pre-round-11 index (independent per-table versioned tables) is
-    adopted into the group layout on first touch. Watermark adoption
-    takes the per-app MIN across tables, so a legacy half-applied batch
-    (docs committed at v1, bands crashed at v0) stays REPLAYABLE and the
-    replay heals the bands gap."""
-    from animaltrackingetls_spark.inventory import (
-        group_state,
-        read_versioned_group,
-        upsert_parquet_versioned,
-    )
-    from animaltrackingetls_spark.operators.dedup import dedup_index_ingest
-
-    idx = str(tmp_path / "idx")
-
-    def docs(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    base = docs([(1, "pack my box with five dozen liquor jugs")])
-    batch = docs([(2, "sphinx of black quartz judge my vow")])
-
-    # build the LEGACY layout by hand: a bootstrap batch in both tables
-    # (txn v0), then a half-applied batch — docs advanced to v1, bands
-    # crashed before its commit (the exact legacy crash window)
-    import os
-
-    from animaltrackingetls_spark.operators.dedup import (
-        dedup_index_ingest as _unused,
-    )
-
-    def hash_rows(frame):
-        # reuse the real ingest's prep by running it into a SCRATCH
-        # group index, then lifting the rows out
-        scratch = str(tmp_path / "scratch")
-        dedup_index_ingest(spark, frame, scratch)
-        d = read_versioned_group(spark, scratch, "docs")
-        b = read_versioned_group(spark, scratch, "bands")
-        ids = [r.doc_id for r in frame.select("doc_id").collect()]
-        import shutil
-
-        out = (d.filter(F.col("id").isin(ids)).collect(),
-               b.filter(F.col("id").isin(ids)).collect())
-        shutil.rmtree(scratch)
-        return out
-
-    d0, b0 = hash_rows(base)
-    d1, b1 = hash_rows(batch)
-    upsert_parquet_versioned(
-        spark, idx + "/docs", spark.createDataFrame(d0), ["id"],
-        txn_app_id="t", txn_version=0)
-    upsert_parquet_versioned(
-        spark, idx + "/bands", spark.createDataFrame(b0), ["id", "bk"],
-        txn_app_id="t", txn_version=0)
-    upsert_parquet_versioned(
-        spark, idx + "/docs", spark.createDataFrame(d1), ["id"],
-        txn_app_id="t", txn_version=1)
-    # bands NEVER got txn 1 — the legacy crash window
-    assert group_state(idx) is None
-
-    # first group-aware touch adopts; replaying txn 1 must NOT be a
-    # watermark no-op (marks = min(docs=1, bands=0) = 0) and must heal
-    out = {r.doc_id: (r.status, r.matched_id) for r in
-           dedup_index_ingest(spark, batch, idx,
-                              txn_app_id="t", txn_version=1).collect()}
-    state = group_state(idx)
-    assert state is not None and state["marks"] == {"t": 1}
-    assert out[2] == ("kept", None)  # self-match excluded on replay
-    assert read_versioned_group(spark, idx, "bands").filter(
-        "id = 2").count() == 2  # healed
-
-
-def test_dedup_index_bloom_m_bits_pinned(spark, tmp_path):
-    """The bloom's m_bits is pinned in a sidecar at commit and validated
-    at read: probing with a different m_bits (wrong bit positions ->
-    possible false 'kept') must RAISE, and a bloom whose sidecar is
-    missing must refuse to be probed rather than trusted."""
-    import os
-
-    from animaltrackingetls_spark.operators.dedup import (
-        _BLOOM_SIDECAR,
-        dedup_index_ingest,
-    )
-
-    idx = str(tmp_path / "idx")
-
-    def docs(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    dedup_index_ingest(
-        spark, docs([(1, "pack my box with five dozen liquor jugs")]),
-        idx, use_bloom=True, m_bits=1 << 20,
-    )
-    sidecar = os.path.join(idx, "bloom", _BLOOM_SIDECAR)
-    assert os.path.exists(sidecar)
-
-    batch = docs([(2, "sphinx of black quartz judge my vow")])
-    with pytest.raises(ValueError, match="m_bits mismatch"):
-        dedup_index_ingest(spark, batch, idx, use_bloom=True,
-                           m_bits=1 << 22)
-
-    os.remove(sidecar)
-    with pytest.raises(ValueError, match=_BLOOM_SIDECAR):
-        dedup_index_ingest(spark, batch, idx, use_bloom=True,
-                           m_bits=1 << 20)
-
-    # matching m_bits still works (restore the sidecar via a fresh
-    # bootstrap: drop the bloom table entirely)
-    import shutil
-
-    shutil.rmtree(os.path.join(idx, "bloom"))
-    out = {r.doc_id: r.status for r in
-           dedup_index_ingest(spark, batch, idx, use_bloom=True,
-                              m_bits=1 << 20).collect()}
-    assert out == {2: "kept"}
-    assert os.path.exists(sidecar)
-
-
-def test_legacy_adoption_missing_bands_stays_replayable(spark, tmp_path):
-    """Round-11 self-review finding #1: a legacy crash BEFORE bands'
-    first-ever commit leaves docs carrying the app's watermark and no
-    bands table at all. Adoption must NOT carry the mark (the batch
-    never fully landed), so the replay applies — recreating bands —
-    instead of watermark-no-opping into a permanently half-born index."""
-    from animaltrackingetls_spark.inventory import (
-        group_state,
-        read_versioned_group,
-        upsert_parquet_versioned,
-    )
-    from animaltrackingetls_spark.operators.dedup import dedup_index_ingest
-
-    idx = str(tmp_path / "idx")
-    batch = spark.createDataFrame(
-        [(1, "pack my box with five dozen liquor jugs")],
-        "doc_id long, text string",
-    )
-    # legacy half-born state: docs committed at txn 0, bands NEVER
-    scratch = str(tmp_path / "scratch")
-    dedup_index_ingest(spark, batch, scratch)
-    d = read_versioned_group(spark, scratch, "docs").collect()
-    upsert_parquet_versioned(
-        spark, idx + "/docs", spark.createDataFrame(d), ["id"],
-        txn_app_id="t", txn_version=0,
-    )
-
-    out = {r.doc_id: r.status for r in
-           dedup_index_ingest(spark, batch, idx,
-                              txn_app_id="t", txn_version=0).collect()}
-    state = group_state(idx)
-    assert state["marks"] == {"t": 0}
-    # the replay landed bands (index fully born), doc kept not self-dup
-    assert out == {1: "kept"}
-    assert read_versioned_group(spark, idx, "bands").count() == 2
-    # and the index now detects an exact dup through the store
-    out = {r.doc_id: r.status for r in
-           dedup_index_ingest(
-               spark,
-               spark.createDataFrame(
-                   [(2, "pack my box with five dozen liquor jugs")],
-                   "doc_id long, text string"),
-               idx, txn_app_id="t", txn_version=1).collect()}
-    assert out == {2: "exact_dup"}
-
-
 def test_minhash_portable_partitioning_independent(spark):
     """r15: the operator raises its cached layout's parallelism
     internally (ensure_scan_parallelism before persist) — candidate

@@ -291,49 +291,6 @@ def test_dv_delete_where(spark, tmp_path):
     assert "DELETE WHERE (dv)" in ops
 
 
-def test_dv_source_drives_cdc_pump_and_replication(spark, tmp_path):
-    """A CDC-pinned table whose history includes DV deletes feeds the
-    pump's logged fast path and the streaming replication identically
-    to rewrite deletes — the change log is the contract, the delete
-    mode is invisible downstream."""
-    from animaltrackingetls_spark.cdc import resolve_cdc
-    from animaltrackingetls_spark.operators.versioning import (
-        pump_changes_once,
-    )
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_changes_replication,
-    )
-
-    src = str(tmp_path / "src")
-    resolve_cdc(src, True)
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(i, f"v{i}") for i in range(20)],
-                              "k int, v string"),
-        ["k"], keep_versions=10, cow=True)
-
-    # pump bootstrap, then a DV delete + an upsert in one window
-    dst, cur = str(tmp_path / "dst"), str(tmp_path / "cur")
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["source"] == "bootstrap"
-    delete_versioned(spark, src, spark.createDataFrame(
-        [(3,), (4,)], "k int"), ["k"], keep_versions=10, dv=True)
-    upsert_parquet_versioned(
-        spark, src, spark.createDataFrame([(5, "V5"), (50, "v50")],
-                                          "k int, v string"),
-        ["k"], keep_versions=10, cow=True)
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["source"] == "logged" and r["removed"] == 2
-    assert _rows(read_versioned(spark, dst), "k", "v") == \
-        _rows(read_versioned(spark, src), "k", "v")
-
-    # streaming replication from scratch across the same history
-    dst2, ck = str(tmp_path / "dst2"), str(tmp_path / "ck")
-    run_changes_replication(spark, src, dst2, ck, ["k"])
-    assert _rows(read_versioned(spark, dst2), "k", "v") == \
-        _rows(read_versioned(spark, src), "k", "v")
-
-
 def test_row_index_stable_under_rowgroup_skipping(spark, tmp_path):
     """The DV foundation: ``_metadata.row_index`` must report the same
     per-file physical position whether or not predicate pushdown skips

@@ -385,47 +385,6 @@ def test_cow_delete_semantics_and_sharing(spark, tmp_path):
     assert len(ident(s1) & ident(s2)) >= len(s1["files"]) - 2
 
 
-def test_cow_pump_plain_dest_shares_files(spark, tmp_path):
-    """The chain the round-11 verdict asked for (task #6): CoW pump
-    writes => plain dest versions share files => the dest's own CDF is
-    churn-pruned — while the pump stays exactly-once through a replay."""
-    src = str(tmp_path / "psrc")
-    dst = str(tmp_path / "pdst")
-    cur = str(tmp_path / "pcur")
-    df = spark.range(0, 50_000).select(
-        F.col("id").alias("k"), F.col("id").cast("double").alias("x"))
-    inv.upsert_parquet_versioned(spark, src, df, ["k"],
-                                 target_files=6, keep_versions=6)
-    # multi-file dest (AQE would otherwise coalesce 50k rows into one
-    # file, leaving CoW nothing to carry)
-    key = "spark.sql.files.maxRecordsPerFile"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "20000")
-    try:
-        r1 = V.pump_changes_once(spark, src, dst, cur, ["k"],
-                                 dest_keep_versions=6)
-        assert r1["added"] == 50_000
-        upd = spark.range(0, 25).select(
-            F.col("id").alias("k"), F.lit(-5.0).alias("x"))
-        inv.upsert_parquet_versioned(spark, src, upd, ["k"],
-                                     keep_versions=6, cow=True)
-        r2 = V.pump_changes_once(spark, src, dst, cur, ["k"],
-                                 dest_keep_versions=6)
-        assert r2["changed"] == 25
-    finally:
-        spark.conf.set(key, old)
-    # dest == source exactly
-    s = inv.read_versioned(spark, src)
-    d = inv.read_versioned(spark, dst)
-    assert s.exceptAll(d).isEmpty() and d.exceptAll(s).isEmpty()
-    # and the dest's two versions physically share most files
-    dvs = inv.list_versions(dst)
-    cf = inv.identity_changed_files(dst, dvs[-2], dvs[-1])
-    assert cf is not None
-    total = len(fs.read_stats(dst, dvs[-1])["files"])
-    assert len(cf[1]) < total  # some files carried, not a full rewrite
-
-
 def test_cow_manifest_mode_object_store_posture(spark, tmp_path):
     """Round-12: plain-table CoW without hardlinks — the new version
     publishes a FILE manifest referencing untouched files in their

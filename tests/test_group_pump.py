@@ -1,26 +1,17 @@
-"""Group-consistent CDC pump (round 12, r11 verdict task #4).
+"""Group writer deletes (round 12, r11 verdict task #4).
 
-The invariant under test: a DOWNSTREAM group only ever exposes member
-states the SOURCE group actually committed together — through normal
-polls, crash replays, atomic upsert+delete commits, members added
-mid-stream, and a retention prune. The single-table pump run per member
-would tear exactly this (docs advanced, bands not).
+A group commit applies every member's upsert and delete together:
+delete-only members, NULL-safe delete keys, and deletes keyed by
+non-key columns that must keep the surviving rows.
 """
 
 from __future__ import annotations
-
-import json
-import os
-
-import pytest
-from pyspark.sql import functions as F
 
 from animaltrackingetls_spark.inventory import (
     group_state,
     read_versioned_group,
     upsert_group_versioned,
 )
-from animaltrackingetls_spark.operators import versioning as V
 
 
 def _df(spark, rows, schema):
@@ -31,108 +22,6 @@ def _member_rows(spark, group, table):
     return {
         tuple(r) for r in read_versioned_group(spark, group, table).collect()
     }
-
-
-def _snapshot_all(spark, group, tables):
-    return {t: _member_rows(spark, group, t) for t in tables}
-
-
-def test_group_pump_convergence_replay_and_prune(spark, tmp_path):
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    cur = str(tmp_path / "cursor")
-    keys = {"docs": ["k"], "bands": ["b", "k"], "stats": ["k"]}
-
-    # ---- commit 1 + bootstrap poll -----------------------------------
-    upsert_group_versioned(spark, src, {
-        "docs": (_df(spark, [(1, "a"), (2, "b")], "k long, v string"),
-                 ["k"]),
-        "bands": (_df(spark, [(10, 1), (11, 2)], "b long, k long"),
-                  ["b", "k"]),
-        "stats": (_df(spark, [(1, 5)], "k long, n long"), ["k"]),
-    }, keep_versions=4)
-    want = _snapshot_all(spark, src, keys)
-    r1 = V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                   dest_keep_versions=4)
-    assert r1["applied"] and all(
-        v["bootstrapped"] for v in r1["tables"].values())
-    assert _snapshot_all(spark, dst, keys) == want
-
-    # idle poll: nothing new, nothing written
-    dst_state_before = group_state(dst)
-    assert V.pump_group_changes_once(
-        spark, src, dst, cur, keys)["applied"] is False
-    assert group_state(dst) == dst_state_before
-
-    # ---- commit 2: upsert docs + DELETE a docs key + touch bands;
-    # stats untouched -> must not even be read --------------------------
-    upsert_group_versioned(spark, src, {
-        "docs": (_df(spark, [(3, "c")], "k long, v string"), ["k"]),
-        "bands": (_df(spark, [(10, 99)], "b long, k long"), ["b", "k"]),
-    }, keep_versions=4,
-        deletes={"docs": _df(spark, [(2,)], "k long")})
-    want2 = _snapshot_all(spark, src, keys)
-    assert (1, "a") in want2["docs"] and (2, "b") not in want2["docs"]
-    r2 = V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                   dest_keep_versions=4)
-    assert set(r2["tables"]) == {"docs", "bands"}  # stats skipped
-    assert r2["tables"]["docs"]["removed"] == 1
-    assert r2["tables"]["docs"]["added"] == 1
-    assert _snapshot_all(spark, dst, keys) == want2
-
-    # ---- crash replay: cursor rolled back to the previous commit;
-    # the dest group's watermark absorbs the whole window ---------------
-    with open(cur) as f:
-        good_cursor = f.read()
-    # reconstruct the commit-1 cursor from the source history
-    hist = group_state(src)["history"]
-    prev_map = {t: hist[t][-2] if len(hist[t]) > 1 else hist[t][-1]
-                for t in keys}
-    with open(cur, "w") as f:
-        json.dump(prev_map, f)
-    dst_state = group_state(dst)
-    r3 = V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                   dest_keep_versions=4)
-    assert r3["applied"] is True  # the window replayed...
-    assert group_state(dst)["versions"] == dst_state["versions"]  # ...but
-    # the group watermark no-opped every member: no new dest commit
-    assert _snapshot_all(spark, dst, keys) == want2
-    assert json.load(open(cur)) == json.loads(good_cursor)
-
-    # ---- commit 3: a NEW member joins the group -----------------------
-    keys["extra"] = ["k"]
-    upsert_group_versioned(spark, src, {
-        "extra": (_df(spark, [(7, 7.5)], "k long, z double"), ["k"]),
-    }, keep_versions=4)
-    want3 = _snapshot_all(spark, src, keys)
-    r4 = V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                   dest_keep_versions=4)
-    assert r4["tables"]["extra"]["bootstrapped"]
-    assert _snapshot_all(spark, dst, keys) == want3
-
-    # a member the caller forgot to key is a loud error, never a tear
-    with pytest.raises(ValueError, match="no key columns"):
-        V.pump_group_changes_once(
-            spark, src, dst, cur,
-            {t: k for t, k in keys.items() if t != "bands"})
-
-    # ---- retention prune while the consumer is down -------------------
-    for i in range(3):
-        upsert_group_versioned(spark, src, {
-            "docs": (_df(spark, [(100 + i, "x")], "k long, v string"),
-                     ["k"]),
-        }, keep_versions=1)
-    with pytest.raises(FileNotFoundError, match="re-bootstrap"):
-        V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                  dest_keep_versions=4)
-    os.unlink(cur)  # the documented recovery
-    want4 = _snapshot_all(spark, src, keys)
-    r5 = V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                   dest_keep_versions=4)
-    assert r5["applied"]
-    # bootstrap-after-prune is EXACT: copied keys land AND keys deleted
-    # while the consumer was down leave, in the same group commit
-    assert _snapshot_all(spark, dst, keys) == want4
 
 
 def test_group_writer_atomic_deletes(spark, tmp_path):
@@ -158,41 +47,6 @@ def test_group_writer_atomic_deletes(spark, tmp_path):
     assert len(st["history"]["a"]) == 2 and len(st["history"]["b"]) == 2
 
 
-def test_group_pump_never_exposes_torn_state(spark, tmp_path):
-    """Drive a multi-commit history and assert after EVERY poll that the
-    dest equals one exact source commit across ALL members — the
-    group-consistency property itself."""
-    src = str(tmp_path / "s2")
-    dst = str(tmp_path / "d2")
-    cur = str(tmp_path / "c2")
-    keys = {"x": ["k"], "y": ["k"]}
-    committed_states = []
-
-    def commit(xrows, yrows):
-        batches = {}
-        if xrows:
-            batches["x"] = (_df(spark, xrows, "k long, v string"), ["k"])
-        if yrows:
-            batches["y"] = (_df(spark, yrows, "k long, w long"), ["k"])
-        upsert_group_versioned(spark, src, batches, keep_versions=8)
-        committed_states.append(_snapshot_all(spark, src, keys))
-
-    commit([(1, "a")], [(1, 10)])
-    commit([(2, "b")], None)
-    commit(None, [(1, 11), (2, 20)])
-    commit([(1, "A"), (3, "c")], [(3, 30)])
-
-    for _ in range(len(committed_states)):
-        V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                  dest_keep_versions=8)
-        got = _snapshot_all(spark, dst, keys)
-        assert got in committed_states, (
-            "dest exposed a cross-member state the source never "
-            f"committed: {got}"
-        )
-    assert _snapshot_all(spark, dst, keys) == committed_states[-1]
-
-
 def test_group_delete_only_by_non_key_columns_keeps_survivors(spark, tmp_path):
     """Round-12 self-review finding #2: a delete-only member keyed by a
     SUBSET of its unique key (delete all rows of band 11) must keep
@@ -207,38 +61,3 @@ def test_group_delete_only_by_non_key_columns_keeps_survivors(spark, tmp_path):
         spark, g, {}, keep_versions=3,
         deletes={"bands": _df(spark, [(11,)], "b long")})
     assert _member_rows(spark, g, "bands") == {(10, 1), (10, 2)}
-
-
-def test_group_pump_survives_dangling_member_rebuild(spark, tmp_path):
-    """Round-12 self-review finding #3: a member directory rebuilt
-    out-of-band restarts its version numbering at 1; the pump's replay
-    watermark must stay monotonic (the group commit counter), so later
-    windows still apply downstream instead of being silently swallowed."""
-    import shutil
-
-    src = str(tmp_path / "sdang")
-    dst = str(tmp_path / "ddang")
-    cur = str(tmp_path / "cdang")
-    keys = {"a": ["k"], "b": ["k"]}
-    # several commits push member sequences (and the legacy sum) up
-    for i in range(4):
-        upsert_group_versioned(spark, src, {
-            "a": (_df(spark, [(i, f"a{i}")], "k long, v string"), ["k"]),
-            "b": (_df(spark, [(i, i * 10)], "k long, w long"), ["k"]),
-        }, keep_versions=6)
-    V.pump_group_changes_once(spark, src, dst, cur, keys,
-                              dest_keep_versions=6)
-
-    # member 'b' is dropped out-of-band and rebuilt from scratch
-    shutil.rmtree(os.path.join(src, "b"))
-    upsert_group_versioned(spark, src, {
-        "b": (_df(spark, [(99, 990)], "k long, w long"), ["k"]),
-    }, keep_versions=6)
-    r = V.pump_group_changes_once(spark, src, dst, cur, keys,
-                                  dest_keep_versions=6)
-    assert r["applied"]
-    got = _member_rows(spark, dst, "b")
-    assert (99, 990) in got, (
-        "window swallowed: the rebuilt member's commit never reached "
-        f"the destination (dest rows: {got})"
-    )

@@ -2172,37 +2172,9 @@ def test_timestamp_time_travel(spark, tmp_path):
         read_versioned_as_of(spark, t, t_before)
 
 
-def test_run_cdc_pump_drains(spark, tmp_path):
-    from animaltrackingetls_spark.inventory import (
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-    from animaltrackingetls_spark.operators.versioning import run_cdc_pump
-
-    src, dst, cur = (str(tmp_path / x) for x in ("s", "d", "c"))
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
-        ["k"],
-    )
-    r = run_cdc_pump(spark, src, dst, cur, ["k"])
-    assert r["polls"] == 1 and r["added"] == 2
-    upsert_parquet_versioned(
-        spark, src, spark.createDataFrame([(3, "c")], "k long, v string"),
-        ["k"],
-    )
-    r = run_cdc_pump(spark, src, dst, cur, ["k"])
-    assert r["polls"] == 1 and r["added"] == 1
-    assert {x.k for x in read_versioned(spark, dst).collect()} == {1, 2, 3}
-    # caught up: zero-poll drain
-    r = run_cdc_pump(spark, src, dst, cur, ["k"])
-    assert r["polls"] == 0
-
-
 # ---------------------------------------------------------------------------
 # Round 14: MERGE ... WHEN MATCHED THEN DELETE (delete_keys) — one
-# commit that upserts AND deletes, the primitive the IVM poll uses to
-# halve its per-poll commit overhead (r13 verdict #8).
+# commit that upserts AND deletes.
 # ---------------------------------------------------------------------------
 
 
@@ -2328,212 +2300,6 @@ def test_merge_with_delete_keys_replay_and_first_write(spark, tmp_path):
     got = read_versioned(spark, t)
     assert got.count() == 9
     assert got.filter("k = 6").count() == 1  # NOT deleted by the replay
-
-
-# ---------------------------------------------------------------------------
-# Round 14: merge_into — the MERGE INTO surface over the primitives.
-# ---------------------------------------------------------------------------
-
-
-def test_merge_into_clauses(spark, tmp_path):
-    from animaltrackingetls_spark.inventory import (
-        list_versions,
-        merge_into,
-        read_versioned,
-    )
-
-    t = _mk_versioned(spark, tmp_path, "mi")
-    rows = lambda: {  # noqa: E731
-        r.k: r.x for r in read_versioned(spark, t).collect()}
-
-    # conditional matched UPDATE + unmatched INSERT, one commit
-    src = spark.createDataFrame(
-        [(1, 0, 101.0), (2, 0, 202.0), (5000, 0, 1.0)],
-        "k long, g long, x double")
-    n0 = len(list_versions(t))
-    merge_into(spark, t, src, ["k"], when_matched="update",
-               matched_condition="x > 150", keep_versions=10)
-    assert len(list_versions(t)) == n0 + 1
-    got = rows()
-    assert got[1] == 1.0       # matched, condition false: untouched
-    assert got[2] == 202.0     # matched, condition true: updated
-    assert got[5000] == 1.0    # unmatched: inserted
-
-    # matched DELETE (conditional) + insert
-    src2 = spark.createDataFrame(
-        [(3, 0, -1.0), (4, 0, 999.0), (6000, 0, 2.0)],
-        "k long, g long, x double")
-    merge_into(spark, t, src2, ["k"], when_matched="delete",
-               matched_condition="x < 0", keep_versions=10)
-    got = rows()
-    assert 3 not in got        # matched + cond: deleted
-    assert got[4] == 4.0       # matched, cond false: untouched
-    assert got[6000] == 2.0    # unmatched: inserted
-
-    # update-only (no insert clause): unmatched rows ignored
-    src3 = spark.createDataFrame([(5, 0, 55.0), (7000, 0, 7.0)],
-                                 "k long, g long, x double")
-    merge_into(spark, t, src3, ["k"], when_not_matched=None,
-               keep_versions=10)
-    got = rows()
-    assert got[5] == 55.0 and 7000 not in got
-
-    # insert-only (matched ignored)
-    src4 = spark.createDataFrame([(5, 0, 0.0), (8000, 0, 8.0)],
-                                 "k long, g long, x double")
-    merge_into(spark, t, src4, ["k"], when_matched=None,
-               keep_versions=10)
-    got = rows()
-    assert got[5] == 55.0 and got[8000] == 8.0
-
-    # provable no-op publishes nothing
-    n = len(list_versions(t))
-    merge_into(spark, t,
-               spark.createDataFrame([(9000, 0, 9.0)],
-                                     "k long, g long, x double"),
-               ["k"], when_matched="update", when_not_matched=None,
-               keep_versions=10)
-    assert len(list_versions(t)) == n
-
-    # guards
-    with pytest.raises(ValueError, match="no-op by construction"):
-        merge_into(spark, t, src4, ["k"], when_matched=None,
-                   when_not_matched=None)
-    with pytest.raises(ValueError, match="update|delete"):
-        merge_into(spark, t, src4, ["k"], when_matched="upsert")
-
-
-def test_merge_into_reclassifies_on_conflict(spark, tmp_path, monkeypatch):
-    """Round 15 (r14 verdict #4): a writer landing between merge_into's
-    classification and its publish FLIPS two keys' matched status —
-    the retried merge must act on the NEW status (Delta MERGE
-    re-validates on conflict), not replay the stale split.
-
-    Table: {k1}. Merge source: {k1: 10.0, k2: 20.0} with
-    when_matched=delete + insert. Racing commit (mid-merge): deletes
-    k1, inserts k2=777. Stale split would delete nothing that exists
-    (k1 already gone), then insert k2 BESIDE the racer's k2 — i.e.
-    k1 absent / k2 = 20.0. Correct re-classified result: k1 is now
-    UNMATCHED (insert 10.0), k2 is now MATCHED (delete) →
-    k1 = 10.0, k2 absent."""
-    import animaltrackingetls_spark.inventory as inv
-    from animaltrackingetls_spark.inventory import (
-        delete_versioned,
-        merge_into,
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-
-    t = str(tmp_path / "mirace")
-    upsert_parquet_versioned(
-        spark, t, spark.createDataFrame([(1, 1.0)], "k long, x double"),
-        ["k"], keep_versions=10)
-
-    real_merge = inv.merge_upsert
-    fired = {"done": False}
-
-    def racing_merge(existing, updates, key_cols, **kw):
-        if not fired["done"]:
-            fired["done"] = True
-            delete_versioned(
-                spark, t, spark.createDataFrame([(1,)], "k long"),
-                ["k"], keep_versions=10)
-            upsert_parquet_versioned(
-                spark, t,
-                spark.createDataFrame([(2, 777.0)], "k long, x double"),
-                ["k"], keep_versions=10)
-        return real_merge(existing, updates, key_cols, **kw)
-
-    monkeypatch.setattr(inv, "merge_upsert", racing_merge)
-    src = spark.createDataFrame([(1, 10.0), (2, 20.0)],
-                                "k long, x double")
-    merge_into(spark, t, src, ["k"], when_matched="delete",
-               keep_versions=10)
-    got = {r.k: r.x for r in read_versioned(spark, t).collect()}
-    assert got == {1: 10.0}, (
-        f"stale classification acted after the conflict: {got}")
-
-
-def test_merge_into_conflict_retries_exhausted(spark, tmp_path,
-                                               monkeypatch):
-    """With a racer on EVERY attempt, merge_into surfaces
-    ConcurrentWriteError after its retry budget instead of committing
-    a stale split."""
-    import pytest as _pytest
-
-    import animaltrackingetls_spark.inventory as inv
-    from animaltrackingetls_spark.inventory import (
-        ConcurrentWriteError,
-        merge_into,
-        upsert_parquet_versioned,
-    )
-
-    t = str(tmp_path / "mirace0")
-    upsert_parquet_versioned(
-        spark, t, spark.createDataFrame([(1, 1.0)], "k long, x double"),
-        ["k"], keep_versions=10)
-
-    real_merge = inv.merge_upsert
-    state = {"racing": False, "n": 0}
-
-    def always_racing_merge(existing, updates, key_cols, **kw):
-        if not state["racing"]:
-            state["racing"] = True
-            try:
-                state["n"] += 1
-                upsert_parquet_versioned(
-                    spark, t,
-                    spark.createDataFrame(
-                        [(100 + state["n"], 0.0)], "k long, x double"),
-                    ["k"], keep_versions=10)
-            finally:
-                state["racing"] = False
-        return real_merge(existing, updates, key_cols, **kw)
-
-    monkeypatch.setattr(inv, "merge_upsert", always_racing_merge)
-    with _pytest.raises(ConcurrentWriteError):
-        merge_into(
-            spark, t,
-            spark.createDataFrame([(1, 10.0)], "k long, x double"),
-            ["k"], when_matched="delete", retries=1, keep_versions=10)
-
-
-def test_merge_into_first_write_and_dv(spark, tmp_path):
-    from animaltrackingetls_spark.inventory import (
-        merge_into,
-        read_versioned,
-    )
-    from animaltrackingetls_spark import inventory as _inv
-
-    # first write: everything NOT MATCHED
-    t = str(tmp_path / "mi2")
-    src = spark.createDataFrame([(1, 1.0), (2, 2.0)],
-                                "k long, x double")
-    merge_into(spark, t, src, ["k"], keep_versions=10)
-    assert read_versioned(spark, t).count() == 2
-
-    # dv composition: conditional delete + insert in one MoR commit
-    big = spark.range(0, 1000).select(
-        F.col("id").alias("k"), F.col("id").cast("double").alias("x"))
-    t2 = str(tmp_path / "mi3")
-    merge_into(spark, t2, big, ["k"], keep_versions=10)
-    v1 = _inv.list_versions(t2)[-1]
-    idents = {
-        (os.stat(p).st_ino, os.stat(p).st_size)
-        for p in _inv._snapshot_files(t2, v1).values()}
-    merge_into(
-        spark, t2,
-        spark.createDataFrame([(3, 0.0), (7, 0.0), (2000, 1.0)],
-                              "k long, x double"),
-        ["k"], when_matched="delete", keep_versions=10, dv=True)
-    r = read_versioned(spark, t2)
-    assert r.count() == 999  # -2 deleted, +1 inserted
-    assert r.filter("k in (3, 7)").count() == 0
-    v2 = _inv.list_versions(t2)[-1]
-    # pre-existing files carried untouched (merge-on-read)
-    assert idents <= {
-        (os.stat(p).st_ino, os.stat(p).st_size)
-        for p in _inv._snapshot_files(t2, v2).values()}
 
 
 @pytest.mark.parametrize("mode", ["plain", "dv"])

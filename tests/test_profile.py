@@ -321,6 +321,9 @@ def test_profile_quantiles_arrow_jvm_parity_edge_frames(spark):
         "single": [(42.5,)],
         "one_distinct": [(7.0,)] * 5,
         "all_nan": [(float("nan"),)] * 3,
+        # p=0.5 sits between the distinct keys -0.0 and 0.0, which are
+        # equal as values: the JVM returns the lower key, -0.0
+        "zero_straddle": [(-0.0,), (0.0,)],
         "int_overflow_longs": None,  # built below from longs
     }
     for name, rows in cases.items():

@@ -859,297 +859,3 @@ def test_streaming_vector_indexing_appends_novel_and_compacts(spark, tmp_path):
         for r in similarity.ivf_search(rebuilt, q, k=5, n_probe=2).collect()
     }
     assert got == want
-
-
-def test_streaming_versioned_upsert_exactly_once_replay(spark, tmp_path):
-    """The transactional foreachBatch sink: an ADDITIVE per-key rollup
-    (the shape value-level anti-join idempotence cannot protect) drains
-    into a versioned table; a simulated micro-batch replay — calling
-    the merge again with the same batch id and doubled data — must be a
-    watermark no-op, and the next batch id must apply."""
-    from animaltrackingetls_spark.inventory import (
-        read_versioned,
-        txn_watermarks,
-        upsert_parquet_versioned,
-    )
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_available_now_upsert_versioned,
-    )
-
-    src = tmp_path / "ev_txn"
-    table = str(tmp_path / "txn_rollup")
-    ckpt = str(tmp_path / "ckpt_txn")
-    rows = [
-        (i, datetime.datetime(2024, 5, 1, 9, i), i % 2, "click", 1.0, "{}")
-        for i in range(6)
-    ]
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src))
-
-    def per_user_counts(batch):
-        agg = batch.groupBy("user_id").agg(F.count("*").alias("n"))
-        try:
-            prior = read_versioned(batch.sparkSession, table).select(
-                "user_id", F.col("n").alias("prior")
-            )
-            agg = (
-                agg.join(prior, "user_id", "left")
-                .select(
-                    "user_id",
-                    (F.col("n") + F.coalesce("prior", F.lit(0))).alias("n"),
-                )
-            )
-        except FileNotFoundError:
-            pass
-        return agg
-
-    stream = read_event_stream(spark, str(src))
-    run_available_now_upsert_versioned(
-        stream, table, ckpt, ["user_id"], app_id="rollup",
-        transform=per_user_counts,
-    )
-    got = {r["user_id"]: r["n"] for r in read_versioned(spark, table).collect()}
-    assert got == {0: 3, 1: 3}
-    marks = txn_watermarks(table)
-    assert marks["rollup"] == 0
-
-    # crash-replay simulation: the same batch id re-applies the same
-    # ADDITIVE transform — without the watermark this would double to 6
-    replay = per_user_counts(spark.createDataFrame(rows, schema))
-    upsert_parquet_versioned(
-        spark, table, replay, ["user_id"],
-        txn_app_id="rollup", txn_version=0,
-    )
-    got = {r["user_id"]: r["n"] for r in read_versioned(spark, table).collect()}
-    assert got == {0: 3, 1: 3}  # replay was a no-op
-
-    # the genuinely NEXT batch applies
-    nxt = per_user_counts(
-        spark.createDataFrame(rows[:2], schema)
-    )
-    upsert_parquet_versioned(
-        spark, table, nxt, ["user_id"],
-        txn_app_id="rollup", txn_version=1,
-    )
-    got = {r["user_id"]: r["n"] for r in read_versioned(spark, table).collect()}
-    assert got == {0: 4, 1: 4}
-
-
-def test_streaming_versioned_upsert_partitioned_layout(spark, tmp_path):
-    """n_buckets routes the exactly-once sink through the
-    partition-pruned layout: bucket dirs on disk, replay still a
-    watermark no-op, final counts identical to the plain sink's."""
-    import os
-
-    from animaltrackingetls_spark.inventory import (
-        list_versions,
-        read_versioned,
-        txn_watermarks,
-        upsert_parquet_versioned_partitioned,
-    )
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_available_now_upsert_versioned,
-    )
-
-    src = tmp_path / "ev_part"
-    table = str(tmp_path / "part_rollup")
-    ckpt = str(tmp_path / "ckpt_part")
-    rows = [
-        (i, datetime.datetime(2024, 5, 1, 9, i), i % 4, "click", 1.0, "{}")
-        for i in range(8)
-    ]
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src))
-
-    def per_user_counts(batch):
-        return batch.groupBy("user_id").agg(F.count("*").alias("n"))
-
-    stream = read_event_stream(spark, str(src))
-    run_available_now_upsert_versioned(
-        stream, table, ckpt, ["user_id"], app_id="pr",
-        transform=per_user_counts, n_buckets=4,
-    )
-    got = {r["user_id"]: r["n"] for r in read_versioned(spark, table).collect()}
-    assert got == {0: 2, 1: 2, 2: 2, 3: 2}
-    # bucketed layout on disk
-    cur = list_versions(table)[-1]
-    assert any(
-        d.startswith("upsert_bucket=")
-        for d in os.listdir(os.path.join(table, cur))
-    )
-    # replay of batch 0 through the partitioned writer: watermark no-op
-    upsert_parquet_versioned_partitioned(
-        spark, table,
-        per_user_counts(spark.createDataFrame(rows, schema)),
-        ["user_id"], n_buckets=4, txn_app_id="pr", txn_version=0,
-    )
-    got = {r["user_id"]: r["n"] for r in read_versioned(spark, table).collect()}
-    assert got == {0: 2, 1: 2, 2: 2, 3: 2}
-    assert txn_watermarks(table)["pr"] == 0
-
-
-def test_streaming_ingest_through_persisted_index(spark, tmp_path):
-    """Micro-batched document ingest through the persisted dedup index:
-    batch boundaries don't change outcomes (cross-batch exact dup is
-    caught by the STORE), and a second drain of the same source is a
-    checkpoint no-op leaving the index unchanged."""
-    from animaltrackingetls_spark.inventory import read_versioned_group
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_available_now_ingest_index,
-    )
-
-    src = tmp_path / "docs_src"
-    idx = str(tmp_path / "idx")
-    ckpt = str(tmp_path / "ckpt")
-    # two files -> two micro-batches under maxFilesPerTrigger=1;
-    # file B repeats a file-A text exactly (cross-batch dup)
-    a = [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "one two three four five six seven")]
-    b = [(3, "alpha beta gamma delta epsilon zeta"),  # dup of 1
-         (4, "totally new content never seen before")]
-    spark.createDataFrame(a, "doc_id long, text string").coalesce(1)\
-        .write.parquet(str(src / "f0"))
-    spark.createDataFrame(b, "doc_id long, text string").coalesce(1)\
-        .write.parquet(str(src / "f1"))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    run_available_now_ingest_index(stream, idx, ckpt, app_id="ing")
-    docs = read_versioned_group(spark, idx, "docs")
-    # 1, 2, 4 kept; 3 was an exact dup of batch-A's doc 1
-    assert {r.id for r in docs.collect()} == {1, 2, 4}
-
-    # re-drain with the same checkpoint: no new batches, index unchanged
-    stream2 = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src) + "/*")
-    )
-    run_available_now_ingest_index(stream2, idx, ckpt, app_id="ing")
-    assert read_versioned_group(spark, idx, "docs").count() == 3
-
-
-def test_streaming_expectation_gate_quarantine_replay(spark, tmp_path):
-    """Round-12 (r11 verdict task #5): the DLT-style expectation gate in
-    the streaming path. A mixed batch drains through the gated runner:
-    passing rows land in the main table, violating rows land TAGGED in
-    the quarantine table, per-rule counts are right — and a simulated
-    crash-replay of the same batch id no-ops BOTH tables (the quarantine
-    write carries app_id#q at the same batch id)."""
-    from animaltrackingetls_spark.inventory import (
-        read_versioned,
-        txn_watermarks,
-    )
-    from animaltrackingetls_spark.operators.validate import (
-        FAILED_RULE,
-        in_range,
-        not_null,
-        upsert_versioned_with_expectations,
-    )
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_available_now_upsert_with_expectations,
-    )
-
-    src = tmp_path / "ev_gate"
-    table = str(tmp_path / "gated")
-    quarantine = str(tmp_path / "gated_q")
-    ckpt = str(tmp_path / "ckpt_gate")
-    rows = [
-        # (event_id, ts, user_id, event_type, value, props)
-        (0, datetime.datetime(2024, 5, 1, 9, 0), 1, "click", 1.0, "{}"),
-        (1, datetime.datetime(2024, 5, 1, 9, 1), 2, "click", -3.0, "{}"),
-        (2, datetime.datetime(2024, 5, 1, 9, 2), None, "view", 2.0, "{}"),
-        (3, datetime.datetime(2024, 5, 1, 9, 3), 4, "view", 0.5, "{}"),
-        (4, datetime.datetime(2024, 5, 1, 9, 4), None, "buy", -1.0, "{}"),
-    ]
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src))
-
-    rules = [not_null("user_id"), in_range("value", 0.0, 100.0)]
-    stream = read_event_stream(spark, str(src))
-    totals = run_available_now_upsert_with_expectations(
-        stream, table, ckpt, ["event_id"], app_id="gate", rules=rules,
-        on_violation="quarantine", quarantine_dir=quarantine,
-    )
-    assert totals["n_batches"] == 1
-    assert totals["n_passed"] == 2 and totals["n_failed"] == 3
-    # first-violated-rule attribution: rows 2 and 4 fail not_null (rule
-    # order = priority, row 4 violates both), row 1 fails in_range
-    assert totals["by_rule"] == {
-        "user_id:not_null": 2, "value:in_range": 1,
-    }
-
-    main = read_versioned(spark, table)
-    assert {r["event_id"] for r in main.collect()} == {0, 3}
-    q = read_versioned(spark, quarantine)
-    got_q = {r["event_id"]: r[FAILED_RULE] for r in q.collect()}
-    assert got_q == {
-        1: "value:in_range", 2: "user_id:not_null", 4: "user_id:not_null",
-    }
-    assert txn_watermarks(table)["gate"] == 0
-    assert txn_watermarks(quarantine)["gate#q"] == 0
-
-    # crash-replay: the same batch id re-applies the same mixed batch
-    # directly (foreachBatch's at-least-once edge) — both tables no-op
-    replay = spark.createDataFrame(rows, schema)
-    upsert_versioned_with_expectations(
-        spark, table, replay, ["event_id"], rules,
-        on_violation="quarantine", quarantine_dir=quarantine,
-        txn_app_id="gate", txn_version=0,
-    )
-    assert {r["event_id"] for r in read_versioned(spark, table).collect()} \
-        == {0, 3}
-    assert read_versioned(spark, quarantine).count() == 3
-    # versions did not advance: the replay published nothing
-    assert txn_watermarks(table)["gate"] == 0
-    assert txn_watermarks(quarantine)["gate#q"] == 0
-
-
-def test_streaming_expectation_gate_fail_mode_stops_stream(spark, tmp_path):
-    """on_violation='fail': the first violating batch publishes NOTHING
-    and the stream surfaces the error."""
-    from animaltrackingetls_spark.operators.validate import not_null
-    from animaltrackingetls_spark.streaming.jobs import (
-        run_available_now_upsert_with_expectations,
-    )
-
-    src = tmp_path / "ev_gate_fail"
-    table = str(tmp_path / "gated_fail")
-    ckpt = str(tmp_path / "ckpt_gate_fail")
-    rows = [
-        (0, datetime.datetime(2024, 5, 1, 9, 0), 1, "click", 1.0, "{}"),
-        (1, datetime.datetime(2024, 5, 1, 9, 1), None, "view", 2.0, "{}"),
-    ]
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(src))
-
-    stream = read_event_stream(spark, str(src))
-    import pytest as _pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    with _pytest.raises(StreamingQueryException, match="expectations failed"):
-        run_available_now_upsert_with_expectations(
-            stream, table, ckpt, ["event_id"], app_id="gf",
-            rules=[not_null("user_id")], on_violation="fail",
-        )
-    import os
-    assert not os.path.exists(os.path.join(table, "_CURRENT"))

@@ -93,22 +93,13 @@ def test_iqr_outliers_flags_tails_only(spark):
         iqr_outliers(df, "v", k=-1)
 
 
-def test_expectation_gated_upsert_three_modes(spark, tmp_path):
-    """The DLT expectation modes on the versioned writer: fail aborts
-    atomically with per-rule counts, drop filters, quarantine routes
-    tagged rows to a keyed diagnostic table exactly-once — and a
-    replayed quarantine batch is a no-op on BOTH tables."""
-    import pytest as _pytest
-
-    from animaltrackingetls_spark.inventory import (
-        list_versions,
-        read_versioned,
-    )
+def test_split_expectations_first_violated_rule_wins(spark):
+    """The row-routing half of a write gate: passing rows lose the tag
+    column, failing rows carry the FIRST violated rule's name."""
     from animaltrackingetls_spark.operators.validate import (
         in_range,
         not_null,
         split_expectations,
-        upsert_versioned_with_expectations,
     )
 
     rules = [not_null("v"), in_range("score", 0.0, 1.0)]
@@ -116,109 +107,7 @@ def test_expectation_gated_upsert_three_modes(spark, tmp_path):
     bad = [(3, None, 0.5), (4, "d", 7.0)]
     df = spark.createDataFrame(good + bad, "k long, v string, score double")
 
-    # split: first violated rule wins the tag
     sp = split_expectations(df, rules)
     tags = {r.k: r._failure_reason for r in sp.failed.collect()}
     assert tags == {3: "v:not_null", 4: "score:in_range"}
     assert {r.k for r in sp.passed.collect()} == {1, 2}
-
-    # fail: nothing published
-    t = str(tmp_path / "t_fail")
-    with _pytest.raises(ValueError, match="nothing was written"):
-        upsert_versioned_with_expectations(
-            spark, t, df, ["k"], rules, on_violation="fail",
-        )
-    import os
-
-    assert not os.path.exists(os.path.join(t, "_CURRENT"))
-    out, rep = upsert_versioned_with_expectations(
-        spark, t, spark.createDataFrame(good, "k long, v string, score double"),
-        ["k"], rules, on_violation="fail",
-    )
-    assert out.count() == 2 and rep["n_failed"] == 0
-
-    # drop
-    t2 = str(tmp_path / "t_drop")
-    out, rep = upsert_versioned_with_expectations(
-        spark, t2, df, ["k"], rules, on_violation="drop",
-    )
-    assert {r.k for r in out.collect()} == {1, 2}
-    assert rep["n_passed"] == 2 and rep["n_failed"] == 2
-    assert rep["by_rule"]["v:not_null"] == 1
-
-    # quarantine, exactly-once
-    t3, q = str(tmp_path / "t_q"), str(tmp_path / "quarantine")
-    out, rep = upsert_versioned_with_expectations(
-        spark, t3, df, ["k"], rules, on_violation="quarantine",
-        quarantine_dir=q, txn_app_id="g", txn_version=1,
-    )
-    assert {r.k for r in out.collect()} == {1, 2}
-    qrows = {r.k: r._failure_reason
-             for r in read_versioned(spark, q).collect()}
-    assert set(qrows) == {3, 4}
-    v_main, v_q = list_versions(t3), list_versions(q)
-    # replay: both tables' watermarks no-op (no new versions)
-    upsert_versioned_with_expectations(
-        spark, t3, df, ["k"], rules, on_violation="quarantine",
-        quarantine_dir=q, txn_app_id="g", txn_version=1,
-    )
-    assert list_versions(t3) == v_main and list_versions(q) == v_q
-
-    with _pytest.raises(ValueError, match="quarantine_dir"):
-        upsert_versioned_with_expectations(
-            spark, t3, df, ["k"], rules, on_violation="quarantine",
-        )
-    with _pytest.raises(ValueError, match="fail|drop|quarantine"):
-        upsert_versioned_with_expectations(
-            spark, t3, df, ["k"], rules, on_violation="explode",
-        )
-
-
-def test_quarantine_summary_and_prune(spark, tmp_path):
-    """Round-12 quarantine ergonomics: counts by rule x day with sample
-    keys, NULL keys visible; retention drops aged rows."""
-    import datetime as dt
-
-    from animaltrackingetls_spark.inventory import (
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-    from animaltrackingetls_spark.operators.validate import (
-        FAILED_RULE,
-        prune_quarantine,
-        quarantine_summary,
-    )
-
-    q = str(tmp_path / "q")
-    old_ts = dt.datetime(2020, 1, 2, 3, 0, 0)
-    new_ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-    rows = [
-        (1, "v:in_range", old_ts),
-        (2, "v:in_range", old_ts),
-        (None, "k:not_null", old_ts),
-        (4, "v:in_range", new_ts),
-    ]
-    df = spark.createDataFrame(
-        rows, f"k long, {FAILED_RULE} string, ts timestamp")
-    upsert_parquet_versioned(spark, q, df, ["k"], keep_versions=2)
-
-    got = quarantine_summary(
-        read_versioned(spark, q), ["k"], ts_col="ts").collect()
-    by = {(r["rule"], str(r["day"])): (r["n"], list(r["sample_keys"]))
-          for r in got}
-    assert by[("v:in_range", "2020-01-02")] == (2, ["1", "2"])
-    assert by[("k:not_null", "2020-01-02")] == (1, ["NULL"])
-    assert by[("v:in_range", str(new_ts.date()))][0] == 1
-
-    # no-ts variant + not-a-quarantine guard
-    flat = {r["rule"]: r["n"] for r in quarantine_summary(
-        read_versioned(spark, q), ["k"]).collect()}
-    assert flat == {"v:in_range": 3, "k:not_null": 1}
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="not a quarantine table"):
-        quarantine_summary(df.drop(FAILED_RULE), ["k"])
-
-    # retention: the 2020 rows age out, today's row survives
-    prune_quarantine(spark, q, "ts", older_than_days=30)
-    left = read_versioned(spark, q)
-    assert {r["k"] for r in left.collect()} == {4}

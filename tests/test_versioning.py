@@ -283,79 +283,6 @@ def test_table_changes_between_retained_versions(spark, tmp_path):
         V.table_changes(spark, str(tmp_path / "missing"), ["k"])
 
 
-def test_table_changes_since_cdc_pump(spark, tmp_path):
-    """The incremental CDF pump end to end, including the exactly-once
-    composition: poll -> sink with txn ids -> advance; a crash BEFORE
-    advance replays the window and the sink's watermark absorbs it."""
-    from animaltrackingetls_spark.inventory import (
-        list_versions,
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    cursor = str(tmp_path / "cursor")
-
-    def poll_and_sink():
-        changes, to_v, advance, _from_v = V.table_changes_since(
-            spark, src, cursor, ["k"]
-        )
-        if changes is None:
-            return None
-        seq = int(to_v.split("-")[1])
-        out = changes.select("k", "change")
-        upsert_parquet_versioned(
-            spark, sink, out, ["k"],
-            txn_app_id="pump", txn_version=seq,
-        )
-        return changes, advance
-
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
-        ["k"], keep_versions=4,
-    )
-    # first poll bootstraps from the oldest retained snapshot: v1 vs v1
-    # is empty... there is only ONE version, cursor unset -> from oldest
-    # (== current) -> table_changes(v1, v1) = no churn, advance moves on
-    changes, to_v, advance, from_v = V.table_changes_since(
-        spark, src, cursor, ["k"]
-    )
-    assert changes.count() == 0
-    assert from_v is None  # no cursor yet: diff ran from the oldest
-    advance()
-    assert open(cursor).read() == list_versions(src)[-1]
-
-    # a new commit -> the pump sees exactly its churn
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string"),
-        ["k"], keep_versions=4,
-    )
-    changes, advance = poll_and_sink()
-    got = {r.k: r.change for r in changes.collect()}
-    assert got == {2: "changed", 3: "added"}
-
-    # CRASH before advance: the next poll replays the SAME window, the
-    # sink's txn watermark absorbs the duplicate, then advance commits
-    changes2, advance2 = poll_and_sink()
-    assert {r.k: r.change for r in changes2.collect()} == got
-    assert read_versioned(spark, sink).count() == 2  # no duplicates
-    advance2()
-    # fully caught up -> None
-    res = V.table_changes_since(spark, src, cursor, ["k"])
-    assert res[0] is None
-
-    # retention outruns the consumer -> explicit re-bootstrap error
-    import pytest as _pytest
-
-    with open(cursor, "w") as f:
-        f.write("v-000000-gone")
-    with _pytest.raises(FileNotFoundError, match="re-bootstrap"):
-        V.table_changes_since(spark, src, cursor, ["k"])
-
-
 # ---------------------------------------------------------------------------
 # Round-10 review fixes (code-review findings on versioning.py)
 # ---------------------------------------------------------------------------
@@ -469,111 +396,6 @@ def test_table_changes_sees_evolved_column_backfill(spark, tmp_path):
     assert got == {1: "changed"}
 
 
-def _dst_state(spark, dest):
-    from animaltrackingetls_spark.inventory import read_versioned
-
-    return {r.k: r.v for r in read_versioned(spark, dest).collect()}
-
-
-def test_cdc_pump_end_to_end_converges(spark, tmp_path):
-    """Round-11 verdict task #6: the CDC pump driven end to end. The
-    destination versioned table converges to the source through
-    incremental polls, a crash-before-advance replay applies
-    exactly-once (no new destination versions), and a retention prune
-    mid-stream raises the re-bootstrap error whose recovery —
-    bootstrap_cdc_dest — restores convergence including deletes that
-    happened while the consumer was down."""
-    import os
-
-    import pytest as _pytest
-
-    from animaltrackingetls_spark.inventory import (
-        delete_versioned,
-        list_versions,
-        read_versioned,
-        upsert_parquet_versioned,
-    )
-    from animaltrackingetls_spark.operators.versioning import (
-        bootstrap_cdc_dest,
-        pump_changes_once,
-    )
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    cur = str(tmp_path / "cursor")
-
-    def up(rows, keep=3):
-        upsert_parquet_versioned(
-            spark, src,
-            spark.createDataFrame(rows, "k long, v string"), ["k"],
-            keep_versions=keep,
-        )
-
-    def src_state():
-        return {r.k: r.v for r in read_versioned(spark, src).collect()}
-
-    up([(1, "a"), (2, "b"), (3, "c")])
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["applied"] and r["added"] == 3
-    assert _dst_state(spark, dst) == src_state()
-
-    # idle poll: nothing applied, no destination churn
-    n_vers = len(list_versions(dst))
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert not r["applied"]
-    assert len(list_versions(dst)) == n_vers
-
-    # adds + changes + a delete in the source, then one poll
-    up([(2, "b2"), (4, "d")])
-    delete_versioned(
-        spark, src, spark.createDataFrame([(1,)], "k long"), ["k"],
-        keep_versions=3,
-    )
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert (r["added"], r["changed"], r["removed"]) == (1, 1, 1)
-    assert _dst_state(spark, dst) == src_state() == {
-        2: "b2", 3: "c", 4: "d"
-    }
-
-    # crash-before-advance replay: run a window, then re-run it with
-    # the cursor manually rolled back — the destination must not gain
-    # versions (watermark no-ops) and stays converged
-    with open(cur) as f:
-        cursor_before = f.read()
-    up([(5, "e")])
-    pump_changes_once(spark, src, dst, cur, ["k"])
-    vers_after = list_versions(dst)
-    with open(cur, "w") as f:
-        f.write(cursor_before)  # simulate: sink committed, advance lost
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["applied"]  # the window replays...
-    assert list_versions(dst) == vers_after  # ...as a pure no-op
-    assert _dst_state(spark, dst) == src_state()
-
-    # retention prune mid-stream: enough source commits at keep=2 to
-    # prune the cursor's version while the consumer sleeps
-    up([(6, "f")], keep=2)
-    up([(7, "g")], keep=2)
-    delete_versioned(
-        spark, src, spark.createDataFrame([(3,)], "k long"), ["k"],
-        keep_versions=2,
-    )
-    with _pytest.raises(FileNotFoundError, match="re-bootstrap"):
-        pump_changes_once(spark, src, dst, cur, ["k"])
-
-    # recovery: full-snapshot bootstrap converges (including key 3's
-    # delete, which happened while the consumer was down) and the
-    # incremental pump resumes cleanly afterwards
-    bootstrap_cdc_dest(spark, src, dst, cur, ["k"])
-    assert _dst_state(spark, dst) == src_state()
-    assert 3 not in _dst_state(spark, dst)
-    up([(8, "h")], keep=2)
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert r["applied"] and r["added"] == 1
-    assert _dst_state(spark, dst) == src_state()
-    assert os.path.exists(cur)
-
-
 @pytest.mark.parametrize("mode", ["hardlink", "manifest"])
 def test_table_changes_churn_pruned_on_bucketed(spark, tmp_path, mode):
     """Round-11 churn-pruned CDF: on a bucketed table, buckets whose
@@ -637,54 +459,3 @@ def test_table_changes_churn_pruned_on_bucketed(spark, tmp_path, mode):
     )
     assert pruned_files < full_files
     assert len(pruned_files) <= len(changed)
-
-
-def test_cdc_pump_bucketed_dest(spark, tmp_path):
-    """The pump routes writes through the destination's own layout: a
-    bucket-partitioned destination keeps its pruned merge and stays
-    converged through polls and replays."""
-    from animaltrackingetls_spark.inventory import (
-        list_versions,
-        upsert_parquet_versioned_partitioned,
-    )
-    from animaltrackingetls_spark.operators.versioning import (
-        pump_changes_once,
-    )
-    from animaltrackingetls_spark.inventory import (
-        delete_versioned,
-        upsert_parquet_versioned,
-    )
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    cur = str(tmp_path / "cursor")
-    base = spark.range(400).selectExpr("id AS k", "CAST(id AS STRING) AS v")
-    upsert_parquet_versioned(spark, src, base, ["k"], keep_versions=4)
-    # pre-create the destination BUCKETED, then bootstrap into it
-    upsert_parquet_versioned_partitioned(
-        spark, dst, base.limit(1), ["k"], n_buckets=4, scheme="range",
-        keep_versions=3, link_mode="manifest",
-    )
-    pump_changes_once(spark, src, dst, cur, ["k"])
-    assert _dst_state(spark, dst) == {
-        r.k: r.v for r in base.collect()
-    }
-
-    upsert_parquet_versioned(
-        spark, src,
-        spark.createDataFrame([(5, "u5"), (401, "x")], "k long, v string"),
-        ["k"], keep_versions=4,
-    )
-    delete_versioned(
-        spark, src, spark.createDataFrame([(7,)], "k long"), ["k"],
-        keep_versions=4,
-    )
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert (r["added"], r["changed"], r["removed"]) == (1, 1, 1)
-    st = _dst_state(spark, dst)
-    assert st[5] == "u5" and st[401] == "x" and 7 not in st
-    # replay of the same window: destination version list unchanged
-    vers = list_versions(dst)
-    r = pump_changes_once(spark, src, dst, cur, ["k"])
-    assert not r["applied"]
-    assert list_versions(dst) == vers
