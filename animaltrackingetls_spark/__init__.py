@@ -15,15 +15,11 @@ Layout:
     pipeline     The §3.1 flagship lifecycle composed end-to-end
                  (extract → clean → enrich → load → register → rejects).
     enrichment   Geocode enrichment as broadcast join / mapInPandas.
-    inventory    Load-catalog upsert (MERGE-style), table naming, date
-                 helpers, and the versioned-table layer (snapshot-atomic
-                 upserts, deletes, time travel, deletion vectors).
+    inventory    The 4-column load catalog: keyed upsert (parquet or
+                 DB-API ON CONFLICT), table naming, date helpers.
     serving      Dynamic serving filters, date match, JSON edge sink.
     serving_http HTTP sightings endpoint over the serving filters.
     io           Parquet/JDBC/CSV readers and writers (incl. nanos rescue).
-    cdc          Write-time change-data capture for versioned tables
-                 (logged Delta-shaped change rows, batch reader, the
-                 `versioned_changes` streaming source).
     operators/   Relational + LLM-data-pipeline operators (dedup,
                  similarity search, text analysis, as-of/range joins,
                  snapshot diff / SCD2, multimodal plumbing); each module

@@ -8,7 +8,7 @@ Spark-native equivalent and stays in codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # String sentinels that mean NULL after a lossy str() round-trip
@@ -46,9 +46,3 @@ def count_with_default(c: Column | None, default: int = 1) -> Column:
 def scrub_na_strings(c: Column) -> Column:
     """C7: map stringified-NA sentinels back to NULL."""
     return F.when(c.isin(*_NA_STRINGS), F.lit(None)).otherwise(c)
-
-
-def scrub_na_string_columns(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Apply the NA scrub to every (or the given) string column."""
-    targets = columns or [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
-    return df.withColumns({name: scrub_na_strings(F.col(name)) for name in targets})

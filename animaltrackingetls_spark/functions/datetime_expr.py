@@ -21,7 +21,7 @@ I/O-bound and CPU-bound.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Null-ish sentinels the reference's _fix leaves untouched
@@ -112,8 +112,3 @@ def temporal_columns(ts: Column) -> dict[str, Column]:
         "date_only": F.to_date(ts),
         "time_only": F.date_format(ts, "HH:mm:ss"),
     }
-
-
-def with_temporal_columns(df: DataFrame, ts_col: str = "eventDateParsed") -> DataFrame:
-    cols = temporal_columns(F.col(ts_col))
-    return df.withColumns(cols)

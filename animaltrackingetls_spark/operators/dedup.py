@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import tokens
-
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -98,6 +96,8 @@ def word_shingles(c: Column, n: int = 3) -> Column:
     expression over short text; in frame-level operators prefer
     ``shingle_frame``, which binds the tokens through a Generate node.
     """
+    from .textstats import tokens
+
     toks = tokens(c)
     if n == 1:
         return F.array_distinct(toks)
@@ -139,6 +139,8 @@ def shingle_frame(
     size+explode pair — can reference ``sh`` k times without k
     re-shinglings). Measured 6× over the naive column form on 4-grams.
     """
+    from .textstats import tokens
+
     bound = df.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in keep_cols],
@@ -193,6 +195,8 @@ def shingle_hash_frame(
     every one of the several references inside the combine expression
     (no let-binding in Catalyst; keeping it bound is ~3×).
     """
+    from .textstats import tokens
+
     th = F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
     bound = df.select(F.col(id_col).alias("id"), F.explode(F.array(th)).alias("th"))
     return bound.select("id", _combine_shingles(F.col("th"), n).alias("sh"))
@@ -521,6 +525,8 @@ def _simhash64_expr(
     """The JVM expression form of :func:`simhash64` (both hash_fns) —
     the xx64 production path, and the md5 reference the Arrow twin's
     parity test pins against."""
+    from .textstats import tokens
+
     n_bits = 64 if hash_fn == "xx64" else 60
     # explode_outer: a document whose text tokenizes to nothing still gets
     # a row (tok NULL → one deterministic vote vector, the same for every
@@ -1569,6 +1575,8 @@ def dup_gram_positions(
     moves, so the extra I/O is shuffle-sized; the saved pass is the
     CPU-bound gram fingerprinting. Off by default: one-consumer callers
     keep the pure lazy plan."""
+    from .textstats import tokens
+
     toked = df.select(
         F.col(id_col).alias("id"),
         F.explode(
@@ -1667,6 +1675,8 @@ def duplicate_spans(
     never per gram. At 100 TB swap md5 for xxhash64 (same plan, 8-byte
     keys) and pre-filter grams through a frequency sketch.
     """
+    from .textstats import tokens
+
     marked = (
         gram_positions
         if gram_positions is not None
@@ -1741,6 +1751,8 @@ def remove_duplicate_spans(
     the aggressive form — keep-first needs gram identity, which merged
     spans no longer carry.
     """
+    from .textstats import tokens
+
     if keep_first:
         if spans is not None:
             raise ValueError(

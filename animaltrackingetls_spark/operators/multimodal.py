@@ -27,15 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("content_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha256_hex", T.StringType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -56,14 +47,6 @@ def to_media_table(df: DataFrame, id_col: str, payload_expr, content_type: str) 
         F.octet_length(payload_expr.cast("binary")).cast("long").alias("n_bytes"),
         F.lower(F.sha2(payload_expr.cast("binary"), 256)).alias("sha256_hex"),
     )
-
-
-def read_binary_dir(spark, path: str, glob: str | None = None) -> DataFrame:
-    """File-backed media corpus via the built-in binaryFile source."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
 
 
 PNG_SIGNATURE_HEX = "89504E470D0A1A0A"  # \x89PNG\r\n\x1a\n
@@ -850,24 +833,6 @@ def decode_wav_header(payload: bytes) -> tuple[int, int, int, int, int, int] | N
     af, nch, rate, br, _ba, bits = fmt_fields
     duration_ms = data_size * 1000 // br if br else None
     return (af, nch, rate, bits, data_size, duration_ms)
-
-
-def audio_metadata(media: DataFrame) -> DataFrame:
-    """(media_id, audio_format, n_channels, sample_rate, bits_per_sample,
-    n_data_bytes, duration_ms) for WAV payloads in a media table; NULL
-    fields for anything else. Pure JVM — the payload never crosses into
-    Python. The audio sibling of :func:`image_dimensions`."""
-    meta = wav_fmt(F.col("payload"))
-    return media.select("media_id", "content_type", meta.alias("_m")).select(
-        "media_id",
-        "content_type",
-        F.col("_m.audio_format").alias("audio_format"),
-        F.col("_m.n_channels").alias("n_channels"),
-        F.col("_m.sample_rate").alias("sample_rate"),
-        F.col("_m.bits_per_sample").alias("bits_per_sample"),
-        F.col("_m.n_data_bytes").alias("n_data_bytes"),
-        F.col("_m.duration_ms").alias("duration_ms"),
-    )
 
 
 def decode_image_header(payload: bytes) -> tuple[int, int, int, int] | None:

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import NumericType
 
 
 def profile_columns(
@@ -312,6 +313,12 @@ def profile_quantiles(
     missing = [c for c in columns if c not in df.columns]
     if missing:
         raise ValueError(f"columns not in frame: {missing}")
+    # Both modes cast to double, which would turn a string column into
+    # NULLs that silently drop out; Spark's `percentile` raises instead.
+    types = {f.name: f.dataType for f in df.schema.fields}
+    non_numeric = [c for c in columns if not isinstance(types[c], NumericType)]
+    if non_numeric:
+        raise ValueError(f"columns are not numeric: {non_numeric}")
     if not probs or not all(0.0 <= p <= 1.0 for p in probs):
         raise ValueError(f"probs must be within [0, 1], got {probs!r}")
 

@@ -53,14 +53,6 @@ def url_host(c: Column) -> Column:
     return F.try_parse_url(c, F.lit("HOST"))
 
 
-def url_path(c: Column) -> Column:
-    return F.try_parse_url(c, F.lit("PATH"))
-
-
-def url_query(c: Column) -> Column:
-    return F.try_parse_url(c, F.lit("QUERY"))
-
-
 _IPV4_RE = r"^\d{1,3}(\.\d{1,3}){3}$"
 
 

@@ -7,12 +7,11 @@ from animaltrackingetls_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # local[8] + whole-stage codegen OFF for the unit suite only (r15
-    # verdict task #1: suite wall time must fit the driver's verify
-    # window). On tiny test frames codegen compiles a fresh class per
-    # unique plan shape and never amortizes it — measured on the
-    # heaviest file (test_cdc.py, 44 tests): local[4]/codegen-on 459 s
-    # → local[8]/codegen-off 386 s. Production paths (bench.py,
+    # local[8] + whole-stage codegen OFF for the unit suite only, to
+    # keep the suite's wall time down. The tests run hundreds of
+    # distinct plan shapes over tiny frames; codegen compiles a fresh
+    # class per shape and never earns the compile time back. The
+    # production paths (occurrence_scan, serving, perfbench,
     # __spark_entry__) keep codegen ON via get_spark defaults; no test
     # asserts codegen spans (test_privacy checks Exchange/Python only).
     s = get_spark(

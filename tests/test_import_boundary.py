@@ -32,12 +32,11 @@ PAPER_PATH = {
     "animaltrackingetls_spark.sources",
     "animaltrackingetls_spark.sources.rest",
 }
-# duplicate_audit and the two operator modules it imports at top level
+# duplicate_audit's own module; dedup imports every other operator
+# module lazily, inside the functions that use it
 AUDIT = {
     "animaltrackingetls_spark.operators",
     "animaltrackingetls_spark.operators.dedup",
-    "animaltrackingetls_spark.operators.textstats",
-    "animaltrackingetls_spark.operators.joins",
 }
 
 _PROBE = """

@@ -262,6 +262,8 @@ def test_profile_quantiles_validation(spark):
         profile.profile_quantiles(df, ["nope"])
     with pytest.raises(ValueError, match="within"):
         profile.profile_quantiles(df, ["v"], (1.5,))
+    with pytest.raises(ValueError, match=r"not numeric: \['s'\]"):
+        profile.profile_quantiles(df.withColumn("s", F.lit("x")), ["v", "s"])
 
 
 def _jvm_percentiles(df, cols, probs):
