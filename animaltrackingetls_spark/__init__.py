@@ -15,8 +15,11 @@ Layout:
     pipeline     The §3.1 flagship lifecycle composed end-to-end
                  (extract → clean → enrich → load → register → rejects).
     enrichment   Geocode enrichment as broadcast join / mapInPandas.
-    inventory    The 4-column load catalog: keyed upsert (parquet or
-                 DB-API ON CONFLICT), table naming, date helpers.
+    inventory    Load-catalog upsert (MERGE-style), table naming, date
+                 helpers, and the versioned-table layer (snapshot-atomic
+                 upserts, deletes, time travel, deletion vectors).
+    filestats    Per-file column statistics of versioned snapshots
+                 (data skipping, churn pruning).
     serving      Dynamic serving filters, date match, JSON edge sink.
     serving_http HTTP sightings endpoint over the serving filters.
     io           Parquet/JDBC/CSV readers and writers (incl. nanos rescue).

@@ -11,15 +11,12 @@ Reference semantics (studied, not ported):
 * C12 — first-Sunday-of-year and date-x-days-ago helpers
   (etl_past_day_script.py:9-37, 52-73).
 
-The catalog is the paper's one 4-column table, ``data_inventory
-(available_date PK, table_name, record_count, processed_at)``. It is a
-tiny keyed table, so the upsert is a pure DataFrame MERGE
-(``merge_upsert``: union + window keep-latest), engine-native and
-oracle-checkable. ``upsert_parquet`` stores it as parquet: a keyed
-read-merge-swap, last writer wins per key (with Delta/Iceberg
-available, swap the writer for a real MERGE and the read-modify-write
-race goes away). ``upsert_dbapi`` is the same upsert as the reference's
-``INSERT ... ON CONFLICT`` through a DB-API connection.
+Spark posture: the inventory is a tiny keyed table. Upsert is expressed
+as a pure DataFrame MERGE (union + window keep-latest) so it is
+engine-native and oracle-checkable; durable storage is a keyed parquet
+overwrite (`upsert_parquet`) — last-writer-wins per key, the honest
+non-Delta equivalent of MERGE INTO (with Delta/Iceberg available, swap
+the writer for a real MERGE and the read-modify-write race goes away).
 """
 
 from __future__ import annotations
@@ -94,6 +91,7 @@ def merge_upsert(
     existing: DataFrame,
     updates: DataFrame,
     key_cols: list[str],
+    merge_schema: bool = False,
 ) -> DataFrame:
     """Keyed upsert as a DataFrame op: updates win over existing rows on
     the same key; keys only in one side pass through.
@@ -104,6 +102,18 @@ def merge_upsert(
     update rows for the same key in one run) break on the row's full
     rendered value, never shuffle arrival order — a catalog value must
     not vary run-to-run.
+
+    ``merge_schema=True`` is Delta's mergeSchema posture: new columns
+    evolve in (existing rows read NULL for them), and old columns
+    SURVIVE an update batch that stopped carrying them — per Delta
+    MERGE-with-evolution semantics the matched key keeps the TARGET's
+    value for every column absent from the source, so the winning
+    update row is back-filled per-column from the existing row it
+    displaced (not NULLed wholesale; round-10 advisory). A column the
+    update batch carries but sets to NULL still writes NULL — only
+    column ABSENCE triggers the fallback. Default False keeps the
+    strict contract — a mismatched batch fails loudly, the right
+    default for a catalog whose schema should never drift silently.
     """
     reserved = {"_prio", "_rn"} & (set(existing.columns) | set(updates.columns))
     if reserved:
@@ -113,13 +123,46 @@ def merge_upsert(
         )
     e = existing.withColumn("_prio", F.lit(0))
     u = updates.withColumn("_prio", F.lit(1))
-    all_rows = e.unionByName(u)
+    fill_cols: list[str] = []
+    if merge_schema:
+        missing_keys = [c for c in key_cols if c not in updates.columns]
+        if missing_keys:
+            raise ValueError(
+                f"merge_schema cannot NULL-fill key columns: {missing_keys}"
+            )
+        fill_cols = [
+            c for c in existing.columns
+            if c not in updates.columns and c not in key_cols
+        ]
+        all_rows = e.unionByName(u, allowMissingColumns=True)
+    else:
+        all_rows = e.unionByName(u)
     value_cols = [c for c in all_rows.columns if c not in (*key_cols, "_prio")]
     tiebreak = (
         [F.desc(F.to_json(F.struct(*value_cols)))] if value_cols else []
     )
     w = Window.partitionBy(*key_cols).orderBy(F.desc("_prio"), *tiebreak)
     out = all_rows.withColumn("_rn", F.row_number().over(w))
+    if fill_cols:
+        # Delta-style evolution back-fill: a winning update row takes
+        # the displaced existing row's value for every column the batch
+        # stopped carrying. The struct wrapper makes first(ignorenulls)
+        # see every existing row as non-null, so an existing value that
+        # is legitimately NULL is preserved as NULL rather than skipped
+        # for a later row's value. Same partitioning + ordering as the
+        # ranking window — one sort, one WindowExec group.
+        w_all = w.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        for c in fill_cols:
+            surviving = F.first(
+                F.when(F.col("_prio") == 0, F.struct(F.col(c).alias("v"))),
+                ignorenulls=True,
+            ).over(w_all)["v"]
+            out = out.withColumn(
+                c,
+                F.when(F.col("_prio") == 1, surviving).otherwise(F.col(c)),
+            )
     return out.filter(F.col("_rn") == 1).drop("_prio", "_rn")
 
 
@@ -194,9 +237,9 @@ def upsert_parquet(
     both the old table (under the ``.old-*`` name) and the fully
     written tmp on disk — nothing is ever the sole casualty of a
     mid-swap crash (round-11 ADVICE #1), and the next call finishes
-    or rolls back that swap before it reads (``_recover_swap``).
-    Concurrent writers are not serialized here; with the catalog in a
-    database, ``upsert_dbapi`` leaves that to its ``ON CONFLICT``.
+    or rolls back that swap before it reads (``_recover_swap``). The
+    versioned writer remains the right tool when pointer-level
+    atomicity matters.
     """
     _recover_swap(path)
     try:
@@ -239,6 +282,3383 @@ def upsert_parquet(
     else:
         os.replace(tmp, path)
     return spark.read.parquet(path)
+
+
+# ---------------------------------------------------------------------------
+# Snapshot-atomic variant: version directories + an atomically swapped
+# pointer — the no-dependency stand-in for Delta/Iceberg MERGE INTO.
+# ---------------------------------------------------------------------------
+
+_CURRENT_POINTER = "_CURRENT"
+_COMMIT_LOCK = "._COMMIT_LOCK"
+
+# ---- deletion vectors (round 13) — merge-on-read deletes -----------------
+# Delta's deletion-vector analog: a `_dv.parquet` sidecar inside the
+# version directory marks (file identity, row index) pairs as deleted;
+# readers anti-join it, writers carry it forward filtered to surviving
+# file identities. File identity is (inode, size) — the same physical
+# identity the stats sidecar and churn pruning already use, stable
+# across hardlink/manifest carries and invalidated by any rewrite. The
+# sidecar lives in a dot-prefixed SUBDIRECTORY (`.dv/`) of the version
+# dir: hidden-path filtering keeps it out of Spark's data scans and
+# `_snapshot_files`' walks, while its normally-named parquet files stay
+# readable when the directory is addressed explicitly (a leading
+# underscore on the file itself would make Spark ignore it even then).
+_DV_DIR = ".dv"
+_DV_FP_COL = "_dv_fp"  # per-row file basename (from _metadata.file_path)
+_DV_RI_COL = "_dv_ri"  # per-row physical row index
+
+
+def _dv_path(table_dir: str, version: str) -> str:
+    import os
+
+    return os.path.join(table_dir, version, _DV_DIR)
+
+
+def _dv_files(table_dir: str, version: str) -> list[str]:
+    import os
+
+    d = _dv_path(table_dir, version)
+    if not os.path.isdir(d):
+        return []
+    return [
+        os.path.join(d, f) for f in sorted(os.listdir(d))
+        if not f.startswith((".", "_"))
+    ]
+
+
+def _dv_ident_rows(table_dir: str, version: str) -> list[tuple]:
+    """``(file_basename, inode, size)`` per data file of the snapshot —
+    the driver-side map that resolves DV identities to the paths a scan
+    actually reports. Basenames are unique within a snapshot (part-file
+    names embed the writer job's uuid); asserted because the DV join
+    keys on them."""
+    import os
+
+    rows = []
+    for path in _snapshot_files(table_dir, version).values():
+        st = os.stat(path)
+        rows.append((os.path.basename(path), int(st.st_ino),
+                     int(st.st_size)))
+    names = [r[0] for r in rows]
+    if len(names) != len(set(names)):
+        raise RuntimeError(
+            f"duplicate data-file basenames in {table_dir}/{version}; "
+            "deletion vectors cannot address files unambiguously"
+        )
+    return rows
+
+
+_DV_SUMMARY = "_summary.json"
+
+
+def _dv_summary_of(t) -> dict:
+    """Per-file-identity summary of a DV pyarrow table: row count plus
+    a content digest of the sorted, deduplicated row-index list. Every
+    DV writer publishes it alongside the parquet, so churn pruning and
+    read planning compare O(files) digests instead of materializing
+    row-index sets on the driver — at 100 TB a table's DV can be
+    billions of rows, but its distinct file identities are bounded by
+    the file count (round-13 verdict #3/#5)."""
+    import hashlib
+
+    by_id: dict[tuple, set] = {}
+    for ino, size, ri in zip(
+        t.column("ino").to_pylist(), t.column("size").to_pylist(),
+        t.column("row_index").to_pylist(),
+    ):
+        by_id.setdefault((int(ino), int(size)), set()).add(int(ri))
+    entries = {}
+    for (ino, size), idxs in by_id.items():
+        ordered = sorted(idxs)
+        h = hashlib.sha256(
+            ",".join(map(str, ordered)).encode()
+        ).hexdigest()[:16]
+        entries[f"{ino}:{size}"] = {"rows": len(ordered), "digest": h}
+    return {"v": 1, "entries": entries}
+
+
+def _dv_write_summary(ddir: str, summary: dict) -> None:
+    import json
+    import os
+
+    with open(os.path.join(ddir, _DV_SUMMARY), "w") as f:
+        json.dump(summary, f)
+
+
+def _dv_summary(table_dir: str, version: str) -> dict[tuple, dict]:
+    """The version's DV summary: ``{(ino, size): {"rows", "digest"}}``,
+    empty when the version has no DV. Read from the ``_summary.json``
+    sidecar (O(1) IO); a pre-summary sidecar (older table) falls back
+    to recomputing it from the parquet."""
+    import json
+    import os
+
+    files = _dv_files(table_dir, version)
+    if not files:
+        return {}
+    path = os.path.join(_dv_path(table_dir, version), _DV_SUMMARY)
+    try:
+        with open(path) as f:
+            s = json.load(f)
+    except (FileNotFoundError, ValueError):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        tabs = [pq.read_table(p) for p in files]
+        s = _dv_summary_of(
+            pa.concat_tables(tabs) if len(tabs) > 1 else tabs[0]
+        )
+    return {
+        tuple(int(x) for x in k.split(":")): v
+        for k, v in s["entries"].items()
+    }
+
+
+# Above this many TOTAL deletion-vector rows, readers apply the DV as
+# a broadcast anti-join; at or below it, the row indices inline into
+# per-file `NOT row_index IN (...)` filters — pure codegen, no
+# broadcast jobs, no join (measured: the join form cost 1.38 s on a
+# single-file 312k-row branch where the whole 31-file clean scan cost
+# 0.40 s — the tax was the exchange/job machinery, not the data).
+# The predicate is built as ONE SQL string (`F.expr`), never
+# `Column.isin(list)` — isin round-trips every literal through py4j
+# (measured 27 s of pure plan construction for a 12k list; the SQL
+# form parses the same list in 0.2-0.6 s). The cap sits below the
+# parser/codegen cliff (65k literals: 6.7 s build + 9.2 s eval;
+# 16k: 0.6 s + 0.5 s) and bounds the driver-side read behind it.
+_DV_INLINE_MAX = 16384
+# The inline path builds ONE scan branch + one codegen'd NOT-IN per
+# affected file, so plan width must be capped in FILE count too (r14
+# verdict #3): a wide-churn small DV — 10k rows spread over thousands
+# of files, e.g. a predicate delete at sub-purge density — stays under
+# the 16k ROW cap but would build a thousands-branch union whose
+# driver plan-build time and codegen size, not data, become the cost
+# (measured, SCALING.md "DV inline path capped": 1k affected files = 70.5 s
+# plan build + 49.6 s count inline vs 3.6 s + 2.2 s via the
+# single-scan broadcast anti-join fallback). Past this many affected
+# files the fallback wins regardless of DV row count.
+_DV_INLINE_MAX_FILES = 64
+
+
+def _dv_inline_indices(
+    table_dir: str, version: str
+) -> dict[tuple, list[int]]:
+    """Driver-side per-identity row-index lists for a SMALL DV (caller
+    checks the summary's total against ``_DV_INLINE_MAX`` first — the
+    read is churn-sized and bounded by the cap)."""
+    import pyarrow.parquet as pq
+
+    out: dict[tuple, set] = {}
+    for p in _dv_files(table_dir, version):
+        t = pq.read_table(p, columns=["ino", "size", "row_index"])
+        for ino, size, ri in zip(
+            t.column("ino").to_pylist(), t.column("size").to_pylist(),
+            t.column("row_index").to_pylist(),
+        ):
+            out.setdefault((int(ino), int(size)), set()).add(int(ri))
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def _dv_resolved(table_dir: str, version: str) -> tuple[list, set, dict]:
+    """Resolve the version's DV identities against its own file map and
+    FAIL CLOSED on any entry that names no live data file: file
+    identity is (inode, size), so an inode-changing but
+    content-preserving operation on the table directory (cp/rsync
+    restore, cross-filesystem move) orphans every DV entry — and a read
+    that silently dropped orphans would RESURRECT deleted rows (round-13
+    advisory, medium). Returns ``(ident_rows, affected_basenames,
+    summary)``: the snapshot's (basename, ino, size) map, the
+    basenames of the files that actually carry DV entries — the only
+    files a scan must pay the identity projection and anti-join for —
+    and the loaded summary, so callers never re-read it (a pre-r14
+    table without the sidecar pays the parquet re-digest ONCE)."""
+    ident = _dv_ident_rows(table_dir, version)
+    by_id = {(i, s): bn for bn, i, s in ident}
+    summary = _dv_summary(table_dir, version)
+    unresolved = [k for k in summary if k not in by_id]
+    if unresolved:
+        raise RuntimeError(
+            f"{table_dir}/{version}: {len(unresolved)} deletion-vector "
+            "file identities resolve to no data file of the snapshot "
+            f"(e.g. (ino, size)={sorted(unresolved)[:3]}). The table "
+            "directory was likely copied without preserving inodes "
+            "(cp/rsync/cross-filesystem move); reading past the orphaned "
+            "entries would resurrect deleted rows, so this read fails "
+            "closed. Recover from the original directory, or rebuild "
+            "from a trusted lineage (RESTORE to a pre-DV version, or a "
+            "rewriting commit on the original table)."
+        )
+    return ident, {by_id[k] for k in summary}, summary
+
+
+def _with_scan_identity(scan):
+    """Append the per-row physical identity columns to a SINGLE file
+    scan: ``_metadata`` only resolves directly on a file-source
+    relation (it does NOT survive a union), so every union branch
+    captures it before assembly."""
+    from pyspark.sql import functions as F
+
+    return scan.withColumn(
+        _DV_FP_COL,
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+    ).withColumn(_DV_RI_COL, F.col("_metadata.row_index"))
+
+
+def _apply_dv(spark, df, table_dir: str, version: str, ident=None):
+    """Anti-join the version's deletion vector (requires the identity
+    columns on ``df``). The DV and the file-identity map both broadcast
+    — churn-sized and file-count-sized respectively. ``ident`` accepts
+    the precomputed (basename, ino, size) rows so the scoped read path
+    resolves identities once."""
+    from pyspark.sql import functions as F
+
+    if ident is None:
+        ident = _dv_ident_rows(table_dir, version)
+    map_df = spark.createDataFrame(
+        ident, f"{_DV_FP_COL} string, _i long, _s long"
+    )
+    dv = spark.read.parquet(*_dv_files(table_dir, version))
+    doomed = dv.join(
+        F.broadcast(map_df),
+        on=[dv["ino"] == map_df["_i"], dv["size"] == map_df["_s"]],
+        how="inner",
+    ).select(
+        map_df[_DV_FP_COL],
+        dv["row_index"].alias(_DV_RI_COL),
+    )
+    return df.join(
+        F.broadcast(doomed), on=[_DV_FP_COL, _DV_RI_COL], how="left_anti"
+    )
+
+
+def _write_dv(spark, dv_df, vdir: str) -> None:
+    """Materialize a DV frame (``ino, size, row_index``) as the single
+    ``_dv.parquet`` sidecar file inside a (not yet published) version
+    directory — written by Spark to a staging dir, then the one part
+    file renamed in (the sidecar is churn-sized by construction)."""
+    import os
+    import shutil
+    import uuid
+
+    stage = os.path.join(vdir, f".dv_stage.{uuid.uuid4().hex[:8]}")
+    dv_df.coalesce(1).write.mode("error").parquet(stage)
+    for extra in os.listdir(stage):
+        if extra.startswith((".", "_")):  # _SUCCESS and friends
+            os.unlink(os.path.join(stage, extra))
+    # summary sidecar (per-identity rows + digest) rides the same
+    # atomic rename — no published .dv/ can lack it. Computed with ONE
+    # distributed pass: the driver receives a row per file identity
+    # (O(files)); a long-lived MoR table's cumulative DV can be
+    # millions of rows, and re-digesting it driver-side per commit
+    # would make commit cost O(total deleted rows) (round-14 review).
+    # Digest = sha256 of the comma-joined sorted deduplicated index
+    # list, byte-for-byte the _dv_summary_of convention (cross-impl
+    # equality pinned in tests via the carry path). Round 15 (r14
+    # verdict #7): the previous sort_array(collect_set(...)) form made
+    # ONE task hold a file's ENTIRE index array — a single file with
+    # millions of DV'd rows became a task-memory cliff. The digest now
+    # streams: repartition by identity, sort within partitions, and
+    # fold an incremental sha over the Arrow batches — peak task
+    # memory O(batch), same digest bytes.
+    rows = (
+        dv_df.repartition("ino", "size")
+        .sortWithinPartitions("ino", "size", "row_index")
+        .mapInPandas(
+            _dv_digest_batches, "ino long, size long, n long, h string"
+        )
+        .collect()
+    )
+    _dv_write_summary(stage, {
+        "v": 1,
+        "entries": {
+            f"{int(r['ino'])}:{int(r['size'])}": {
+                "rows": int(r["n"]), "digest": r["h"],
+            } for r in rows
+        },
+    })
+    os.replace(stage, os.path.join(vdir, _DV_DIR))
+
+
+def _dv_digest_batches(batches):
+    """mapInPandas kernel for the DV summary digest: the input is
+    repartitioned by (ino, size) and sorted within partitions by
+    (ino, size, row_index), so each file identity's rows arrive as one
+    contiguous ascending run (possibly spanning Arrow batches, never
+    partitions). Folds an incremental sha256 over the run — hashing
+    exactly the bytes ``",".join(map(str, sorted(set(idxs))))`` of
+    :func:`_dv_summary_of` — with peak memory O(batch): duplicates are
+    adjacent after the sort (dropped via np.unique per slice + a
+    cross-batch last-index watermark), and the cross-batch comma joins
+    through the open group's running state. Emits one (ino, size,
+    dedup'd count, 16-hex digest) row per identity."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+
+    cur = None        # open group's (ino, size)
+    h = None          # its running sha256
+    n = 0             # its deduplicated index count
+    last_ri = None    # last index hashed (cross-batch dedupe + join)
+    done: list[tuple] = []
+
+    def close():
+        if cur is not None:
+            done.append(
+                (int(cur[0]), int(cur[1]), int(n), h.hexdigest()[:16])
+            )
+
+    for pdf in batches:
+        ino = pdf["ino"].to_numpy()
+        size = pdf["size"].to_numpy()
+        ri = pdf["row_index"].to_numpy()
+        if len(ri) == 0:
+            continue
+        newgrp = np.empty(len(ri), dtype=bool)
+        newgrp[0] = True
+        newgrp[1:] = (ino[1:] != ino[:-1]) | (size[1:] != size[:-1])
+        bounds = np.append(np.flatnonzero(newgrp), len(ri))
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            key = (int(ino[a]), int(size[a]))
+            idxs = np.unique(ri[a:b])  # sorted input: dedupe only
+            if key != cur:
+                close()
+                cur, h, n, last_ri = key, hashlib.sha256(), 0, None
+            if last_ri is not None:
+                idxs = idxs[idxs > last_ri]
+                if len(idxs) == 0:
+                    continue
+                h.update(b",")
+            h.update(",".join(map(str, idxs.tolist())).encode())
+            n += len(idxs)
+            last_ri = int(idxs[-1])
+    close()
+    yield pd.DataFrame(
+        {
+            "ino": pd.Series([r[0] for r in done], dtype="int64"),
+            "size": pd.Series([r[1] for r in done], dtype="int64"),
+            "n": pd.Series([r[2] for r in done], dtype="int64"),
+            "h": pd.Series([r[3] for r in done], dtype="object"),
+        }
+    )
+
+
+def _carry_dv(table_dir: str, version: str, base_version: str | None) -> None:
+    """Carry the base snapshot's deletion vector into a new version,
+    FILTERED to file identities still present there — rewritten files'
+    entries drop (their rows were read DV-filtered during the merge),
+    carried files keep theirs. A version that wrote its own DV (the dv
+    delete) is left alone. Called by :func:`_publish_version` for every
+    writer, so no publish path can silently resurrect deleted rows.
+    Driver-side pyarrow (the DV is churn-sized); a full-rewrite commit
+    (plain upsert, compaction, OPTIMIZE) shares no identities and drops
+    the DV entirely — the REORG PURGE analog."""
+    import os
+
+    vdir = os.path.join(table_dir, version)
+    if os.path.isdir(os.path.join(vdir, _DV_DIR)):
+        return
+    if base_version is None:
+        return
+    base_files = _dv_files(table_dir, base_version)
+    if not base_files:
+        return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    live = {
+        (ino, size) for _bn, ino, size in _dv_ident_rows(table_dir, version)
+    }
+    tables = [pq.read_table(p) for p in base_files]
+    t = pa.concat_tables(tables) if len(tables) > 1 else tables[0]
+    mask = pa.array(
+        [(i, s) in live for i, s in
+         zip(t.column("ino").to_pylist(), t.column("size").to_pylist())]
+    )
+    kept = t.filter(mask)
+    if kept.num_rows == 0:
+        return
+    import uuid
+
+    stage = os.path.join(vdir, f".{_DV_DIR}.{uuid.uuid4().hex[:8]}.tmp")
+    os.makedirs(stage, exist_ok=True)
+    pq.write_table(kept, os.path.join(stage, "dv-carried.parquet"))
+    _dv_write_summary(stage, _dv_summary_of(kept))
+    os.replace(stage, os.path.join(vdir, _DV_DIR))
+
+
+def _emit_dv_version(spark, table_dir: str, current: str, vdir: str,
+                     doomed) -> None:
+    """Materialize a merge-on-read DELETE version: union the doomed
+    rows' positions (``doomed`` carries the reader's identity columns)
+    with the base's existing deletion vector, write the ``.dv/``
+    sidecar, and carry EVERY data file of ``current`` forward
+    (hardlink, or file manifest on manifest-pinned plain tables).
+    Shared by the keyed and the predicate DV deletes."""
+    import os
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    version = os.path.basename(vdir)
+    os.makedirs(vdir, exist_ok=True)
+    ident = _dv_ident_rows(table_dir, current)
+    map_df = spark.createDataFrame(
+        ident, f"{_DV_FP_COL} string, ino long, size long"
+    )
+    new_dv = doomed.select(
+        _DV_FP_COL, F.col(_DV_RI_COL).alias("row_index")
+    ).join(F.broadcast(map_df), on=_DV_FP_COL).select(
+        "ino", "size", "row_index"
+    )
+    old_dv = _dv_files(table_dir, current)
+    if old_dv:
+        new_dv = spark.read.parquet(*old_dv).unionByName(
+            new_dv
+        ).dropDuplicates(["ino", "size", "row_index"])
+    if not new_dv.isEmpty():
+        _write_dv(spark, new_dv, vdir)
+    all_files = _snapshot_files(table_dir, current)
+    if _plain_link_mode(table_dir) == "manifest":
+        _emit_file_manifest(table_dir, version, all_files)
+    else:
+        for key in sorted(all_files):
+            src = all_files[key]
+            dst = os.path.join(vdir, os.path.basename(src))
+            if os.path.exists(dst):
+                dst = os.path.join(
+                    vdir,
+                    f"dv-{uuid.uuid4().hex[:8]}-{os.path.basename(src)}",
+                )
+            os.link(src, dst)
+
+
+def _base_gone(table_dir: str, current: str | None) -> bool:
+    """The conversion gate for :func:`_base_pruned_error`: a scan-time
+    file-not-found is only a CONFLICT if the base snapshot directory is
+    actually gone — a same-class failure from some OTHER input (e.g.
+    the caller's updates frame reading a staging dir deleted from under
+    it) must surface as itself, not burn re-merge retries under a
+    misleading conflict message (round-11 self-review finding #5)."""
+    import os
+
+    return current is not None and not os.path.isdir(
+        os.path.join(table_dir, current)
+    )
+
+
+def _base_pruned_error(err: Exception) -> bool:
+    """True when a Spark action (or a directory listing) failed because
+    the base snapshot it was reading was PRUNED mid-scan — a concurrent
+    winner published and retention deleted the directory this writer
+    merged against (only reachable at ``keep_versions=1``, where the
+    losing base is removed immediately). The CAS retry loops convert
+    this into a ConcurrentWriteError and re-merge from the new CURRENT.
+    Matched by error class/exception name, not message prose: Python's
+    FileNotFoundError (os.listdir on the pruned dir), the JVM
+    FileNotFoundException, and Spark 4's scan/plan-time error classes
+    for a vanished path."""
+    if isinstance(err, FileNotFoundError):
+        return True
+    s = str(err)
+    return (
+        "FileNotFoundException" in s
+        or "PATH_NOT_FOUND" in s
+        or "FILE_NOT_FOUND" in s
+        or "FAILED_READ_FILE" in s
+    )
+
+
+class ConcurrentWriteError(RuntimeError):
+    """A concurrent writer published between this writer's merge and
+    its publish: the snapshot this writer merged against is no longer
+    CURRENT, so swapping the pointer would silently drop the other
+    writer's commit (lost update). The failed writer's version
+    directory is removed; re-merging against the new CURRENT and
+    re-publishing is always safe (upsert_parquet_versioned does this
+    itself up to ``retries`` times)."""
+
+
+def _current_version(table_dir: str) -> str | None:
+    import os
+
+    ptr = os.path.join(table_dir, _CURRENT_POINTER)
+    try:
+        with open(ptr) as f:
+            name = f.read().strip()
+        return name or None
+    except FileNotFoundError:
+        return None
+
+
+_HISTORY = "_HISTORY"
+_COMMITTED_AT = "_committed_at"
+_OP_SIDECAR = "_op.json"
+
+
+def _read_history(table_dir: str) -> list[str] | None:
+    """The publish ledger: version names in commit order, one per
+    line, rewritten atomically under the commit lock on every publish.
+    ``None`` for tables created before the ledger existed (round 10) —
+    callers fall back to the directory listing."""
+    import os
+
+    try:
+        with open(os.path.join(table_dir, _HISTORY)) as f:
+            return [ln.strip() for ln in f if ln.strip()]
+    except FileNotFoundError:
+        return None
+
+
+def list_versions(table_dir: str) -> list[str]:
+    """RETAINED snapshot names in publish order. Reads the publish
+    ledger (``_HISTORY``) intersected with the directories that still
+    exist, so crash debris — a CAS-losing or crashed writer's
+    unreferenced ``v-*`` directory — is never offered as a time-travel
+    target (round-10 review finding; pre-ledger tables fall back to the
+    raw directory listing). Retention is ``keep_versions`` at publish
+    time — older snapshots are gone by design, same as VACUUM."""
+    import os
+
+    hist = _read_history(table_dir)
+    try:
+        entries = set(os.listdir(table_dir))
+    except FileNotFoundError:
+        return []
+    if hist is not None:
+        return [v for v in hist if v in entries]
+    return sorted(d for d in entries if d.startswith("v-"))
+
+
+def read_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    version: str | None = None,
+    predicates: list[tuple] | None = None,
+) -> DataFrame:
+    """Read a published snapshot of a versioned table — the CURRENT one
+    by default, or any retained version name from :func:`list_versions`
+    (time travel: audit what a pipeline consumed before the latest
+    upsert). Raises FileNotFoundError if nothing is published or the
+    requested version is not retained.
+
+    ``predicates`` — a list of ``(col, op, value)`` tuples, ANDed (ops:
+    ``= == < <= > >= in``, plus ``is_null`` / ``is_not_null`` with
+    ``value=None``, which prune on the sidecar's per-file null
+    counts) — turns the read into a DATA-SKIPPING scan:
+    files whose sidecar min/max statistics (:mod:`..filestats`,
+    collected at publish) prove they cannot match are never opened —
+    whole-file skipping on top of parquet's row-group pruning, the
+    Delta/Iceberg stats-pruning analog and what makes OPTIMIZE ZORDER's
+    clustering pay at the FILE level. The predicate is always
+    re-applied as an exact DataFrame filter, so results are identical
+    with or without a stats sidecar (pre-stats versions simply scan
+    everything); use :func:`files_scanned` to observe the skip rate."""
+    if version is None:
+        version = _current_version(table_dir)
+        if version is None:
+            raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    elif version not in list_versions(table_dir):
+        raise FileNotFoundError(
+            f"version {version!r} not retained under {table_dir} "
+            f"(have: {list_versions(table_dir)})"
+        )
+    if predicates:
+        from . import filestats
+
+        stats = filestats.read_stats(table_dir, version)
+        if stats is not None:
+            kept, _total = filestats.prune_files(stats, predicates)
+            df = _snapshot_df_files(spark, table_dir, version, kept)
+        else:
+            df = _snapshot_df(spark, table_dir, version)
+        df = df.filter(filestats.residual_filter(predicates))
+    else:
+        df = _snapshot_df(spark, table_dir, version)
+    # the partition-pruned layout's bucket column is internal plumbing
+    # (functionally dependent on the keys), never user data
+    if _BUCKET_COL in df.columns:
+        df = df.drop(_BUCKET_COL)
+    return df
+
+
+def files_scanned(
+    table_dir: str, version: str | None = None,
+    predicates: list[tuple] | None = None,
+) -> tuple[int, int]:
+    """(files a predicated read would open, total files in the
+    snapshot) — the data-skipping observability hook tests and benches
+    pin. No sidecar = no skipping = (total, total)."""
+    from . import filestats
+
+    if version is None:
+        version = _current_version(table_dir)
+        if version is None:
+            raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    total = len(_snapshot_files(table_dir, version))
+    if not predicates:
+        return total, total
+    stats = filestats.read_stats(table_dir, version)
+    if stats is None:
+        return total, total
+    kept, _ = filestats.prune_files(stats, predicates)
+    return len(kept), total
+
+
+_TXN_SIDECAR = "_txn.json"
+
+
+def _txn_marks_of(table_dir: str, version: str) -> dict[str, int]:
+    """Watermark map of one SPECIFIC version directory. Distinguishes
+    the two absences (review round 10): a missing sidecar inside an
+    EXISTING version dir means "no transactional writer yet" ({});
+    the version DIR itself gone means a concurrent publish pruned it
+    between our pointer read and this read — surfacing that as
+    :class:`ConcurrentWriteError` lets writer retry loops re-read the
+    pointer instead of proceeding with a vacuously-empty map that
+    would drop every app's replay protection."""
+    import json
+    import os
+
+    vdir = os.path.join(table_dir, version)
+    try:
+        with open(os.path.join(vdir, _TXN_SIDECAR)) as f:
+            return {str(k): int(v) for k, v in json.load(f).items()}
+    except FileNotFoundError:
+        if not os.path.isdir(vdir):
+            raise ConcurrentWriteError(
+                f"{table_dir}: version {version} vanished while reading "
+                "its watermarks — a concurrent publish pruned it; re-read "
+                "the pointer and retry"
+            ) from None
+        return {}
+
+
+def txn_watermarks(table_dir: str) -> dict[str, int]:
+    """Per-writer transaction watermarks of the CURRENT snapshot:
+    ``{app_id: last_applied_version}``. Lives in a ``_txn.json``
+    sidecar INSIDE the version directory, so it commits in the same
+    atomic pointer swap as the data it describes (Spark's parquet
+    reader ignores ``_``-prefixed files, like ``_SUCCESS``)."""
+    current = _current_version(table_dir)
+    if current is None:
+        return {}
+    try:
+        return _txn_marks_of(table_dir, current)
+    except ConcurrentWriteError:
+        # read-only probe: the pointer moved mid-read; follow it once
+        current = _current_version(table_dir)
+        return _txn_marks_of(table_dir, current) if current else {}
+
+
+def _read_commit_state(table_dir: str) -> tuple[str | None, dict[str, int]]:
+    """(current_version, its watermark map) read CONSISTENTLY — the
+    marks come from the same version directory the caller will pass as
+    the CAS ``expected_base``. The round-9 form read the marks through
+    the pointer and the base through a second pointer read: a commit
+    landing between the two handed the writer STALE marks that CAS
+    (pinned to the newer base) could not catch, silently regressing
+    another app's replay watermark (round-10 review finding). Raises
+    ConcurrentWriteError if the version is pruned mid-read — callers'
+    retry loops already handle it."""
+    current = _current_version(table_dir)
+    if current is None:
+        return None, {}
+    return current, _txn_marks_of(table_dir, current)
+
+
+def _cow_touched_files(
+    spark: SparkSession,
+    table_dir: str,
+    current: str,
+    updates: DataFrame,
+    key_cols: list[str],
+    probe: bool = True,
+) -> tuple[set[str], set[str], dict[str, str]] | None:
+    """The copy-on-write planning pass: which data files of the CURRENT
+    snapshot contain at least one updated key? Returns ``(touched_keys,
+    untouched_keys, {key: abspath})`` in stats-sidecar key space, or
+    ``None`` when CoW cannot be planned (no/stale sidecar — the caller
+    falls back to the full-rewrite merge, which is always correct).
+
+    Two phases, Delta MERGE's shape:
+
+    1. **Stats candidates** — one tiny aggregate derives the batch's
+       per-key-column min/max; files whose sidecar bounds exclude that
+       range cannot contain any updated key (our own write-time stats,
+       trusted as bounds; a file missing key stats stays a candidate).
+       On a key-clustered base (OPTIMIZE ZORDER / range layout) this
+       collapses candidates to the churn's neighborhood WITHOUT reading
+       anything. A batch carrying a NULL key skips this phase —
+       min/max ignore NULLs, so range pruning could miss the file
+       holding the NULL-keyed row (and the merge would duplicate it).
+    2. **Exact probe** — scan ONLY the candidates' key columns (column-
+       pruned), tag rows with their file basename (the reader's
+       identity column — ``input_file_name()`` cannot resolve on a
+       deletion-vector table's multi-source plan), left-semi join the
+       batch's keys (NULL-safe, AQE broadcasts the churn-sized side):
+       the distinct file list is exactly the files whose rows the merge
+       must rewrite. The collect is bounded by the snapshot's file
+       count, never its rows.
+    """
+    import os
+
+    from . import filestats
+
+    stats = filestats.read_stats(table_dir, current)
+    if stats is None or not stats.get("files"):
+        return None
+    all_files = _snapshot_files(table_dir, current)
+    if set(all_files) != set(stats["files"]):
+        return None  # sidecar out of sync with the directory: distrust
+
+    null_checks = [
+        F.max(F.col(k).isNull().cast("int")).alias(f"_n_{k}")
+        for k in key_cols
+    ]
+    aggs = []
+    for k in key_cols:
+        aggs += [F.min(k).alias(f"_lo_{k}"), F.max(k).alias(f"_hi_{k}")]
+    row = updates.agg(*aggs, *null_checks).first()
+    has_null_key = any(row[f"_n_{k}"] for k in key_cols)
+    preds: list[tuple] = []
+    if not has_null_key:
+        for k in key_cols:
+            lo, hi = row[f"_lo_{k}"], row[f"_hi_{k}"]
+            if lo is None or hi is None:
+                return (set(), set(all_files), all_files)  # empty batch
+            preds += [(k, ">=", lo), (k, "<=", hi)]
+    try:
+        cand, _total = (
+            filestats.prune_files(stats, preds)
+            if preds else (set(all_files), len(all_files))
+        )
+    except ValueError:
+        cand = set(all_files)  # unprunable key type: probe everything
+    if not cand:
+        return set(), set(all_files), all_files
+    if not probe:
+        # stats candidates only (phase 1): callers that re-scan the
+        # result anyway (the DV position probe) skip the exact pass
+        return set(cand), set(all_files) - set(cand), all_files
+
+    # identity=True: the reader's per-scan basename column replaces
+    # input_file_name(), which cannot resolve on multi-source plans —
+    # exactly what a deletion-vector table's anti-joined read is
+    # (round 13); it also keeps the probe honest there (DV-deleted
+    # rows can no longer mark a file as touched)
+    cdf = _snapshot_df_files(
+        spark, table_dir, current, cand, identity=True
+    ).select(*key_cols, F.col(_DV_FP_COL).alias("_f"))
+    upd_keys = updates.select(*key_cols)
+    touched_names = [
+        r["_f"]
+        for r in cdf.join(
+            upd_keys,
+            on=_null_safe_cond(cdf, upd_keys, key_cols),
+            how="left_semi",
+        ).select("_f").distinct().collect()
+    ]
+    # basenames are unique within a snapshot (part names embed the
+    # writer job's uuid); an unmapped name means our path model is
+    # wrong for this filesystem: plan None, caller full-rewrites.
+    name_to_key = {os.path.basename(p): k for k, p in all_files.items()}
+    if len(name_to_key) != len(all_files):
+        return None  # colliding basenames: cannot attribute, full-rewrite
+    touched: set[str] = set()
+    for name in touched_names:
+        key = name_to_key.get(name)
+        if key is None:
+            return None
+        touched.add(key)
+    return touched, set(all_files) - touched, all_files
+
+
+_UNCHECKED = object()  # sentinel: publish without a base-version check
+
+
+def upsert_parquet_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    updates: DataFrame,
+    key_cols: list[str],
+    keep_versions: int = 2,
+    txn_app_id: str | None = None,
+    txn_version: int | None = None,
+    target_files: int | None = None,
+    retries: int = 2,
+    merge_schema: bool = False,
+    cow: bool = False,
+    link_mode: str | None = None,
+    auto_compact: int | None = None,
+    dv: bool = False,
+    delete_keys: DataFrame | None = None,
+) -> DataFrame:
+    """Keyed upsert with SNAPSHOT-ATOMIC publish — closes the
+    `upsert_parquet` transactionality gap without a lake format.
+
+    The reference gets per-row atomicity from Postgres ``ON CONFLICT``
+    (monarch_etl/inventory.py:52-59); Delta/Iceberg would give MERGE
+    INTO. Neither ships in this environment, so this uses the classic
+    pointer-swap layout those formats build on:
+
+      table_dir/v-000001-<uuid>/...parquet   immutable snapshot dirs
+      table_dir/_CURRENT                     name of the published one
+
+    A writer merges against the CURRENT snapshot, writes a brand-new
+    version directory (never touching the published one), then publishes
+    with a single ``os.replace`` of the pointer — atomic on POSIX, so a
+    reader resolving the pointer sees either the old or the new snapshot
+    in full, never a half-written directory (unlike ``upsert_parquet``'s
+    overwrite-in-place, which has a visible empty window). A writer crash
+    before publish leaves only an unreferenced directory; readers are
+    unaffected. Old versions beyond ``keep_versions`` are pruned AFTER
+    publish (in-flight readers of the previous snapshot keep a valid
+    directory — for at least ``keep_versions - 1`` further commits;
+    with ``keep_versions=1`` the pruning is immediate, and a CONCURRENT
+    WRITER still scanning that base mid-merge hits a scan-time
+    file-not-found, which the retry loop treats as a conflict and
+    re-merges from the new CURRENT rather than surfacing a raw
+    FileNotFoundError; round-10 advisory).
+
+    **Optimistic concurrency** (round 10; previously last-swap-wins):
+    publish verifies under a commit lock that the snapshot this writer
+    merged against is STILL the current one — the compare-and-swap
+    Delta's optimistic protocol does against its log. On conflict the
+    stale version directory is removed and the merge is retried from
+    the new CURRENT (up to ``retries`` times, then
+    :class:`ConcurrentWriteError` propagates). Two interleaved upserts
+    therefore serialize: both commits land, neither is lost. The lock
+    is an ``flock`` held only around read-pointer/compare/rename
+    (microseconds, auto-released if the holder dies); single-host
+    scope — on a shared object store the same check runs against a
+    conditional-put / log-append primitive.
+
+    **Idempotent replay** (``txn_app_id`` + ``txn_version``, the
+    txnAppId/txnVersion pattern lake formats expose for streaming
+    sinks): when both are given, the upsert is a NO-OP if the current
+    snapshot already records ``txn_version`` (or later) for this
+    ``txn_app_id`` — so an at-least-once caller (foreachBatch replaying
+    a micro-batch after a crash between sink and checkpoint commit)
+    cannot double-apply. The watermark map rides in the version
+    directory itself (see :func:`txn_watermarks`), so data and
+    watermark publish in one atomic pointer swap — there is no state
+    in which one is visible without the other. Watermarks are
+    per-app-id: independent writers (two streams upserting different
+    keys) don't clobber each other's replay protection.
+
+    Scale: the merge and the snapshot write are fully distributed —
+    one key shuffle (``merge_upsert``'s window) and a parallel parquet
+    write; nothing is proportional to table size on the driver, so the
+    same sink serves a 74-row calendar and a 10M-row rollup (measured:
+    SCALING.md round 9). ``target_files`` coalesces the write when a
+    single-file (or n-file) snapshot layout is wanted; default lets
+    AQE pick — one file for catalog-sized tables, parallel files at
+    scale.
+
+    **Copy-on-write merge** (``cow=True``, round 12 — Delta MERGE's
+    file-granular rewrite): instead of rewriting the whole table, the
+    planner (:func:`_cow_touched_files`) finds the files that contain
+    at least one updated key (stats-sidecar range pruning, then an
+    exact key-column probe), rewrites ONLY their rows merged with the
+    batch, and hardlinks every untouched file into the new version —
+    per-commit cost tracks the churn's file neighborhood, not the
+    table, and successive versions physically SHARE files, which is
+    what turns on file-identity churn pruning for plain-layout CDF
+    diffs and pump polls (:func:`identity_changed_files`). Exact same
+    merge semantics as the default (pinned equal in tests); falls back
+    to the full rewrite when no stats sidecar exists or the batch
+    evolves the schema (mixed per-file schemas would break the
+    pinned-schema snapshot read). Trade-off vs the bucketed layout:
+    no layout sidecar or bucket count to choose, but the probe pays a
+    key-column scan of candidate files per commit, and file counts
+    grow with churn spread until ``compact_versioned`` runs.
+
+    ``link_mode`` (round 12) pins HOW CoW carries untouched files:
+    ``"hardlink"`` (default — local fast path) or ``"manifest"`` (the
+    object-store posture: untouched files stay in their origin version
+    directories and the new version publishes a file manifest
+    referencing them, one hop; retention/VACUUM reference-count exactly
+    like the bucketed manifests). First caller pins; later calls
+    inherit with None or must match.
+
+    ``auto_compact=N`` (round 12, Delta's autoOptimize analog): after a
+    successful publish, if the new snapshot holds ≥ N debris files
+    (smaller than half the 128 MiB default target), run
+    :func:`compact_versioned` ``incremental=True`` in the same call —
+    best-effort (a CAS conflict backs off, exactly like scheduled
+    compaction), debris-sized by construction. With CoW this bounds
+    the table's file count forever without an external maintenance
+    scheduler: each commit accretes at most a few files and every Nth
+    commit packs them. The same hook
+    REORG-purges files whose deletion-vector density crossed
+    ``_DV_PURGE_DENSITY`` (round 14), so DV tables self-heal their
+    read tax.
+
+    ``dv=True`` (round 14, plain tables): MERGE-ON-READ update — the
+    second half of Delta's deletion-vector posture. Matched keys' OLD
+    rows are marked deleted in the DV sidecar (their files carry
+    forward physically untouched) and the batch appends as NEW files,
+    so update write volume is O(churn) ALWAYS — where ``cow=True``
+    still rewrites every file that holds a matched key, dv writes only
+    the batch plus a kilobyte-scale sidecar. Exact same merge
+    semantics (pinned equal to the CoW merge in tests), and the
+    probe that finds the doomed positions is the same stats-candidate
+    pass CoW plans with. Falls back to the full-rewrite merge when the
+    batch evolves the schema (appended new-schema files next to
+    carried old-schema files would brick the pinned-schema read).
+    Readers pay the scoped anti-join until REORG/OPTIMIZE/compaction
+    purges — bounded by auto_compact's density trigger. Mutually
+    exclusive with ``cow``.
+
+    ``delete_keys`` (round 14, r13 verdict #8): Delta's ``MERGE ...
+    WHEN MATCHED THEN DELETE`` — the same commit that upserts
+    ``updates`` also REMOVES the rows matching these keys, under ONE
+    CAS publish and one watermark. A key in both frames takes the
+    upsert (deletes apply first, then the merge): one commit instead
+    of an upsert and a delete. Composes with ``cow`` (files holding
+    EITHER key set rewrite, everything else carries) and with ``dv``
+    (doomed rows join the deletion vector; only the batch appends).
+    First write ignores it (nothing exists to delete).
+    """
+    import json
+    import os
+    import shutil
+    import uuid
+
+    if (txn_app_id is None) != (txn_version is None):
+        raise ValueError("txn_app_id and txn_version must be given together")
+    if dv and cow:
+        raise ValueError("dv=True and cow=True are mutually exclusive")
+    if dv and _table_layout(table_dir) is not None:
+        raise ValueError(
+            "dv=True supports plain tables only; bucketed tables "
+            "already rewrite only the touched buckets"
+        )
+
+    os.makedirs(table_dir, exist_ok=True)
+    mode = _pin_plain_link_mode(table_dir, link_mode)
+    dk = None
+    if delete_keys is not None:
+        # validate BEFORE the select — the select's own analysis error
+        # would otherwise preempt this message
+        missing_k = [c for c in key_cols if c not in delete_keys.columns]
+        if missing_k:
+            raise ValueError(
+                f"delete_keys frame lacks key columns: {missing_k}"
+            )
+        dk = delete_keys.select(*key_cols).dropDuplicates(key_cols)
+    last_err: ConcurrentWriteError | None = None
+    for _attempt in range(max(0, retries) + 1):
+        # (Re-)read the commit state each attempt: a retry must merge
+        # against the snapshot the CONFLICTING writer published, and
+        # re-check the replay watermark it may have advanced. The pair
+        # is read CONSISTENTLY (marks from the same version used as the
+        # CAS base) — see _read_commit_state.
+        try:
+            current, marks = _read_commit_state(table_dir)
+        except ConcurrentWriteError as err:
+            last_err = err
+            continue
+        if (
+            txn_app_id is not None
+            and txn_app_id in marks
+            and marks[txn_app_id] >= txn_version
+        ):
+            return read_versioned(spark, table_dir)
+
+        version: str | None = None
+        try:
+            carry: dict[str, str] = {}
+            mor_done = False  # merge-on-read update path taken
+            if current is None:
+                # first write: dedupe WITHIN the batch through the same
+                # window later merges apply — the one-row-per-key contract
+                # must hold from version 1 (round-10 review finding)
+                merged = merge_upsert(
+                    updates.limit(0), updates, key_cols,
+                    merge_schema=merge_schema,
+                )
+                seq = 1
+            else:
+                seq = int(current.split("-")[1]) + 1
+                mor = dv
+                if mor and set(updates.dtypes) != set(
+                    _snapshot_df(spark, table_dir, current).dtypes
+                ):
+                    # schema evolution: appended new-schema files beside
+                    # carried old-schema files would brick the
+                    # pinned-schema snapshot read — full rewrite instead
+                    mor = False
+                if mor:
+                    # merge-on-read UPDATE (round 14): DV the matched
+                    # preimages in place, append the deduped batch as
+                    # new files — write volume is O(churn) always
+                    version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+                    vdir = os.path.join(table_dir, version)
+                    batch = merge_upsert(
+                        updates.limit(0), updates, key_cols
+                    )
+                    kdf = batch.select(*key_cols).dropDuplicates(key_cols)
+                    probe_keys = (
+                        kdf.unionByName(dk).dropDuplicates(key_cols)
+                        if dk is not None else kdf
+                    )
+                    mor_plan = _cow_touched_files(
+                        spark, table_dir, current, probe_keys, key_cols,
+                        probe=False,
+                    )
+                    probe = (
+                        _snapshot_df_files(
+                            spark, table_dir, current, mor_plan[0],
+                            identity=True,
+                        )
+                        if mor_plan is not None
+                        else _snapshot_df(spark, table_dir, current,
+                                          identity=True)
+                    )
+                    doomed = probe.join(
+                        F.broadcast(probe_keys),
+                        on=_null_safe_cond(probe, probe_keys, key_cols),
+                        how="left_semi",
+                    ).localCheckpoint()  # churn-sized: feeds the DV
+                    out = (
+                        batch.coalesce(target_files) if target_files
+                        else batch
+                    )
+                    out.write.mode("error").parquet(vdir)
+                    _emit_dv_version(spark, table_dir, current, vdir,
+                                     doomed)
+                    mor_done = True
+                plan_probe = updates
+                if dk is not None:
+                    # files holding a doomed key must rewrite too
+                    plan_probe = updates.select(*key_cols).unionByName(dk)
+                cow_plan = (
+                    _cow_touched_files(
+                        spark, table_dir, current, plan_probe, key_cols
+                    )
+                    if (cow and not mor_done) else None
+                )
+                if cow_plan is not None:
+                    touched, untouched, all_files = cow_plan
+                    old_rows = _snapshot_df_files(
+                        spark, table_dir, current, touched
+                    )
+                    if set(updates.dtypes) != set(old_rows.dtypes):
+                        # schema evolution — names OR types (round-12
+                        # self-review finding #4: a same-named column
+                        # arriving widened, float->double, would have
+                        # hardlinked old-typed files next to new-typed
+                        # rewrites and bricked the pinned-schema
+                        # snapshot read) — rewrites every file, same
+                        # posture as the bucketed writer
+                        cow_plan = None
+                    else:
+                        survivors = old_rows
+                        if dk is not None:
+                            # deletes apply first, then the merge — a
+                            # key in both frames takes the upsert row
+                            survivors = old_rows.join(
+                                dk,
+                                on=_null_safe_cond(old_rows, dk, key_cols),
+                                how="left_anti",
+                            )
+                        merged = merge_upsert(survivors, updates, key_cols)
+                        if target_files is None:
+                            # like-for-like file count: the rewrite
+                            # REPLACES the touched files, so emit about
+                            # that many (AQE's parallelismFirst default
+                            # would otherwise leave one tiny file per
+                            # shuffle partition and the snapshot's file
+                            # count would grow by n_shuffle per commit).
+                            # repartition, NOT coalesce: coalesce would
+                            # pull the merge window itself into the few
+                            # output tasks (measured 2.8 s single-task
+                            # for one file's rows); the extra exchange
+                            # moves only the rewritten rows.
+                            merged = merged.repartition(
+                                max(1, len(touched))
+                            )
+                        carry = {k: all_files[k] for k in untouched}
+                if cow_plan is None and not mor_done:
+                    # manifest-aware: a CoW file-manifest snapshot's
+                    # files live across version dirs; plain
+                    # materialized snapshots read the dir as before
+                    existing = _snapshot_df(spark, table_dir, current)
+                    survivors = existing
+                    if dk is not None:
+                        survivors = existing.join(
+                            dk,
+                            on=_null_safe_cond(existing, dk, key_cols),
+                            how="left_anti",
+                        )
+                    merged = merge_upsert(survivors, updates, key_cols,
+                                          merge_schema=merge_schema)
+
+            if not mor_done:
+                version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+                # Distributed write: the merge plan reads the CURRENT
+                # version directory, which this write never touches (the
+                # target directory is brand-new), so no materialization
+                # barrier is needed. AQE coalesces a catalog-sized merge
+                # to one post-shuffle partition on its own; target_files
+                # pins the file count explicitly when a layout contract
+                # requires it. (An earlier form collected the table
+                # through the driver — measured at 92 s for a 10M-row
+                # base, it was the scale ceiling of the whole sink; see
+                # SCALING.md round 9.)
+                out = (
+                    merged.coalesce(target_files) if target_files
+                    else merged
+                )
+                out.write.mode("error").parquet(
+                    os.path.join(table_dir, version)
+                )
+                # copy-on-write carry, by the table's pinned link mode:
+                # hardlink — untouched files link into the new version
+                # AFTER the rewrite lands (zero bytes copied; link
+                # targets are immutable snapshot files; Spark part names
+                # carry a per-job UUID, so collisions are vanishing —
+                # the rename guard keeps even that case safe); manifest —
+                # the new version publishes a file manifest referencing
+                # untouched files in their origin dirs (object-store
+                # posture, no links needed).
+                vdir = os.path.join(table_dir, version)
+                if mode == "manifest" and cow:
+                    _emit_file_manifest(table_dir, version, carry)
+                else:
+                    for key in sorted(carry):
+                        src = carry[key]
+                        dst = os.path.join(vdir, os.path.basename(src))
+                        if os.path.exists(dst):
+                            dst = os.path.join(
+                                vdir,
+                                f"cow-{uuid.uuid4().hex[:8]}-"
+                                f"{os.path.basename(src)}",
+                            )
+                        os.link(src, dst)
+        except Exception as err:
+            # base pruned mid-scan by a concurrent winner's retention
+            # (keep_versions=1): a conflict, not an IO failure — but
+            # ONLY if the base is really gone (_base_gone)
+            if _base_pruned_error(err) and _base_gone(table_dir, current):
+                if version is not None:
+                    shutil.rmtree(os.path.join(table_dir, version),
+                                  ignore_errors=True)
+                last_err = ConcurrentWriteError(
+                    f"{table_dir}: base {current} was pruned mid-merge "
+                    f"by a concurrent winner's retention ({err}); "
+                    "re-merging from the new CURRENT"
+                )
+                continue
+            raise
+
+        if txn_app_id is not None:
+            marks[txn_app_id] = int(txn_version)
+        try:
+            _publish_version(
+                table_dir, version, marks, keep_versions,
+                expected_base=current,
+                operation=(
+                    "MERGE (dv)" if mor_done
+                    else "MERGE (cow)" if carry else "MERGE"
+                ),
+            )
+        except ConcurrentWriteError as err:
+            # our snapshot merged a stale base — drop it and re-merge
+            shutil.rmtree(os.path.join(table_dir, version),
+                          ignore_errors=True)
+            last_err = err
+            continue
+        # The commit is durable once the CAS pointer swap succeeds.
+        # Auto-compaction/purge runs OUTSIDE the publish try: a
+        # ConcurrentWriteError (or any failure) escaping from it must
+        # NOT reach the handler above, which would rmtree the
+        # just-published LIVE snapshot and re-merge against a dangling
+        # pointer. Best-effort by contract — the next trigger packs.
+        if auto_compact:
+            try:
+                _maybe_auto_compact(spark, table_dir, version,
+                                    auto_compact, keep_versions)
+            except Exception as err:  # noqa: BLE001 — post-commit hygiene
+                import warnings
+
+                warnings.warn(
+                    f"{table_dir}: post-publish auto-compact/purge "
+                    f"failed (commit already durable): {err}"
+                )
+        return read_versioned(spark, table_dir)
+    raise last_err
+
+
+_BUCKET_COL = "upsert_bucket"
+_LAYOUT_SIDECAR = "_layout.json"
+
+
+def _null_safe_cond(left: DataFrame, right: DataFrame, key_cols: list[str]):
+    """NULL-safe multi-column equi-join condition (``<=>`` per key).
+    Used where a keyed lookup must treat NULL as a matchable key value
+    — the versioned layer's upserts do (rendered-key join), so its
+    deletes must too. EqualNullSafe remains a hash-joinable key."""
+    from functools import reduce
+
+    return reduce(
+        lambda a, b: a & b,
+        [left[c].eqNullSafe(right[c]) for c in key_cols],
+    )
+
+
+def _bucket_expr(key_cols: list[str], n_buckets: int):
+    """Deterministic key→bucket assignment: xxhash64 over the key
+    columns mod n_buckets. Engine-stable for a given key set, NULL-safe
+    (xxhash64 hashes NULL to a constant)."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]),
+                  F.lit(n_buckets)).cast("int")
+
+
+def _bucket_expr_range(key_col: str, bounds: list[float]):
+    """Range bucket: number of internal boundaries <= key (searchsorted
+    as a codegen expression — O(n_buckets) array filter per row, fine at
+    the tens-to-hundreds of buckets this layout uses). Keys below every
+    boundary land in bucket 0, above every boundary in the last bucket,
+    NULL keys in bucket 0 — inserts outside the creation-time range
+    clamp to the edge buckets (the classic degradation of static range
+    splits; re-splitting is the catalog operation real systems schedule
+    and is out of scope here, documented)."""
+    arr = F.array(*[F.lit(float(b)) for b in bounds])
+    # try_cast: ANSI mode (Spark 4 default) THROWS on malformed casts;
+    # a non-numeric key must land in the NULL->bucket-0 path instead
+    x = F.col(key_col).try_cast("double")
+    return F.coalesce(
+        F.size(F.filter(arr, lambda b: x >= b)), F.lit(0)
+    ).cast("int")
+
+
+def _table_layout(table_dir: str) -> dict | None:
+    import json
+    import os
+
+    try:
+        with open(os.path.join(table_dir, _LAYOUT_SIDECAR)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def upsert_parquet_versioned_partitioned(
+    spark: SparkSession,
+    table_dir: str,
+    updates: DataFrame,
+    key_cols: list[str],
+    n_buckets: int = 64,
+    keep_versions: int = 2,
+    txn_app_id: str | None = None,
+    txn_version: int | None = None,
+    retries: int = 2,
+    scheme: str = "range",
+    merge_schema: bool = False,
+    link_mode: str | None = None,
+) -> DataFrame:
+    """:func:`upsert_parquet_versioned` with a PARTITION-PRUNED merge —
+    the lever that makes per-batch cost proportional to the batch, not
+    the base table.
+
+    Layout: every snapshot is ``partitionBy(upsert_bucket)`` (scheme +
+    parameters pinned in a ``_layout.json`` table sidecar at creation;
+    later calls validate against it). A merge then touches only the
+    buckets the batch's keys map into: the CURRENT snapshot is read
+    with a static ``upsert_bucket IN (touched)`` the partitioned layout
+    turns into PartitionFilters (untouched directories are never listed
+    or read), the keyed merge runs over that slice, and the new
+    snapshot is assembled as merged-touched-buckets (written one file
+    per bucket) plus HARDLINKS to the untouched buckets' existing
+    files — zero bytes copied or rewritten for data the batch didn't
+    touch, and version pruning stays safe because link targets survive
+    directory deletion (inode refcount; the object-store equivalent is
+    a manifest entry referencing the unchanged objects, exactly
+    Delta/Iceberg's move). Publish, replay watermarks, CAS conflict
+    detection and retry are shared with the plain form via the same
+    commit path.
+
+    **Scheme choice is the whole game — measured, not assumed**
+    (SCALING.md round 10). ``scheme="range"`` (default; single
+    numeric/date key) splits on approx-quantile boundaries of the
+    CREATION batch, so a workload whose batches are key-LOCALIZED (the
+    dimension-maintenance norm: recent/active entities cluster in key
+    space) touches few buckets and the per-batch cost is measured FLAT
+    in base size. ``scheme="hash"`` (xxhash64 % n_buckets, any key
+    shape/count) spreads every batch uniformly: it prunes only when
+    the batch's DISTINCT-KEY count is well below n_buckets — the first
+    measured cut of this operator used hash for 1k-key batches over 64
+    buckets, touched every bucket, and read SLOWER than the plain
+    full-merge sink at every base size (worst case = full merge + the
+    partitioned write's overhead). Range's static splits degrade if
+    later inserts all clamp into an edge bucket (re-splitting is the
+    scheduled catalog operation real systems run; out of scope) — and
+    the bounds come from the CREATION batch, so a table pre-created for
+    later fills must be created with
+    REPRESENTATIVE keys: a tiny unrepresentative creation batch
+    degenerates every boundary to one value and all data lands in one
+    bucket, silently forfeiting pruning (measured as a 14.5 s/poll
+    pump regression before the bench's one-row creation batch was
+    spotted; SCALING.md round 11).
+
+    ``link_mode`` picks how untouched buckets are shared into new
+    snapshots, pinned in the layout sidecar at creation (round-11
+    verdict task #3): ``"hardlink"`` (default) uses POSIX hardlinks —
+    the local fast path; ``"manifest"`` writes a per-version
+    ``_manifest.json`` mapping every bucket dir to the version that
+    physically holds its files — the object-store posture (S3/GCS have
+    no hardlinks; this is the Delta/Iceberg move at bucket-dir
+    granularity). Readers resolve through the manifest and retention /
+    VACUUM count references before reclaiming (a pruned version's
+    still-referenced bucket dirs survive until unreferenced). Semantics
+    are identical in both modes — the versioned-model property test
+    runs all three layouts.
+
+    The bucket column is internal: :func:`read_versioned` drops it.
+    """
+    import json
+    import os
+    import shutil
+    import uuid
+
+    if (txn_app_id is None) != (txn_version is None):
+        raise ValueError("txn_app_id and txn_version must be given together")
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    if scheme not in ("hash", "range"):
+        raise ValueError(f"scheme must be hash|range, got {scheme!r}")
+    if link_mode not in (None, "hardlink", "manifest"):
+        raise ValueError(
+            f"link_mode must be hardlink|manifest, got {link_mode!r}"
+        )
+    missing = [c for c in key_cols if c not in updates.columns]
+    if missing:
+        raise ValueError(f"updates lack key columns: {missing}")
+    if _BUCKET_COL in updates.columns:
+        raise ValueError(f"updates must not carry the internal column "
+                         f"{_BUCKET_COL!r}")
+    if scheme == "range" and len(key_cols) != 1:
+        raise ValueError(
+            "scheme='range' buckets on ONE numeric/date key column; "
+            f"got {key_cols} (use scheme='hash' for composite keys)"
+        )
+
+    os.makedirs(table_dir, exist_ok=True)
+    layout = _table_layout(table_dir)
+    if layout is None:
+        if _current_version(table_dir) is not None:
+            raise ValueError(
+                f"{table_dir} was created by the unpartitioned writer; "
+                "bucketed and plain snapshots cannot mix"
+            )
+        layout = {"scheme": scheme, "n_buckets": int(n_buckets),
+                  "key_cols": list(key_cols),
+                  "link_mode": link_mode or "hardlink"}
+        if scheme == "range":
+            # boundary split points from the creation batch: n_buckets-1
+            # internal approx quantiles of the key (distributed sketch,
+            # driver gets n_buckets-1 doubles)
+            kd = updates.select(
+                F.col(key_cols[0]).try_cast("double").alias("x")
+            ).filter(F.col("x").isNotNull())
+            if kd.isEmpty():
+                raise ValueError(
+                    "scheme='range' needs a non-empty, numeric-castable "
+                    f"key column; {key_cols[0]!r} cast to double is all "
+                    "NULL or empty"
+                )
+            probs = [i / n_buckets for i in range(1, n_buckets)]
+            layout["bounds"] = kd.approxQuantile("x", probs, 0.001)
+        tmp = os.path.join(table_dir, _LAYOUT_SIDECAR + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(layout, f)
+        os.replace(tmp, os.path.join(table_dir, _LAYOUT_SIDECAR))
+    elif (layout.get("n_buckets") != n_buckets
+          or layout.get("key_cols") != list(key_cols)
+          or layout.get("scheme", "hash") != scheme
+          or (link_mode is not None
+              and layout.get("link_mode", "hardlink") != link_mode)):
+        raise ValueError(
+            f"layout mismatch for {table_dir}: table is bucketed as "
+            f"{layout}, caller asked scheme={scheme!r}, "
+            f"n_buckets={n_buckets}, key_cols={key_cols}"
+        )
+
+    if layout.get("scheme", "hash") == "range":
+        bucket = _bucket_expr_range(key_cols[0], layout["bounds"])
+    else:
+        bucket = _bucket_expr(key_cols, n_buckets)
+    u = updates.withColumn(_BUCKET_COL, bucket)
+    last_err: ConcurrentWriteError | None = None
+    for _attempt in range(max(0, retries) + 1):
+        try:
+            current, marks = _read_commit_state(table_dir)
+        except ConcurrentWriteError as err:
+            last_err = err
+            continue
+        if (
+            txn_app_id is not None
+            and txn_app_id in marks
+            and marks[txn_app_id] >= txn_version
+        ):
+            return read_versioned(spark, table_dir)
+
+        vdir = None
+        try:
+            if current is None:
+                touched = sorted(
+                    r[0] for r in u.select(_BUCKET_COL).distinct().collect()
+                )
+                # first write: same in-batch dedup contract as the plain
+                # writer (bucket col is key-derived, unaffected)
+                merged = merge_upsert(u.limit(0), u, key_cols,
+                                      merge_schema=merge_schema)
+                seq, untouched = 1, []
+            else:
+                cdir = os.path.join(table_dir, current)
+                existing_all = _snapshot_df(spark, table_dir, current)
+                evolving = merge_schema and (
+                    set(u.columns) != set(existing_all.columns)
+                )
+                if evolving:
+                    # schema evolution CANNOT hardlink: untouched buckets
+                    # would keep the old schema and the snapshot would be
+                    # mixed — spark.read then infers from one file and the
+                    # evolved column silently vanishes (or NULL-fills on
+                    # the next merge, destroying just-written values).
+                    # Review finding, round 10: evolution pays one full
+                    # rewrite; hardlinking resumes on the uniform snapshot.
+                    touched = sorted(
+                        r[0]
+                        for r in existing_all.select(_BUCKET_COL)
+                        .unionByName(u.select(_BUCKET_COL))
+                        .distinct()
+                        .collect()
+                    )
+                    existing = existing_all
+                else:
+                    # O(n_buckets) driver values — bounded by layout,
+                    # not data
+                    touched = sorted(
+                        r[0]
+                        for r in u.select(_BUCKET_COL).distinct().collect()
+                    )
+                    existing = existing_all.filter(
+                        F.col(_BUCKET_COL).isin(touched)
+                    )
+                merged = merge_upsert(existing, u, key_cols,
+                                      merge_schema=merge_schema)
+                seq = int(current.split("-")[1]) + 1
+                untouched = [] if evolving else [
+                    d for d in _snapshot_buckets(table_dir, current)
+                    if int(d.split("=", 1)[1]) not in set(touched)
+                ]
+
+            version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+            vdir = os.path.join(table_dir, version)
+            # one file per touched bucket: the layout's file count stays
+            # ~n_buckets forever, so this sink never needs compaction
+            (
+                merged.repartition(max(1, len(touched)), F.col(_BUCKET_COL))
+                .write.mode("error")
+                .partitionBy(_BUCKET_COL)
+                .parquet(vdir)
+            )
+            _emit_untouched(table_dir, current, vdir, untouched, layout)
+        except Exception as err:
+            # base pruned mid-scan/link by a concurrent winner's
+            # retention (keep_versions=1): a conflict, not an IO
+            # failure — but ONLY if the base is really gone
+            if _base_pruned_error(err) and _base_gone(table_dir, current):
+                if vdir is not None:
+                    shutil.rmtree(vdir, ignore_errors=True)
+                last_err = ConcurrentWriteError(
+                    f"{table_dir}: base {current} was pruned mid-merge "
+                    f"by a concurrent winner's retention ({err}); "
+                    "re-merging from the new CURRENT"
+                )
+                continue
+            raise
+
+        if txn_app_id is not None:
+            marks[txn_app_id] = int(txn_version)
+        try:
+            _publish_version(table_dir, version, marks, keep_versions,
+                             expected_base=current,
+                             operation="MERGE (bucketed)")
+            return read_versioned(spark, table_dir)
+        except ConcurrentWriteError as err:
+            shutil.rmtree(vdir, ignore_errors=True)
+            last_err = err
+    raise last_err
+
+
+def delete_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    keys: DataFrame,
+    key_cols: list[str],
+    keep_versions: int = 2,
+    txn_app_id: str | None = None,
+    txn_version: int | None = None,
+    retries: int = 2,
+    cow: bool = False,
+    dv: bool = False,
+) -> DataFrame:
+    """Keyed DELETE from a versioned table — the right-to-be-forgotten
+    operation (GDPR/erasure requests) every long-lived training-data
+    store eventually runs; publishes a new snapshot through the same
+    CAS commit (replay watermarks, conflict retry) as the upserts.
+
+    ``keys`` is a DataFrame carrying ``key_cols``; matching rows are
+    removed with a LEFT ANTI join (small deletion lists broadcast —
+    Catalyst picks BHJ under the threshold). The join is NULL-SAFE
+    (``eqNullSafe`` per key column): the upsert path treats NULL as a
+    valid key value (null-safe window / rendered-key join), so a
+    NULL-keyed row that was upserted must also be deletable — a plain
+    equi anti-join would silently no-op the erasure request (round-10
+    advisory). ``eqNullSafe`` keys still hash-join; there is no
+    exchange-reuse concern here because the build side broadcasts.
+    Time travel caveat stated
+    plainly: erased rows remain readable in RETAINED older versions
+    until retention prunes them — for a hard erasure run with
+    ``keep_versions=1`` so the publish prunes history in the same
+    commit.
+
+    Layout-aware like the upsert: on a bucket-partitioned table only
+    the buckets the deletion keys map into are read (PartitionFilters)
+    and rewritten; every untouched bucket hardlinks into the new
+    snapshot. On a plain table the snapshot is rewritten through the
+    anti join (the honest full-merge cost model) — unless ``cow=True``
+    (round 12), which plans the files containing doomed keys via the
+    same two-phase pass as the CoW upsert (:func:`_cow_touched_files`),
+    anti-joins ONLY their rows, and hardlinks every untouched file:
+    delete cost tracks the churn, and surviving versions share files
+    (churn-pruned CDF). Falls back to the full rewrite when no stats
+    sidecar exists.
+
+    ``dv=True`` (round 13, plain tables): MERGE-ON-READ delete —
+    Delta's deletion-vector mode. NO data file is rewritten or even
+    read-beyond-the-probe: the commit carries every file forward
+    (hardlink/manifest) and publishes a ``_dv.parquet`` sidecar naming
+    the doomed (file identity, row index) pairs, which every reader
+    anti-joins. Write cost is O(deleted rows) regardless of file
+    sizes — at real scale, a 10-row erasure on a multi-TB table writes
+    kilobytes where even CoW rewrites whole files. Readers pay the
+    broadcast anti-join until a rewriting commit (full compaction /
+    OPTIMIZE — the REORG PURGE analog) materializes the deletes away;
+    every non-rewriting commit carries surviving entries forward
+    automatically (:func:`_carry_dv`). DV deletes require a plain
+    layout (bucketed tables already rewrite only the touched buckets);
+    erasure caveat: the doomed bytes
+    remain INSIDE the carried data files until a rewriting commit —
+    for hard erasure use ``cow=True``/plain delete, or follow the DV
+    delete with ``compact_versioned``.
+    """
+    import os
+    import shutil
+    import uuid
+
+    if (txn_app_id is None) != (txn_version is None):
+        raise ValueError("txn_app_id and txn_version must be given together")
+    if dv and cow:
+        raise ValueError("dv=True and cow=True are mutually exclusive")
+    missing = [c for c in key_cols if c not in keys.columns]
+    if missing:
+        raise ValueError(f"keys frame lacks key columns: {missing}")
+
+    layout = _table_layout(table_dir)
+    if layout is not None and layout.get("key_cols") != list(key_cols):
+        raise ValueError(
+            f"layout mismatch for {table_dir}: table is bucketed on "
+            f"{layout.get('key_cols')}, delete asked {key_cols}"
+        )
+    if dv and layout is not None:
+        raise ValueError(
+            "dv=True supports plain tables only; bucketed tables "
+            "already rewrite only the touched buckets"
+        )
+
+    kdf = keys.select(*key_cols).dropDuplicates(key_cols)
+    last_err: ConcurrentWriteError | None = None
+    for _attempt in range(max(0, retries) + 1):
+        try:
+            current, marks = _read_commit_state(table_dir)
+        except ConcurrentWriteError as err:
+            last_err = err
+            continue
+        if (
+            txn_app_id is not None
+            and txn_app_id in marks
+            and marks[txn_app_id] >= txn_version
+        ):
+            return read_versioned(spark, table_dir)
+
+        if current is None:
+            raise FileNotFoundError(f"no published snapshot under {table_dir}")
+        cdir = os.path.join(table_dir, current)
+        seq = int(current.split("-")[1]) + 1
+        version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+        vdir = os.path.join(table_dir, version)
+
+        try:
+            if dv:
+                # merge-on-read: carry every data file, publish only a
+                # deletion-vector sidecar naming the doomed positions.
+                # The position probe reuses the CoW planner: stats
+                # candidates first, so the scan is bounded by the files
+                # that can possibly hold a doomed key, not the table
+                dv_plan = _cow_touched_files(
+                    spark, table_dir, current, kdf, key_cols,
+                    probe=False,
+                )
+                if dv_plan is not None:
+                    snap = _snapshot_df_files(
+                        spark, table_dir, current, dv_plan[0],
+                        identity=True,
+                    )
+                else:
+                    snap = _snapshot_df(spark, table_dir, current,
+                                        identity=True)
+                doomed = snap.join(
+                    F.broadcast(kdf),
+                    on=_null_safe_cond(snap, kdf, key_cols),
+                    how="left_semi",
+                ).localCheckpoint()  # churn-sized: feeds the DV
+                os.makedirs(vdir, exist_ok=True)
+                _emit_dv_version(spark, table_dir, current, vdir, doomed)
+            elif layout is None:
+                carry: dict[str, str] = {}
+                cow_plan = (
+                    _cow_touched_files(
+                        spark, table_dir, current, kdf, key_cols
+                    )
+                    if cow else None
+                )
+                if cow_plan is not None:
+                    touched_f, untouched_f, all_files = cow_plan
+                    existing = _snapshot_df_files(
+                        spark, table_dir, current, touched_f
+                    )
+                    carry = {k: all_files[k] for k in untouched_f}
+                else:
+                    existing = _snapshot_df(spark, table_dir, current)
+                remaining = existing.join(
+                    F.broadcast(kdf), on=_null_safe_cond(existing, kdf, key_cols),
+                    how="left_anti",
+                )
+                if cow_plan is not None:
+                    # like-for-like file count, parallel anti-join (see
+                    # the CoW upsert's repartition-not-coalesce note)
+                    remaining = remaining.repartition(
+                        max(1, len(touched_f))
+                    )
+                remaining.write.mode("error").parquet(vdir)
+                if _plain_link_mode(table_dir) == "manifest" and cow:
+                    _emit_file_manifest(table_dir, version, carry)
+                else:
+                    for key in sorted(carry):
+                        src = carry[key]
+                        dst = os.path.join(vdir, os.path.basename(src))
+                        if os.path.exists(dst):
+                            dst = os.path.join(
+                                vdir,
+                                f"cow-{uuid.uuid4().hex[:8]}-"
+                                f"{os.path.basename(src)}",
+                            )
+                        os.link(src, dst)
+                untouched: list[str] = []
+            else:
+                n_buckets = layout["n_buckets"]
+                if layout.get("scheme", "hash") == "range":
+                    bucket = _bucket_expr_range(key_cols[0], layout["bounds"])
+                else:
+                    bucket = _bucket_expr(key_cols, n_buckets)
+                kb = kdf.withColumn(_BUCKET_COL, bucket)
+                touched = sorted(
+                    r[0] for r in kb.select(_BUCKET_COL).distinct().collect()
+                )
+                existing = _snapshot_df(spark, table_dir, current).filter(
+                    F.col(_BUCKET_COL).isin(touched)
+                )
+                kno = kb.drop(_BUCKET_COL)
+                remaining = existing.join(
+                    F.broadcast(kno),
+                    on=_null_safe_cond(existing, kno, key_cols),
+                    how="left_anti",
+                )
+                untouched_pre = [
+                    d for d in _snapshot_buckets(table_dir, current)
+                    if int(d.split("=", 1)[1]) not in set(touched)
+                ]
+                if not untouched_pre and remaining.isEmpty():
+                    # a partitioned write of an empty frame emits NO data
+                    # files (unlike the unpartitioned schema-carrying empty
+                    # file): publishing it would brick the table — every
+                    # later read/merge fails schema inference (round-10
+                    # review finding). Full truncation is a table-drop, not
+                    # a delete.
+                    raise ValueError(
+                        f"delete_versioned would remove EVERY row of the "
+                        f"bucketed table {table_dir}; refusing to publish an "
+                        "unreadable empty snapshot — drop the table directory "
+                        "instead"
+                    )
+                (
+                    remaining.repartition(max(1, len(touched)), F.col(_BUCKET_COL))
+                    .write.mode("error")
+                    .partitionBy(_BUCKET_COL)
+                    .parquet(vdir)
+                )
+                untouched = untouched_pre
+            if not dv:
+                _emit_untouched(table_dir, current, vdir, untouched, layout)
+        except ValueError:
+            raise  # the empty-snapshot brick guard, not a scan failure
+        except Exception as err:
+            # base pruned mid-scan/link by a concurrent winner's
+            # retention (keep_versions=1): a conflict, not an IO failure
+            if _base_pruned_error(err) and _base_gone(table_dir, current):
+                shutil.rmtree(vdir, ignore_errors=True)
+                last_err = ConcurrentWriteError(
+                    f"{table_dir}: base {current} was pruned mid-merge "
+                    f"by a concurrent winner's retention ({err}); "
+                    "re-merging from the new CURRENT"
+                )
+                continue
+            raise
+
+        if txn_app_id is not None:
+            marks[txn_app_id] = int(txn_version)
+        try:
+            _publish_version(table_dir, version, marks, keep_versions,
+                             expected_base=current,
+                             operation="DELETE (dv)" if dv else "DELETE")
+            return read_versioned(spark, table_dir)
+        except ConcurrentWriteError as err:
+            shutil.rmtree(vdir, ignore_errors=True)
+            last_err = err
+    raise last_err
+
+
+def delete_versioned_where(
+    spark: SparkSession,
+    table_dir: str,
+    condition,
+    keep_versions: int = 2,
+    txn_app_id: str | None = None,
+    txn_version: int | None = None,
+    retries: int = 2,
+    key_range: tuple[float, float] | None = None,
+    dv: bool = False,
+) -> DataFrame:
+    """Predicate DELETE (``DELETE WHERE <condition>``) from a versioned
+    table — rows matching ``condition`` (a Column or SQL string) are
+    removed, published through the same CAS commit as every other
+    writer.
+
+    Honest cost model: a value predicate does not map to key buckets,
+    so by default BOTH layouts pay a full snapshot rewrite (the
+    bucket-partitioned layout is rewritten bucket-preserving — one file
+    per bucket — so later keyed merges keep pruning). Key-list erasure
+    should use :func:`delete_versioned`, which prunes to touched
+    buckets.
+
+    ``key_range=(lo, hi)`` is the replaceWhere-style hint for
+    RANGE-bucketed tables — the retention workload
+    (``DELETE WHERE ts < cutoff`` with ``key_range=(-inf, cutoff)``):
+    the caller PROMISES every row the condition matches has its bucket
+    key in [lo, hi], so only the buckets whose split range intersects
+    it are read (PartitionFilters) and rewritten; every other bucket
+    hardlinks into the new snapshot unread. The promise is the same
+    contract as Delta's ``replaceWhere`` — rows outside the hinted
+    range are untouched even if the condition would match them.
+
+    ``dv=True`` (round 13, plain tables): merge-on-read — the doomed
+    positions go into the ``.dv/`` sidecar and every data file carries
+    forward unrewritten (see :func:`delete_versioned`); the probe is
+    one predicate scan of the snapshot, the write is O(deleted rows).
+    """
+    import math
+    import os
+    import shutil
+    import uuid
+
+    if (txn_app_id is None) != (txn_version is None):
+        raise ValueError("txn_app_id and txn_version must be given together")
+    cond = F.expr(condition) if isinstance(condition, str) else condition
+    layout = _table_layout(table_dir)
+    if dv and layout is not None:
+        raise ValueError(
+            "dv=True supports plain tables only; use key_range pruning "
+            "on bucketed tables"
+        )
+    if dv and key_range is not None:
+        raise ValueError("dv=True and key_range are mutually exclusive")
+    hint_buckets: list[int] | None = None
+    if key_range is not None:
+        if layout is None or layout.get("scheme") != "range":
+            raise ValueError(
+                "key_range pruning needs a range-bucketed table "
+                f"(layout: {layout})"
+            )
+        lo, hi = key_range
+        if not hi >= lo:
+            raise ValueError(f"key_range must satisfy hi >= lo, got {key_range}")
+        bounds = layout["bounds"]
+
+        def _bucket_of(v: float) -> int:
+            if math.isinf(v):
+                return 0 if v < 0 else len(bounds)
+            return sum(1 for b in bounds if v >= b)
+
+        hint_buckets = list(range(_bucket_of(lo), _bucket_of(hi) + 1))
+
+    last_err: ConcurrentWriteError | None = None
+    for _attempt in range(max(0, retries) + 1):
+        try:
+            current, marks = _read_commit_state(table_dir)
+        except ConcurrentWriteError as err:
+            last_err = err
+            continue
+        if (
+            txn_app_id is not None
+            and txn_app_id in marks
+            and marks[txn_app_id] >= txn_version
+        ):
+            return read_versioned(spark, table_dir)
+
+        if current is None:
+            raise FileNotFoundError(f"no published snapshot under {table_dir}")
+        cdir = os.path.join(table_dir, current)
+        seq = int(current.split("-")[1]) + 1
+        version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+        vdir = os.path.join(table_dir, version)
+
+        try:
+            if dv:
+                snap = _snapshot_df(spark, table_dir, current,
+                                    identity=True)
+                doomed = snap.filter(
+                    F.coalesce(cond, F.lit(False))
+                ).localCheckpoint()
+                os.makedirs(vdir, exist_ok=True)
+                _emit_dv_version(spark, table_dir, current, vdir, doomed)
+            else:
+                existing = _snapshot_df(spark, table_dir, current)
+                untouched: list[str] = []
+                if hint_buckets is not None:
+                    existing = existing.filter(
+                        F.col(_BUCKET_COL).isin(hint_buckets)
+                    )
+                    untouched = [
+                        d for d in _snapshot_buckets(table_dir, current)
+                        if int(d.split("=", 1)[1]) not in set(hint_buckets)
+                    ]
+                # NULL-safe NOT: rows where the predicate is NULL are
+                # KEPT (SQL DELETE semantics — only TRUE deletes)
+                remaining = existing.filter(~F.coalesce(cond, F.lit(False)))
+                if layout is None:
+                    remaining.write.mode("error").parquet(vdir)
+                else:
+                    if not untouched and remaining.isEmpty():
+                        # same brick guard as delete_versioned: an empty
+                        # partitioned snapshot has no data files and no
+                        # schema
+                        raise ValueError(
+                            f"delete_versioned_where would remove EVERY "
+                            f"row of the bucketed table {table_dir}; "
+                            "refusing to publish an unreadable empty "
+                            "snapshot — drop the table directory instead"
+                        )
+                    n_parts = (
+                        max(1, len(hint_buckets))
+                        if hint_buckets is not None
+                        else layout["n_buckets"]
+                    )
+                    (
+                        remaining.repartition(
+                            n_parts, F.col(_BUCKET_COL)
+                        )
+                        .write.mode("error")
+                        .partitionBy(_BUCKET_COL)
+                        .parquet(vdir)
+                    )
+                _emit_untouched(table_dir, current, vdir, untouched, layout)
+        except ValueError:
+            raise  # the empty-snapshot brick guard, not a scan failure
+        except Exception as err:
+            # base pruned mid-scan/link by a concurrent winner's
+            # retention (keep_versions=1): a conflict, not an IO failure
+            if _base_pruned_error(err) and _base_gone(table_dir, current):
+                shutil.rmtree(vdir, ignore_errors=True)
+                last_err = ConcurrentWriteError(
+                    f"{table_dir}: base {current} was pruned mid-merge "
+                    f"by a concurrent winner's retention ({err}); "
+                    "re-merging from the new CURRENT"
+                )
+                continue
+            raise
+
+        if txn_app_id is not None:
+            marks[txn_app_id] = int(txn_version)
+        try:
+            _publish_version(table_dir, version, marks, keep_versions,
+                             expected_base=current,
+                             operation="DELETE WHERE (dv)" if dv
+                             else "DELETE WHERE")
+            return read_versioned(spark, table_dir)
+        except ConcurrentWriteError as err:
+            shutil.rmtree(vdir, ignore_errors=True)
+            last_err = err
+    raise last_err
+
+
+def vacuum_versioned(
+    table_dir: str,
+    grace_seconds: float = 24 * 3600,
+    keep_versions: int | None = None,
+) -> dict:
+    """Remove unreferenced version directories — the VACUUM the
+    pointer-swap layout needs for CRASH DEBRIS: a writer that died (or
+    lost a CAS race before the r10 cleanup) leaves a ``v-*`` directory
+    sorting AFTER the published one, which the publish-time pruner
+    deliberately never touches (it cannot tell debris from a concurrent
+    writer's in-flight commit). This sweeps, under the same commit
+    lock so no publish can race it:
+
+    * any ``v-*`` directory NOT in the publish ledger (``_HISTORY``)
+      whose mtime is older than ``grace_seconds`` — debris by
+      definition (the grace window protects a live writer's in-flight
+      directory; size it above the longest plausible write). Ledgerless
+      pre-r10 tables fall back to the sort-after-CURRENT heuristic;
+    * optionally (``keep_versions``) retained HISTORY beyond that
+      count, the same ledger trim publish applies, for tables whose
+      retention policy tightened after the fact.
+
+    Returns ``{"removed": [...], "kept": n}``. Never touches CURRENT.
+    """
+    import fcntl
+    import os
+    import shutil
+    import time as _time
+    import uuid
+
+    current = _current_version(table_dir)
+    if current is None:
+        raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    removed: list[str] = []
+    lock_fd = os.open(os.path.join(table_dir, _COMMIT_LOCK),
+                      os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        fcntl.flock(lock_fd, fcntl.LOCK_EX)
+        current = _current_version(table_dir)  # re-read under the lock
+        hist = _read_history(table_dir)
+        now = _time.time()
+        dirs = sorted(
+            d for d in os.listdir(table_dir)
+            if d.startswith("v-") and os.path.isdir(os.path.join(table_dir, d))
+        )
+        retained = (
+            [v for v in hist if v in set(dirs)] if hist is not None
+            else [d for d in dirs if d <= current]
+        )
+        for d in dirs:
+            if d == current:
+                continue
+            is_debris = (d not in hist) if hist is not None else (d > current)
+            if not is_debris:
+                continue
+            full = os.path.join(table_dir, d)
+            if now - os.stat(full).st_mtime >= grace_seconds:
+                # reference-counted: a manifest table's history-pruned
+                # version may still physically back retained snapshots'
+                # bucket dirs — _gc_version keeps exactly those
+                _gc_version(table_dir, d, retained)
+                removed.append(d)
+        if keep_versions is not None:
+            retained = (
+                [v for v in hist if v in set(dirs) and v not in removed]
+                if hist is not None
+                else [d for d in dirs if d <= current and d not in removed]
+            )
+            excess = len(retained) - max(1, keep_versions)
+            trimmed = [d for d in retained[: max(0, excess)] if d != current]
+            still = [d for d in retained if d not in set(trimmed)]
+            for d in trimmed:
+                _gc_version(table_dir, d, still)
+                removed.append(d)
+            if hist is not None and (trimmed or removed):
+                keep = [v for v in hist if v not in set(removed)]
+                htmp = os.path.join(
+                    table_dir, f".{_HISTORY}.{uuid.uuid4().hex[:8]}.tmp"
+                )
+                with open(htmp, "w") as f:
+                    f.write("\n".join(keep) + "\n")
+                    f.flush()
+                    os.fsync(f.fileno())
+                os.replace(htmp, os.path.join(table_dir, _HISTORY))
+    finally:
+        os.close(lock_fd)
+    return {"removed": removed, "kept": len(list_versions(table_dir))}
+
+
+def _link_buckets(cdir: str, vdir: str, dirs: list[str]) -> None:
+    """Hardlink the named bucket subdirectories of the current snapshot
+    into a new version directory — the untouched-bucket fast path every
+    bucketed writer shares (upsert, keyed delete, range-hinted delete)."""
+    import os
+
+    for d in dirs:
+        src_d, dst_d = os.path.join(cdir, d), os.path.join(vdir, d)
+        os.makedirs(dst_d, exist_ok=True)
+        for fname in os.listdir(src_d):
+            if fname.startswith((".", "_")):
+                continue
+            os.link(os.path.join(src_d, fname), os.path.join(dst_d, fname))
+
+
+_MANIFEST = "_manifest.json"
+_PLAIN_LAYOUT = "_plain_layout.json"
+
+
+def _read_manifest(table_dir: str, version: str) -> dict[str, str] | None:
+    """A manifest-layout snapshot's reference map, or None when the
+    version directory is fully materialized (hardlink/plain layouts, or
+    a manifest table's first/evolution full-rewrite snapshots). Two key
+    shapes share the format ``{name: origin_version}``:
+
+    * bucketed: ``{bucket_dir: origin}`` (round 11) — names are
+      ``upsert_bucket=N`` directories;
+    * plain FILE manifests (round 12, the object-store posture for
+      copy-on-write tables): ``{"<origin>/<filename>": origin}`` — the
+      key doubles as the resolved path relative to ``table_dir`` and is
+      distinguishable by the ``/`` (bucket dir names never contain one).
+    """
+    import json
+    import os
+
+    try:
+        with open(os.path.join(table_dir, version, _MANIFEST)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _is_file_manifest(m: dict | None) -> bool:
+    return bool(m) and any("/" in k for k in m)
+
+
+def _plain_link_mode(table_dir: str) -> str:
+    """How a PLAIN table's copy-on-write carries untouched files:
+    ``hardlink`` (default — the local fast path) or ``manifest`` (the
+    object-store posture: S3/GCS have no links, so untouched files stay
+    in their origin version directories and the new version publishes a
+    file manifest referencing them, one hop, reference-counted by
+    retention/VACUUM exactly like the bucketed manifests). Pinned in a
+    ``_plain_layout.json`` sidecar by the first write that chooses."""
+    import json
+    import os
+
+    try:
+        with open(os.path.join(table_dir, _PLAIN_LAYOUT)) as f:
+            return json.load(f).get("link_mode", "hardlink")
+    except FileNotFoundError:
+        return "hardlink"
+
+
+def _pin_plain_link_mode(table_dir: str, link_mode: str | None) -> str:
+    """Validate-and-pin, mirroring the bucketed writers' layout pin:
+    the first caller that passes ``link_mode`` writes the sidecar;
+    later calls must match (or pass None to inherit)."""
+    import json
+    import os
+
+    pinned = _plain_link_mode(table_dir)
+    if link_mode is None:
+        return pinned
+    if link_mode not in ("hardlink", "manifest"):
+        raise ValueError(
+            f"link_mode must be hardlink|manifest, got {link_mode!r}"
+        )
+    sidecar = os.path.join(table_dir, _PLAIN_LAYOUT)
+    if os.path.exists(sidecar):
+        if pinned != link_mode:
+            raise ValueError(
+                f"layout mismatch for {table_dir}: plain link_mode is "
+                f"pinned {pinned!r}, caller asked {link_mode!r}"
+            )
+        return pinned
+    os.makedirs(table_dir, exist_ok=True)
+    with open(sidecar, "w") as f:
+        json.dump({"link_mode": link_mode}, f)
+    return link_mode
+
+
+def _emit_file_manifest(
+    table_dir: str, version: str, carried: dict[str, str]
+) -> None:
+    """Publish a plain CoW version's file manifest: every data file
+    physically WRITTEN into the version dir maps to the version itself;
+    every carried file keeps its resolved ``<origin>/<fname>`` key."""
+    import json
+    import os
+    import uuid
+
+    vdir = os.path.join(table_dir, version)
+    manifest = {
+        f"{version}/{fn}": version
+        for fn in sorted(os.listdir(vdir))
+        if not fn.startswith((".", "_")) and os.path.isfile(
+            os.path.join(vdir, fn)
+        )
+    }
+    for key in carried:
+        manifest[key] = key.split("/", 1)[0]
+    tmp = os.path.join(vdir, f".{_MANIFEST}.{uuid.uuid4().hex[:8]}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(vdir, _MANIFEST))
+
+
+def _snapshot_buckets(table_dir: str, version: str) -> dict[str, str]:
+    """Resolve a snapshot's buckets to their PHYSICAL homes:
+    ``{bucket_dir_name: version_dir_holding_its_files}``. Manifest
+    layouts read their sidecar; materialized layouts map every
+    physically-present bucket dir to the version itself. Writers use
+    this instead of ``os.listdir`` so 'which buckets exist' is answered
+    identically in both link modes."""
+    import os
+
+    m = _read_manifest(table_dir, version)
+    if m is not None:
+        # plain FILE manifests (CoW object-store posture) have no
+        # buckets — their entries are files, not partition dirs
+        return {} if _is_file_manifest(m) else dict(m)
+    vdir = os.path.join(table_dir, version)
+    return {
+        d: version
+        for d in os.listdir(vdir)
+        if d.startswith(f"{_BUCKET_COL}=")
+    }
+
+
+def _snapshot_files(table_dir: str, version: str) -> dict[str, str]:
+    """Every data file of a snapshot, manifest-resolved:
+    ``{"<origin_version>/<relative_path>": absolute_path}``. The key
+    names the file's PHYSICAL home (the version directory that owns the
+    bytes), so an untouched manifest-referenced bucket's keys are
+    identical across the snapshots that share it — which is what lets
+    stats collection carry entries forward without touching the files."""
+    import os
+
+    m = _read_manifest(table_dir, version)
+    if _is_file_manifest(m):
+        # plain file manifest: the key IS the table-relative path
+        return {k: os.path.join(table_dir, k) for k in sorted(m)}
+    buckets = _snapshot_buckets(table_dir, version)
+    out: dict[str, str] = {}
+    if buckets:
+        for d, origin in sorted(buckets.items()):
+            bdir = os.path.join(table_dir, origin, d)
+            for fn in sorted(os.listdir(bdir)):
+                if fn.startswith((".", "_")):
+                    continue
+                out[f"{origin}/{d}/{fn}"] = os.path.join(bdir, fn)
+        return out
+    vdir = os.path.join(table_dir, version)
+    for root, _dirs, files in os.walk(vdir):
+        # sidecar directories are not data files
+        _dirs[:] = [d for d in _dirs if not d.startswith((".", "_"))]
+        rel = os.path.relpath(root, vdir)
+        for fn in sorted(files):
+            if fn.startswith((".", "_")):
+                continue
+            key = (
+                f"{version}/{fn}" if rel == "."
+                else f"{version}/{rel}/{fn}"
+            )
+            out[key] = os.path.join(root, fn)
+    return out
+
+
+def _collect_stats(
+    table_dir: str, version: str, base_version: str | None = None
+) -> None:
+    """Write the version's per-file column-statistics sidecar (see
+    :mod:`..filestats`) — called by :func:`_publish_version` for every
+    versioned writer, so stats exist uniformly across plain, bucketed,
+    hardlink, and manifest layouts, and across upsert / delete /
+    compact / OPTIMIZE / CLONE / RESTORE.
+
+    Cost model: parquet FOOTER reads only, and only for files the base
+    snapshot's sidecar cannot vouch for — an untouched
+    manifest-referenced bucket carries by key equality (zero syscalls),
+    an untouched hardlinked file carries by (inode, size) equality (one
+    ``os.stat``), so a churn-localized commit pays O(new files) footer
+    reads, not O(table). Collection failure is a warning, never a
+    publish failure: stats are an optimization and every consumer
+    treats a missing sidecar as "prune nothing"."""
+    import os
+    import warnings
+
+    from . import filestats
+
+    try:
+        files = _snapshot_files(table_dir, version)
+        base = (
+            filestats.read_stats(table_dir, base_version)
+            if base_version else None
+        )
+        by_key = (base or {}).get("files", {})
+        by_ident = {
+            (e.get("ino"), e.get("size")): e for e in by_key.values()
+        }
+        out: dict[str, dict] = {}
+        for key, path in files.items():
+            carried = by_key.get(key)
+            if carried is None:
+                st = os.stat(path)
+                carried = by_ident.get((st.st_ino, st.st_size))
+            out[key] = (
+                carried if carried is not None
+                else filestats.file_entry(path)
+            )
+        filestats.write_stats(table_dir, version, {"v": 1, "files": out})
+    except Exception as err:  # noqa: BLE001 — stats must never block a commit
+        warnings.warn(
+            f"file-stats collection failed for {table_dir}/{version}: "
+            f"{err!r}; publishing without a stats sidecar (reads stay "
+            "correct, file skipping disabled for this version)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+
+
+def _snapshot_df_files(
+    spark: SparkSession, table_dir: str, version: str, keys: set[str],
+    identity: bool = False,
+) -> DataFrame:
+    """Assemble a snapshot DataFrame from an EXPLICIT file set (sidecar
+    keys, ``<origin>/<rel>``) — the scan the stats-pruned read path and
+    the file-level CDF pruning build: skipped files cost zero opens and
+    zero scheduler tasks. Schema is pinned from one file (same
+    eager-inference trap as :func:`_snapshot_df`); bucketed files keep
+    their partition column via ``basePath``. An empty set yields an
+    empty frame with the snapshot's schema.
+
+    ``identity=True`` keeps the per-row physical identity columns
+    (``_dv_fp``/``_dv_ri``) on the result. A snapshot carrying a
+    deletion vector is read through its anti-join, SCOPED to the files
+    that actually carry DV entries (round-14): clean files scan plain —
+    no identity projection, no join — so the DV read tax is O(affected
+    files), not O(table); identity resolution fails closed on orphaned
+    entries (see :func:`_dv_resolved`). Identity capture is per-branch
+    because ``_metadata`` does not survive a union."""
+    import os
+    from functools import reduce
+
+    has_dv = bool(_dv_files(table_dir, version))
+    ident_rows: list = []
+    affected: set = set()
+    dv_sum: dict = {}
+    if has_dv:
+        ident_rows, affected, dv_sum = _dv_resolved(table_dir, version)
+    all_files = _snapshot_files(table_dir, version)
+    unknown = keys - set(all_files)
+    if unknown:
+        raise ValueError(
+            f"file keys not in snapshot {version}: {sorted(unknown)[:3]}"
+        )
+    bucket_prefix = f"{_BUCKET_COL}="
+    bucketed = any(
+        k.split("/")[-2].startswith(bucket_prefix)
+        for k in all_files if len(k.split("/")) >= 3
+    ) if all_files else False
+    some = next(iter(sorted(all_files.values())), None)
+    if some is None:
+        raise FileNotFoundError(
+            f"snapshot {version} under {table_dir} has no data files"
+        )
+    data_schema = spark.read.parquet(some).schema
+    schema = (
+        data_schema.add(_BUCKET_COL, "integer") if bucketed else data_schema
+    )
+    chosen = sorted(keys)
+    if not chosen:
+        empty_schema = schema
+        if identity:
+            empty_schema = empty_schema.add(_DV_FP_COL, "string").add(
+                _DV_RI_COL, "long"
+            )
+        return spark.createDataFrame([], empty_schema)
+
+    def _branches(subset: list[str], with_ident: bool) -> list:
+        by_origin: dict[str, list[str]] = {}
+        for k in subset:
+            by_origin.setdefault(k.split("/", 1)[0], []).append(
+                all_files[k]
+            )
+        out = []
+        for origin, paths in sorted(by_origin.items()):
+            odir = os.path.join(table_dir, origin)
+            scan = (
+                spark.read.option("basePath", odir)
+                .schema(schema)
+                .parquet(*sorted(paths))
+            )
+            out.append(_with_scan_identity(scan) if with_ident else scan)
+        return out
+
+    if not has_dv:
+        return reduce(
+            lambda a, c: a.unionByName(c), _branches(chosen, identity)
+        )
+    aff = [k for k in chosen
+           if os.path.basename(all_files[k]) in affected]
+    clean = [k for k in chosen
+             if os.path.basename(all_files[k]) not in affected]
+    parts = _branches(clean, identity)
+    if aff:
+        from pyspark.sql import functions as F
+
+        total_dv = sum(e["rows"] for e in dv_sum.values())
+        if total_dv <= _DV_INLINE_MAX and len(aff) <= _DV_INLINE_MAX_FILES:
+            # small DV over FEW files: inline the doomed row indices
+            # as per-file NOT-IN filters — whole-stage-codegen InSet
+            # probes, zero joins, zero broadcast jobs (see
+            # _DV_INLINE_MAX / _DV_INLINE_MAX_FILES for both cliffs)
+            by_ident = _dv_inline_indices(table_dir, version)
+            ident_of = {bn: (i, s) for bn, i, s in ident_rows}
+            for k in aff:
+                path = all_files[k]
+                idxs = by_ident.get(
+                    ident_of[os.path.basename(path)], []
+                )
+                odir = os.path.join(table_dir, k.split("/", 1)[0])
+                scan = (
+                    spark.read.option("basePath", odir)
+                    .schema(schema).parquet(path)
+                )
+                lst = ",".join(map(str, idxs))
+                if identity:
+                    scan = _with_scan_identity(scan)
+                    if idxs:
+                        scan = scan.filter(
+                            F.expr(f"{_DV_RI_COL} NOT IN ({lst})")
+                        )
+                elif idxs:
+                    scan = scan.filter(
+                        F.expr(
+                            f"_metadata.row_index NOT IN ({lst})"
+                        )
+                    )
+                parts.append(scan)
+        else:
+            sub = reduce(
+                lambda a, c: a.unionByName(c), _branches(aff, True)
+            )
+            sub = _apply_dv(spark, sub, table_dir, version,
+                            ident=ident_rows)
+            if not identity:
+                sub = sub.drop(_DV_FP_COL, _DV_RI_COL)
+            parts.append(sub)
+    return reduce(lambda a, c: a.unionByName(c), parts)
+
+
+# Snapshot-PLAN cache (the DeltaLog-snapshot analog): a published
+# version directory is immutable (CAS publish; names carry a uuid4
+# suffix, so a (table_dir, version) pair can never alias different
+# content, even across drop-and-recreate), so the assembled full-
+# snapshot plan can be reused per session instead of re-running footer
+# inference and rebuilding per-file DV NOT-IN literal lists on every
+# read — plan CONSTRUCTION alone measured 0.46 s per read on a
+# 15k-row-DV snapshot (r15; the ivm_view warm path paid it 4x per
+# invocation). LOGICAL PLANS ONLY: no data, rows, or results are
+# cached — every execution of the returned frame still scans the
+# snapshot's parquet. Keyed on the Spark application so a dead
+# session's plans are never resurrected; bounded LRU.
+_SNAPSHOT_PLAN_CACHE: dict = {}
+_SNAPSHOT_PLAN_CACHE_MAX = 64
+
+
+def _snapshot_df(
+    spark: SparkSession, table_dir: str, version: str,
+    buckets: set[str] | None = None,
+    identity: bool = False,
+) -> DataFrame:
+    """Cache-fronted :func:`_snapshot_df_build` — full-snapshot reads
+    (no bucket restriction, no identity columns: the shape every
+    :func:`read_versioned` and replay-no-op path uses) are memoized per
+    (session, table, version); restricted/identity shapes build fresh
+    (their keys would multiply without bounding the win). The DV
+    inline-path tunables ride the key: the built plan's SHAPE depends
+    on them (inline NOT-IN vs broadcast anti-join), they are constants
+    in production (one key), and tests monkeypatch them to force a
+    shape — a stale cached shape must not survive that."""
+    if buckets is not None or identity:
+        return _snapshot_df_build(spark, table_dir, version, buckets,
+                                  identity)
+    key = (spark.sparkContext.applicationId, table_dir, version,
+           _DV_INLINE_MAX, _DV_INLINE_MAX_FILES)
+    hit = _SNAPSHOT_PLAN_CACHE.get(key)
+    if hit is not None:
+        return hit
+    df = _snapshot_df_build(spark, table_dir, version, buckets, identity)
+    if len(_SNAPSHOT_PLAN_CACHE) >= _SNAPSHOT_PLAN_CACHE_MAX:
+        _SNAPSHOT_PLAN_CACHE.pop(next(iter(_SNAPSHOT_PLAN_CACHE)))
+    _SNAPSHOT_PLAN_CACHE[key] = df
+    return df
+
+
+def _snapshot_df_build(
+    spark: SparkSession, table_dir: str, version: str,
+    buckets: set[str] | None = None,
+    identity: bool = False,
+) -> DataFrame:
+    """Assemble a snapshot DataFrame, resolving the manifest when the
+    version is manifest-laid-out: bucket dirs GROUP BY their physical
+    origin version and each group reads as one multi-path scan with
+    ``basePath`` = the origin dir, so the key=value bucket dirs stay
+    real partition directories (PartitionFilters prune natively) and
+    the branch count is the handful of distinct origins. Materialized
+    snapshots read as one partitioned scan, as before.
+
+    ``buckets`` restricts the read to the named bucket dirs (for both
+    manifest and materialized bucketed layouts) — the churn-pruned CDF
+    uses it to scan only buckets whose physical identity changed
+    between two snapshots; an empty restriction yields an empty frame
+    with the snapshot's schema.
+
+    ``identity=True`` keeps the per-row physical identity columns; a
+    deletion-vector-carrying snapshot always assembles at FILE
+    granularity through :func:`_snapshot_df_files`, which scopes the
+    anti-join tax to the DV-affected files only."""
+    import os
+    from functools import reduce
+
+    has_dv = bool(_dv_files(table_dir, version))
+
+    m = _read_manifest(table_dir, version)
+    if _is_file_manifest(m):
+        # plain CoW file manifest: the snapshot is the referenced file
+        # set (bucket restriction is meaningless — no buckets exist);
+        # the file reader owns the DV application
+        return _snapshot_df_files(spark, table_dir, version, set(m),
+                                  identity=identity)
+    if has_dv:
+        # DV tables are plain-layout by contract (delete_versioned
+        # refuses dv=True on bucketed tables), so the bucket
+        # restriction cannot co-occur; the filter below keeps the
+        # invariant honest if that ever changes
+        keys = set(_snapshot_files(table_dir, version))
+        if buckets is not None:
+            keys = {
+                k for k in keys
+                if len(k.split("/")) >= 3 and k.split("/")[-2] in buckets
+            }
+        return _snapshot_df_files(spark, table_dir, version, keys,
+                                  identity=identity)
+    if m is None and buckets is None:
+        scan = spark.read.parquet(os.path.join(table_dir, version))
+        return _with_scan_identity(scan) if identity else scan
+    mapping = _snapshot_buckets(table_dir, version)
+    if not mapping:
+        raise FileNotFoundError(
+            f"no bucket dirs resolvable for {version} under {table_dir}"
+        )
+    all_entries = sorted(mapping.items())
+    if buckets is not None:
+        entries = [(d, o) for d, o in all_entries if d in buckets]
+    else:
+        entries = all_entries
+    if not entries:
+        d0, o0 = all_entries[0]
+        schema = spark.read.parquet(
+            os.path.join(table_dir, o0, d0)
+        ).schema.add(_BUCKET_COL, "integer")
+        if identity:
+            schema = schema.add(_DV_FP_COL, "string").add(
+                _DV_RI_COL, "long"
+            )
+        return spark.createDataFrame([], schema)
+    # The schema is inferred ONCE and pinned on every branch — each
+    # bare spark.read.parquet() runs an eager footer-inference job, and
+    # 64 of them made the first cut of this read 13x the partitioned
+    # scan (SCALING.md, "Versioned read path at deep history"). Uniform
+    # schema across buckets holds by construction — evolution rewrites
+    # every bucket.
+    first_path = os.path.join(table_dir, entries[0][1], entries[0][0])
+    data_schema = spark.read.parquet(first_path).schema
+    full_schema = data_schema.add(_BUCKET_COL, "integer")
+    by_origin: dict[str, list[str]] = {}
+    for d, origin in entries:
+        by_origin.setdefault(origin, []).append(d)
+    parts = []
+    for origin, dirs in sorted(by_origin.items()):
+        odir = os.path.join(table_dir, origin)
+        scan = (
+            spark.read.option("basePath", odir)
+            .schema(full_schema)
+            .parquet(*[os.path.join(odir, d) for d in sorted(dirs)])
+        )
+        parts.append(_with_scan_identity(scan) if identity else scan)
+    return reduce(lambda a, c: a.unionByName(c), parts)
+
+
+def _emit_untouched(
+    table_dir: str,
+    current: str | None,
+    vdir: str,
+    untouched: list[str],
+    layout: dict | None,
+) -> None:
+    """Share the base snapshot's untouched buckets into a new version
+    directory, by the table's link mode:
+
+    * ``hardlink`` (default) — POSIX hardlinks, the local fast path;
+    * ``manifest`` — the object-store posture (S3/GCS have no links):
+      a ``_manifest.json`` sidecar maps EVERY bucket dir of the new
+      snapshot to the version directory physically holding its files —
+      rewritten buckets to this version, untouched buckets to wherever
+      the base's manifest already resolved them (references are always
+      one hop to a physical home, never chains). Readers assemble
+      through the manifest; retention/VACUUM count references before
+      deleting (see :func:`_gc_version`).
+    """
+    import json
+    import os
+    import uuid
+
+    mode = (layout or {}).get("link_mode", "hardlink")
+    if mode != "manifest":
+        _link_buckets(
+            os.path.join(table_dir, current) if current else "",
+            vdir, untouched,
+        )
+        return
+    version = os.path.basename(vdir)
+    os.makedirs(vdir, exist_ok=True)
+    manifest = {
+        d: version
+        for d in os.listdir(vdir)
+        if d.startswith(f"{_BUCKET_COL}=")
+    }
+    if current is not None and untouched:
+        base = _snapshot_buckets(table_dir, current)
+        for d in untouched:
+            manifest[d] = base.get(d, current)
+    tmp = os.path.join(vdir, f".{_MANIFEST}.{uuid.uuid4().hex[:8]}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(vdir, _MANIFEST))
+
+
+def _gc_version(table_dir: str, stale: str, retained: list[str]) -> None:
+    """Physically reclaim a history-pruned (or debris) version directory
+    UNDER REFERENCE COUNTING: bucket dirs that a retained version's
+    manifest still resolves into survive; everything else — including
+    the stale version's own sidecars — goes, and the directory goes
+    entirely when nothing references it. Hardlink/plain tables have no
+    manifests, so nothing is referenced and this degrades to rmtree
+    (the pre-manifest behavior)."""
+    import os
+    import shutil
+
+    sdir = os.path.join(table_dir, stale)
+    if not os.path.isdir(sdir):
+        return
+    referenced: set[str] = set()
+    for v in retained:
+        m = _read_manifest(table_dir, v)
+        if m:
+            # bucket keys name dirs inside the stale version; plain
+            # FILE keys are "<origin>/<fname>" — the referenced entry
+            # is the file name within the origin dir
+            referenced |= {
+                (d.split("/", 1)[1] if "/" in d else d)
+                for d, o in m.items() if o == stale
+            }
+    if not referenced:
+        shutil.rmtree(sdir, ignore_errors=True)
+        return
+    for entry in os.listdir(sdir):
+        if entry in referenced:
+            continue
+        p = os.path.join(sdir, entry)
+        try:
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+            else:
+                os.unlink(p)
+        except OSError:
+            pass
+
+
+def _link_tree(src: str, dst: str) -> None:
+    """Hardlink every data file of a snapshot directory into ``dst``,
+    preserving the (bucket) subdirectory structure. Zero bytes copied;
+    link targets are immutable by the versioned-table convention."""
+    import os
+
+    for root, _dirs, files in os.walk(src):
+        # never carry '_'/'.'-prefixed sidecar dirs: they describe the
+        # source commit, and a RESTORE/CLONE is a NEW commit
+        _dirs[:] = [d for d in _dirs if not d.startswith((".", "_"))]
+        rel = os.path.relpath(root, src)
+        out = dst if rel == "." else os.path.join(dst, rel)
+        os.makedirs(out, exist_ok=True)
+        for fname in files:
+            if fname.startswith((".", "_")):
+                continue
+            os.link(os.path.join(root, fname), os.path.join(out, fname))
+
+
+def clone_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    dest_dir: str,
+    version: str | None = None,
+) -> DataFrame:
+    """Zero-copy CLONE of a versioned table (Delta's shallow CLONE made
+    durable by hardlinks): the chosen snapshot (CURRENT by default, or
+    any retained version) becomes version 1 of a NEW table at
+    ``dest_dir`` without copying a byte — every data file is a
+    hardlink, safe because snapshots are immutable and writers only
+    ever create new version directories. The clone then evolves
+    independently: upserts/deletes on either table never touch shared
+    inodes in place. Layout sidecars (bucket scheme) carry over;
+    replay watermarks do NOT (a clone is a new logical stream target —
+    carrying them would silently no-op the first replayed batches of
+    whatever pipeline adopts the clone).
+
+    Single-filesystem scope like the rest of the hardlink machinery;
+    the object-store equivalent is manifest-reference copying."""
+    import json
+    import os
+    import uuid
+
+    if version is None:
+        version = _current_version(table_dir)
+        if version is None:
+            raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    elif version not in list_versions(table_dir):
+        raise FileNotFoundError(
+            f"version {version!r} not retained under {table_dir}"
+        )
+    if _current_version(dest_dir) is not None or list_versions(dest_dir):
+        raise ValueError(f"clone target {dest_dir} already holds a table")
+    os.makedirs(dest_dir, exist_ok=True)
+    layout = _table_layout(table_dir)
+    if layout is not None:
+        with open(os.path.join(dest_dir, _LAYOUT_SIDECAR), "w") as f:
+            json.dump(layout, f)
+    if _plain_link_mode(table_dir) != "hardlink":
+        with open(os.path.join(dest_dir, _PLAIN_LAYOUT), "w") as f:
+            json.dump({"link_mode": _plain_link_mode(table_dir)}, f)
+    new_version = f"v-{1:06d}-{uuid.uuid4().hex[:8]}"
+    m = _read_manifest(table_dir, version)
+    if m is None:
+        _link_tree(os.path.join(table_dir, version),
+                   os.path.join(dest_dir, new_version))
+    elif _is_file_manifest(m):
+        # plain CoW file manifest: resolve each referenced file and
+        # link it flat — the clone's v1 is fully materialized (its
+        # references would otherwise dangle across tables)
+        nvdir = os.path.join(dest_dir, new_version)
+        os.makedirs(nvdir, exist_ok=True)
+        for key in sorted(m):
+            src = os.path.join(table_dir, key)
+            os.link(src, os.path.join(nvdir, os.path.basename(src)))
+    else:
+        # manifest layout: resolve every bucket to its physical home and
+        # link from there — the clone's v1 is fully materialized (its
+        # manifest references would otherwise dangle across tables);
+        # subsequent upserts on the clone write manifests again
+        for d, origin in sorted(m.items()):
+            _link_tree(os.path.join(table_dir, origin, d),
+                       os.path.join(dest_dir, new_version, d))
+    # drop the source's txn sidecar if the walk brought structure over
+    # (it skips _-prefixed files, so nothing to remove — publish with
+    # EMPTY marks by design)
+    src_dv = _dv_files(table_dir, version)
+    if src_dv:
+        # the cloned snapshot's deletion vector is part of its content:
+        # hardlinked files share inodes, so the DV's identities resolve
+        # in the clone exactly as in the source
+        ddir = _dv_path(dest_dir, new_version)
+        os.makedirs(ddir, exist_ok=True)
+        for p in src_dv:
+            os.link(p, os.path.join(ddir, os.path.basename(p)))
+        sp = os.path.join(_dv_path(table_dir, version), _DV_SUMMARY)
+        if os.path.exists(sp):
+            os.link(sp, os.path.join(ddir, _DV_SUMMARY))
+    _publish_version(dest_dir, new_version, {}, keep_versions=1,
+                     expected_base=None,
+                     operation=f"CLONE {table_dir}@{version}")
+    return read_versioned(spark, dest_dir)
+
+
+def _relink_snapshot(table_dir: str, version: str,
+                     new_version: str) -> None:
+    """Materialize ``version``'s content as a brand-new version
+    directory ``new_version`` WITHOUT copying data — the zero-copy
+    building block of RESTORE. Three postures, matching the write
+    layouts: plain CoW manifest tables get a file manifest resolving every file
+    to its physical home (one hop kept), bucketed manifest tables get
+    a bucket manifest, everything else a hardlink tree."""
+    import json as _json
+    import os
+    import uuid
+
+    layout = _table_layout(table_dir)
+    if layout is None and _plain_link_mode(table_dir) == "manifest":
+        rm = _read_manifest(table_dir, version)
+        if rm is None:
+            vdir_r = os.path.join(table_dir, version)
+            rm = {
+                f"{version}/{fn}": version
+                for fn in sorted(os.listdir(vdir_r))
+                if not fn.startswith((".", "_"))
+                and os.path.isfile(os.path.join(vdir_r, fn))
+            }
+        nvdir = os.path.join(table_dir, new_version)
+        os.makedirs(nvdir, exist_ok=True)
+        mtmp = os.path.join(
+            nvdir, f".{_MANIFEST}.{uuid.uuid4().hex[:8]}.tmp"
+        )
+        with open(mtmp, "w") as f:
+            _json.dump(rm, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(mtmp, os.path.join(nvdir, _MANIFEST))
+    elif (layout or {}).get("link_mode") == "manifest":
+        resolved = _snapshot_buckets(table_dir, version)
+        nvdir = os.path.join(table_dir, new_version)
+        os.makedirs(nvdir, exist_ok=True)
+        mtmp = os.path.join(nvdir, f".{_MANIFEST}.{uuid.uuid4().hex[:8]}.tmp")
+        with open(mtmp, "w") as f:
+            _json.dump(resolved, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(mtmp, os.path.join(nvdir, _MANIFEST))
+    else:
+        _link_tree(os.path.join(table_dir, version),
+                   os.path.join(table_dir, new_version))
+
+
+def restore_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    version: str,
+    keep_versions: int = 2,
+) -> DataFrame:
+    """RESTORE: make a retained older snapshot the CURRENT one again
+    (Delta's RESTORE TO VERSION), as a roll-forward — the restored data
+    is hardlinked into a brand-new version directory and published
+    through the same CAS commit, so history stays append-only and
+    in-flight readers are never yanked.
+
+    Replay watermarks are CARRIED FORWARD from the current snapshot,
+    not reset to the restored one's: a restore undoes DATA, not replay
+    protection — resetting the watermark would let an at-least-once
+    stream re-apply batches it already applied (double-count), which is
+    never what a rollback means.
+
+    Derived :func:`..operators.versioning.table_changes` answers
+    across the restore while both endpoints are retained."""
+    import os
+    import uuid
+
+    import shutil
+
+    last_err: ConcurrentWriteError | None = None
+    for _attempt in range(3):
+        if version not in list_versions(table_dir):
+            raise FileNotFoundError(
+                f"version {version!r} not retained under {table_dir} "
+                f"(have: {list_versions(table_dir)})"
+            )
+        try:
+            current, marks = _read_commit_state(table_dir)
+        except ConcurrentWriteError as err:
+            last_err = err
+            continue
+        seq = int(current.split("-")[1]) + 1 if current else 1
+        new_version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+        _relink_snapshot(table_dir, version, new_version)
+        try:
+            _publish_version(table_dir, new_version, marks, keep_versions,
+                             expected_base=current,
+                             operation=f"RESTORE {version}",
+                             dv_base=version)
+            return read_versioned(spark, table_dir)
+        except ConcurrentWriteError as err:
+            # same contract as every other writer: drop the stale link
+            # tree (leaving it would be exactly the debris vacuum exists
+            # for) and retry against the new CURRENT
+            shutil.rmtree(os.path.join(table_dir, new_version),
+                          ignore_errors=True)
+            last_err = err
+    raise last_err
+
+
+def _alter_schema_versioned(spark: SparkSession, table_dir: str,
+                            column: str, transform, operation: str,
+                            keep_versions: int) -> DataFrame:
+    """Shared RENAME/DROP COLUMN writer: a FULL-REWRITE commit of the
+    transformed snapshot through the standard CAS publish. The
+    reference reshapes every incoming FRAME to a fixed target schema
+    (monarch_etl/schema.py:28 prune/complete/reorder); here the TABLE
+    schema itself evolves, with history — each retained version keeps
+    its own schema for time travel and RESTORE (this engine
+    has no column-mapping layer, so like Delta WITHOUT the
+    columnMapping table feature the physical files must be rewritten;
+    with it the same API would become a metadata commit). The rewrite
+    reads DV-resolved, so deletes materialize away (DV entries drop via
+    the no-shared-identity carry)."""
+    import os
+    import shutil
+    import uuid
+
+    if _table_layout(table_dir) is not None:
+        raise NotImplementedError(
+            f"{operation}: bucket-partitioned tables pin their layout "
+            "to column identities (bucket spec, per-bucket pruning); "
+            "rewrite through a fresh table instead"
+        )
+    last_err: ConcurrentWriteError | None = None
+    for _attempt in range(3):
+        try:
+            current, marks = _read_commit_state(table_dir)
+        except ConcurrentWriteError as err:
+            last_err = err
+            continue
+        if current is None:
+            raise FileNotFoundError(
+                f"no published snapshot under {table_dir}"
+            )
+        base = _snapshot_df(spark, table_dir, current)
+        out = transform(base)
+        seq = int(current.split("-")[1]) + 1
+        version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+        vdir = os.path.join(table_dir, version)
+        out.write.mode("error").parquet(vdir)
+        try:
+            _publish_version(table_dir, version, marks, keep_versions,
+                             expected_base=current, operation=operation)
+            return read_versioned(spark, table_dir)
+        except ConcurrentWriteError as err:
+            shutil.rmtree(vdir, ignore_errors=True)
+            last_err = err
+    raise last_err
+
+
+def rename_column(spark: SparkSession, table_dir: str, old: str, new: str,
+                  keep_versions: int = 2) -> DataFrame:
+    """``ALTER TABLE RENAME COLUMN old TO new`` for a versioned
+    table, as a full-rewrite commit (see
+    :func:`_alter_schema_versioned`). Guards: the source column must
+    exist and the target must not collide. Time travel still reads
+    pre-rename versions under their historical name; RESTORE across
+    the rename restores the historical schema."""
+
+    def transform(base: DataFrame) -> DataFrame:
+        if old not in base.columns:
+            raise ValueError(
+                f"rename_column: {old!r} not in {base.columns}"
+            )
+        if new in base.columns:
+            raise ValueError(
+                f"rename_column: target {new!r} already a column "
+                f"({base.columns})"
+            )
+        return base.withColumnRenamed(old, new)
+
+    return _alter_schema_versioned(
+        spark, table_dir, old, transform,
+        f"RENAME COLUMN {old} TO {new}", keep_versions,
+    )
+
+
+def drop_column(spark: SparkSession, table_dir: str, column: str,
+                keep_versions: int = 2) -> DataFrame:
+    """``ALTER TABLE DROP COLUMN column`` for a versioned table, as
+    a full-rewrite commit (see :func:`_alter_schema_versioned`).
+    Guards: the column must exist and must not be the last column.
+    The data disappears from the new version only — time travel and
+    RESTORE still see it in retained history."""
+
+    def transform(base: DataFrame) -> DataFrame:
+        if column not in base.columns:
+            raise ValueError(
+                f"drop_column: {column!r} not in {base.columns}"
+            )
+        if len(base.columns) == 1:
+            raise ValueError(
+                f"drop_column: {column!r} is the last column"
+            )
+        return base.drop(column)
+
+    return _alter_schema_versioned(
+        spark, table_dir, column, transform,
+        f"DROP COLUMN {column}", keep_versions,
+    )
+
+
+def _maybe_auto_compact(
+    spark: SparkSession,
+    table_dir: str,
+    version: str,
+    min_files: int,
+    keep_versions: int,
+    target_bytes: int = 128 * 1024 * 1024,
+) -> None:
+    """Post-publish auto-compaction trigger: count the just-published
+    snapshot's sub-``target/2`` debris files (one listing + getsize
+    pass, no data read) and run the incremental bin-pack when they
+    reach ``min_files``. Best-effort by contract — a concurrent
+    commit's CAS conflict is a silent back-off (the next trigger
+    packs), and the published upsert is already durable either way."""
+    import os
+
+    sizes = [
+        os.path.getsize(p)
+        for p in _snapshot_files(table_dir, version).values()
+    ]
+    n_small = sum(1 for s in sizes if s < target_bytes // 2)
+    if n_small >= max(2, min_files):
+        compact_versioned(
+            spark, table_dir, target_bytes=target_bytes,
+            keep_versions=keep_versions, incremental=True,
+        )
+    # deletion-vector self-healing (round 14): once deletes accrete
+    # past _DV_PURGE_DENSITY of a file's rows, rewrite that file —
+    # otherwise the anti-join read tax grows without bound on
+    # delete-heavy tables. Same best-effort contract as the bin-pack.
+    cur = _current_version(table_dir)
+    if cur is not None and _dv_summary(table_dir, cur):
+        reorg_purge_versioned(
+            spark, table_dir, min_density=_DV_PURGE_DENSITY,
+            keep_versions=keep_versions,
+        )
+
+
+def _stamp_op(table_dir: str, version: str, operation: str) -> None:
+    """Write a version's operation-name sidecar (atomic tmp+rename) —
+    the ``DESCRIBE HISTORY`` 'operation' column. Shared by
+    :func:`_publish_version` and the group writer (whose member
+    versions publish through the group pointer instead)."""
+    import json
+    import os
+    import uuid
+
+    tmp = os.path.join(table_dir, version,
+                       f".{_OP_SIDECAR}.{uuid.uuid4().hex[:8]}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"operation": operation}, f)
+    os.replace(tmp, os.path.join(table_dir, version, _OP_SIDECAR))
+
+
+def _publish_version(
+    table_dir: str,
+    version: str,
+    marks: dict[str, int],
+    keep_versions: int,
+    expected_base: str | None | object = _UNCHECKED,
+    operation: str = "WRITE",
+    dv_base: str | None | object = _UNCHECKED,
+) -> None:
+    """Commit an already-written version directory: persist the txn
+    watermark sidecar INSIDE it, then — under the commit lock — verify
+    ``expected_base`` still names the CURRENT snapshot (compare), swap
+    the ``_CURRENT`` pointer (the atomic commit point), and prune
+    history. Shared by every versioned writer (upsert, compaction) so
+    the publish protocol cannot fork.
+
+    ``expected_base`` is the version the writer merged against
+    (``None`` = the writer saw an unpublished table); if another writer
+    committed in between, :class:`ConcurrentWriteError` is raised and
+    NOTHING is swapped — the caller re-merges. The flock critical
+    section is read+compare+rename only; it is auto-released if the
+    process dies inside it."""
+    import fcntl
+    import json
+    import os
+    import shutil
+    import uuid
+
+    # operation-name sidecar (DESCRIBE HISTORY's 'operation' column) —
+    # best-effort diagnostics like the commit timestamp, never a
+    # publish gate
+    _stamp_op(table_dir, version, operation)
+    # Deletion-vector carry, BEFORE publish and NOT best-effort: a
+    # writer that carried files from a DV-bearing base must keep their
+    # deletion entries or deleted rows resurrect. ``dv_base`` defaults
+    # to the merge base; RESTORE overrides it with the restored
+    # version (a rollback adopts THAT snapshot's DV, never CURRENT's).
+    carry_base = (
+        (expected_base if isinstance(expected_base, str) else None)
+        if dv_base is _UNCHECKED else dv_base
+    )
+    _carry_dv(table_dir, version, base_version=carry_base)
+    # Per-file column stats sidecar, BEFORE the lock (footer IO has no
+    # business inside the flock critical section). expected_base gives
+    # the carry-forward source; _UNCHECKED/None publishes sweep every
+    # footer (first writes, clones).
+    _collect_stats(
+        table_dir, version,
+        base_version=(
+            expected_base if isinstance(expected_base, str) else None
+        ),
+    )
+    if marks:
+        # non-transactional writers CARRY existing watermarks forward —
+        # dropping them would silently re-open already-applied replays
+        with open(os.path.join(table_dir, version, _TXN_SIDECAR), "w") as f:
+            json.dump(marks, f)
+            f.flush()
+            os.fsync(f.fileno())
+
+    tmp = os.path.join(table_dir, f"._CURRENT.{uuid.uuid4().hex[:8]}.tmp")
+    with open(tmp, "w") as f:
+        f.write(version)
+        f.flush()
+        os.fsync(f.fileno())
+
+    lock_fd = os.open(os.path.join(table_dir, _COMMIT_LOCK),
+                      os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        fcntl.flock(lock_fd, fcntl.LOCK_EX)
+        if expected_base is not _UNCHECKED:
+            now_current = _current_version(table_dir)
+            if now_current != expected_base:
+                os.unlink(tmp)
+                raise ConcurrentWriteError(
+                    f"{table_dir}: merged against "
+                    f"{expected_base or '<empty>'} but CURRENT is now "
+                    f"{now_current or '<empty>'} — a concurrent writer "
+                    "committed; re-merge and retry"
+                )
+        # commit timestamp sidecar BEFORE the swap (still under the
+        # lock): readers time-travel by TIMESTAMP AS OF against it, and
+        # writing it pre-swap means a published version always carries
+        # one (a crash between sidecar and swap leaves only debris).
+        # Monotonic along history because publishes serialize on this
+        # lock. Spark ignores _-prefixed files.
+        import time as _time
+
+        ts_tmp = os.path.join(table_dir, version,
+                              f".{_COMMITTED_AT}.{uuid.uuid4().hex[:8]}.tmp")
+        with open(ts_tmp, "w") as f:
+            f.write(repr(_time.time()))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(ts_tmp, os.path.join(table_dir, version, _COMMITTED_AT))
+        os.replace(tmp, os.path.join(table_dir, _CURRENT_POINTER))  # commit
+
+        # Retention prunes from the PUBLISH LEDGER, never the directory
+        # listing: a raw listing cannot tell retained history from a
+        # crashed writer's debris, and the round-9 form could delete a
+        # real previous snapshot while keeping half-written debris
+        # (round-10 review finding). Debris is vacuum_versioned's job.
+        hist = _read_history(table_dir)
+        if hist is None:
+            # pre-ledger table: seed from the snapshot we replaced (the
+            # only name KNOWN to be published); older siblings are left
+            # for vacuum rather than guessed at
+            hist = [expected_base] if (
+                expected_base is not _UNCHECKED and expected_base
+            ) else []
+        hist = [v for v in hist if v != version] + [version]
+        keep = hist[max(0, len(hist) - max(1, keep_versions)):]
+        pruned = hist[: len(hist) - len(keep)]
+        htmp = os.path.join(table_dir, f".{_HISTORY}.{uuid.uuid4().hex[:8]}.tmp")
+        with open(htmp, "w") as f:
+            f.write("\n".join(keep) + "\n")
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(htmp, os.path.join(table_dir, _HISTORY))
+        for stale in pruned:
+            # reference-counted reclaim: a manifest-layout table's
+            # retained versions may still resolve bucket dirs into the
+            # pruned version; those dirs survive until unreferenced
+            _gc_version(table_dir, stale, keep)
+    finally:
+        os.close(lock_fd)
+
+
+def compact_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    target_bytes: int = 128 * 1024 * 1024,
+    keep_versions: int = 2,
+    incremental: bool = False,
+    min_bytes: int | None = None,
+) -> dict:
+    """Small-file compaction for a versioned table, published through
+    the same atomic pointer swap as the upserts it cleans up after.
+
+    Every incremental writer accumulates files — a streaming
+    foreachBatch upsert publishes a version per micro-batch, and at
+    parallelism p each may carry up to p part files. Reads then pay
+    per-file costs (open, footer decode, scheduler task per split) that
+    dwarf the data: the classic small-files problem. This rewrites the
+    CURRENT snapshot into ``ceil(total_bytes / target_bytes)`` files of
+    ~``target_bytes`` each (the row-group-friendly size parquet scanners
+    want) and publishes it as a new version: readers see the old or the
+    new snapshot, never a mixture, and txn watermarks are carried
+    forward so replay protection survives compaction.
+
+    A no-op (returns without writing) when the current layout already
+    has ≤ the target file count — safe to run on a schedule. Returns a
+    report dict: files/bytes before and after, and whether it acted.
+
+    ``incremental=True`` (round 12) is Delta's OPTIMIZE bin-packing
+    instead of the full re-layout: only files SMALLER than
+    ``min_bytes`` (default ``target_bytes // 2``) rewrite — packed
+    into ~``target_bytes`` outputs — and every already-right-sized
+    file carries into the new version untouched (hardlink, or manifest
+    reference on manifest-pinned tables). This is the steady-state
+    maintenance a COPY-ON-WRITE table needs: each CoW commit accretes
+    a churn-sized file, and the full rewrite is a non-option at scale
+    precisely because the table is big — incremental compaction's cost
+    tracks the accreted debris, not the table. Carried files keep
+    their physical identity, so CLUSTERING SURVIVES: a range-sorted
+    file from an earlier OPTIMIZE stays sorted (only the packed debris
+    file spans mixed ranges), stats-sidecar entries carry forward
+    without footer reads, and file-identity churn pruning
+    (CDF/pump) sees only the debris as changed. No-op when packing
+    the small set wouldn't reduce the file count.
+
+    Scale: the rewrite is one ``repartition`` shuffle of the snapshot —
+    the price of re-coalescing — and the decision is made from the file
+    listing alone (no data read). At object-store scale the same
+    listing comes from the FileIndex/catalog instead of os.walk.
+    """
+    import math
+    import os
+    import uuid
+
+    current = _current_version(table_dir)
+    if current is None:
+        raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    if _table_layout(table_dir) is not None:
+        # bucket-partitioned tables are one-file-per-bucket BY
+        # CONSTRUCTION (every merge repartitions touched buckets to one
+        # file; untouched buckets are hardlinks to already-compact
+        # files) — a blind repartition rewrite here would destroy the
+        # pruning layout for zero file-count gain
+        return {"compacted": False, "reason": "bucket-partitioned layout "
+                "is single-file-per-bucket by construction"}
+    # manifest-resolved: a CoW file-manifest snapshot's files live
+    # across version dirs; compaction is in fact the maintenance that
+    # RE-MATERIALIZES such a snapshot (the rewrite carries nothing)
+    snap = _snapshot_files(table_dir, current)
+    sizes = {k: os.path.getsize(p) for k, p in snap.items()}
+    total = sum(sizes.values())
+    report = {
+        "files_before": len(snap),
+        "bytes_before": total,
+        "compacted": False,
+    }
+    carry: dict[str, str] = {}
+    if incremental:
+        min_b = min_bytes if min_bytes is not None else target_bytes // 2
+        small = {k for k, s in sizes.items() if s < min_b}
+        small_bytes = sum(sizes[k] for k in small)
+        n_out = max(1, math.ceil(small_bytes / max(1, target_bytes)))
+        report.update(target_files=n_out, small_files=len(small))
+        if len(small) <= n_out:
+            return report  # packing wouldn't reduce the file count
+        report["bytes_rewritten"] = small_bytes
+        to_rewrite = _snapshot_df_files(spark, table_dir, current, small)
+        if _BUCKET_COL in to_rewrite.columns:
+            to_rewrite = to_rewrite.drop(_BUCKET_COL)
+        carry = {k: snap[k] for k in snap if k not in small}
+    else:
+        n_out = max(1, math.ceil(total / max(1, target_bytes)))
+        report.update(target_files=n_out)
+        if len(snap) <= n_out:
+            return report
+        report["bytes_rewritten"] = total
+        to_rewrite = _snapshot_df(spark, table_dir, current)
+
+    marks = txn_watermarks(table_dir)
+    seq = int(current.split("-")[1]) + 1
+    version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+    vdir = os.path.join(table_dir, version)
+    to_rewrite.repartition(n_out).write.mode("error").parquet(vdir)
+    if carry:
+        if _plain_link_mode(table_dir) == "manifest":
+            _emit_file_manifest(table_dir, version, carry)
+        else:
+            for key in sorted(carry):
+                src = carry[key]
+                dst = os.path.join(vdir, os.path.basename(src))
+                if os.path.exists(dst):
+                    dst = os.path.join(
+                        vdir,
+                        f"pack-{uuid.uuid4().hex[:8]}-"
+                        f"{os.path.basename(src)}",
+                    )
+                os.link(src, dst)
+    try:
+        _publish_version(table_dir, version, marks, keep_versions,
+                         expected_base=current,
+                         operation="COMPACT (incremental)" if incremental else "COMPACT")
+    except ConcurrentWriteError:
+        # an upsert committed while we rewrote: our layout is stale.
+        # Compaction is best-effort housekeeping — back off (the next
+        # scheduled run compacts the new snapshot) instead of retrying
+        # a corpus-sized rewrite under contention.
+        import shutil
+
+        shutil.rmtree(vdir, ignore_errors=True)
+        report["conflict"] = True
+        return report
+    new_files = _snapshot_files(table_dir, version)
+    report.update(
+        files_after=len(new_files),
+        bytes_after=sum(os.path.getsize(f) for f in new_files.values()),
+        compacted=True,
+        version=version,
+    )
+    return report
+
+
+# density at which auto-compaction rewrites a DV-affected file: once
+# half a file's rows are deleted, every read of it wastes more scan
+# than the rewrite costs, and the anti-join tax never self-heals
+# otherwise (round-13 verdict #6: no auto-purge policy)
+_DV_PURGE_DENSITY = 0.5
+
+
+def reorg_purge_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    min_density: float = 0.0,
+    keep_versions: int = 2,
+) -> dict:
+    """Delta's ``REORG TABLE ... APPLY (PURGE)``: rewrite exactly the
+    data files whose deletion-vector density (DV rows / file rows) is
+    ``>= min_density``, materializing their deletes away; every other
+    file — clean files AND DV files below the threshold — carries into
+    the new version untouched (hardlink/manifest), keeping its physical
+    identity so clustering, stats carry-forward, and churn pruning
+    survive. The default threshold 0.0 purges every DV-carrying file.
+
+    Cost tracks the purged files, never the table: planning reads the
+    O(files) DV summary + stats sidecar (no data IO) and the rewrite
+    scans only the target files (DV-filtered by the scoped read).
+    Partial purges are exact: below-threshold files' DV entries carry
+    forward automatically (:func:`_carry_dv`). Best-effort under
+    contention like compaction — a CAS conflict backs off with
+    ``{"conflict": True}``."""
+    import math  # noqa: F401  (parity with compact's imports)
+    import os
+    import uuid
+
+    current = _current_version(table_dir)
+    if current is None:
+        raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    report: dict = {"purged": False, "purged_files": 0, "dv_rows_purged": 0}
+    if not _dv_files(table_dir, current):
+        return report
+    # fail-closed identity resolution (shared with the read path): a
+    # purge planned over orphaned identities would silently RESURRECT
+    # deleted rows by carrying their files while dropping the DV
+    _ident, _aff, dvsum = _dv_resolved(table_dir, current)
+    if not dvsum:
+        return report
+    snap = _snapshot_files(table_dir, current)
+    from . import filestats
+
+    stats = filestats.read_stats(table_dir, current)
+    ident_to_key: dict[tuple, str] = {}
+    rows_of: dict[tuple, int | None] = {}
+    for k, p in snap.items():
+        st = os.stat(p)
+        ident_to_key[(st.st_ino, st.st_size)] = k
+    if stats is not None and set(stats.get("files", {})) == set(snap):
+        for k, e in stats["files"].items():
+            rows_of[(e.get("ino"), e.get("size"))] = e.get("rows")
+    targets: set[str] = set()
+    for ident, e in dvsum.items():
+        n = rows_of.get(ident)
+        if not n:
+            # unknown row count (missing/stale stats sidecar): read the
+            # parquet footer's num_rows (metadata-only, no data IO)
+            # instead of assuming full density — under the ≥50%
+            # auto-trigger the 1.0 fallback would silently rewrite
+            # every DV-carrying file on every auto_compact commit,
+            # degenerating merge-on-read into copy-on-write
+            try:
+                import pyarrow.parquet as pq
+
+                n = pq.ParquetFile(
+                    snap[ident_to_key[ident]]
+                ).metadata.num_rows
+            except Exception:  # noqa: BLE001 — footer unreadable
+                n = None
+        # still unknown: fully-dense fallback — the purge is always
+        # correct, only possibly over-eager
+        density = (e["rows"] / n) if n else 1.0
+        if density >= min_density:
+            targets.add(ident_to_key[ident])
+            report["dv_rows_purged"] += e["rows"]
+    report["purged_files"] = len(targets)
+    if not targets:
+        report["dv_rows_purged"] = 0
+        return report
+
+    to_rewrite = _snapshot_df_files(spark, table_dir, current, targets)
+    if _BUCKET_COL in to_rewrite.columns:
+        to_rewrite = to_rewrite.drop(_BUCKET_COL)
+    carry = {k: snap[k] for k in snap if k not in targets}
+    marks = txn_watermarks(table_dir)
+    seq = int(current.split("-")[1]) + 1
+    version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+    vdir = os.path.join(table_dir, version)
+    # like-for-like file count for the purged region (see the CoW
+    # upsert's repartition-not-coalesce note)
+    to_rewrite.repartition(max(1, len(targets))).write.mode(
+        "error"
+    ).parquet(vdir)
+    if carry:
+        if _plain_link_mode(table_dir) == "manifest":
+            _emit_file_manifest(table_dir, version, carry)
+        else:
+            for key in sorted(carry):
+                src = carry[key]
+                dst = os.path.join(vdir, os.path.basename(src))
+                if os.path.exists(dst):
+                    dst = os.path.join(
+                        vdir,
+                        f"purge-{uuid.uuid4().hex[:8]}-"
+                        f"{os.path.basename(src)}",
+                    )
+                os.link(src, dst)
+    try:
+        _publish_version(table_dir, version, marks, keep_versions,
+                         expected_base=current,
+                         operation="REORG (purge)")
+    except ConcurrentWriteError:
+        import shutil
+
+        shutil.rmtree(vdir, ignore_errors=True)
+        report["conflict"] = True
+        return report
+    report.update(purged=True, version=version)
+    return report
 
 
 def upsert_dbapi(
@@ -367,3 +3787,815 @@ def reconcile_inventory(
     return upsert_parquet(
         spark, inventory_path, catalog_rows(counts, processed_at), ["available_date"]
     )
+
+
+# ---------------------------------------------------------------------------
+# Multi-table group commit: N versioned tables published by ONE atomic
+# pointer swap — the transaction primitive for stores whose invariant
+# spans tables (the dedup index's docs/bands/bloom). Round-11 verdict
+# task: the per-table commits left a crash window (docs advanced, bands
+# not) whose replay-heal algebra needed careful reasoning; a group
+# commit collapses it to all-or-nothing.
+# ---------------------------------------------------------------------------
+
+_GROUP_POINTER = "_CURRENT_GROUP"
+_GROUP_LOCK = "._GROUP_LOCK"
+
+
+def group_state(group_dir: str) -> dict | None:
+    """The committed state of a table group: ``{"versions": {table:
+    version}, "marks": {app_id: txn_version}, "history": {table:
+    [versions...]}}`` — ONE JSON document, swapped atomically, so every
+    field is from the same commit. ``None`` when nothing is published."""
+    import json
+    import os
+
+    try:
+        with open(os.path.join(group_dir, _GROUP_POINTER)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def read_versioned_group(
+    spark: SparkSession, group_dir: str, table: str,
+    version: str | None = None,
+) -> DataFrame:
+    """Read one member table of a group at its group-committed version
+    (or a retained older version by name). Raises FileNotFoundError if
+    the group, the table, or the requested version is not published —
+    same contract as :func:`read_versioned`."""
+    import os
+
+    state = group_state(group_dir)
+    if state is None or table not in state.get("versions", {}):
+        raise FileNotFoundError(
+            f"no published snapshot for table {table!r} under {group_dir}"
+        )
+    name = version if version is not None else state["versions"][table]
+    if name not in state.get("history", {}).get(table, [name]):
+        raise FileNotFoundError(
+            f"version {name} of {table!r} is not retained under {group_dir}"
+        )
+    path = os.path.join(group_dir, table, name)
+    if not os.path.isdir(path):
+        # the pointer dangles — the member directory was dropped out of
+        # band (e.g. "delete the bloom table and re-ingest"); treat as
+        # unpublished, same contract as list_versions' existence filter
+        raise FileNotFoundError(
+            f"snapshot directory {path} is missing for table {table!r}"
+        )
+    return spark.read.parquet(path)
+
+
+def group_txn_watermarks(group_dir: str) -> dict[str, int]:
+    """Replay watermarks of the group's CURRENT commit (one map for the
+    whole group — a batch either landed in every member table or in
+    none, so one watermark is the correct granularity)."""
+    state = group_state(group_dir)
+    return dict(state.get("marks", {})) if state else {}
+
+
+def _publish_group(
+    group_dir: str,
+    new_versions: dict[str, str],
+    marks: dict[str, int],
+    keep_versions: int,
+    expected_versions: dict[str, str] | None,
+    seed_history: dict[str, list[str]] | None = None,
+) -> None:
+    """Commit already-written version directories for N member tables
+    with ONE atomic pointer swap. Under the group lock: verify the
+    stored versions map still equals ``expected_versions`` (the CAS —
+    ``None`` means the writer saw an unpublished group), merge the new
+    versions over the carried-forward ones, rewrite histories, swap the
+    group pointer, then prune retention. A crash anywhere before the
+    ``os.replace`` leaves every member table at its previous version
+    (debris only); after it, every member is advanced — there is no
+    state in which some tables moved and others did not."""
+    import fcntl
+    import json
+    import os
+    import shutil
+    import uuid
+
+    prior = group_state(group_dir) or {}
+    lock_fd = os.open(os.path.join(group_dir, _GROUP_LOCK),
+                      os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        fcntl.flock(lock_fd, fcntl.LOCK_EX)
+        now = group_state(group_dir)
+        now_versions = now.get("versions") if now else None
+        if now_versions != expected_versions:
+            raise ConcurrentWriteError(
+                f"{group_dir}: merged against {expected_versions} but "
+                f"group CURRENT is now {now_versions} — a concurrent "
+                "writer committed; re-merge and retry"
+            )
+        import time as _time
+
+        versions = dict(expected_versions or {})
+        versions.update(new_versions)
+        # seed_history: a first publish adopting a pre-group layout
+        # carries the legacy per-table ledgers in the SAME swap (a
+        # post-publish fix-up could clobber a commit that landed in
+        # between; round-11 self-review finding)
+        if seed_history is not None and now is None:
+            history = dict(seed_history)
+        else:
+            history = dict((now or prior).get("history", {}))
+        pruned: list[tuple[str, str]] = []
+        for t, v in new_versions.items():
+            hist = [x for x in history.get(t, []) if x != v] + [v]
+            keep = hist[max(0, len(hist) - max(1, keep_versions)):]
+            pruned += [(t, x) for x in hist[: len(hist) - len(keep)]]
+            history[t] = keep
+        # Monotonic commit counter (round-12): a group consumer keys
+        # its replay watermark on this, because the sum-of-member-
+        # sequences heuristic breaks when a dangling member's rebuild
+        # restarts its numbering. Legacy states (no counter) seed ABOVE
+        # both the heuristic and any watermark already recorded, so
+        # adoption can never regress below a value a consumer has used.
+        prior_state = now or prior
+        if prior_state and "seq" in prior_state:
+            seq = int(prior_state["seq"]) + 1
+        else:
+            legacy = sum(
+                int(v.split("-")[1]) for v in versions.values()
+            )
+            used = [int(m) for m in marks.values()] if marks else [0]
+            seq = max(legacy, max(used)) + 1
+        state = {"versions": versions, "marks": marks,
+                 "history": history, "seq": seq,
+                 "committed_at": _time.time()}
+        tmp = os.path.join(group_dir,
+                           f".{_GROUP_POINTER}.{uuid.uuid4().hex[:8]}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(state, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(group_dir, _GROUP_POINTER))  # commit
+        for t, stale in pruned:
+            shutil.rmtree(os.path.join(group_dir, t, stale),
+                          ignore_errors=True)
+    finally:
+        os.close(lock_fd)
+
+
+def upsert_group_versioned(
+    spark: SparkSession,
+    group_dir: str,
+    batches: dict[str, tuple[DataFrame, list[str]]],
+    keep_versions: int = 2,
+    txn_app_id: str | None = None,
+    txn_version: int | None = None,
+    retries: int = 2,
+    merge_schema: bool = False,
+    deletes: dict[str, DataFrame] | None = None,
+) -> dict[str, str]:
+    """Keyed upsert into N member tables of a group, committed
+    ATOMICALLY: every table's new snapshot becomes visible in one
+    pointer swap, or none does. ``batches`` maps table name to
+    ``(updates, key_cols)``; each table gets the same
+    :func:`merge_upsert` semantics as :func:`upsert_parquet_versioned`.
+    Tables not named in ``batches`` keep their current version in the
+    new commit (a group commit may touch a subset).
+
+    Exactly-once replay is per GROUP: one ``txn_app_id``/``txn_version``
+    watermark covers all member tables, because a batch lands in all of
+    them or in none — the property the dedup index's separate per-table
+    watermarks could not give (docs-committed/bands-crashed left the
+    two tables' watermarks disagreeing and the batch half-applied).
+
+    CAS + retry as in the single-table writer: on conflict the written
+    version directories are removed and every table re-merges from the
+    new group state. A base snapshot pruned mid-merge by a concurrent
+    winner (keep_versions=1) converts to a conflict the same way.
+    Returns the committed ``{table: version}`` map.
+
+    ``deletes`` (round 12) maps a
+    table name to a frame of keys to REMOVE in the same atomic commit:
+    the member's existing rows anti-join the doomed keys (NULL-safe)
+    before the batch merges in, so an upsert+delete pair against one
+    table — or upserts in one member and deletes in another — land
+    together or not at all. A table named only in ``deletes`` gets an
+    empty update batch of its own schema; its ``key_cols`` are the
+    delete frame's columns.
+    """
+    import os
+    import shutil
+    import uuid
+
+    if (txn_app_id is None) != (txn_version is None):
+        raise ValueError("txn_app_id and txn_version must be given together")
+    deletes = dict(deletes or {})
+    if not batches and not deletes:
+        raise ValueError("upsert_group_versioned needs at least one table")
+
+    os.makedirs(group_dir, exist_ok=True)
+    last_err: ConcurrentWriteError | None = None
+    for _attempt in range(max(0, retries) + 1):
+        state = group_state(group_dir)
+        versions = dict(state["versions"]) if state else {}
+        marks = dict(state.get("marks", {})) if state else {}
+        if (
+            txn_app_id is not None
+            and txn_app_id in marks
+            and marks[txn_app_id] >= txn_version
+        ):
+            return versions
+
+        new_versions: dict[str, str] = {}
+        written: list[str] = []
+        try:
+            work: dict[str, tuple[DataFrame | None, list[str] | None]] = {
+                t: (u, k) for t, (u, k) in batches.items()
+            }
+            for t in deletes:
+                work.setdefault(t, (None, None))
+            for t, (updates, key_cols) in work.items():
+                tdir = os.path.join(group_dir, t)
+                cur = versions.get(t)
+                if cur is not None and not os.path.isdir(
+                    os.path.join(tdir, cur)
+                ):
+                    # dangling member (directory dropped out of band,
+                    # e.g. a bloom rebuild): rewrite from scratch, same
+                    # posture as read_versioned_group's existence check
+                    cur = None
+                if updates is None:
+                    # delete-only member: the anti-join survivors ARE
+                    # the new snapshot — no merge window. Running
+                    # merge_upsert keyed on the DELETE frame's columns
+                    # would silently collapse surviving rows whenever
+                    # those columns are not the member's unique key
+                    # (round-12 self-review finding #2: delete-by-
+                    # band-id on a (band, key) table lost rows).
+                    if cur is None:
+                        continue  # nothing exists, nothing to delete
+                    existing = spark.read.parquet(os.path.join(tdir, cur))
+                    kdf = deletes[t].dropDuplicates()
+                    merged = existing.join(
+                        F.broadcast(kdf),
+                        on=_null_safe_cond(existing, kdf,
+                                           list(kdf.columns)),
+                        how="left_anti",
+                    )
+                    seq = int(cur.split("-")[1]) + 1
+                    vname = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+                    vdir = os.path.join(tdir, vname)
+                    merged.write.mode("error").parquet(vdir)
+                    _stamp_op(tdir, vname, "GROUP DELETE")
+                    _collect_stats(tdir, vname, base_version=cur)
+                    new_versions[t] = vname
+                    written.append(vdir)
+                    continue
+                if cur is None:
+                    merged = merge_upsert(updates.limit(0), updates,
+                                          key_cols,
+                                          merge_schema=merge_schema)
+                    seq = 1
+                else:
+                    existing = spark.read.parquet(os.path.join(tdir, cur))
+                    if t in deletes:
+                        # atomic upsert+delete: doomed keys leave in the
+                        # SAME commit the batch lands in (NULL-safe,
+                        # like delete_versioned)
+                        kdf = deletes[t].dropDuplicates()
+                        existing = existing.join(
+                            F.broadcast(kdf),
+                            on=_null_safe_cond(existing, kdf,
+                                               list(kdf.columns)),
+                            how="left_anti",
+                        )
+                    merged = merge_upsert(existing, updates, key_cols,
+                                          merge_schema=merge_schema)
+                    seq = int(cur.split("-")[1]) + 1
+                vname = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+                vdir = os.path.join(tdir, vname)
+                merged.write.mode("error").parquet(vdir)
+                _stamp_op(tdir, vname,
+                          "GROUP MERGE + DELETE" if t in deletes
+                          else "GROUP MERGE")
+                # member stats sidecar (round 12): same per-file column
+                # stats every single-table publish gets — group members
+                # are diffable and file-prunable like single tables
+                _collect_stats(tdir, vname, base_version=cur)
+                new_versions[t] = vname
+                written.append(vdir)
+        except Exception as err:
+            member_gone = any(
+                versions.get(t) is not None
+                and not os.path.isdir(
+                    os.path.join(group_dir, t, versions[t])
+                )
+                for t in set(batches) | set(deletes)
+            )
+            if _base_pruned_error(err) and member_gone:
+                for d in written:
+                    shutil.rmtree(d, ignore_errors=True)
+                last_err = ConcurrentWriteError(
+                    f"{group_dir}: a member base was pruned mid-merge by "
+                    f"a concurrent winner's retention ({err}); re-merging "
+                    "from the new group CURRENT"
+                )
+                continue
+            raise
+
+        if txn_app_id is not None:
+            marks[txn_app_id] = int(txn_version)
+        try:
+            _publish_group(
+                group_dir, new_versions, marks, keep_versions,
+                expected_versions=state["versions"] if state else None,
+            )
+            committed = dict(versions)
+            committed.update(new_versions)
+            return committed
+        except ConcurrentWriteError as err:
+            for d in written:
+                shutil.rmtree(d, ignore_errors=True)
+            last_err = err
+    raise last_err
+
+
+def identity_changed_buckets(
+    table_dir: str, from_version: str, to_version: str
+) -> set[str] | None:
+    """Bucket dirs whose PHYSICAL identity differs between two
+    snapshots — the one definition of "changed" both the churn-pruned
+    CDF and the pump's payload fetch share (duplicating the comparison
+    would let the two drift; round-11 self-review finding #7). ``None``
+    when either endpoint has no bucket identity (plain layout)."""
+    id_old = _bucket_identity(table_dir, from_version)
+    id_new = _bucket_identity(table_dir, to_version)
+    if id_old is None or id_new is None:
+        return None
+    return {
+        d for d in set(id_old) | set(id_new)
+        if id_old.get(d) != id_new.get(d)
+    }
+
+
+def identity_changed_files(
+    table_dir: str, from_version: str, to_version: str
+) -> tuple[set[str], set[str]] | None:
+    """File-level churn pruning for the CDF — the plain-layout analog
+    of :func:`identity_changed_buckets` (round-11 verdict task #6):
+    ``(old_side_keys, new_side_keys)`` of the files NOT physically
+    shared between the two snapshots, or ``None`` when either lacks a
+    stats sidecar (pre-round-12 versions: callers fall back to the full
+    diff).
+
+    Why excluding shared files from BOTH diff sides is EXACT for keyed
+    snapshots: a physically shared file (same inode + size — hardlinked
+    or manifest-referenced carry-forward) holds byte-identical rows in
+    both snapshots. Each snapshot holds every key EXACTLY ONCE (the
+    upsert writers' one-row-per-key contract, enforced by
+    corpus_diff's duplicate guard), so a key living in a shared file
+    occupies that file in BOTH snapshots and can occupy no other file
+    in either — it is provably ``unchanged`` and contributes nothing to
+    the added/removed/changed output. Conversely a key NOT in any
+    shared file appears, on each side where it exists, only in that
+    side's non-shared files — so diffing the non-shared remainders
+    reports exactly the same rows as the full diff (pinned equal in
+    tests).
+
+    Steady-state PLAIN upserts rewrite every file (the merge is a full
+    shuffle), so their intersection is empty and this degrades to the
+    full diff — the honest shape. It pays when snapshots genuinely
+    share files: copy-on-write merges, RESTORE/CLONE lineage, compact
+    no-ops, and every bucketed layout's untouched buckets.
+
+    Deletion vectors (round 13) amend the proof's premise: a DV delete
+    carries files with IDENTICAL physical identity while changing
+    their VISIBLE rows, so a shared file counts as unchanged only when
+    its DV entry set is also identical on both sides — otherwise
+    pure-identity pruning would report an empty diff for a commit that
+    deleted rows."""
+    from . import filestats
+
+    s_old = filestats.read_stats(table_dir, from_version)
+    s_new = filestats.read_stats(table_dir, to_version)
+    if s_old is None or s_new is None:
+        return None
+    ident_old = {
+        (e["ino"], e["size"]): k for k, e in s_old["files"].items()
+    }
+    ident_new = {
+        (e["ino"], e["size"]): k for k, e in s_new["files"].items()
+    }
+    shared = set(ident_old) & set(ident_new)
+    dv_old = _dv_summary(table_dir, from_version)
+    dv_new = _dv_summary(table_dir, to_version)
+    if dv_old or dv_new:
+        # content digests stand in for the row-index sets: equal digest
+        # == equal deleted-row set (the summary is computed from the
+        # sorted deduplicated indices), at O(files) driver cost instead
+        # of materializing churn-sized sets (round-13 verdict #5)
+        def _dg(m, i):
+            e = m.get(i)
+            return None if e is None else e["digest"]
+
+        shared = {
+            i for i in shared
+            if _dg(dv_old, i) == _dg(dv_new, i)
+        }
+    return (
+        {k for i, k in ident_old.items() if i not in shared},
+        {k for i, k in ident_new.items() if i not in shared},
+    )
+
+
+def _bucket_identity(
+    table_dir: str, version: str
+) -> dict[str, tuple] | None:
+    """Physical identity of each bucket of a bucketed snapshot:
+    ``{bucket_dir: sorted((inode, size), ...) of its data files}`` —
+    resolved through the manifest when present, so the identity names
+    the files a reader would actually open. Two snapshots whose
+    identity for a bucket is EQUAL hold byte-identical data for it
+    (snapshot dirs are immutable; hardlinked/referenced untouched
+    buckets share inodes by construction), which is what lets
+    ``table_changes`` diff only the buckets that changed. ``None`` for
+    plain (non-bucketed) snapshots.
+
+    Read from the version's stats sidecar when present (identity was
+    recorded at WRITE time — one JSON read per snapshot instead of the
+    O(buckets × files) ``listdir``/``stat`` fan-out the round-11 form
+    paid per poll; at object-store scale those were real LIST/HEAD
+    round-trips). Pre-stats snapshots fall back to the walk."""
+    import os
+
+    from . import filestats
+
+    stats = filestats.read_stats(table_dir, version)
+    if stats is not None and stats.get("files"):
+        prefix = f"{_BUCKET_COL}="
+        out: dict[str, list] = {}
+        for key, e in stats["files"].items():
+            parts = key.split("/")
+            if len(parts) < 3 or not parts[-2].startswith(prefix):
+                return None  # plain layout: no bucket identity
+            out.setdefault(parts[-2], []).append((e["ino"], e["size"]))
+        return {d: tuple(sorted(v)) for d, v in out.items()}
+
+    buckets = _snapshot_buckets(table_dir, version)
+    if not buckets:
+        return None
+    walked: dict[str, tuple] = {}
+    for d, origin in buckets.items():
+        bdir = os.path.join(table_dir, origin, d)
+        files = []
+        for fn in os.listdir(bdir):
+            if fn.startswith((".", "_")):
+                continue
+            st = os.stat(os.path.join(bdir, fn))
+            files.append((st.st_ino, st.st_size))
+        walked[d] = tuple(sorted(files))
+    return walked
+
+
+def optimize_versioned(
+    spark: SparkSession,
+    table_dir: str,
+    zorder_cols: list[str],
+    target_bytes: int = 128 * 1024 * 1024,
+    keep_versions: int = 2,
+    bits: int | None = None,
+) -> dict:
+    """Delta's ``OPTIMIZE ... ZORDER BY`` for the versioned layer:
+    rewrite the CURRENT snapshot CLUSTERED along the N-dimensional
+    Z-curve of ``zorder_cols`` and publish it through the same CAS
+    commit as every other writer (watermarks carried forward, readers
+    see old-or-new never a mixture). Complements
+    :func:`compact_versioned` (file-count maintenance, no reorder):
+    use this when read patterns filter on the listed columns and the
+    snapshot's row groups have no locality for them — the measured
+    effect of the clustering itself is operators/layout.py's
+    (SCALING.md rounds 9-10: 15x fewer rows decoded than unsorted at
+    20M points, crossover guidance for N>2).
+
+    Layout-aware: a PLAIN table rewrites into ``ceil(bytes/target)``
+    z-range-partitioned files (disjoint z ranges across files, sorted
+    within — :func:`~.operators.layout.write_zordered_nd`); a BUCKETED
+    table keeps its bucket dirs (pruning contract intact) and z-orders
+    WITHIN each bucket (one file per bucket, rows z-sorted, so
+    row-group min/max stats gain locality for the z columns while the
+    key->bucket mapping is untouched); manifest-mode tables publish a
+    fully-materialized snapshot (references re-accumulate on later
+    upserts). A SINGLE column (round 12) degenerates the curve to a
+    plain range-sort — any orderable type, no numeric quantization —
+    the strongest layout for one-column predicates and for
+    copy-on-write merges keyed on that column (a key-local churn
+    collapses into few files; see ``upsert_parquet_versioned(cow=)``). Always rewrites — clustering is the caller's explicit
+    request, unlike compaction's file-count no-op. On a CAS conflict
+    (an upsert landed mid-rewrite) it backs off like the compactor:
+    housekeeping retries on the next schedule, never contends.
+
+    Scale: one range (or bucket) shuffle + a sort — the price of any
+    clustered rewrite; the z computation is pure codegen arithmetic
+    evaluated once per row at write time.
+    """
+    import math
+    import os
+    import shutil
+    import uuid
+
+    from .operators.layout import write_zordered_nd, zvalue_expr_nd
+
+    if not zorder_cols:
+        raise ValueError("optimize_versioned needs at least one column")
+    current = _current_version(table_dir)
+    if current is None:
+        raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    layout = _table_layout(table_dir)
+    marks = txn_watermarks(table_dir)
+    seq = int(current.split("-")[1]) + 1
+    version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+    vdir = os.path.join(table_dir, version)
+
+    # physical size of the current snapshot, manifest-resolved (bucket
+    # manifests AND plain CoW file manifests)
+    files = list(_snapshot_files(table_dir, current).values())
+    total = sum(os.path.getsize(f) for f in files)
+    report = {
+        "files_before": len(files),
+        "bytes_before": total,
+        "zorder_cols": list(zorder_cols),
+        "optimized": False,
+    }
+
+    df = _snapshot_df(spark, table_dir, current)
+    missing = [c for c in zorder_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"table lacks z-order columns: {missing}")
+    if len(zorder_cols) > 1:
+        # guarded range probe (round-11 self-review finding #3): an
+        # all-NULL / non-numeric column raises a NAMED error instead of
+        # float(None); a constant column widens to a unit range (every
+        # row quantizes to cell 0 on that axis — harmless, never a
+        # crash)
+        cast = [F.col(c).try_cast("double") for c in zorder_cols]
+        aggs = []
+        for c, x in zip(zorder_cols, cast):
+            aggs += [F.min(x).alias(f"{c}__lo"), F.max(x).alias(f"{c}__hi")]
+        probe = df.agg(*aggs).first()
+        ranges = []
+        for c in zorder_cols:
+            lo, hi = probe[f"{c}__lo"], probe[f"{c}__hi"]
+            if lo is None or hi is None:
+                raise ValueError(
+                    f"z-order column {c!r} is all-NULL or not numeric-"
+                    "castable; cannot derive a quantization range"
+                )
+            lo, hi = float(lo), float(hi)
+            ranges.append((lo, hi if hi > lo else lo + 1.0))
+    # The full-snapshot rewrite reads the base it is clustering; at
+    # keep_versions=1 a concurrent upsert can prune that base mid-scan.
+    # Same conversion every other writer applies (round-11 ADVICE #2):
+    # if the base is actually gone, clean the partial vdir and return
+    # the compactor-style conflict back-off instead of a raw
+    # FileNotFoundError leaving a half-written version directory.
+    try:
+        if len(zorder_cols) == 1:
+            # 1-D clustering IS a sort (no curve to interleave): plain
+            # tables range-partition + sort on the column — disjoint
+            # per-file value ranges, the strongest layout for
+            # single-column predicates AND for copy-on-write merges
+            # keyed on it (the churn's keys collapse into few files) —
+            # works for ANY orderable type, no numeric quantization;
+            # bucketed tables sort within each bucket.
+            c = F.col(zorder_cols[0]).asc_nulls_last()
+            if layout is None:
+                n_out = max(1, math.ceil(total / max(1, target_bytes)))
+                (
+                    df.repartitionByRange(n_out, c)
+                    .sortWithinPartitions(c)
+                    .write.mode("error")
+                    .parquet(vdir)
+                )
+            else:
+                (
+                    df.repartition(layout["n_buckets"], F.col(_BUCKET_COL))
+                    .sortWithinPartitions(F.col(_BUCKET_COL), c)
+                    .write.mode("error")
+                    .partitionBy(_BUCKET_COL)
+                    .parquet(vdir)
+                )
+                _emit_untouched(table_dir, current, vdir, [], layout)
+        elif layout is None:
+            n_out = max(1, math.ceil(total / max(1, target_bytes)))
+            write_zordered_nd(df, vdir, list(zorder_cols), ranges=ranges,
+                              bits=bits, n_files=n_out, mode="error")
+        else:
+            z = zvalue_expr_nd(cast, ranges, bits)
+            (
+                df.withColumn("_z", z)
+                .repartition(layout["n_buckets"], F.col(_BUCKET_COL))
+                .sortWithinPartitions(
+                    F.col(_BUCKET_COL), F.col("_z").asc_nulls_last()
+                )
+                .drop("_z")
+                .write.mode("error")
+                .partitionBy(_BUCKET_COL)
+                .parquet(vdir)
+            )
+            _emit_untouched(table_dir, current, vdir, [], layout)
+    except Exception as err:
+        if _base_pruned_error(err) and _base_gone(table_dir, current):
+            shutil.rmtree(vdir, ignore_errors=True)
+            report["conflict"] = True
+            return report
+        raise
+
+    try:
+        _publish_version(table_dir, version, marks, keep_versions,
+                         expected_base=current,
+                         operation="OPTIMIZE (" + ", ".join(zorder_cols) + ")")
+    except ConcurrentWriteError:
+        shutil.rmtree(vdir, ignore_errors=True)
+        report["conflict"] = True
+        return report
+    new_files = [
+        os.path.join(r, f)
+        for r, _, fs in os.walk(vdir)
+        for f in fs
+        if f.endswith(".parquet") or f.startswith("part-")
+    ]
+    report.update(
+        files_after=len(new_files),
+        bytes_after=sum(os.path.getsize(f) for f in new_files),
+        optimized=True,
+        version=version,
+    )
+    return report
+
+
+def commit_timestamps(table_dir: str) -> dict[str, float]:
+    """Publish time (epoch seconds) of every RETAINED version, from the
+    ``_committed_at`` sidecar each publish writes under the commit lock
+    (monotonic along history by construction). Pre-r11 versions without
+    a sidecar fall back to the version directory's mtime — approximate
+    (the write time, not the commit time) but ordered the same way in
+    the absence of CAS retries."""
+    import os
+
+    out: dict[str, float] = {}
+    for v in list_versions(table_dir):
+        path = os.path.join(table_dir, v, _COMMITTED_AT)
+        try:
+            with open(path) as f:
+                out[v] = float(f.read().strip())
+        except (FileNotFoundError, ValueError):
+            out[v] = os.stat(os.path.join(table_dir, v)).st_mtime
+    return out
+
+
+def describe_files(spark: SparkSession, table_dir: str,
+                   version: str | None = None) -> DataFrame:
+    """Iceberg's ``files`` metadata table (Delta's DESCRIBE DETAIL at
+    file granularity): one row per DATA FILE of a retained snapshot —
+    logical file key, resolved physical path, bytes, physical identity
+    (ino/size — the churn-pruning key), row count and per-column
+    min/max from the stats sidecar (NULL when stats are absent:
+    pre-stats tables or failed best-effort collection), and the
+    deletion-vector rows charged to the file (0 = clean). Column
+    stats render as a JSON string, not a Map — scalar schemas keep
+    every downstream comparator happy.
+
+    Driver-side by design, like :func:`describe_history`: the answer
+    comes from sidecar/ledger reads plus one ``os.stat`` pass over the
+    file map — no Spark job runs to ANSWER the question, Spark only
+    hosts the result frame. The reference's closest analog is the
+    catalog introspection pass (table_tracking.py) that counts rows by
+    querying each table; here the per-file physique is already
+    maintained by every commit."""
+    import json as _json
+    import os
+
+    from . import filestats
+
+    if version is None:
+        version = _current_version(table_dir)
+        if version is None:
+            raise FileNotFoundError(
+                f"no published snapshot under {table_dir}"
+            )
+    elif version not in list_versions(table_dir):
+        raise FileNotFoundError(
+            f"version {version!r} not retained under {table_dir} "
+            f"(have: {list_versions(table_dir)})"
+        )
+    snap = _snapshot_files(table_dir, version)
+    stats = filestats.read_stats(table_dir, version)
+    sfiles = (stats or {}).get("files", {})
+    dvsum = _dv_summary(table_dir, version)
+    rows = []
+    for key in sorted(snap):
+        path = snap[key]
+        st = os.stat(path)
+        e = sfiles.get(key) or {}
+        dv = dvsum.get((st.st_ino, st.st_size)) or {}
+        rows.append((
+            key, path, int(st.st_size), int(st.st_ino),
+            int(e["rows"]) if e.get("rows") is not None else None,
+            _json.dumps(e["cols"], sort_keys=True)
+            if e.get("cols") else None,
+            int(dv.get("rows", 0)),
+        ))
+    return spark.createDataFrame(
+        rows,
+        "file string, path string, bytes long, ino long, "
+        "rows long, column_stats string, dv_rows long",
+    ).orderBy("file")
+
+
+def describe_history(spark: SparkSession, table_dir: str) -> DataFrame:
+    """``DESCRIBE HISTORY`` for a versioned table: one row per RETAINED
+    version, newest first — version name, sequence, the OPERATION that
+    published it (stamped by every writer: MERGE / MERGE (cow) /
+    MERGE (bucketed) / DELETE / DELETE WHERE / COMPACT[ (incremental)] /
+    OPTIMIZE (cols) / RESTORE v / CLONE src / GROUP *), the commit
+    timestamp, physical file count and bytes (manifest-resolved),
+    the snapshot's DELETION-VECTOR row count (0 = no DV; from the
+    sidecar footers, round 13), the replay-watermark map as JSON, and
+    whether the row is CURRENT.
+
+    Driver-side by design: history depth is bounded by
+    ``keep_versions`` (a handful of rows), every column comes from
+    sidecar/ledger reads plus one ``os.path.getsize`` pass per
+    version — no Spark job runs to ANSWER the question, Spark only
+    hosts the result frame. Pre-stamp versions (or group-member
+    versions written before round 12) read operation ``NULL``."""
+    import json
+    import os
+
+    versions = list_versions(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no versions under {table_dir}")
+    current = _current_version(table_dir)
+    ts = commit_timestamps(table_dir)
+    rows = []
+    for v in versions:
+        try:
+            with open(os.path.join(table_dir, v, _OP_SIDECAR)) as f:
+                op = json.load(f).get("operation")
+        except (FileNotFoundError, ValueError):
+            op = None
+        files = _snapshot_files(table_dir, v)
+        dv_rows = 0
+        dvf = _dv_files(table_dir, v)
+        if dvf:
+            import pyarrow.parquet as _pq
+
+            dv_rows = sum(_pq.ParquetFile(p).metadata.num_rows
+                          for p in dvf)
+        rows.append((
+            v, int(v.split("-")[1]), op, float(ts[v]),
+            len(files),
+            sum(os.path.getsize(p) for p in files.values()),
+            dv_rows,
+            json.dumps(_txn_marks_of(table_dir, v), sort_keys=True),
+            v == current,
+        ))
+    return spark.createDataFrame(
+        rows[::-1],
+        "version string, seq long, operation string, "
+        "committed_at double, n_files long, size_bytes long, "
+        "dv_rows long, txn_watermarks string, "
+        "is_current boolean",
+    )
+
+
+def read_versioned_as_of(
+    spark: SparkSession, table_dir: str, ts
+) -> DataFrame:
+    """TIMESTAMP AS OF time travel: read the snapshot that was CURRENT
+    at ``ts`` (epoch seconds, a datetime, or an ISO-8601 string —
+    naive forms are taken as UTC, matching the sidecar's epoch clock).
+    Retention bounds what is answerable, same as version-name time
+    travel: a timestamp older than the earliest retained commit raises
+    FileNotFoundError (the snapshot is pruned), and a future timestamp
+    reads CURRENT."""
+    import datetime as _dt
+
+    if isinstance(ts, str):
+        ts = _dt.datetime.fromisoformat(ts)
+    if isinstance(ts, _dt.datetime):
+        if ts.tzinfo is None:
+            ts = ts.replace(tzinfo=_dt.timezone.utc)
+        ts = ts.timestamp()
+    ts = float(ts)
+    stamps = commit_timestamps(table_dir)
+    if not stamps:
+        raise FileNotFoundError(f"no published snapshot under {table_dir}")
+    eligible = [v for v in list_versions(table_dir) if stamps[v] <= ts]
+    if not eligible:
+        earliest = min(stamps.values())
+        raise FileNotFoundError(
+            f"no retained version of {table_dir} is as old as {ts} "
+            f"(earliest retained commit: {earliest}); retention pruned "
+            "the requested history"
+        )
+    return read_versioned(spark, table_dir, eligible[-1])

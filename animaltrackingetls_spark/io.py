@@ -344,8 +344,8 @@ def compact_parquet(
     doing anything else, so no data is ever lost — but readers racing
     the swap can see ENOENT, and a crash between the renames needs that
     one recovery call. True single-rename atomicity needs a pointer
-    scheme (version directories behind an atomically swapped pointer)
-    or a lake format. At 100 TB run this per-partition (pass the partition
+    scheme (see ``inventory.upsert_parquet_versioned``) or a lake
+    format. At 100 TB run this per-partition (pass the partition
     subdirectory as ``path``), never whole-table.
     """
     import math

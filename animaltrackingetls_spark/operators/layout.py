@@ -369,7 +369,7 @@ def write_zordered_nd(
 def file_stats(spark: SparkSession, path: str) -> DataFrame:
     """Per-file layout profile of a parquet directory: ``(file, bytes,
     row_groups, rows)`` — the observability half of compaction (see
-    ``io.compact_parquet``). A table whose median file is far
+    ``inventory.compact_versioned``). A table whose median file is far
     below the row-group target (128 MB) is paying per-file open/footer/
     task costs on every read; this makes that visible as a frame you
     can aggregate, join to read timings, or threshold in a maintenance

@@ -300,3 +300,107 @@ def as_of(dim: DataFrame, ts, ts_col_from: str = "valid_from",
         (F.col(ts_col_from) <= t)
         & (F.col(ts_col_to).isNull() | (F.col(ts_col_to) > t))
     )
+
+
+def table_changes(
+    spark,
+    table_dir: str,
+    key_cols: list[str],
+    from_version: str | None = None,
+    to_version: str | None = None,
+    compare_cols: list[str] | None = None,
+) -> DataFrame:
+    """Change data feed over a versioned table
+    (inventory.upsert_parquet_versioned[_partitioned] layouts): the
+    added/removed/changed rows between two RETAINED snapshots —
+    Delta's ``table_changes`` shape, derived instead of logged.
+
+    Defaults compare the oldest retained snapshot to CURRENT. Output is
+    :func:`corpus_diff`'s (keys..., change, old_digest, new_digest),
+    churn-sized. Because both snapshots came through the keyed upsert
+    (keys unique by construction), the diff runs with its duplicate-key
+    guard ON — a violated invariant fails loudly rather than fanning
+    out. Retention bounds what is answerable: versions beyond
+    ``keep_versions`` are gone (FileNotFoundError via read_versioned),
+    the same contract as VACUUM'd CDF.
+
+    Scale — CHURN-PRUNED on bucketed layouts (round 11): bucket
+    assignment is a pure function of the key and the pinned layout, so
+    a key's rows sit in the same bucket dir in both snapshots — and a
+    bucket whose PHYSICAL IDENTITY (resolved manifest origin /
+    hardlinked inodes+sizes) is equal across the two versions is
+    byte-identical and can contribute NO diff rows. The diff therefore
+    scans only the buckets whose identity changed: a localized churn
+    batch costs O(churn buckets), not O(table) — measured 3.1x wall
+    (1.27 vs 3.87 s) on a 10M-row x 64-bucket table with 1-bucket
+    churn, fixed-cost-dominated locally; the 64x scan-volume ratio is
+    what scales (r11 SCALING.md). Plain layouts pay the honest
+    two full scans + the digest diff's one shuffle per side; digests
+    ride the scan projection as always. Schema evolution rewrites every
+    bucket, so evolved spans degrade to the full diff automatically —
+    pruning can never hide a change.
+    """
+    from ..inventory import (
+        _BUCKET_COL,
+        _snapshot_df,
+        _snapshot_df_files,
+        identity_changed_buckets,
+        identity_changed_files,
+        list_versions,
+        read_versioned,
+    )
+
+    versions = list_versions(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no versions under {table_dir}")
+    if from_version is None:
+        from_version = versions[0]
+    if to_version is None:
+        to_version = versions[-1]
+    if from_version not in versions or to_version not in versions:
+        # preserve read_versioned's retention contract before pruning
+        missing = [v for v in (from_version, to_version)
+                   if v not in versions]
+        raise FileNotFoundError(
+            f"version(s) {missing} not retained under {table_dir} "
+            f"(have: {versions})"
+        )
+    changed = identity_changed_buckets(
+        table_dir, from_version, to_version
+    )
+    if changed is not None:
+        old = _snapshot_df(
+            spark, table_dir, from_version, buckets=changed
+        ).drop(_BUCKET_COL)
+        new = _snapshot_df(
+            spark, table_dir, to_version, buckets=changed
+        ).drop(_BUCKET_COL)
+    else:
+        # plain layout: FILE-level churn pruning from the stats
+        # sidecars' physical identity (round-12) — shared files are
+        # byte-identical and key-complete on both sides, so diffing
+        # only the non-shared remainders is exact (proof on
+        # identity_changed_files). Pre-stats versions fall back to the
+        # honest two-full-snapshot diff.
+        cf = identity_changed_files(table_dir, from_version, to_version)
+        if cf is not None:
+            old = _snapshot_df_files(spark, table_dir, from_version, cf[0])
+            new = _snapshot_df_files(spark, table_dir, to_version, cf[1])
+            for col in (_BUCKET_COL,):
+                if col in old.columns:
+                    old, new = old.drop(col), new.drop(col)
+        else:
+            old = read_versioned(spark, table_dir, from_version)
+            new = read_versioned(spark, table_dir, to_version)
+    # schema evolution between the snapshots (round-10 review finding):
+    # corpus_diff's shared-columns default would silently EXCLUDE a
+    # newly added column, so its backfill never churns. Snapshots of
+    # the SAME table compare over the UNION of columns, the missing
+    # side NULL-filled — exactly how the evolved merge saw it.
+    for col, typ in new.dtypes:
+        if col not in old.columns:
+            old = old.withColumn(col, F.lit(None).cast(typ))
+    for col, typ in old.dtypes:
+        if col not in new.columns:
+            new = new.withColumn(col, F.lit(None).cast(typ))
+    return corpus_diff(old, new, key_cols, compare_cols)

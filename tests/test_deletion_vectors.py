@@ -110,11 +110,10 @@ def test_dv_accumulates_and_writers_carry(spark, tmp_path):
     assert read_versioned(spark, t).filter("k in (1,2,3)").count() == 0
 
 
-def test_dv_cdc_and_derived_diff_see_the_delete(spark, tmp_path):
-    from animaltrackingetls_spark.cdc import read_change_data
+def test_dv_derived_diff_sees_the_delete(spark, tmp_path):
     from animaltrackingetls_spark.operators.versioning import table_changes
 
-    t = _mk(spark, tmp_path, write_change_data=True, cow=True)
+    t = _mk(spark, tmp_path, cow=True)
     v1 = list_versions(t)[-1]
     _dele(spark, t, [5, 6], dv=True)
     v2 = list_versions(t)[-1]
@@ -123,10 +122,6 @@ def test_dv_cdc_and_derived_diff_see_the_delete(spark, tmp_path):
     # entry sets differ)
     d = table_changes(spark, t, ["k"], v1, v2)
     assert _rows(d, "k", "change") == [(5, "removed"), (6, "removed")]
-    # the logged feed carries the doomed preimages
-    feed = read_change_data(spark, t, v1, v2)
-    assert _rows(feed, "k", "_change_type") == [(5, "delete"),
-                                                (6, "delete")]
 
 
 def test_dv_purged_by_rewriting_maintenance(spark, tmp_path):
@@ -241,9 +236,8 @@ def test_dv_manifest_mode(spark, tmp_path):
 
 def test_dv_delete_where(spark, tmp_path):
     """Predicate DV delete: SQL DELETE semantics (NULL predicate rows
-    kept), equality with the rewrite form, CDC visibility, retention
-    shape (DELETE WHERE ts < cutoff as a zero-rewrite commit)."""
-    from animaltrackingetls_spark.cdc import read_change_data
+    kept), equality with the rewrite form, retention shape (DELETE
+    WHERE ts < cutoff as a zero-rewrite commit)."""
     from animaltrackingetls_spark.inventory import delete_versioned_where
 
     t = str(tmp_path / "t")
@@ -253,7 +247,7 @@ def test_dv_delete_where(spark, tmp_path):
         .otherwise(F.col("id").cast("double")).alias("x"),
     )
     upsert_parquet_versioned(spark, t, df, ["k"], keep_versions=10,
-                             target_files=4, write_change_data=True)
+                             target_files=4)
     v1 = list_versions(t)[-1]
     files_before = {
         (os.stat(p).st_ino, os.stat(p).st_size)
@@ -271,11 +265,6 @@ def test_dv_delete_where(spark, tmp_path):
         (os.stat(p).st_ino, os.stat(p).st_size)
         for p in inv._snapshot_files(t, v2).values()
     } == files_before
-    # CDC logged the doomed preimages
-    feed = read_change_data(spark, t, v1, v2)
-    assert feed.count() == 90
-    assert set(r[0] for r in feed.select("_change_type").distinct()
-               .collect()) == {"delete"}
     # equality with the rewrite form on a twin
     t2 = str(tmp_path / "t2")
     upsert_parquet_versioned(spark, t2, df, ["k"], keep_versions=10,
@@ -561,12 +550,10 @@ def test_reorg_purge_auto_trigger(spark, tmp_path):
 def test_mor_update_equality_with_cow(spark, tmp_path):
     """Round 14 (r13 verdict #4): merge-on-read UPDATE — matched
     preimages are DV'd in place, postimages append as new files. Same
-    final snapshot and same CDC classification as the CoW merge,
-    O(churn) write volume (zero pre-existing files rewritten)."""
-    from animaltrackingetls_spark.cdc import read_change_data
-
-    t = _mk(spark, tmp_path, write_change_data=True)
-    t2 = _mk(spark, tmp_path, "twin", write_change_data=True)
+    final snapshot as the CoW merge, O(churn) write volume (zero
+    pre-existing files rewritten)."""
+    t = _mk(spark, tmp_path)
+    t2 = _mk(spark, tmp_path, "twin")
     v0 = list_versions(t)[-1]
     idents = lambda tb, v: {  # noqa: E731
         (os.stat(p).st_ino, os.stat(p).st_size)
@@ -589,12 +576,6 @@ def test_mor_update_equality_with_cow(spark, tmp_path):
     assert sum(e["rows"] for e in inv._dv_summary(t, v1).values()) == 2
     ops = [r["operation"] for r in inv.describe_history(spark, t).collect()]
     assert "MERGE (dv)" in ops
-    # identical CDC classification on both tables
-    cols = ["k", "g", "x", "_change_type"]
-    a = _rows(read_change_data(spark, t, v0, v1), *cols)
-    b = _rows(read_change_data(spark, t2, list_versions(t2)[0],
-                               list_versions(t2)[-1]), *cols)
-    assert a == b and len(a) == 5  # 1 insert + 2 pre/post pairs
 
 
 def test_mor_update_composes_with_dv_delete_and_replay(spark, tmp_path):

@@ -5,13 +5,10 @@ column-mapping layer, Delta-without-columnMapping posture):
 * data survives under the new name / disappears with the dropped one,
   the operation lands in DESCRIBE HISTORY, and time travel + RESTORE
   still see the historical schema in retained versions;
-* guards mirror Delta's: missing/colliding columns, last column, and
-  any CHECK or generated column referencing the altered column refuse
-  the ALTER (constraint expressions are not rewritten);
+* guards mirror Delta's: missing/colliding columns and the last
+  column refuse the ALTER;
 * a DV-carrying snapshot rewrites DV-resolved — deleted rows stay
   deleted and the sidecar materializes away;
-* unreferenced constraints carry across and keep enforcing;
-* CDC-pinned tables log a provably-empty change commit;
 * bucket-partitioned layouts refuse (their pruning layout pins column
   identities).
 """
@@ -23,12 +20,6 @@ import os
 import pytest
 from pyspark.sql import Row
 
-from animaltrackingetls_spark.constraints import (
-    ConstraintViolationError,
-    add_check_constraint,
-    read_constraints,
-    set_generated_column,
-)
 from animaltrackingetls_spark.inventory import (
     delete_versioned,
     describe_history,
@@ -66,45 +57,18 @@ def test_rename_guards(spark, tmp_path):
         rename_column(spark, path, "nope", "x")
     with pytest.raises(ValueError, match="already a column"):
         rename_column(spark, path, "qty", "tag")
-    add_check_constraint(spark, path, "qty_pos", "qty > 0")
-    with pytest.raises(ValueError, match="check:qty_pos"):
-        rename_column(spark, path, "qty", "quantity")
-    # an UNreferenced column renames fine and the constraint survives
-    rename_column(spark, path, "tag", "label", keep_versions=4)
-    assert read_constraints(path)["checks"] == {"qty_pos": "qty > 0"}
-    with pytest.raises(ConstraintViolationError):
-        upsert_parquet_versioned(
-            spark, path,
-            spark.createDataFrame([Row(id=3, qty=-1, label="x")]), ["id"],
-        )
 
 
 def test_drop_basic_and_guards(spark, tmp_path):
     path = _seed(spark, str(tmp_path / "t"))
     with pytest.raises(ValueError, match="not in"):
         drop_column(spark, path, "nope")
-    add_check_constraint(spark, path, "qty_pos", "qty > 0")
-    with pytest.raises(ValueError, match="check:qty_pos"):
-        drop_column(spark, path, "qty")
     drop_column(spark, path, "tag", keep_versions=4)
     now = read_versioned(spark, path)
     assert sorted(now.columns) == ["id", "qty"]
     assert {r.id: r.qty for r in now.collect()} == {1: 5, 2: 7}
     ops = [r.operation for r in describe_history(spark, path).collect()]
     assert "DROP COLUMN tag" in ops
-
-
-def test_drop_generated_target_refused(spark, tmp_path):
-    path = str(tmp_path / "g")
-    upsert_parquet_versioned(
-        spark, path,
-        spark.createDataFrame([Row(id=1, qty=5, qty2=10)]), ["id"],
-    )
-    set_generated_column(spark, path, "qty2", "qty * 2")
-    with pytest.raises(ValueError, match="generated:qty2"):
-        drop_column(spark, path, "qty2")
-    with pytest.raises(ValueError, match="generated:qty2"):
-        rename_column(spark, path, "qty", "amount")  # referenced in expr
 
 
 def test_last_column_refused(spark, tmp_path):
@@ -135,25 +99,6 @@ def test_rename_materializes_dv(spark, tmp_path):
         keep_versions=4,
     )
     assert read_versioned(spark, path).where("id = 1").first().quantity == 9
-
-
-def test_cdc_pinned_alter_logs_empty_commit(spark, tmp_path):
-    from animaltrackingetls_spark.cdc import read_change_data
-
-    path = str(tmp_path / "c")
-    upsert_parquet_versioned(
-        spark, path, spark.createDataFrame([Row(id=1, qty=5, tag="a")]),
-        ["id"], write_change_data=True, keep_versions=6,
-    )
-    rename_column(spark, path, "qty", "quantity", keep_versions=6)
-    upsert_parquet_versioned(
-        spark, path,
-        spark.createDataFrame([Row(id=2, quantity=6, tag="b")]), ["id"],
-        keep_versions=6,
-    )
-    changes = read_change_data(spark, path, None, list_versions(path)[-1])
-    rows = {(r.id, r._change_type) for r in changes.collect()}
-    assert rows == {(1, "insert"), (2, "insert")}
 
 
 def test_bucketed_layout_refuses(spark, tmp_path):

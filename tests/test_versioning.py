@@ -15,6 +15,7 @@ import datetime
 import duckdb
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from animaltrackingetls_spark.operators import versioning as V
 
@@ -232,6 +233,56 @@ def test_scd2_validation(spark):
         V.scd2_from_history(hist, ["k"], [], "ts")
 
 
+def test_table_changes_between_retained_versions(spark, tmp_path):
+    from animaltrackingetls_spark.inventory import (
+        list_versions,
+        upsert_parquet_versioned,
+        upsert_parquet_versioned_partitioned,
+    )
+
+    # plain layout
+    t = str(tmp_path / "cdf")
+    upsert_parquet_versioned(
+        spark, t,
+        spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")],
+                              "k long, txt string"),
+        ["k"], keep_versions=3,
+    )
+    upsert_parquet_versioned(
+        spark, t,
+        spark.createDataFrame([(2, "B"), (4, "d")], "k long, txt string"),
+        ["k"], keep_versions=3,
+    )
+    got = {
+        r.k: r.change
+        for r in V.table_changes(spark, t, ["k"]).collect()
+    }
+    assert got == {2: "changed", 4: "added"}
+    # explicit endpoints: v2 -> v2 is empty churn
+    v2 = list_versions(t)[-1]
+    assert V.table_changes(spark, t, ["k"], from_version=v2,
+                           to_version=v2).count() == 0
+
+    # bucket-partitioned layout: internal column dropped before diff
+    tp = str(tmp_path / "cdfp")
+    upsert_parquet_versioned_partitioned(
+        spark, tp,
+        spark.createDataFrame([(i, float(i)) for i in range(100)],
+                              "k long, v double"),
+        ["k"], n_buckets=4, keep_versions=3,
+    )
+    upsert_parquet_versioned_partitioned(
+        spark, tp,
+        spark.createDataFrame([(5, -1.0), (200, 1.0)], "k long, v double"),
+        ["k"], n_buckets=4, keep_versions=3,
+    )
+    got = {r.k: r.change for r in V.table_changes(spark, tp, ["k"]).collect()}
+    assert got == {5: "changed", 200: "added"}
+
+    with pytest.raises(FileNotFoundError):
+        V.table_changes(spark, str(tmp_path / "missing"), ["k"])
+
+
 # ---------------------------------------------------------------------------
 # Round-10 review fixes (code-review findings on versioning.py)
 # ---------------------------------------------------------------------------
@@ -320,3 +371,91 @@ def test_scd2_rejects_empty_keys_and_reserved_columns(spark):
         V.scd2_from_history(bad, ["k"], ["s"], "ts")
     with pytest.raises(ValueError, match="reserves output"):
         V.corpus_diff(hist, hist, ["change"], ["s"])
+
+
+def test_table_changes_sees_evolved_column_backfill(spark, tmp_path):
+    """A column added between snapshots must CHURN for existing keys
+    whose backfill gave it values — the shared-columns default would
+    silently exclude it (review finding)."""
+    from animaltrackingetls_spark.inventory import upsert_parquet_versioned
+
+    t = str(tmp_path / "cdfe")
+    upsert_parquet_versioned(
+        spark, t,
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, txt string"),
+        ["k"], keep_versions=3,
+    )
+    widened = spark.createDataFrame(
+        [(1, "a", 0.9)], "k long, txt string, score double"
+    )
+    upsert_parquet_versioned(spark, t, widened, ["k"], keep_versions=3,
+                             merge_schema=True)
+    got = {r.k: r.change for r in V.table_changes(spark, t, ["k"]).collect()}
+    # key 1 gained a score value -> changed; key 2's score is NULL on
+    # both aligned sides -> unchanged
+    assert got == {1: "changed"}
+
+
+@pytest.mark.parametrize("mode", ["hardlink", "manifest"])
+def test_table_changes_churn_pruned_on_bucketed(spark, tmp_path, mode):
+    """Round-11 churn-pruned CDF: on a bucketed table, buckets whose
+    physical identity (manifest origin / hardlinked inodes) is equal
+    across the two snapshots are byte-identical, so the diff scans only
+    changed buckets — and must still equal the brute-force full-scan
+    diff exactly, including a bucket EMPTIED by delete."""
+    import os
+
+    from animaltrackingetls_spark.inventory import (
+        _bucket_identity,
+        _snapshot_df,
+        delete_versioned,
+        list_versions,
+        read_versioned,
+        upsert_parquet_versioned_partitioned,
+    )
+    from animaltrackingetls_spark.operators.versioning import (
+        corpus_diff,
+        table_changes,
+    )
+
+    t = str(tmp_path / "t")
+    base = spark.range(800).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+    upsert_parquet_versioned_partitioned(
+        spark, t, base, ["k"], n_buckets=8, scheme="range",
+        keep_versions=4, link_mode=mode,
+    )
+    # localized churn: a few updates in low buckets + empty one bucket
+    upsert_parquet_versioned_partitioned(
+        spark, t,
+        spark.createDataFrame([(1, "u1"), (2, "u2"), (803, "new")],
+                              "k long, v string"),
+        ["k"], n_buckets=8, scheme="range", keep_versions=4,
+    )
+    hi = spark.range(700, 800).selectExpr("id AS k")  # empties bucket 7
+    delete_versioned(spark, t, hi, ["k"], keep_versions=4)
+    v0, v1, v2 = list_versions(t)
+
+    # identity marks only the churned buckets as different
+    i0, i2 = _bucket_identity(t, v0), _bucket_identity(t, v2)
+    changed = {d for d in set(i0) | set(i2) if i0.get(d) != i2.get(d)}
+    n_buckets_total = len(set(i0) | set(i2))
+    assert 1 <= len(changed) < n_buckets_total
+
+    # the pruned diff equals the brute-force full-scan diff
+    pruned = table_changes(spark, t, ["k"], v0, v2)
+    brute = corpus_diff(
+        read_versioned(spark, t, v0), read_versioned(spark, t, v2), ["k"]
+    )
+    as_set = lambda df: {tuple(r) for r in df.collect()}
+    assert as_set(pruned) == as_set(brute)
+    kinds = {r.k: r.change for r in pruned.collect()}
+    assert kinds[1] == "changed" and kinds[803] == "added"
+    assert kinds[700] == "removed"  # the emptied bucket's rows
+
+    # and the restricted read actually skips untouched buckets' files
+    full_files = set(_snapshot_df(spark, t, v2).inputFiles())
+    pruned_files = set(
+        _snapshot_df(spark, t, v2, buckets=changed).inputFiles()
+    )
+    assert pruned_files < full_files
+    assert len(pruned_files) <= len(changed)
