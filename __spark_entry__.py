@@ -2166,73 +2166,6 @@ def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textstats.chunk_documents(docs, chunk_tokens=16, stride=12)
 
 
-def _q_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deletion vectors under the driver's oracle as their OWN entry
-    (round 14): a versioned documents-derived table takes a
-    merge-on-read DELETE (doc_id%11==3 — a .dv sidecar, zero data-file
-    rewrites), then a merge-on-read UPDATE (``dv=True`` upsert:
-    doc_id%13==1 gets text||' m14'; keys that were DV-deleted AND
-    match %13==1 RE-INSERT through the union'd DV — the scoped
-    anti-join must show only the new row), then a REORG PURGE
-    materializes the deletes away. Two row-kinds read the same final
-    state before ('mor') and after ('purged') the purge, so one hash
-    row certifies: DV delete semantics, MoR update semantics,
-    re-insert-after-DV-delete, the file-scoped anti-join read, and
-    purge content-neutrality. DuckDB replays the final state from the
-    pure derivation. Fixed txn ids make replays no-ops; the purge
-    no-ops once no DV remains, so the cached table is stable."""
-    import os
-    import tempfile
-
-    from animaltrackingetls_spark.inventory import (
-        delete_versioned,
-        read_versioned,
-        reorg_purge_versioned,
-        upsert_parquet_versioned,
-    )
-
-    docs_file = os.path.join(sf_dir, "documents.parquet")
-    key = _invocation_cache_key(spark, "dv1", docs_file)
-    table = os.path.join(tempfile.gettempdir(), f"spark_graft_dv_{key}")
-
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    upsert_parquet_versioned(
-        spark, table, docs, ["doc_id"], keep_versions=4,
-        txn_app_id="dvq", txn_version=0, target_files=4,
-    )
-    delete_versioned(
-        spark, table, docs.filter(F.col("doc_id") % 11 == 3)
-        .select("doc_id"), ["doc_id"], keep_versions=4, dv=True,
-        txn_app_id="dvq#d", txn_version=1,
-    )
-    upsert_parquet_versioned(
-        spark, table,
-        docs.filter(F.col("doc_id") % 13 == 1).withColumn(
-            "text", F.concat(F.col("text"), F.lit(" m14"))
-        ),
-        ["doc_id"], keep_versions=4, dv=True,
-        txn_app_id="dvq", txn_version=2,
-    )
-
-    def kind(tag):
-        return read_versioned(spark, table).select(
-            "doc_id",
-            F.lit(tag).alias("kind"),
-            "lang",
-            F.expr("right(text, 4)").alias("tail"),
-        )
-
-    mor = kind("mor")
-    # force the pre-purge read to materialize BEFORE the purge commit
-    # lands (DataFrames are lazy; both kinds must not read the same
-    # final version)
-    mor = mor.localCheckpoint()
-    reorg_purge_versioned(spark, table, keep_versions=4)
-    return mor.unionByName(kind("purged")).orderBy("kind", "doc_id")
-
-
 def _q_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radius self-join over the derived sighting points: all pairs
     within 100 km via 3D chord-grid blocking (pole-safe ±1-cell
@@ -2789,27 +2722,6 @@ def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", "cell", "keep")
 
 
-def _q_pack_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-level best-fit-decreasing packing, HASH-CHECKED: the
-    sequential per-group bin state IS replayable in SQL — a DuckDB
-    recursive CTE iterates one document per step per group carrying
-    the open-bin list as sorted STRUCT(rem, b)[] state, reproducing
-    BFD's exact placement and tie rules (smallest sufficient
-    remaining, lowest bin id) — the same recursion-replay trick used
-    for connected components. Documents pack whole into
-    (source, bin_id) bins of 30k chars; oversize docs are flagged in
-    their own bins. Invariants additionally pinned in
-    test_textstats.py."""
-    from animaltrackingetls_spark.operators.textstats import (
-        pack_documents_bestfit,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    return pack_documents_bestfit(
-        docs, 30_000, token_col="n_chars", group_col="source"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Round-9 folds: the repo carried 54 oracle-backed queries but the
 # driver's correctness window verifies the first 50 queries() entries,
@@ -2823,7 +2735,8 @@ def _q_pack_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   batch_sessions + sessionized_stream -> sessions_panel
 #   pack_bestfit                        -> pack_documents ('bfd' rows)
 # The original single-query functions remain as the implementations
-# the folds call (and as plan-audit probes).
+# the folds call (and as plan-audit probes); pack_documents calls
+# pack_documents_bestfit directly.
 # ---------------------------------------------------------------------------
 
 
@@ -3032,11 +2945,10 @@ def _q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 8's tree registered a 54-entry contiguous oracle-backed prefix and
 # CORRECTNESS_r08 recorded exactly the first 50. The first
 # DRIVER_WINDOW entries below are all oracle-backed so no slot is
-# wasted. 51 queries are oracle-backed: the window holds 50 of them,
-# and the one past it (semi_anti_join) is hash-compared every suite
-# run by tests/test_entry_oracles.py instead (same compare, sf0.001).
-# The suite also compares the in-window quota_shuffle and
-# proximity_pairs (SUITE_COMPARED in that test file).
+# wasted. Exactly 50 queries are oracle-backed and the window holds
+# all of them. tests/test_entry_oracles.py also hash-compares
+# semi_anti_join, quota_shuffle and proximity_pairs every suite run
+# (SUITE_COMPARED in that test file; same compare, sf0.001).
 DRIVER_WINDOW = 50
 
 
@@ -3378,7 +3290,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # scd2_history, quantile_profile) now occupy, so every oracle-backed
     # operator gets a driver-produced green row; round 11 folded
     # semi_anti_join's quartet into tpch_panel ('setops' panel).
-    # Rows-only (hash-seeded / approximate) queries follow the window.
+    # The 50 oracle-backed queries fill the window; rows-only
+    # (hash-seeded / approximate) queries follow it.
     return {
         "flagship_day_scan": _q_flagship_day_scan,
         "temporal_rescue_derive": _q_temporal_rescue_derive,
@@ -3405,8 +3318,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "running_user_totals": _q_running_user_totals,
         "tpch_panel": _q_tpch_panel,
         "dim_revenue": _q_dim_revenue,
-        # the versioned-table layer's deletion vectors, end to end
-        "dv_delete": _q_dv_delete,
         "window_topn": _q_window_topn,
         "rollup_cube_orders": _q_rollup_cube_orders,
         "mask_union_counts": _q_mask_union_counts,
@@ -3431,6 +3342,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "segments_chunks": _q_segments_chunks,
         "quota_shuffle": _q_quota_shuffle,
         "proximity_pairs": _q_proximity_pairs,
+        # semi_anti_join's operators also run in the tpch_panel
+        # 'setops' fold; this standalone form is kept so the bare
+        # semi/anti/intersect/except plans remain pinned.
+        "semi_anti_join": _q_semi_anti_join,
         # rows-only (hash-based / approximate / Python-batch operators)
         "winnow_fingerprints": _q_winnow_fingerprints,
         "embedding_neardup_lsh": _q_embedding_neardup_lsh,
@@ -3448,12 +3363,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pq_topk": _q_pq_topk,
         "ivfpq_topk": _q_ivfpq_topk,
         "ivfpq_rerank": _q_ivfpq_rerank,
-        # oracle-backed but past the window (the window is full):
-        # tests/test_entry_oracles.py hash-compares it every suite run.
-        # semi_anti_join's operators also stay in-window via the
-        # tpch_panel 'setops' fold; this standalone form is kept so the
-        # bare semi/anti/intersect/except plans remain pinned.
-        "semi_anti_join": _q_semi_anti_join,
     }
 
 
@@ -5345,26 +5254,6 @@ def oracle_sql() -> dict[str, str]:
                      o.old_digest, n.new_digest
               FROM old o FULL OUTER JOIN neu n ON o.doc_id = n.doc_id)
             SELECT * FROM d WHERE change != 'unchanged' ORDER BY doc_id
-        """,
-        # dv_delete (round 14): final state after a DV delete
-        # (%11==3), a merge-on-read update (%13==1 -> text||' m14' —
-        # which RE-INSERTS any key the delete had DV'd), and a REORG
-        # PURGE. 'mor' reads before the purge, 'purged' after; both
-        # must equal the pure derivation (purge is content-neutral).
-        "dv_delete": """
-            WITH final AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 13 = 1 THEN text || ' m14'
-                          ELSE text END AS text,
-                     lang
-              FROM documents
-              WHERE doc_id % 11 != 3 OR doc_id % 13 = 1)
-            SELECT doc_id, 'mor' AS kind, lang, right(text, 4) AS tail
-            FROM final
-            UNION ALL
-            SELECT doc_id, 'purged' AS kind, lang, right(text, 4) AS tail
-            FROM final
-            ORDER BY kind, doc_id
         """,
         "scd2_history": """
             WITH h AS (

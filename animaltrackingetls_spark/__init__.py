@@ -17,7 +17,7 @@ Layout:
     enrichment   Geocode enrichment as broadcast join / mapInPandas.
     inventory    Load-catalog upsert (MERGE-style), table naming, date
                  helpers, and the versioned-table layer (snapshot-atomic
-                 upserts, deletes, time travel, deletion vectors).
+                 upserts, deletes, time travel).
     filestats    Per-file column statistics of versioned snapshots
                  (data skipping, churn pruning).
     serving      Dynamic serving filters, date match, JSON edge sink.

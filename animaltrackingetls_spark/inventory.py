@@ -292,446 +292,20 @@ def upsert_parquet(
 _CURRENT_POINTER = "_CURRENT"
 _COMMIT_LOCK = "._COMMIT_LOCK"
 
-# ---- deletion vectors (round 13) — merge-on-read deletes -----------------
-# Delta's deletion-vector analog: a `_dv.parquet` sidecar inside the
-# version directory marks (file identity, row index) pairs as deleted;
-# readers anti-join it, writers carry it forward filtered to surviving
-# file identities. File identity is (inode, size) — the same physical
-# identity the stats sidecar and churn pruning already use, stable
-# across hardlink/manifest carries and invalidated by any rewrite. The
-# sidecar lives in a dot-prefixed SUBDIRECTORY (`.dv/`) of the version
-# dir: hidden-path filtering keeps it out of Spark's data scans and
-# `_snapshot_files`' walks, while its normally-named parquet files stay
-# readable when the directory is addressed explicitly (a leading
-# underscore on the file itself would make Spark ignore it even then).
-_DV_DIR = ".dv"
-_DV_FP_COL = "_dv_fp"  # per-row file basename (from _metadata.file_path)
-_DV_RI_COL = "_dv_ri"  # per-row physical row index
-
-
-def _dv_path(table_dir: str, version: str) -> str:
-    import os
-
-    return os.path.join(table_dir, version, _DV_DIR)
-
-
-def _dv_files(table_dir: str, version: str) -> list[str]:
-    import os
-
-    d = _dv_path(table_dir, version)
-    if not os.path.isdir(d):
-        return []
-    return [
-        os.path.join(d, f) for f in sorted(os.listdir(d))
-        if not f.startswith((".", "_"))
-    ]
-
-
-def _dv_ident_rows(table_dir: str, version: str) -> list[tuple]:
-    """``(file_basename, inode, size)`` per data file of the snapshot —
-    the driver-side map that resolves DV identities to the paths a scan
-    actually reports. Basenames are unique within a snapshot (part-file
-    names embed the writer job's uuid); asserted because the DV join
-    keys on them."""
-    import os
-
-    rows = []
-    for path in _snapshot_files(table_dir, version).values():
-        st = os.stat(path)
-        rows.append((os.path.basename(path), int(st.st_ino),
-                     int(st.st_size)))
-    names = [r[0] for r in rows]
-    if len(names) != len(set(names)):
-        raise RuntimeError(
-            f"duplicate data-file basenames in {table_dir}/{version}; "
-            "deletion vectors cannot address files unambiguously"
-        )
-    return rows
-
-
-_DV_SUMMARY = "_summary.json"
-
-
-def _dv_summary_of(t) -> dict:
-    """Per-file-identity summary of a DV pyarrow table: row count plus
-    a content digest of the sorted, deduplicated row-index list. Every
-    DV writer publishes it alongside the parquet, so churn pruning and
-    read planning compare O(files) digests instead of materializing
-    row-index sets on the driver — at 100 TB a table's DV can be
-    billions of rows, but its distinct file identities are bounded by
-    the file count (round-13 verdict #3/#5)."""
-    import hashlib
-
-    by_id: dict[tuple, set] = {}
-    for ino, size, ri in zip(
-        t.column("ino").to_pylist(), t.column("size").to_pylist(),
-        t.column("row_index").to_pylist(),
-    ):
-        by_id.setdefault((int(ino), int(size)), set()).add(int(ri))
-    entries = {}
-    for (ino, size), idxs in by_id.items():
-        ordered = sorted(idxs)
-        h = hashlib.sha256(
-            ",".join(map(str, ordered)).encode()
-        ).hexdigest()[:16]
-        entries[f"{ino}:{size}"] = {"rows": len(ordered), "digest": h}
-    return {"v": 1, "entries": entries}
-
-
-def _dv_write_summary(ddir: str, summary: dict) -> None:
-    import json
-    import os
-
-    with open(os.path.join(ddir, _DV_SUMMARY), "w") as f:
-        json.dump(summary, f)
-
-
-def _dv_summary(table_dir: str, version: str) -> dict[tuple, dict]:
-    """The version's DV summary: ``{(ino, size): {"rows", "digest"}}``,
-    empty when the version has no DV. Read from the ``_summary.json``
-    sidecar (O(1) IO); a pre-summary sidecar (older table) falls back
-    to recomputing it from the parquet."""
-    import json
-    import os
-
-    files = _dv_files(table_dir, version)
-    if not files:
-        return {}
-    path = os.path.join(_dv_path(table_dir, version), _DV_SUMMARY)
-    try:
-        with open(path) as f:
-            s = json.load(f)
-    except (FileNotFoundError, ValueError):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tabs = [pq.read_table(p) for p in files]
-        s = _dv_summary_of(
-            pa.concat_tables(tabs) if len(tabs) > 1 else tabs[0]
-        )
-    return {
-        tuple(int(x) for x in k.split(":")): v
-        for k, v in s["entries"].items()
-    }
-
-
-# Above this many TOTAL deletion-vector rows, readers apply the DV as
-# a broadcast anti-join; at or below it, the row indices inline into
-# per-file `NOT row_index IN (...)` filters — pure codegen, no
-# broadcast jobs, no join (measured: the join form cost 1.38 s on a
-# single-file 312k-row branch where the whole 31-file clean scan cost
-# 0.40 s — the tax was the exchange/job machinery, not the data).
-# The predicate is built as ONE SQL string (`F.expr`), never
-# `Column.isin(list)` — isin round-trips every literal through py4j
-# (measured 27 s of pure plan construction for a 12k list; the SQL
-# form parses the same list in 0.2-0.6 s). The cap sits below the
-# parser/codegen cliff (65k literals: 6.7 s build + 9.2 s eval;
-# 16k: 0.6 s + 0.5 s) and bounds the driver-side read behind it.
-_DV_INLINE_MAX = 16384
-# The inline path builds ONE scan branch + one codegen'd NOT-IN per
-# affected file, so plan width must be capped in FILE count too (r14
-# verdict #3): a wide-churn small DV — 10k rows spread over thousands
-# of files, e.g. a predicate delete at sub-purge density — stays under
-# the 16k ROW cap but would build a thousands-branch union whose
-# driver plan-build time and codegen size, not data, become the cost
-# (measured, SCALING.md "DV inline path capped": 1k affected files = 70.5 s
-# plan build + 49.6 s count inline vs 3.6 s + 2.2 s via the
-# single-scan broadcast anti-join fallback). Past this many affected
-# files the fallback wins regardless of DV row count.
-_DV_INLINE_MAX_FILES = 64
-
-
-def _dv_inline_indices(
-    table_dir: str, version: str
-) -> dict[tuple, list[int]]:
-    """Driver-side per-identity row-index lists for a SMALL DV (caller
-    checks the summary's total against ``_DV_INLINE_MAX`` first — the
-    read is churn-sized and bounded by the cap)."""
-    import pyarrow.parquet as pq
-
-    out: dict[tuple, set] = {}
-    for p in _dv_files(table_dir, version):
-        t = pq.read_table(p, columns=["ino", "size", "row_index"])
-        for ino, size, ri in zip(
-            t.column("ino").to_pylist(), t.column("size").to_pylist(),
-            t.column("row_index").to_pylist(),
-        ):
-            out.setdefault((int(ino), int(size)), set()).add(int(ri))
-    return {k: sorted(v) for k, v in out.items()}
-
-
-def _dv_resolved(table_dir: str, version: str) -> tuple[list, set, dict]:
-    """Resolve the version's DV identities against its own file map and
-    FAIL CLOSED on any entry that names no live data file: file
-    identity is (inode, size), so an inode-changing but
-    content-preserving operation on the table directory (cp/rsync
-    restore, cross-filesystem move) orphans every DV entry — and a read
-    that silently dropped orphans would RESURRECT deleted rows (round-13
-    advisory, medium). Returns ``(ident_rows, affected_basenames,
-    summary)``: the snapshot's (basename, ino, size) map, the
-    basenames of the files that actually carry DV entries — the only
-    files a scan must pay the identity projection and anti-join for —
-    and the loaded summary, so callers never re-read it (a pre-r14
-    table without the sidecar pays the parquet re-digest ONCE)."""
-    ident = _dv_ident_rows(table_dir, version)
-    by_id = {(i, s): bn for bn, i, s in ident}
-    summary = _dv_summary(table_dir, version)
-    unresolved = [k for k in summary if k not in by_id]
-    if unresolved:
-        raise RuntimeError(
-            f"{table_dir}/{version}: {len(unresolved)} deletion-vector "
-            "file identities resolve to no data file of the snapshot "
-            f"(e.g. (ino, size)={sorted(unresolved)[:3]}). The table "
-            "directory was likely copied without preserving inodes "
-            "(cp/rsync/cross-filesystem move); reading past the orphaned "
-            "entries would resurrect deleted rows, so this read fails "
-            "closed. Recover from the original directory, or rebuild "
-            "from a trusted lineage (RESTORE to a pre-DV version, or a "
-            "rewriting commit on the original table)."
-        )
-    return ident, {by_id[k] for k in summary}, summary
+_SCAN_FILE_COL = "_scan_file"  # per-row data-file basename
 
 
 def _with_scan_identity(scan):
-    """Append the per-row physical identity columns to a SINGLE file
+    """Append the per-row data-file basename column to a SINGLE file
     scan: ``_metadata`` only resolves directly on a file-source
     relation (it does NOT survive a union), so every union branch
     captures it before assembly."""
     from pyspark.sql import functions as F
 
     return scan.withColumn(
-        _DV_FP_COL,
+        _SCAN_FILE_COL,
         F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-    ).withColumn(_DV_RI_COL, F.col("_metadata.row_index"))
-
-
-def _apply_dv(spark, df, table_dir: str, version: str, ident=None):
-    """Anti-join the version's deletion vector (requires the identity
-    columns on ``df``). The DV and the file-identity map both broadcast
-    — churn-sized and file-count-sized respectively. ``ident`` accepts
-    the precomputed (basename, ino, size) rows so the scoped read path
-    resolves identities once."""
-    from pyspark.sql import functions as F
-
-    if ident is None:
-        ident = _dv_ident_rows(table_dir, version)
-    map_df = spark.createDataFrame(
-        ident, f"{_DV_FP_COL} string, _i long, _s long"
     )
-    dv = spark.read.parquet(*_dv_files(table_dir, version))
-    doomed = dv.join(
-        F.broadcast(map_df),
-        on=[dv["ino"] == map_df["_i"], dv["size"] == map_df["_s"]],
-        how="inner",
-    ).select(
-        map_df[_DV_FP_COL],
-        dv["row_index"].alias(_DV_RI_COL),
-    )
-    return df.join(
-        F.broadcast(doomed), on=[_DV_FP_COL, _DV_RI_COL], how="left_anti"
-    )
-
-
-def _write_dv(spark, dv_df, vdir: str) -> None:
-    """Materialize a DV frame (``ino, size, row_index``) as the single
-    ``_dv.parquet`` sidecar file inside a (not yet published) version
-    directory — written by Spark to a staging dir, then the one part
-    file renamed in (the sidecar is churn-sized by construction)."""
-    import os
-    import shutil
-    import uuid
-
-    stage = os.path.join(vdir, f".dv_stage.{uuid.uuid4().hex[:8]}")
-    dv_df.coalesce(1).write.mode("error").parquet(stage)
-    for extra in os.listdir(stage):
-        if extra.startswith((".", "_")):  # _SUCCESS and friends
-            os.unlink(os.path.join(stage, extra))
-    # summary sidecar (per-identity rows + digest) rides the same
-    # atomic rename — no published .dv/ can lack it. Computed with ONE
-    # distributed pass: the driver receives a row per file identity
-    # (O(files)); a long-lived MoR table's cumulative DV can be
-    # millions of rows, and re-digesting it driver-side per commit
-    # would make commit cost O(total deleted rows) (round-14 review).
-    # Digest = sha256 of the comma-joined sorted deduplicated index
-    # list, byte-for-byte the _dv_summary_of convention (cross-impl
-    # equality pinned in tests via the carry path). Round 15 (r14
-    # verdict #7): the previous sort_array(collect_set(...)) form made
-    # ONE task hold a file's ENTIRE index array — a single file with
-    # millions of DV'd rows became a task-memory cliff. The digest now
-    # streams: repartition by identity, sort within partitions, and
-    # fold an incremental sha over the Arrow batches — peak task
-    # memory O(batch), same digest bytes.
-    rows = (
-        dv_df.repartition("ino", "size")
-        .sortWithinPartitions("ino", "size", "row_index")
-        .mapInPandas(
-            _dv_digest_batches, "ino long, size long, n long, h string"
-        )
-        .collect()
-    )
-    _dv_write_summary(stage, {
-        "v": 1,
-        "entries": {
-            f"{int(r['ino'])}:{int(r['size'])}": {
-                "rows": int(r["n"]), "digest": r["h"],
-            } for r in rows
-        },
-    })
-    os.replace(stage, os.path.join(vdir, _DV_DIR))
-
-
-def _dv_digest_batches(batches):
-    """mapInPandas kernel for the DV summary digest: the input is
-    repartitioned by (ino, size) and sorted within partitions by
-    (ino, size, row_index), so each file identity's rows arrive as one
-    contiguous ascending run (possibly spanning Arrow batches, never
-    partitions). Folds an incremental sha256 over the run — hashing
-    exactly the bytes ``",".join(map(str, sorted(set(idxs))))`` of
-    :func:`_dv_summary_of` — with peak memory O(batch): duplicates are
-    adjacent after the sort (dropped via np.unique per slice + a
-    cross-batch last-index watermark), and the cross-batch comma joins
-    through the open group's running state. Emits one (ino, size,
-    dedup'd count, 16-hex digest) row per identity."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    cur = None        # open group's (ino, size)
-    h = None          # its running sha256
-    n = 0             # its deduplicated index count
-    last_ri = None    # last index hashed (cross-batch dedupe + join)
-    done: list[tuple] = []
-
-    def close():
-        if cur is not None:
-            done.append(
-                (int(cur[0]), int(cur[1]), int(n), h.hexdigest()[:16])
-            )
-
-    for pdf in batches:
-        ino = pdf["ino"].to_numpy()
-        size = pdf["size"].to_numpy()
-        ri = pdf["row_index"].to_numpy()
-        if len(ri) == 0:
-            continue
-        newgrp = np.empty(len(ri), dtype=bool)
-        newgrp[0] = True
-        newgrp[1:] = (ino[1:] != ino[:-1]) | (size[1:] != size[:-1])
-        bounds = np.append(np.flatnonzero(newgrp), len(ri))
-        for a, b in zip(bounds[:-1], bounds[1:]):
-            key = (int(ino[a]), int(size[a]))
-            idxs = np.unique(ri[a:b])  # sorted input: dedupe only
-            if key != cur:
-                close()
-                cur, h, n, last_ri = key, hashlib.sha256(), 0, None
-            if last_ri is not None:
-                idxs = idxs[idxs > last_ri]
-                if len(idxs) == 0:
-                    continue
-                h.update(b",")
-            h.update(",".join(map(str, idxs.tolist())).encode())
-            n += len(idxs)
-            last_ri = int(idxs[-1])
-    close()
-    yield pd.DataFrame(
-        {
-            "ino": pd.Series([r[0] for r in done], dtype="int64"),
-            "size": pd.Series([r[1] for r in done], dtype="int64"),
-            "n": pd.Series([r[2] for r in done], dtype="int64"),
-            "h": pd.Series([r[3] for r in done], dtype="object"),
-        }
-    )
-
-
-def _carry_dv(table_dir: str, version: str, base_version: str | None) -> None:
-    """Carry the base snapshot's deletion vector into a new version,
-    FILTERED to file identities still present there — rewritten files'
-    entries drop (their rows were read DV-filtered during the merge),
-    carried files keep theirs. A version that wrote its own DV (the dv
-    delete) is left alone. Called by :func:`_publish_version` for every
-    writer, so no publish path can silently resurrect deleted rows.
-    Driver-side pyarrow (the DV is churn-sized); a full-rewrite commit
-    (plain upsert, compaction, OPTIMIZE) shares no identities and drops
-    the DV entirely — the REORG PURGE analog."""
-    import os
-
-    vdir = os.path.join(table_dir, version)
-    if os.path.isdir(os.path.join(vdir, _DV_DIR)):
-        return
-    if base_version is None:
-        return
-    base_files = _dv_files(table_dir, base_version)
-    if not base_files:
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    live = {
-        (ino, size) for _bn, ino, size in _dv_ident_rows(table_dir, version)
-    }
-    tables = [pq.read_table(p) for p in base_files]
-    t = pa.concat_tables(tables) if len(tables) > 1 else tables[0]
-    mask = pa.array(
-        [(i, s) in live for i, s in
-         zip(t.column("ino").to_pylist(), t.column("size").to_pylist())]
-    )
-    kept = t.filter(mask)
-    if kept.num_rows == 0:
-        return
-    import uuid
-
-    stage = os.path.join(vdir, f".{_DV_DIR}.{uuid.uuid4().hex[:8]}.tmp")
-    os.makedirs(stage, exist_ok=True)
-    pq.write_table(kept, os.path.join(stage, "dv-carried.parquet"))
-    _dv_write_summary(stage, _dv_summary_of(kept))
-    os.replace(stage, os.path.join(vdir, _DV_DIR))
-
-
-def _emit_dv_version(spark, table_dir: str, current: str, vdir: str,
-                     doomed) -> None:
-    """Materialize a merge-on-read DELETE version: union the doomed
-    rows' positions (``doomed`` carries the reader's identity columns)
-    with the base's existing deletion vector, write the ``.dv/``
-    sidecar, and carry EVERY data file of ``current`` forward
-    (hardlink, or file manifest on manifest-pinned plain tables).
-    Shared by the keyed and the predicate DV deletes."""
-    import os
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    version = os.path.basename(vdir)
-    os.makedirs(vdir, exist_ok=True)
-    ident = _dv_ident_rows(table_dir, current)
-    map_df = spark.createDataFrame(
-        ident, f"{_DV_FP_COL} string, ino long, size long"
-    )
-    new_dv = doomed.select(
-        _DV_FP_COL, F.col(_DV_RI_COL).alias("row_index")
-    ).join(F.broadcast(map_df), on=_DV_FP_COL).select(
-        "ino", "size", "row_index"
-    )
-    old_dv = _dv_files(table_dir, current)
-    if old_dv:
-        new_dv = spark.read.parquet(*old_dv).unionByName(
-            new_dv
-        ).dropDuplicates(["ino", "size", "row_index"])
-    if not new_dv.isEmpty():
-        _write_dv(spark, new_dv, vdir)
-    all_files = _snapshot_files(table_dir, current)
-    if _plain_link_mode(table_dir) == "manifest":
-        _emit_file_manifest(table_dir, version, all_files)
-    else:
-        for key in sorted(all_files):
-            src = all_files[key]
-            dst = os.path.join(vdir, os.path.basename(src))
-            if os.path.exists(dst):
-                dst = os.path.join(
-                    vdir,
-                    f"dv-{uuid.uuid4().hex[:8]}-{os.path.basename(src)}",
-                )
-            os.link(src, dst)
 
 
 def _base_gone(table_dir: str, current: str | None) -> bool:
@@ -974,7 +548,6 @@ def _cow_touched_files(
     current: str,
     updates: DataFrame,
     key_cols: list[str],
-    probe: bool = True,
 ) -> tuple[set[str], set[str], dict[str, str]] | None:
     """The copy-on-write planning pass: which data files of the CURRENT
     snapshot contain at least one updated key? Returns ``(touched_keys,
@@ -995,8 +568,7 @@ def _cow_touched_files(
        holding the NULL-keyed row (and the merge would duplicate it).
     2. **Exact probe** — scan ONLY the candidates' key columns (column-
        pruned), tag rows with their file basename (the reader's
-       identity column — ``input_file_name()`` cannot resolve on a
-       deletion-vector table's multi-source plan), left-semi join the
+       per-scan basename column), left-semi join the
        batch's keys (NULL-safe, AQE broadcasts the churn-sized side):
        the distinct file list is exactly the files whose rows the merge
        must rewrite. The collect is bounded by the snapshot's file
@@ -1038,19 +610,12 @@ def _cow_touched_files(
         cand = set(all_files)  # unprunable key type: probe everything
     if not cand:
         return set(), set(all_files), all_files
-    if not probe:
-        # stats candidates only (phase 1): callers that re-scan the
-        # result anyway (the DV position probe) skip the exact pass
-        return set(cand), set(all_files) - set(cand), all_files
 
     # identity=True: the reader's per-scan basename column replaces
-    # input_file_name(), which cannot resolve on multi-source plans —
-    # exactly what a deletion-vector table's anti-joined read is
-    # (round 13); it also keeps the probe honest there (DV-deleted
-    # rows can no longer mark a file as touched)
+    # input_file_name(), which cannot resolve on a multi-branch union
     cdf = _snapshot_df_files(
         spark, table_dir, current, cand, identity=True
-    ).select(*key_cols, F.col(_DV_FP_COL).alias("_f"))
+    ).select(*key_cols, F.col(_SCAN_FILE_COL).alias("_f"))
     upd_keys = updates.select(*key_cols)
     touched_names = [
         r["_f"]
@@ -1092,7 +657,6 @@ def upsert_parquet_versioned(
     cow: bool = False,
     link_mode: str | None = None,
     auto_compact: int | None = None,
-    dv: bool = False,
     delete_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Keyed upsert with SNAPSHOT-ATOMIC publish — closes the
@@ -1191,26 +755,7 @@ def upsert_parquet_versioned(
     compaction), debris-sized by construction. With CoW this bounds
     the table's file count forever without an external maintenance
     scheduler: each commit accretes at most a few files and every Nth
-    commit packs them. The same hook
-    REORG-purges files whose deletion-vector density crossed
-    ``_DV_PURGE_DENSITY`` (round 14), so DV tables self-heal their
-    read tax.
-
-    ``dv=True`` (round 14, plain tables): MERGE-ON-READ update — the
-    second half of Delta's deletion-vector posture. Matched keys' OLD
-    rows are marked deleted in the DV sidecar (their files carry
-    forward physically untouched) and the batch appends as NEW files,
-    so update write volume is O(churn) ALWAYS — where ``cow=True``
-    still rewrites every file that holds a matched key, dv writes only
-    the batch plus a kilobyte-scale sidecar. Exact same merge
-    semantics (pinned equal to the CoW merge in tests), and the
-    probe that finds the doomed positions is the same stats-candidate
-    pass CoW plans with. Falls back to the full-rewrite merge when the
-    batch evolves the schema (appended new-schema files next to
-    carried old-schema files would brick the pinned-schema read).
-    Readers pay the scoped anti-join until REORG/OPTIMIZE/compaction
-    purges — bounded by auto_compact's density trigger. Mutually
-    exclusive with ``cow``.
+    commit packs them.
 
     ``delete_keys`` (round 14, r13 verdict #8): Delta's ``MERGE ...
     WHEN MATCHED THEN DELETE`` — the same commit that upserts
@@ -1218,8 +763,7 @@ def upsert_parquet_versioned(
     CAS publish and one watermark. A key in both frames takes the
     upsert (deletes apply first, then the merge): one commit instead
     of an upsert and a delete. Composes with ``cow`` (files holding
-    EITHER key set rewrite, everything else carries) and with ``dv``
-    (doomed rows join the deletion vector; only the batch appends).
+    EITHER key set rewrite, everything else carries).
     First write ignores it (nothing exists to delete).
     """
     import json
@@ -1229,13 +773,6 @@ def upsert_parquet_versioned(
 
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be given together")
-    if dv and cow:
-        raise ValueError("dv=True and cow=True are mutually exclusive")
-    if dv and _table_layout(table_dir) is not None:
-        raise ValueError(
-            "dv=True supports plain tables only; bucketed tables "
-            "already rewrite only the touched buckets"
-        )
 
     os.makedirs(table_dir, exist_ok=True)
     mode = _pin_plain_link_mode(table_dir, link_mode)
@@ -1271,7 +808,6 @@ def upsert_parquet_versioned(
         version: str | None = None
         try:
             carry: dict[str, str] = {}
-            mor_done = False  # merge-on-read update path taken
             if current is None:
                 # first write: dedupe WITHIN the batch through the same
                 # window later merges apply — the one-row-per-key contract
@@ -1283,54 +819,6 @@ def upsert_parquet_versioned(
                 seq = 1
             else:
                 seq = int(current.split("-")[1]) + 1
-                mor = dv
-                if mor and set(updates.dtypes) != set(
-                    _snapshot_df(spark, table_dir, current).dtypes
-                ):
-                    # schema evolution: appended new-schema files beside
-                    # carried old-schema files would brick the
-                    # pinned-schema snapshot read — full rewrite instead
-                    mor = False
-                if mor:
-                    # merge-on-read UPDATE (round 14): DV the matched
-                    # preimages in place, append the deduped batch as
-                    # new files — write volume is O(churn) always
-                    version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
-                    vdir = os.path.join(table_dir, version)
-                    batch = merge_upsert(
-                        updates.limit(0), updates, key_cols
-                    )
-                    kdf = batch.select(*key_cols).dropDuplicates(key_cols)
-                    probe_keys = (
-                        kdf.unionByName(dk).dropDuplicates(key_cols)
-                        if dk is not None else kdf
-                    )
-                    mor_plan = _cow_touched_files(
-                        spark, table_dir, current, probe_keys, key_cols,
-                        probe=False,
-                    )
-                    probe = (
-                        _snapshot_df_files(
-                            spark, table_dir, current, mor_plan[0],
-                            identity=True,
-                        )
-                        if mor_plan is not None
-                        else _snapshot_df(spark, table_dir, current,
-                                          identity=True)
-                    )
-                    doomed = probe.join(
-                        F.broadcast(probe_keys),
-                        on=_null_safe_cond(probe, probe_keys, key_cols),
-                        how="left_semi",
-                    ).localCheckpoint()  # churn-sized: feeds the DV
-                    out = (
-                        batch.coalesce(target_files) if target_files
-                        else batch
-                    )
-                    out.write.mode("error").parquet(vdir)
-                    _emit_dv_version(spark, table_dir, current, vdir,
-                                     doomed)
-                    mor_done = True
                 plan_probe = updates
                 if dk is not None:
                     # files holding a doomed key must rewrite too
@@ -1339,7 +827,7 @@ def upsert_parquet_versioned(
                     _cow_touched_files(
                         spark, table_dir, current, plan_probe, key_cols
                     )
-                    if (cow and not mor_done) else None
+                    if cow else None
                 )
                 if cow_plan is not None:
                     touched, untouched, all_files = cow_plan
@@ -1382,7 +870,7 @@ def upsert_parquet_versioned(
                                 max(1, len(touched))
                             )
                         carry = {k: all_files[k] for k in untouched}
-                if cow_plan is None and not mor_done:
+                if cow_plan is None:
                     # manifest-aware: a CoW file-manifest snapshot's
                     # files live across version dirs; plain
                     # materialized snapshots read the dir as before
@@ -1397,48 +885,47 @@ def upsert_parquet_versioned(
                     merged = merge_upsert(survivors, updates, key_cols,
                                           merge_schema=merge_schema)
 
-            if not mor_done:
-                version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
-                # Distributed write: the merge plan reads the CURRENT
-                # version directory, which this write never touches (the
-                # target directory is brand-new), so no materialization
-                # barrier is needed. AQE coalesces a catalog-sized merge
-                # to one post-shuffle partition on its own; target_files
-                # pins the file count explicitly when a layout contract
-                # requires it. (An earlier form collected the table
-                # through the driver — measured at 92 s for a 10M-row
-                # base, it was the scale ceiling of the whole sink; see
-                # SCALING.md round 9.)
-                out = (
-                    merged.coalesce(target_files) if target_files
-                    else merged
-                )
-                out.write.mode("error").parquet(
-                    os.path.join(table_dir, version)
-                )
-                # copy-on-write carry, by the table's pinned link mode:
-                # hardlink — untouched files link into the new version
-                # AFTER the rewrite lands (zero bytes copied; link
-                # targets are immutable snapshot files; Spark part names
-                # carry a per-job UUID, so collisions are vanishing —
-                # the rename guard keeps even that case safe); manifest —
-                # the new version publishes a file manifest referencing
-                # untouched files in their origin dirs (object-store
-                # posture, no links needed).
-                vdir = os.path.join(table_dir, version)
-                if mode == "manifest" and cow:
-                    _emit_file_manifest(table_dir, version, carry)
-                else:
-                    for key in sorted(carry):
-                        src = carry[key]
-                        dst = os.path.join(vdir, os.path.basename(src))
-                        if os.path.exists(dst):
-                            dst = os.path.join(
-                                vdir,
-                                f"cow-{uuid.uuid4().hex[:8]}-"
-                                f"{os.path.basename(src)}",
-                            )
-                        os.link(src, dst)
+            version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+            # Distributed write: the merge plan reads the CURRENT
+            # version directory, which this write never touches (the
+            # target directory is brand-new), so no materialization
+            # barrier is needed. AQE coalesces a catalog-sized merge
+            # to one post-shuffle partition on its own; target_files
+            # pins the file count explicitly when a layout contract
+            # requires it. (An earlier form collected the table
+            # through the driver — measured at 92 s for a 10M-row
+            # base, it was the scale ceiling of the whole sink; see
+            # SCALING.md round 9.)
+            out = (
+                merged.coalesce(target_files) if target_files
+                else merged
+            )
+            out.write.mode("error").parquet(
+                os.path.join(table_dir, version)
+            )
+            # copy-on-write carry, by the table's pinned link mode:
+            # hardlink — untouched files link into the new version
+            # AFTER the rewrite lands (zero bytes copied; link
+            # targets are immutable snapshot files; Spark part names
+            # carry a per-job UUID, so collisions are vanishing —
+            # the rename guard keeps even that case safe); manifest —
+            # the new version publishes a file manifest referencing
+            # untouched files in their origin dirs (object-store
+            # posture, no links needed).
+            vdir = os.path.join(table_dir, version)
+            if mode == "manifest" and cow:
+                _emit_file_manifest(table_dir, version, carry)
+            else:
+                for key in sorted(carry):
+                    src = carry[key]
+                    dst = os.path.join(vdir, os.path.basename(src))
+                    if os.path.exists(dst):
+                        dst = os.path.join(
+                            vdir,
+                            f"cow-{uuid.uuid4().hex[:8]}-"
+                            f"{os.path.basename(src)}",
+                        )
+                    os.link(src, dst)
         except Exception as err:
             # base pruned mid-scan by a concurrent winner's retention
             # (keep_versions=1): a conflict, not an IO failure — but
@@ -1461,10 +948,7 @@ def upsert_parquet_versioned(
             _publish_version(
                 table_dir, version, marks, keep_versions,
                 expected_base=current,
-                operation=(
-                    "MERGE (dv)" if mor_done
-                    else "MERGE (cow)" if carry else "MERGE"
-                ),
+                operation="MERGE (cow)" if carry else "MERGE",
             )
         except ConcurrentWriteError as err:
             # our snapshot merged a stale base — drop it and re-merge
@@ -1473,7 +957,7 @@ def upsert_parquet_versioned(
             last_err = err
             continue
         # The commit is durable once the CAS pointer swap succeeds.
-        # Auto-compaction/purge runs OUTSIDE the publish try: a
+        # Auto-compaction runs OUTSIDE the publish try: a
         # ConcurrentWriteError (or any failure) escaping from it must
         # NOT reach the handler above, which would rmtree the
         # just-published LIVE snapshot and re-merge against a dangling
@@ -1486,7 +970,7 @@ def upsert_parquet_versioned(
                 import warnings
 
                 warnings.warn(
-                    f"{table_dir}: post-publish auto-compact/purge "
+                    f"{table_dir}: post-publish auto-compact "
                     f"failed (commit already durable): {err}"
                 )
         return read_versioned(spark, table_dir)
@@ -1807,7 +1291,6 @@ def delete_versioned(
     txn_version: int | None = None,
     retries: int = 2,
     cow: bool = False,
-    dv: bool = False,
 ) -> DataFrame:
     """Keyed DELETE from a versioned table — the right-to-be-forgotten
     operation (GDPR/erasure requests) every long-lived training-data
@@ -1840,24 +1323,6 @@ def delete_versioned(
     delete cost tracks the churn, and surviving versions share files
     (churn-pruned CDF). Falls back to the full rewrite when no stats
     sidecar exists.
-
-    ``dv=True`` (round 13, plain tables): MERGE-ON-READ delete —
-    Delta's deletion-vector mode. NO data file is rewritten or even
-    read-beyond-the-probe: the commit carries every file forward
-    (hardlink/manifest) and publishes a ``_dv.parquet`` sidecar naming
-    the doomed (file identity, row index) pairs, which every reader
-    anti-joins. Write cost is O(deleted rows) regardless of file
-    sizes — at real scale, a 10-row erasure on a multi-TB table writes
-    kilobytes where even CoW rewrites whole files. Readers pay the
-    broadcast anti-join until a rewriting commit (full compaction /
-    OPTIMIZE — the REORG PURGE analog) materializes the deletes away;
-    every non-rewriting commit carries surviving entries forward
-    automatically (:func:`_carry_dv`). DV deletes require a plain
-    layout (bucketed tables already rewrite only the touched buckets);
-    erasure caveat: the doomed bytes
-    remain INSIDE the carried data files until a rewriting commit —
-    for hard erasure use ``cow=True``/plain delete, or follow the DV
-    delete with ``compact_versioned``.
     """
     import os
     import shutil
@@ -1865,8 +1330,6 @@ def delete_versioned(
 
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be given together")
-    if dv and cow:
-        raise ValueError("dv=True and cow=True are mutually exclusive")
     missing = [c for c in key_cols if c not in keys.columns]
     if missing:
         raise ValueError(f"keys frame lacks key columns: {missing}")
@@ -1876,11 +1339,6 @@ def delete_versioned(
         raise ValueError(
             f"layout mismatch for {table_dir}: table is bucketed on "
             f"{layout.get('key_cols')}, delete asked {key_cols}"
-        )
-    if dv and layout is not None:
-        raise ValueError(
-            "dv=True supports plain tables only; bucketed tables "
-            "already rewrite only the touched buckets"
         )
 
     kdf = keys.select(*key_cols).dropDuplicates(key_cols)
@@ -1906,32 +1364,7 @@ def delete_versioned(
         vdir = os.path.join(table_dir, version)
 
         try:
-            if dv:
-                # merge-on-read: carry every data file, publish only a
-                # deletion-vector sidecar naming the doomed positions.
-                # The position probe reuses the CoW planner: stats
-                # candidates first, so the scan is bounded by the files
-                # that can possibly hold a doomed key, not the table
-                dv_plan = _cow_touched_files(
-                    spark, table_dir, current, kdf, key_cols,
-                    probe=False,
-                )
-                if dv_plan is not None:
-                    snap = _snapshot_df_files(
-                        spark, table_dir, current, dv_plan[0],
-                        identity=True,
-                    )
-                else:
-                    snap = _snapshot_df(spark, table_dir, current,
-                                        identity=True)
-                doomed = snap.join(
-                    F.broadcast(kdf),
-                    on=_null_safe_cond(snap, kdf, key_cols),
-                    how="left_semi",
-                ).localCheckpoint()  # churn-sized: feeds the DV
-                os.makedirs(vdir, exist_ok=True)
-                _emit_dv_version(spark, table_dir, current, vdir, doomed)
-            elif layout is None:
+            if layout is None:
                 carry: dict[str, str] = {}
                 cow_plan = (
                     _cow_touched_files(
@@ -2015,8 +1448,7 @@ def delete_versioned(
                     .parquet(vdir)
                 )
                 untouched = untouched_pre
-            if not dv:
-                _emit_untouched(table_dir, current, vdir, untouched, layout)
+            _emit_untouched(table_dir, current, vdir, untouched, layout)
         except ValueError:
             raise  # the empty-snapshot brick guard, not a scan failure
         except Exception as err:
@@ -2037,7 +1469,7 @@ def delete_versioned(
         try:
             _publish_version(table_dir, version, marks, keep_versions,
                              expected_base=current,
-                             operation="DELETE (dv)" if dv else "DELETE")
+                             operation="DELETE")
             return read_versioned(spark, table_dir)
         except ConcurrentWriteError as err:
             shutil.rmtree(vdir, ignore_errors=True)
@@ -2054,7 +1486,6 @@ def delete_versioned_where(
     txn_version: int | None = None,
     retries: int = 2,
     key_range: tuple[float, float] | None = None,
-    dv: bool = False,
 ) -> DataFrame:
     """Predicate DELETE (``DELETE WHERE <condition>``) from a versioned
     table — rows matching ``condition`` (a Column or SQL string) are
@@ -2077,11 +1508,6 @@ def delete_versioned_where(
     hardlinks into the new snapshot unread. The promise is the same
     contract as Delta's ``replaceWhere`` — rows outside the hinted
     range are untouched even if the condition would match them.
-
-    ``dv=True`` (round 13, plain tables): merge-on-read — the doomed
-    positions go into the ``.dv/`` sidecar and every data file carries
-    forward unrewritten (see :func:`delete_versioned`); the probe is
-    one predicate scan of the snapshot, the write is O(deleted rows).
     """
     import math
     import os
@@ -2092,13 +1518,6 @@ def delete_versioned_where(
         raise ValueError("txn_app_id and txn_version must be given together")
     cond = F.expr(condition) if isinstance(condition, str) else condition
     layout = _table_layout(table_dir)
-    if dv and layout is not None:
-        raise ValueError(
-            "dv=True supports plain tables only; use key_range pruning "
-            "on bucketed tables"
-        )
-    if dv and key_range is not None:
-        raise ValueError("dv=True and key_range are mutually exclusive")
     hint_buckets: list[int] | None = None
     if key_range is not None:
         if layout is None or layout.get("scheme") != "range":
@@ -2140,55 +1559,46 @@ def delete_versioned_where(
         vdir = os.path.join(table_dir, version)
 
         try:
-            if dv:
-                snap = _snapshot_df(spark, table_dir, current,
-                                    identity=True)
-                doomed = snap.filter(
-                    F.coalesce(cond, F.lit(False))
-                ).localCheckpoint()
-                os.makedirs(vdir, exist_ok=True)
-                _emit_dv_version(spark, table_dir, current, vdir, doomed)
+            existing = _snapshot_df(spark, table_dir, current)
+            untouched: list[str] = []
+            if hint_buckets is not None:
+                existing = existing.filter(
+                    F.col(_BUCKET_COL).isin(hint_buckets)
+                )
+                untouched = [
+                    d for d in _snapshot_buckets(table_dir, current)
+                    if int(d.split("=", 1)[1]) not in set(hint_buckets)
+                ]
+            # NULL-safe NOT: rows where the predicate is NULL are
+            # KEPT (SQL DELETE semantics — only TRUE deletes)
+            remaining = existing.filter(~F.coalesce(cond, F.lit(False)))
+            if layout is None:
+                remaining.write.mode("error").parquet(vdir)
             else:
-                existing = _snapshot_df(spark, table_dir, current)
-                untouched: list[str] = []
-                if hint_buckets is not None:
-                    existing = existing.filter(
-                        F.col(_BUCKET_COL).isin(hint_buckets)
+                if not untouched and remaining.isEmpty():
+                    # same brick guard as delete_versioned: an empty
+                    # partitioned snapshot has no data files and no
+                    # schema
+                    raise ValueError(
+                        f"delete_versioned_where would remove EVERY "
+                        f"row of the bucketed table {table_dir}; "
+                        "refusing to publish an unreadable empty "
+                        "snapshot — drop the table directory instead"
                     )
-                    untouched = [
-                        d for d in _snapshot_buckets(table_dir, current)
-                        if int(d.split("=", 1)[1]) not in set(hint_buckets)
-                    ]
-                # NULL-safe NOT: rows where the predicate is NULL are
-                # KEPT (SQL DELETE semantics — only TRUE deletes)
-                remaining = existing.filter(~F.coalesce(cond, F.lit(False)))
-                if layout is None:
-                    remaining.write.mode("error").parquet(vdir)
-                else:
-                    if not untouched and remaining.isEmpty():
-                        # same brick guard as delete_versioned: an empty
-                        # partitioned snapshot has no data files and no
-                        # schema
-                        raise ValueError(
-                            f"delete_versioned_where would remove EVERY "
-                            f"row of the bucketed table {table_dir}; "
-                            "refusing to publish an unreadable empty "
-                            "snapshot — drop the table directory instead"
-                        )
-                    n_parts = (
-                        max(1, len(hint_buckets))
-                        if hint_buckets is not None
-                        else layout["n_buckets"]
+                n_parts = (
+                    max(1, len(hint_buckets))
+                    if hint_buckets is not None
+                    else layout["n_buckets"]
+                )
+                (
+                    remaining.repartition(
+                        n_parts, F.col(_BUCKET_COL)
                     )
-                    (
-                        remaining.repartition(
-                            n_parts, F.col(_BUCKET_COL)
-                        )
-                        .write.mode("error")
-                        .partitionBy(_BUCKET_COL)
-                        .parquet(vdir)
-                    )
-                _emit_untouched(table_dir, current, vdir, untouched, layout)
+                    .write.mode("error")
+                    .partitionBy(_BUCKET_COL)
+                    .parquet(vdir)
+                )
+            _emit_untouched(table_dir, current, vdir, untouched, layout)
         except ValueError:
             raise  # the empty-snapshot brick guard, not a scan failure
         except Exception as err:
@@ -2209,8 +1619,7 @@ def delete_versioned_where(
         try:
             _publish_version(table_dir, version, marks, keep_versions,
                              expected_base=current,
-                             operation="DELETE WHERE (dv)" if dv
-                             else "DELETE WHERE")
+                             operation="DELETE WHERE")
             return read_versioned(spark, table_dir)
         except ConcurrentWriteError as err:
             shutil.rmtree(vdir, ignore_errors=True)
@@ -2553,23 +1962,12 @@ def _snapshot_df_files(
     their partition column via ``basePath``. An empty set yields an
     empty frame with the snapshot's schema.
 
-    ``identity=True`` keeps the per-row physical identity columns
-    (``_dv_fp``/``_dv_ri``) on the result. A snapshot carrying a
-    deletion vector is read through its anti-join, SCOPED to the files
-    that actually carry DV entries (round-14): clean files scan plain —
-    no identity projection, no join — so the DV read tax is O(affected
-    files), not O(table); identity resolution fails closed on orphaned
-    entries (see :func:`_dv_resolved`). Identity capture is per-branch
-    because ``_metadata`` does not survive a union."""
+    ``identity=True`` keeps the per-row data-file basename column
+    (``_scan_file``) on the result. It is captured per branch because
+    ``_metadata`` does not survive a union."""
     import os
     from functools import reduce
 
-    has_dv = bool(_dv_files(table_dir, version))
-    ident_rows: list = []
-    affected: set = set()
-    dv_sum: dict = {}
-    if has_dv:
-        ident_rows, affected, dv_sum = _dv_resolved(table_dir, version)
     all_files = _snapshot_files(table_dir, version)
     unknown = keys - set(all_files)
     if unknown:
@@ -2590,85 +1988,23 @@ def _snapshot_df_files(
     schema = (
         data_schema.add(_BUCKET_COL, "integer") if bucketed else data_schema
     )
-    chosen = sorted(keys)
-    if not chosen:
-        empty_schema = schema
+    if not keys:
         if identity:
-            empty_schema = empty_schema.add(_DV_FP_COL, "string").add(
-                _DV_RI_COL, "long"
-            )
-        return spark.createDataFrame([], empty_schema)
+            schema = schema.add(_SCAN_FILE_COL, "string")
+        return spark.createDataFrame([], schema)
 
-    def _branches(subset: list[str], with_ident: bool) -> list:
-        by_origin: dict[str, list[str]] = {}
-        for k in subset:
-            by_origin.setdefault(k.split("/", 1)[0], []).append(
-                all_files[k]
-            )
-        out = []
-        for origin, paths in sorted(by_origin.items()):
-            odir = os.path.join(table_dir, origin)
-            scan = (
-                spark.read.option("basePath", odir)
-                .schema(schema)
-                .parquet(*sorted(paths))
-            )
-            out.append(_with_scan_identity(scan) if with_ident else scan)
-        return out
-
-    if not has_dv:
-        return reduce(
-            lambda a, c: a.unionByName(c), _branches(chosen, identity)
+    by_origin: dict[str, list[str]] = {}
+    for k in sorted(keys):
+        by_origin.setdefault(k.split("/", 1)[0], []).append(all_files[k])
+    parts = []
+    for origin, paths in sorted(by_origin.items()):
+        odir = os.path.join(table_dir, origin)
+        scan = (
+            spark.read.option("basePath", odir)
+            .schema(schema)
+            .parquet(*sorted(paths))
         )
-    aff = [k for k in chosen
-           if os.path.basename(all_files[k]) in affected]
-    clean = [k for k in chosen
-             if os.path.basename(all_files[k]) not in affected]
-    parts = _branches(clean, identity)
-    if aff:
-        from pyspark.sql import functions as F
-
-        total_dv = sum(e["rows"] for e in dv_sum.values())
-        if total_dv <= _DV_INLINE_MAX and len(aff) <= _DV_INLINE_MAX_FILES:
-            # small DV over FEW files: inline the doomed row indices
-            # as per-file NOT-IN filters — whole-stage-codegen InSet
-            # probes, zero joins, zero broadcast jobs (see
-            # _DV_INLINE_MAX / _DV_INLINE_MAX_FILES for both cliffs)
-            by_ident = _dv_inline_indices(table_dir, version)
-            ident_of = {bn: (i, s) for bn, i, s in ident_rows}
-            for k in aff:
-                path = all_files[k]
-                idxs = by_ident.get(
-                    ident_of[os.path.basename(path)], []
-                )
-                odir = os.path.join(table_dir, k.split("/", 1)[0])
-                scan = (
-                    spark.read.option("basePath", odir)
-                    .schema(schema).parquet(path)
-                )
-                lst = ",".join(map(str, idxs))
-                if identity:
-                    scan = _with_scan_identity(scan)
-                    if idxs:
-                        scan = scan.filter(
-                            F.expr(f"{_DV_RI_COL} NOT IN ({lst})")
-                        )
-                elif idxs:
-                    scan = scan.filter(
-                        F.expr(
-                            f"_metadata.row_index NOT IN ({lst})"
-                        )
-                    )
-                parts.append(scan)
-        else:
-            sub = reduce(
-                lambda a, c: a.unionByName(c), _branches(aff, True)
-            )
-            sub = _apply_dv(spark, sub, table_dir, version,
-                            ident=ident_rows)
-            if not identity:
-                sub = sub.drop(_DV_FP_COL, _DV_RI_COL)
-            parts.append(sub)
+        parts.append(_with_scan_identity(scan) if identity else scan)
     return reduce(lambda a, c: a.unionByName(c), parts)
 
 
@@ -2677,12 +2013,9 @@ def _snapshot_df_files(
 # suffix, so a (table_dir, version) pair can never alias different
 # content, even across drop-and-recreate), so the assembled full-
 # snapshot plan can be reused per session instead of re-running footer
-# inference and rebuilding per-file DV NOT-IN literal lists on every
-# read — plan CONSTRUCTION alone measured 0.46 s per read on a
-# 15k-row-DV snapshot (r15; the ivm_view warm path paid it 4x per
-# invocation). LOGICAL PLANS ONLY: no data, rows, or results are
-# cached — every execution of the returned frame still scans the
-# snapshot's parquet. Keyed on the Spark application so a dead
+# inference on every read. LOGICAL PLANS ONLY: no data, rows, or
+# results are cached — every execution of the returned frame still
+# scans the snapshot's parquet. Keyed on the Spark application so a dead
 # session's plans are never resurrected; bounded LRU.
 _SNAPSHOT_PLAN_CACHE: dict = {}
 _SNAPSHOT_PLAN_CACHE_MAX = 64
@@ -2691,26 +2024,19 @@ _SNAPSHOT_PLAN_CACHE_MAX = 64
 def _snapshot_df(
     spark: SparkSession, table_dir: str, version: str,
     buckets: set[str] | None = None,
-    identity: bool = False,
 ) -> DataFrame:
     """Cache-fronted :func:`_snapshot_df_build` — full-snapshot reads
-    (no bucket restriction, no identity columns: the shape every
-    :func:`read_versioned` and replay-no-op path uses) are memoized per
-    (session, table, version); restricted/identity shapes build fresh
-    (their keys would multiply without bounding the win). The DV
-    inline-path tunables ride the key: the built plan's SHAPE depends
-    on them (inline NOT-IN vs broadcast anti-join), they are constants
-    in production (one key), and tests monkeypatch them to force a
-    shape — a stale cached shape must not survive that."""
-    if buckets is not None or identity:
-        return _snapshot_df_build(spark, table_dir, version, buckets,
-                                  identity)
-    key = (spark.sparkContext.applicationId, table_dir, version,
-           _DV_INLINE_MAX, _DV_INLINE_MAX_FILES)
+    (no bucket restriction: the shape every :func:`read_versioned` and
+    replay-no-op path uses) are memoized per (session, table, version);
+    restricted shapes build fresh (their keys would multiply without
+    bounding the win)."""
+    if buckets is not None:
+        return _snapshot_df_build(spark, table_dir, version, buckets)
+    key = (spark.sparkContext.applicationId, table_dir, version)
     hit = _SNAPSHOT_PLAN_CACHE.get(key)
     if hit is not None:
         return hit
-    df = _snapshot_df_build(spark, table_dir, version, buckets, identity)
+    df = _snapshot_df_build(spark, table_dir, version)
     if len(_SNAPSHOT_PLAN_CACHE) >= _SNAPSHOT_PLAN_CACHE_MAX:
         _SNAPSHOT_PLAN_CACHE.pop(next(iter(_SNAPSHOT_PLAN_CACHE)))
     _SNAPSHOT_PLAN_CACHE[key] = df
@@ -2720,7 +2046,6 @@ def _snapshot_df(
 def _snapshot_df_build(
     spark: SparkSession, table_dir: str, version: str,
     buckets: set[str] | None = None,
-    identity: bool = False,
 ) -> DataFrame:
     """Assemble a snapshot DataFrame, resolving the manifest when the
     version is manifest-laid-out: bucket dirs GROUP BY their physical
@@ -2734,40 +2059,17 @@ def _snapshot_df_build(
     manifest and materialized bucketed layouts) — the churn-pruned CDF
     uses it to scan only buckets whose physical identity changed
     between two snapshots; an empty restriction yields an empty frame
-    with the snapshot's schema.
-
-    ``identity=True`` keeps the per-row physical identity columns; a
-    deletion-vector-carrying snapshot always assembles at FILE
-    granularity through :func:`_snapshot_df_files`, which scopes the
-    anti-join tax to the DV-affected files only."""
+    with the snapshot's schema."""
     import os
     from functools import reduce
-
-    has_dv = bool(_dv_files(table_dir, version))
 
     m = _read_manifest(table_dir, version)
     if _is_file_manifest(m):
         # plain CoW file manifest: the snapshot is the referenced file
-        # set (bucket restriction is meaningless — no buckets exist);
-        # the file reader owns the DV application
-        return _snapshot_df_files(spark, table_dir, version, set(m),
-                                  identity=identity)
-    if has_dv:
-        # DV tables are plain-layout by contract (delete_versioned
-        # refuses dv=True on bucketed tables), so the bucket
-        # restriction cannot co-occur; the filter below keeps the
-        # invariant honest if that ever changes
-        keys = set(_snapshot_files(table_dir, version))
-        if buckets is not None:
-            keys = {
-                k for k in keys
-                if len(k.split("/")) >= 3 and k.split("/")[-2] in buckets
-            }
-        return _snapshot_df_files(spark, table_dir, version, keys,
-                                  identity=identity)
+        # set (bucket restriction is meaningless — no buckets exist)
+        return _snapshot_df_files(spark, table_dir, version, set(m))
     if m is None and buckets is None:
-        scan = spark.read.parquet(os.path.join(table_dir, version))
-        return _with_scan_identity(scan) if identity else scan
+        return spark.read.parquet(os.path.join(table_dir, version))
     mapping = _snapshot_buckets(table_dir, version)
     if not mapping:
         raise FileNotFoundError(
@@ -2783,10 +2085,6 @@ def _snapshot_df_build(
         schema = spark.read.parquet(
             os.path.join(table_dir, o0, d0)
         ).schema.add(_BUCKET_COL, "integer")
-        if identity:
-            schema = schema.add(_DV_FP_COL, "string").add(
-                _DV_RI_COL, "long"
-            )
         return spark.createDataFrame([], schema)
     # The schema is inferred ONCE and pinned on every branch — each
     # bare spark.read.parquet() runs an eager footer-inference job, and
@@ -2808,7 +2106,7 @@ def _snapshot_df_build(
             .schema(full_schema)
             .parquet(*[os.path.join(odir, d) for d in sorted(dirs)])
         )
-        parts.append(_with_scan_identity(scan) if identity else scan)
+        parts.append(scan)
     return reduce(lambda a, c: a.unionByName(c), parts)
 
 
@@ -2989,18 +2287,6 @@ def clone_versioned(
     # drop the source's txn sidecar if the walk brought structure over
     # (it skips _-prefixed files, so nothing to remove — publish with
     # EMPTY marks by design)
-    src_dv = _dv_files(table_dir, version)
-    if src_dv:
-        # the cloned snapshot's deletion vector is part of its content:
-        # hardlinked files share inodes, so the DV's identities resolve
-        # in the clone exactly as in the source
-        ddir = _dv_path(dest_dir, new_version)
-        os.makedirs(ddir, exist_ok=True)
-        for p in src_dv:
-            os.link(p, os.path.join(ddir, os.path.basename(p)))
-        sp = os.path.join(_dv_path(table_dir, version), _DV_SUMMARY)
-        if os.path.exists(sp):
-            os.link(sp, os.path.join(ddir, _DV_SUMMARY))
     _publish_version(dest_dir, new_version, {}, keep_versions=1,
                      expected_base=None,
                      operation=f"CLONE {table_dir}@{version}")
@@ -3098,8 +2384,7 @@ def restore_versioned(
         try:
             _publish_version(table_dir, new_version, marks, keep_versions,
                              expected_base=current,
-                             operation=f"RESTORE {version}",
-                             dv_base=version)
+                             operation=f"RESTORE {version}")
             return read_versioned(spark, table_dir)
         except ConcurrentWriteError as err:
             # same contract as every other writer: drop the stale link
@@ -3109,109 +2394,6 @@ def restore_versioned(
                           ignore_errors=True)
             last_err = err
     raise last_err
-
-
-def _alter_schema_versioned(spark: SparkSession, table_dir: str,
-                            column: str, transform, operation: str,
-                            keep_versions: int) -> DataFrame:
-    """Shared RENAME/DROP COLUMN writer: a FULL-REWRITE commit of the
-    transformed snapshot through the standard CAS publish. The
-    reference reshapes every incoming FRAME to a fixed target schema
-    (monarch_etl/schema.py:28 prune/complete/reorder); here the TABLE
-    schema itself evolves, with history — each retained version keeps
-    its own schema for time travel and RESTORE (this engine
-    has no column-mapping layer, so like Delta WITHOUT the
-    columnMapping table feature the physical files must be rewritten;
-    with it the same API would become a metadata commit). The rewrite
-    reads DV-resolved, so deletes materialize away (DV entries drop via
-    the no-shared-identity carry)."""
-    import os
-    import shutil
-    import uuid
-
-    if _table_layout(table_dir) is not None:
-        raise NotImplementedError(
-            f"{operation}: bucket-partitioned tables pin their layout "
-            "to column identities (bucket spec, per-bucket pruning); "
-            "rewrite through a fresh table instead"
-        )
-    last_err: ConcurrentWriteError | None = None
-    for _attempt in range(3):
-        try:
-            current, marks = _read_commit_state(table_dir)
-        except ConcurrentWriteError as err:
-            last_err = err
-            continue
-        if current is None:
-            raise FileNotFoundError(
-                f"no published snapshot under {table_dir}"
-            )
-        base = _snapshot_df(spark, table_dir, current)
-        out = transform(base)
-        seq = int(current.split("-")[1]) + 1
-        version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
-        vdir = os.path.join(table_dir, version)
-        out.write.mode("error").parquet(vdir)
-        try:
-            _publish_version(table_dir, version, marks, keep_versions,
-                             expected_base=current, operation=operation)
-            return read_versioned(spark, table_dir)
-        except ConcurrentWriteError as err:
-            shutil.rmtree(vdir, ignore_errors=True)
-            last_err = err
-    raise last_err
-
-
-def rename_column(spark: SparkSession, table_dir: str, old: str, new: str,
-                  keep_versions: int = 2) -> DataFrame:
-    """``ALTER TABLE RENAME COLUMN old TO new`` for a versioned
-    table, as a full-rewrite commit (see
-    :func:`_alter_schema_versioned`). Guards: the source column must
-    exist and the target must not collide. Time travel still reads
-    pre-rename versions under their historical name; RESTORE across
-    the rename restores the historical schema."""
-
-    def transform(base: DataFrame) -> DataFrame:
-        if old not in base.columns:
-            raise ValueError(
-                f"rename_column: {old!r} not in {base.columns}"
-            )
-        if new in base.columns:
-            raise ValueError(
-                f"rename_column: target {new!r} already a column "
-                f"({base.columns})"
-            )
-        return base.withColumnRenamed(old, new)
-
-    return _alter_schema_versioned(
-        spark, table_dir, old, transform,
-        f"RENAME COLUMN {old} TO {new}", keep_versions,
-    )
-
-
-def drop_column(spark: SparkSession, table_dir: str, column: str,
-                keep_versions: int = 2) -> DataFrame:
-    """``ALTER TABLE DROP COLUMN column`` for a versioned table, as
-    a full-rewrite commit (see :func:`_alter_schema_versioned`).
-    Guards: the column must exist and must not be the last column.
-    The data disappears from the new version only — time travel and
-    RESTORE still see it in retained history."""
-
-    def transform(base: DataFrame) -> DataFrame:
-        if column not in base.columns:
-            raise ValueError(
-                f"drop_column: {column!r} not in {base.columns}"
-            )
-        if len(base.columns) == 1:
-            raise ValueError(
-                f"drop_column: {column!r} is the last column"
-            )
-        return base.drop(column)
-
-    return _alter_schema_versioned(
-        spark, table_dir, column, transform,
-        f"DROP COLUMN {column}", keep_versions,
-    )
 
 
 def _maybe_auto_compact(
@@ -3240,23 +2422,11 @@ def _maybe_auto_compact(
             spark, table_dir, target_bytes=target_bytes,
             keep_versions=keep_versions, incremental=True,
         )
-    # deletion-vector self-healing (round 14): once deletes accrete
-    # past _DV_PURGE_DENSITY of a file's rows, rewrite that file —
-    # otherwise the anti-join read tax grows without bound on
-    # delete-heavy tables. Same best-effort contract as the bin-pack.
-    cur = _current_version(table_dir)
-    if cur is not None and _dv_summary(table_dir, cur):
-        reorg_purge_versioned(
-            spark, table_dir, min_density=_DV_PURGE_DENSITY,
-            keep_versions=keep_versions,
-        )
 
 
 def _stamp_op(table_dir: str, version: str, operation: str) -> None:
     """Write a version's operation-name sidecar (atomic tmp+rename) —
-    the ``DESCRIBE HISTORY`` 'operation' column. Shared by
-    :func:`_publish_version` and the group writer (whose member
-    versions publish through the group pointer instead)."""
+    the ``DESCRIBE HISTORY`` 'operation' column."""
     import json
     import os
     import uuid
@@ -3275,7 +2445,6 @@ def _publish_version(
     keep_versions: int,
     expected_base: str | None | object = _UNCHECKED,
     operation: str = "WRITE",
-    dv_base: str | None | object = _UNCHECKED,
 ) -> None:
     """Commit an already-written version directory: persist the txn
     watermark sidecar INSIDE it, then — under the commit lock — verify
@@ -3300,16 +2469,6 @@ def _publish_version(
     # best-effort diagnostics like the commit timestamp, never a
     # publish gate
     _stamp_op(table_dir, version, operation)
-    # Deletion-vector carry, BEFORE publish and NOT best-effort: a
-    # writer that carried files from a DV-bearing base must keep their
-    # deletion entries or deleted rows resurrect. ``dv_base`` defaults
-    # to the merge base; RESTORE overrides it with the restored
-    # version (a rollback adopts THAT snapshot's DV, never CURRENT's).
-    carry_base = (
-        (expected_base if isinstance(expected_base, str) else None)
-        if dv_base is _UNCHECKED else dv_base
-    )
-    _carry_dv(table_dir, version, base_version=carry_base)
     # Per-file column stats sidecar, BEFORE the lock (footer IO has no
     # business inside the flock critical section). expected_base gives
     # the carry-forward source; _UNCHECKED/None publishes sweep every
@@ -3535,132 +2694,6 @@ def compact_versioned(
     return report
 
 
-# density at which auto-compaction rewrites a DV-affected file: once
-# half a file's rows are deleted, every read of it wastes more scan
-# than the rewrite costs, and the anti-join tax never self-heals
-# otherwise (round-13 verdict #6: no auto-purge policy)
-_DV_PURGE_DENSITY = 0.5
-
-
-def reorg_purge_versioned(
-    spark: SparkSession,
-    table_dir: str,
-    min_density: float = 0.0,
-    keep_versions: int = 2,
-) -> dict:
-    """Delta's ``REORG TABLE ... APPLY (PURGE)``: rewrite exactly the
-    data files whose deletion-vector density (DV rows / file rows) is
-    ``>= min_density``, materializing their deletes away; every other
-    file — clean files AND DV files below the threshold — carries into
-    the new version untouched (hardlink/manifest), keeping its physical
-    identity so clustering, stats carry-forward, and churn pruning
-    survive. The default threshold 0.0 purges every DV-carrying file.
-
-    Cost tracks the purged files, never the table: planning reads the
-    O(files) DV summary + stats sidecar (no data IO) and the rewrite
-    scans only the target files (DV-filtered by the scoped read).
-    Partial purges are exact: below-threshold files' DV entries carry
-    forward automatically (:func:`_carry_dv`). Best-effort under
-    contention like compaction — a CAS conflict backs off with
-    ``{"conflict": True}``."""
-    import math  # noqa: F401  (parity with compact's imports)
-    import os
-    import uuid
-
-    current = _current_version(table_dir)
-    if current is None:
-        raise FileNotFoundError(f"no published snapshot under {table_dir}")
-    report: dict = {"purged": False, "purged_files": 0, "dv_rows_purged": 0}
-    if not _dv_files(table_dir, current):
-        return report
-    # fail-closed identity resolution (shared with the read path): a
-    # purge planned over orphaned identities would silently RESURRECT
-    # deleted rows by carrying their files while dropping the DV
-    _ident, _aff, dvsum = _dv_resolved(table_dir, current)
-    if not dvsum:
-        return report
-    snap = _snapshot_files(table_dir, current)
-    from . import filestats
-
-    stats = filestats.read_stats(table_dir, current)
-    ident_to_key: dict[tuple, str] = {}
-    rows_of: dict[tuple, int | None] = {}
-    for k, p in snap.items():
-        st = os.stat(p)
-        ident_to_key[(st.st_ino, st.st_size)] = k
-    if stats is not None and set(stats.get("files", {})) == set(snap):
-        for k, e in stats["files"].items():
-            rows_of[(e.get("ino"), e.get("size"))] = e.get("rows")
-    targets: set[str] = set()
-    for ident, e in dvsum.items():
-        n = rows_of.get(ident)
-        if not n:
-            # unknown row count (missing/stale stats sidecar): read the
-            # parquet footer's num_rows (metadata-only, no data IO)
-            # instead of assuming full density — under the ≥50%
-            # auto-trigger the 1.0 fallback would silently rewrite
-            # every DV-carrying file on every auto_compact commit,
-            # degenerating merge-on-read into copy-on-write
-            try:
-                import pyarrow.parquet as pq
-
-                n = pq.ParquetFile(
-                    snap[ident_to_key[ident]]
-                ).metadata.num_rows
-            except Exception:  # noqa: BLE001 — footer unreadable
-                n = None
-        # still unknown: fully-dense fallback — the purge is always
-        # correct, only possibly over-eager
-        density = (e["rows"] / n) if n else 1.0
-        if density >= min_density:
-            targets.add(ident_to_key[ident])
-            report["dv_rows_purged"] += e["rows"]
-    report["purged_files"] = len(targets)
-    if not targets:
-        report["dv_rows_purged"] = 0
-        return report
-
-    to_rewrite = _snapshot_df_files(spark, table_dir, current, targets)
-    if _BUCKET_COL in to_rewrite.columns:
-        to_rewrite = to_rewrite.drop(_BUCKET_COL)
-    carry = {k: snap[k] for k in snap if k not in targets}
-    marks = txn_watermarks(table_dir)
-    seq = int(current.split("-")[1]) + 1
-    version = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
-    vdir = os.path.join(table_dir, version)
-    # like-for-like file count for the purged region (see the CoW
-    # upsert's repartition-not-coalesce note)
-    to_rewrite.repartition(max(1, len(targets))).write.mode(
-        "error"
-    ).parquet(vdir)
-    if carry:
-        if _plain_link_mode(table_dir) == "manifest":
-            _emit_file_manifest(table_dir, version, carry)
-        else:
-            for key in sorted(carry):
-                src = carry[key]
-                dst = os.path.join(vdir, os.path.basename(src))
-                if os.path.exists(dst):
-                    dst = os.path.join(
-                        vdir,
-                        f"purge-{uuid.uuid4().hex[:8]}-"
-                        f"{os.path.basename(src)}",
-                    )
-                os.link(src, dst)
-    try:
-        _publish_version(table_dir, version, marks, keep_versions,
-                         expected_base=current,
-                         operation="REORG (purge)")
-    except ConcurrentWriteError:
-        import shutil
-
-        shutil.rmtree(vdir, ignore_errors=True)
-        report["conflict"] = True
-        return report
-    report.update(purged=True, version=version)
-    return report
-
-
 def upsert_dbapi(
     df: DataFrame,
     conn_factory,
@@ -3789,336 +2822,6 @@ def reconcile_inventory(
     )
 
 
-# ---------------------------------------------------------------------------
-# Multi-table group commit: N versioned tables published by ONE atomic
-# pointer swap — the transaction primitive for stores whose invariant
-# spans tables (the dedup index's docs/bands/bloom). Round-11 verdict
-# task: the per-table commits left a crash window (docs advanced, bands
-# not) whose replay-heal algebra needed careful reasoning; a group
-# commit collapses it to all-or-nothing.
-# ---------------------------------------------------------------------------
-
-_GROUP_POINTER = "_CURRENT_GROUP"
-_GROUP_LOCK = "._GROUP_LOCK"
-
-
-def group_state(group_dir: str) -> dict | None:
-    """The committed state of a table group: ``{"versions": {table:
-    version}, "marks": {app_id: txn_version}, "history": {table:
-    [versions...]}}`` — ONE JSON document, swapped atomically, so every
-    field is from the same commit. ``None`` when nothing is published."""
-    import json
-    import os
-
-    try:
-        with open(os.path.join(group_dir, _GROUP_POINTER)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-def read_versioned_group(
-    spark: SparkSession, group_dir: str, table: str,
-    version: str | None = None,
-) -> DataFrame:
-    """Read one member table of a group at its group-committed version
-    (or a retained older version by name). Raises FileNotFoundError if
-    the group, the table, or the requested version is not published —
-    same contract as :func:`read_versioned`."""
-    import os
-
-    state = group_state(group_dir)
-    if state is None or table not in state.get("versions", {}):
-        raise FileNotFoundError(
-            f"no published snapshot for table {table!r} under {group_dir}"
-        )
-    name = version if version is not None else state["versions"][table]
-    if name not in state.get("history", {}).get(table, [name]):
-        raise FileNotFoundError(
-            f"version {name} of {table!r} is not retained under {group_dir}"
-        )
-    path = os.path.join(group_dir, table, name)
-    if not os.path.isdir(path):
-        # the pointer dangles — the member directory was dropped out of
-        # band (e.g. "delete the bloom table and re-ingest"); treat as
-        # unpublished, same contract as list_versions' existence filter
-        raise FileNotFoundError(
-            f"snapshot directory {path} is missing for table {table!r}"
-        )
-    return spark.read.parquet(path)
-
-
-def group_txn_watermarks(group_dir: str) -> dict[str, int]:
-    """Replay watermarks of the group's CURRENT commit (one map for the
-    whole group — a batch either landed in every member table or in
-    none, so one watermark is the correct granularity)."""
-    state = group_state(group_dir)
-    return dict(state.get("marks", {})) if state else {}
-
-
-def _publish_group(
-    group_dir: str,
-    new_versions: dict[str, str],
-    marks: dict[str, int],
-    keep_versions: int,
-    expected_versions: dict[str, str] | None,
-    seed_history: dict[str, list[str]] | None = None,
-) -> None:
-    """Commit already-written version directories for N member tables
-    with ONE atomic pointer swap. Under the group lock: verify the
-    stored versions map still equals ``expected_versions`` (the CAS —
-    ``None`` means the writer saw an unpublished group), merge the new
-    versions over the carried-forward ones, rewrite histories, swap the
-    group pointer, then prune retention. A crash anywhere before the
-    ``os.replace`` leaves every member table at its previous version
-    (debris only); after it, every member is advanced — there is no
-    state in which some tables moved and others did not."""
-    import fcntl
-    import json
-    import os
-    import shutil
-    import uuid
-
-    prior = group_state(group_dir) or {}
-    lock_fd = os.open(os.path.join(group_dir, _GROUP_LOCK),
-                      os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(lock_fd, fcntl.LOCK_EX)
-        now = group_state(group_dir)
-        now_versions = now.get("versions") if now else None
-        if now_versions != expected_versions:
-            raise ConcurrentWriteError(
-                f"{group_dir}: merged against {expected_versions} but "
-                f"group CURRENT is now {now_versions} — a concurrent "
-                "writer committed; re-merge and retry"
-            )
-        import time as _time
-
-        versions = dict(expected_versions or {})
-        versions.update(new_versions)
-        # seed_history: a first publish adopting a pre-group layout
-        # carries the legacy per-table ledgers in the SAME swap (a
-        # post-publish fix-up could clobber a commit that landed in
-        # between; round-11 self-review finding)
-        if seed_history is not None and now is None:
-            history = dict(seed_history)
-        else:
-            history = dict((now or prior).get("history", {}))
-        pruned: list[tuple[str, str]] = []
-        for t, v in new_versions.items():
-            hist = [x for x in history.get(t, []) if x != v] + [v]
-            keep = hist[max(0, len(hist) - max(1, keep_versions)):]
-            pruned += [(t, x) for x in hist[: len(hist) - len(keep)]]
-            history[t] = keep
-        # Monotonic commit counter (round-12): a group consumer keys
-        # its replay watermark on this, because the sum-of-member-
-        # sequences heuristic breaks when a dangling member's rebuild
-        # restarts its numbering. Legacy states (no counter) seed ABOVE
-        # both the heuristic and any watermark already recorded, so
-        # adoption can never regress below a value a consumer has used.
-        prior_state = now or prior
-        if prior_state and "seq" in prior_state:
-            seq = int(prior_state["seq"]) + 1
-        else:
-            legacy = sum(
-                int(v.split("-")[1]) for v in versions.values()
-            )
-            used = [int(m) for m in marks.values()] if marks else [0]
-            seq = max(legacy, max(used)) + 1
-        state = {"versions": versions, "marks": marks,
-                 "history": history, "seq": seq,
-                 "committed_at": _time.time()}
-        tmp = os.path.join(group_dir,
-                           f".{_GROUP_POINTER}.{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(group_dir, _GROUP_POINTER))  # commit
-        for t, stale in pruned:
-            shutil.rmtree(os.path.join(group_dir, t, stale),
-                          ignore_errors=True)
-    finally:
-        os.close(lock_fd)
-
-
-def upsert_group_versioned(
-    spark: SparkSession,
-    group_dir: str,
-    batches: dict[str, tuple[DataFrame, list[str]]],
-    keep_versions: int = 2,
-    txn_app_id: str | None = None,
-    txn_version: int | None = None,
-    retries: int = 2,
-    merge_schema: bool = False,
-    deletes: dict[str, DataFrame] | None = None,
-) -> dict[str, str]:
-    """Keyed upsert into N member tables of a group, committed
-    ATOMICALLY: every table's new snapshot becomes visible in one
-    pointer swap, or none does. ``batches`` maps table name to
-    ``(updates, key_cols)``; each table gets the same
-    :func:`merge_upsert` semantics as :func:`upsert_parquet_versioned`.
-    Tables not named in ``batches`` keep their current version in the
-    new commit (a group commit may touch a subset).
-
-    Exactly-once replay is per GROUP: one ``txn_app_id``/``txn_version``
-    watermark covers all member tables, because a batch lands in all of
-    them or in none — the property the dedup index's separate per-table
-    watermarks could not give (docs-committed/bands-crashed left the
-    two tables' watermarks disagreeing and the batch half-applied).
-
-    CAS + retry as in the single-table writer: on conflict the written
-    version directories are removed and every table re-merges from the
-    new group state. A base snapshot pruned mid-merge by a concurrent
-    winner (keep_versions=1) converts to a conflict the same way.
-    Returns the committed ``{table: version}`` map.
-
-    ``deletes`` (round 12) maps a
-    table name to a frame of keys to REMOVE in the same atomic commit:
-    the member's existing rows anti-join the doomed keys (NULL-safe)
-    before the batch merges in, so an upsert+delete pair against one
-    table — or upserts in one member and deletes in another — land
-    together or not at all. A table named only in ``deletes`` gets an
-    empty update batch of its own schema; its ``key_cols`` are the
-    delete frame's columns.
-    """
-    import os
-    import shutil
-    import uuid
-
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be given together")
-    deletes = dict(deletes or {})
-    if not batches and not deletes:
-        raise ValueError("upsert_group_versioned needs at least one table")
-
-    os.makedirs(group_dir, exist_ok=True)
-    last_err: ConcurrentWriteError | None = None
-    for _attempt in range(max(0, retries) + 1):
-        state = group_state(group_dir)
-        versions = dict(state["versions"]) if state else {}
-        marks = dict(state.get("marks", {})) if state else {}
-        if (
-            txn_app_id is not None
-            and txn_app_id in marks
-            and marks[txn_app_id] >= txn_version
-        ):
-            return versions
-
-        new_versions: dict[str, str] = {}
-        written: list[str] = []
-        try:
-            work: dict[str, tuple[DataFrame | None, list[str] | None]] = {
-                t: (u, k) for t, (u, k) in batches.items()
-            }
-            for t in deletes:
-                work.setdefault(t, (None, None))
-            for t, (updates, key_cols) in work.items():
-                tdir = os.path.join(group_dir, t)
-                cur = versions.get(t)
-                if cur is not None and not os.path.isdir(
-                    os.path.join(tdir, cur)
-                ):
-                    # dangling member (directory dropped out of band,
-                    # e.g. a bloom rebuild): rewrite from scratch, same
-                    # posture as read_versioned_group's existence check
-                    cur = None
-                if updates is None:
-                    # delete-only member: the anti-join survivors ARE
-                    # the new snapshot — no merge window. Running
-                    # merge_upsert keyed on the DELETE frame's columns
-                    # would silently collapse surviving rows whenever
-                    # those columns are not the member's unique key
-                    # (round-12 self-review finding #2: delete-by-
-                    # band-id on a (band, key) table lost rows).
-                    if cur is None:
-                        continue  # nothing exists, nothing to delete
-                    existing = spark.read.parquet(os.path.join(tdir, cur))
-                    kdf = deletes[t].dropDuplicates()
-                    merged = existing.join(
-                        F.broadcast(kdf),
-                        on=_null_safe_cond(existing, kdf,
-                                           list(kdf.columns)),
-                        how="left_anti",
-                    )
-                    seq = int(cur.split("-")[1]) + 1
-                    vname = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
-                    vdir = os.path.join(tdir, vname)
-                    merged.write.mode("error").parquet(vdir)
-                    _stamp_op(tdir, vname, "GROUP DELETE")
-                    _collect_stats(tdir, vname, base_version=cur)
-                    new_versions[t] = vname
-                    written.append(vdir)
-                    continue
-                if cur is None:
-                    merged = merge_upsert(updates.limit(0), updates,
-                                          key_cols,
-                                          merge_schema=merge_schema)
-                    seq = 1
-                else:
-                    existing = spark.read.parquet(os.path.join(tdir, cur))
-                    if t in deletes:
-                        # atomic upsert+delete: doomed keys leave in the
-                        # SAME commit the batch lands in (NULL-safe,
-                        # like delete_versioned)
-                        kdf = deletes[t].dropDuplicates()
-                        existing = existing.join(
-                            F.broadcast(kdf),
-                            on=_null_safe_cond(existing, kdf,
-                                               list(kdf.columns)),
-                            how="left_anti",
-                        )
-                    merged = merge_upsert(existing, updates, key_cols,
-                                          merge_schema=merge_schema)
-                    seq = int(cur.split("-")[1]) + 1
-                vname = f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
-                vdir = os.path.join(tdir, vname)
-                merged.write.mode("error").parquet(vdir)
-                _stamp_op(tdir, vname,
-                          "GROUP MERGE + DELETE" if t in deletes
-                          else "GROUP MERGE")
-                # member stats sidecar (round 12): same per-file column
-                # stats every single-table publish gets — group members
-                # are diffable and file-prunable like single tables
-                _collect_stats(tdir, vname, base_version=cur)
-                new_versions[t] = vname
-                written.append(vdir)
-        except Exception as err:
-            member_gone = any(
-                versions.get(t) is not None
-                and not os.path.isdir(
-                    os.path.join(group_dir, t, versions[t])
-                )
-                for t in set(batches) | set(deletes)
-            )
-            if _base_pruned_error(err) and member_gone:
-                for d in written:
-                    shutil.rmtree(d, ignore_errors=True)
-                last_err = ConcurrentWriteError(
-                    f"{group_dir}: a member base was pruned mid-merge by "
-                    f"a concurrent winner's retention ({err}); re-merging "
-                    "from the new group CURRENT"
-                )
-                continue
-            raise
-
-        if txn_app_id is not None:
-            marks[txn_app_id] = int(txn_version)
-        try:
-            _publish_group(
-                group_dir, new_versions, marks, keep_versions,
-                expected_versions=state["versions"] if state else None,
-            )
-            committed = dict(versions)
-            committed.update(new_versions)
-            return committed
-        except ConcurrentWriteError as err:
-            for d in written:
-                shutil.rmtree(d, ignore_errors=True)
-            last_err = err
-    raise last_err
-
-
 def identity_changed_buckets(
     table_dir: str, from_version: str, to_version: str
 ) -> set[str] | None:
@@ -4165,14 +2868,7 @@ def identity_changed_files(
     shuffle), so their intersection is empty and this degrades to the
     full diff — the honest shape. It pays when snapshots genuinely
     share files: copy-on-write merges, RESTORE/CLONE lineage, compact
-    no-ops, and every bucketed layout's untouched buckets.
-
-    Deletion vectors (round 13) amend the proof's premise: a DV delete
-    carries files with IDENTICAL physical identity while changing
-    their VISIBLE rows, so a shared file counts as unchanged only when
-    its DV entry set is also identical on both sides — otherwise
-    pure-identity pruning would report an empty diff for a commit that
-    deleted rows."""
+    no-ops, and every bucketed layout's untouched buckets."""
     from . import filestats
 
     s_old = filestats.read_stats(table_dir, from_version)
@@ -4186,21 +2882,6 @@ def identity_changed_files(
         (e["ino"], e["size"]): k for k, e in s_new["files"].items()
     }
     shared = set(ident_old) & set(ident_new)
-    dv_old = _dv_summary(table_dir, from_version)
-    dv_new = _dv_summary(table_dir, to_version)
-    if dv_old or dv_new:
-        # content digests stand in for the row-index sets: equal digest
-        # == equal deleted-row set (the summary is computed from the
-        # sorted deduplicated indices), at O(files) driver cost instead
-        # of materializing churn-sized sets (round-13 verdict #5)
-        def _dg(m, i):
-            e = m.get(i)
-            return None if e is None else e["digest"]
-
-        shared = {
-            i for i in shared
-            if _dg(dv_old, i) == _dg(dv_new, i)
-        }
     return (
         {k for i, k in ident_old.items() if i not in shared},
         {k for i, k in ident_new.items() if i not in shared},
@@ -4459,8 +3140,7 @@ def describe_files(spark: SparkSession, table_dir: str,
     logical file key, resolved physical path, bytes, physical identity
     (ino/size — the churn-pruning key), row count and per-column
     min/max from the stats sidecar (NULL when stats are absent:
-    pre-stats tables or failed best-effort collection), and the
-    deletion-vector rows charged to the file (0 = clean). Column
+    pre-stats tables or failed best-effort collection). Column
     stats render as a JSON string, not a Map — scalar schemas keep
     every downstream comparator happy.
 
@@ -4490,24 +3170,21 @@ def describe_files(spark: SparkSession, table_dir: str,
     snap = _snapshot_files(table_dir, version)
     stats = filestats.read_stats(table_dir, version)
     sfiles = (stats or {}).get("files", {})
-    dvsum = _dv_summary(table_dir, version)
     rows = []
     for key in sorted(snap):
         path = snap[key]
         st = os.stat(path)
         e = sfiles.get(key) or {}
-        dv = dvsum.get((st.st_ino, st.st_size)) or {}
         rows.append((
             key, path, int(st.st_size), int(st.st_ino),
             int(e["rows"]) if e.get("rows") is not None else None,
             _json.dumps(e["cols"], sort_keys=True)
             if e.get("cols") else None,
-            int(dv.get("rows", 0)),
         ))
     return spark.createDataFrame(
         rows,
         "file string, path string, bytes long, ino long, "
-        "rows long, column_stats string, dv_rows long",
+        "rows long, column_stats string",
     ).orderBy("file")
 
 
@@ -4516,18 +3193,16 @@ def describe_history(spark: SparkSession, table_dir: str) -> DataFrame:
     version, newest first — version name, sequence, the OPERATION that
     published it (stamped by every writer: MERGE / MERGE (cow) /
     MERGE (bucketed) / DELETE / DELETE WHERE / COMPACT[ (incremental)] /
-    OPTIMIZE (cols) / RESTORE v / CLONE src / GROUP *), the commit
-    timestamp, physical file count and bytes (manifest-resolved),
-    the snapshot's DELETION-VECTOR row count (0 = no DV; from the
-    sidecar footers, round 13), the replay-watermark map as JSON, and
-    whether the row is CURRENT.
+    OPTIMIZE (cols) / RESTORE v / CLONE src), the commit timestamp,
+    physical file count and bytes (manifest-resolved), the
+    replay-watermark map as JSON, and whether the row is CURRENT.
 
     Driver-side by design: history depth is bounded by
     ``keep_versions`` (a handful of rows), every column comes from
     sidecar/ledger reads plus one ``os.path.getsize`` pass per
     version — no Spark job runs to ANSWER the question, Spark only
-    hosts the result frame. Pre-stamp versions (or group-member
-    versions written before round 12) read operation ``NULL``."""
+    hosts the result frame. Pre-stamp versions read operation
+    ``NULL``."""
     import json
     import os
 
@@ -4544,18 +3219,10 @@ def describe_history(spark: SparkSession, table_dir: str) -> DataFrame:
         except (FileNotFoundError, ValueError):
             op = None
         files = _snapshot_files(table_dir, v)
-        dv_rows = 0
-        dvf = _dv_files(table_dir, v)
-        if dvf:
-            import pyarrow.parquet as _pq
-
-            dv_rows = sum(_pq.ParquetFile(p).metadata.num_rows
-                          for p in dvf)
         rows.append((
             v, int(v.split("-")[1]), op, float(ts[v]),
             len(files),
             sum(os.path.getsize(p) for p in files.values()),
-            dv_rows,
             json.dumps(_txn_marks_of(table_dir, v), sort_keys=True),
             v == current,
         ))
@@ -4563,7 +3230,7 @@ def describe_history(spark: SparkSession, table_dir: str) -> DataFrame:
         rows[::-1],
         "version string, seq long, operation string, "
         "committed_at double, n_files long, size_bytes long, "
-        "dv_rows long, txn_watermarks string, "
+        "txn_watermarks string, "
         "is_current boolean",
     )
 

@@ -23,17 +23,66 @@ Routes:
 from __future__ import annotations
 
 import json
+import re
 from collections.abc import Callable
+from decimal import Decimal, InvalidOperation
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qsl, urlsplit
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    ByteType,
+    DataType,
+    DecimalType,
+    FractionalType,
+    IntegerType,
+    IntegralType,
+    LongType,
+    ShortType,
+)
 
 from .serving import dynamic_filters, to_json_records
 
 DEFAULT_LIMIT = 1_000
 MAX_LIMIT = 10_000
 _RESERVED_PARAMS = {"year", "month", "day", "limit"}
+_DATE_PARAMS = ("year", "month", "day")
+_INT_BITS = {ByteType: 8, ShortType: 16, IntegerType: 32, LongType: 64}
+_INT_RE = re.compile(r"\s*[+-]?\d+\s*")
+
+
+def _typed_value(name: str, raw: str, dtype: DataType):
+    """Parse a request value for a numeric column, or raise ValueError
+    (the handler's 400). Left to Spark, a malformed or out-of-range
+    value fails at collect time inside the JVM (ANSI cast error, or a
+    py4j NumberFormatException for a literal past 64 bits) and the
+    request answers 500. Integers must fit the column's type; decimals
+    must fit its integer digits. Non-numeric columns pass through."""
+    if isinstance(dtype, IntegralType):
+        if not _INT_RE.fullmatch(raw):
+            raise ValueError(f"{name}: {raw!r} is not an integer")
+        value = int(raw)
+        bits = _INT_BITS[type(dtype)]
+        if not -(1 << (bits - 1)) <= value < 1 << (bits - 1):
+            raise ValueError(
+                f"{name}: {raw!r} is out of range for {dtype.simpleString()}"
+            )
+        return value
+    if isinstance(dtype, FractionalType):
+        try:
+            value = Decimal(raw.strip())
+        except InvalidOperation:
+            raise ValueError(f"{name}: {raw!r} is not a number") from None
+        if not isinstance(dtype, DecimalType):
+            return float(value)
+        if not value.is_finite() or (
+            abs(value) >= Decimal(10) ** (dtype.precision - dtype.scale)
+        ):
+            raise ValueError(
+                f"{name}: {raw!r} is out of range for {dtype.simpleString()}"
+            )
+        return value
+    return raw
 
 
 def plan_for_params(df: DataFrame, params: dict[str, str]) -> DataFrame:
@@ -43,20 +92,28 @@ def plan_for_params(df: DataFrame, params: dict[str, str]) -> DataFrame:
     :func:`handle_sightings` so the PLAN is testable: against a parquet
     provider the request predicates must reach the scan as
     PushedFilters (asserted in test_serving_http.py) — the whole point
-    of holding a provider instead of a materialized frame."""
+    of holding a provider instead of a materialized frame.
+
+    Values are checked against ``df.schema`` (no Spark job): year,
+    month and day must be integers and, like any numeric filter, fit
+    their column's type; see :func:`_typed_value`."""
     extra = {k: v for k, v in params.items() if k not in _RESERVED_PARAMS}
     unknown = [k for k in extra if k not in df.columns]
     if unknown:
         # a typo'd filter must be a 400, not a silent full-table answer
         # masquerading as a filtered one
         raise ValueError(f"unknown filter column(s): {unknown}")
-    return dynamic_filters(
-        df,
-        year=params.get("year"),
-        month=params.get("month"),
-        day=params.get("day"),
-        extra=extra,
-    )
+    types = {f.name: f.dataType for f in df.schema.fields}
+    dates = {}
+    for k in _DATE_PARAMS:
+        if k in params and k in types:
+            # dynamic_filters compares these as ints whatever the
+            # column type, so a non-integral column still gets the
+            # 64-bit literal range
+            dtype = types[k] if isinstance(types[k], IntegralType) else LongType()
+            dates[k] = _typed_value(k, params[k], dtype)
+    extra = {k: _typed_value(k, v, types[k]) for k, v in extra.items()}
+    return dynamic_filters(df, **dates, extra=extra)
 
 
 def handle_sightings(

@@ -74,12 +74,12 @@ def test_past_window_list_is_nonempty_and_stable():
     # The driver's gate is hard-capped at 50 rows (observed r8: a
     # 54-entry prefix recorded exactly 50), so oracle-backed queries
     # past the window keep their hard signal through this suite-run
-    # compare. 51 queries are oracle-backed, so one (semi_anti_join)
-    # sits past the window; quota_shuffle and proximity_pairs sit in
-    # it and stay pinned here as well. The list must never contain a
-    # name without an oracle (by construction) or miss one (the window
-    # test asserts the prefix side).
-    assert _past_window_oracle_names() == ["semi_anti_join"]
+    # compare. Exactly 50 queries are oracle-backed and all sit in the
+    # window, so none is past it; semi_anti_join, quota_shuffle and
+    # proximity_pairs stay pinned here as well. The list must never
+    # contain a name without an oracle (by construction) or miss one
+    # (the window test asserts the prefix side).
+    assert _past_window_oracle_names() == []
     oracles = entry.oracle_sql()
     assert all(n in oracles for n in SUITE_COMPARED)
     assert _suite_compared_names() == [

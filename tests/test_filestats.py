@@ -585,3 +585,37 @@ def test_null_pruned_reads_exact_and_fewer_files(spark, tmp_path):
     both = inv.read_versioned(
         spark, t, predicates=[("x", "is_not_null", None), ("k", "<", 100)])
     assert both.count() == 100
+
+
+def test_describe_files_metadata_table(spark, tmp_path):
+    """Iceberg's `files` metadata table analog: per-file bytes/rows/
+    stats from sidecars only (no Spark job to answer)."""
+    import json
+
+    from pyspark.sql import Row
+
+    path = str(tmp_path / "f")
+    inv.upsert_parquet_versioned(
+        spark, path,
+        spark.createDataFrame(
+            [Row(id=i, qty=i * 2) for i in range(1, 9)]
+        ).repartition(2),
+        ["id"], target_files=2, keep_versions=4,
+    )
+    rows = inv.describe_files(spark, path).collect()
+    assert len(rows) >= 1
+    assert sum(r.rows for r in rows) == 8
+    assert all(r.bytes > 0 for r in rows)
+    stats = json.loads(rows[0].column_stats)
+    assert "id" in stats and "lo" in stats["id"]
+    inv.delete_versioned(
+        spark, path, spark.createDataFrame([Row(id=3)]), ["id"],
+        keep_versions=4,
+    )
+    assert sum(r.rows for r in inv.describe_files(spark, path).collect()) == 7
+    # retained older version still answers; unknown version raises
+    first = inv.list_versions(path)[0]
+    assert sum(r.rows for r in
+               inv.describe_files(spark, path, first).collect()) == 8
+    with pytest.raises(FileNotFoundError):
+        inv.describe_files(spark, path, "v-999999-deadbeef")

@@ -1786,99 +1786,6 @@ def test_upsert_parquet_is_collect_free_and_staged(spark, tmp_path):
     assert debris == []
 
 
-def test_upsert_group_versioned_atomic_subset_and_replay(spark, tmp_path):
-    """The group commit primitive directly: one pointer state covers
-    all member tables; a subset commit carries the untouched member's
-    version forward; the group watermark no-ops a replay for the whole
-    group; time travel reads retained member versions."""
-    from animaltrackingetls_spark.inventory import (
-        group_state,
-        group_txn_watermarks,
-        read_versioned_group,
-        upsert_group_versioned,
-    )
-
-    g = str(tmp_path / "grp")
-    a1 = spark.createDataFrame([(1, "x")], "k long, v string")
-    b1 = spark.createDataFrame([(10, 1.0)], "id long, s double")
-    v1 = upsert_group_versioned(
-        spark, g, {"a": (a1, ["k"]), "b": (b1, ["id"])},
-        txn_app_id="w", txn_version=0,
-    )
-    assert set(v1) == {"a", "b"}
-    assert group_txn_watermarks(g) == {"w": 0}
-
-    # subset commit: only table a advances; b's version carries forward
-    a2 = spark.createDataFrame([(2, "y")], "k long, v string")
-    v2 = upsert_group_versioned(
-        spark, g, {"a": (a2, ["k"])}, txn_app_id="w", txn_version=1,
-    )
-    assert v2["b"] == v1["b"] and v2["a"] != v1["a"]
-    assert read_versioned_group(spark, g, "a").count() == 2
-    assert read_versioned_group(spark, g, "b").count() == 1
-
-    # replay of txn 1: watermark no-op, state byte-identical
-    s2 = group_state(g)
-    upsert_group_versioned(
-        spark, g, {"a": (a2, ["k"])}, txn_app_id="w", txn_version=1,
-    )
-    assert group_state(g) == s2
-
-    # time travel: a's v1 snapshot is retained (keep_versions=2)
-    old = read_versioned_group(spark, g, "a", version=v1["a"])
-    assert old.count() == 1
-
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        read_versioned_group(spark, g, "nope")
-    with _pytest.raises(ValueError, match="at least one table"):
-        upsert_group_versioned(spark, g, {})
-
-
-def test_upsert_group_versioned_cas_conflict_retries(spark, tmp_path):
-    """Two interleaved group writers serialize: the loser's CAS fails
-    under the group lock, it re-merges from the winner's state, and
-    BOTH commits land (no lost update across the group)."""
-    from animaltrackingetls_spark import inventory as inv
-
-    g = str(tmp_path / "grp")
-    inv.upsert_group_versioned(
-        spark, g,
-        {"a": (spark.createDataFrame([(1, "x")], "k long, v string"),
-               ["k"])},
-    )
-
-    real = inv.group_state
-    state = {"fired": False}
-
-    def hijack(group_dir):
-        out = real(group_dir)
-        if not state["fired"] and group_dir == g:
-            state["fired"] = True
-            # concurrent winner commits between this writer's state
-            # read and its publish
-            inv.upsert_group_versioned(
-                spark, g,
-                {"a": (spark.createDataFrame([(2, "y")],
-                                             "k long, v string"), ["k"])},
-            )
-        return out
-
-    inv.group_state = hijack
-    try:
-        inv.upsert_group_versioned(
-            spark, g,
-            {"a": (spark.createDataFrame([(3, "z")],
-                                         "k long, v string"), ["k"])},
-        )
-    finally:
-        inv.group_state = real
-    rows = {r.k: r.v for r in
-            inv.read_versioned_group(spark, g, "a").collect()}
-    assert rows == {1: "x", 2: "y", 3: "z"}
-
-
 def test_manifest_layout_end_to_end(spark, tmp_path):
     """layout='manifest' (round-11 verdict task #3): untouched buckets
     are MANIFEST REFERENCES, not hardlinks — no physical duplication of
@@ -2184,7 +2091,7 @@ def _mk_versioned(spark, tmp_path, name="mt", n=1000, **kw):
     return t
 
 
-@pytest.mark.parametrize("mode", ["plain", "cow", "dv"])
+@pytest.mark.parametrize("mode", ["plain", "cow"])
 def test_merge_with_delete_keys_equals_sequential(spark, tmp_path, mode):
     """One combined commit == upsert-then-delete on a twin table, for
     every merge strategy; exactly one version published; a key in BOTH
@@ -2196,7 +2103,7 @@ def test_merge_with_delete_keys_equals_sequential(spark, tmp_path, mode):
         upsert_parquet_versioned,
     )
 
-    kw = {"cow": mode == "cow", "dv": mode == "dv"}
+    kw = {"cow": mode == "cow"}
     t = _mk_versioned(spark, tmp_path, f"a_{mode}")
     t2 = _mk_versioned(spark, tmp_path, f"b_{mode}")
     ups = spark.createDataFrame(
@@ -2256,12 +2163,11 @@ def test_merge_with_delete_keys_replay_and_first_write(spark, tmp_path):
     assert got.filter("k = 6").count() == 1  # NOT deleted by the replay
 
 
-@pytest.mark.parametrize("mode", ["plain", "dv"])
+@pytest.mark.parametrize("mode", ["plain"])
 def test_merge_with_delete_keys_schema_evolution(spark, tmp_path, mode):
     """Round-14 review #1: a schema-evolving batch (merge_schema) in
     the same commit as delete_keys — the upsert rows carry the union
-    schema while the surviving base keeps the old one. (The dv mode
-    falls back to the full rewrite on evolution.)"""
+    schema while the surviving base keeps the old one."""
     from animaltrackingetls_spark.inventory import (
         read_versioned,
         upsert_parquet_versioned,
@@ -2273,7 +2179,7 @@ def test_merge_with_delete_keys_schema_evolution(spark, tmp_path, mode):
     dks = spark.createDataFrame([(5,)], "k long")
     upsert_parquet_versioned(
         spark, t, ups, ["k"], keep_versions=10, merge_schema=True,
-        delete_keys=dks, dv=(mode == "dv"))
+        delete_keys=dks)
     r = read_versioned(spark, t)
     assert r.count() == 999 and "extra" in r.columns
     assert r.filter("k = 5").count() == 0

@@ -138,3 +138,26 @@ def test_blank_param_is_400_not_silently_dropped(server_url):
 def test_negative_limit_is_400(server_url):
     status, _ = _get_any(f"{server_url}/sightings?limit=-1")
     assert status == 400
+
+
+def test_malformed_numeric_filter_is_400(server_url):
+    """A value that cannot be cast to its numeric column answers 400,
+    not a 500 carrying the JVM's ANSI cast error."""
+    status, body = _get_any(f"{server_url}/sightings?id=abc")
+    assert status == 400, body
+    assert b"id" in body and b"integer" in body
+    status, _ = _get_any(f"{server_url}/sightings?v=abc")
+    assert status == 400
+
+
+def test_out_of_range_date_filter_is_400(server_url):
+    """A year past the column's type range answers 400, not a 500
+    carrying py4j's NumberFormatException."""
+    status, body = _get_any(f"{server_url}/sightings?year=99999999999999999999")
+    assert status == 400, body
+    assert b"out of range" in body
+    # past int (the column type) but inside long: still refused
+    status, _ = _get_any(f"{server_url}/sightings?month=2147483648")
+    assert status == 400
+    status, body = _get_any(f"{server_url}/sightings?year=%202024%20&month=6")
+    assert status == 200 and sorted(r["id"] for r in json.loads(body)) == [1, 2, 3]
